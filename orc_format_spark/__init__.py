@@ -19,7 +19,6 @@ from .operators.encode import (
     decode_blob_files,
     decode_blobs,
     encode_groups,
-    encode_groups_staged,
     prune_blobs,
     verify_blob_files,
     verify_blobs,
@@ -61,7 +60,6 @@ __all__ = [
     "decode_blobs",
     "detokenize",
     "encode_groups",
-    "encode_groups_staged",
     "encode_iceberg_splits",
     "encode_parquet_splits",
     "list_data_files",

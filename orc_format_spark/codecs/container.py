@@ -1032,8 +1032,8 @@ def encode_table(
 
 
 def _proj_tree(columns: list[str]) -> dict:
-    """Dotted projection paths -> nested tree (same contract as the ORC
-    reader's): ``None`` leaf = whole subtree, dict = recurse into a
+    """Dotted projection paths -> nested tree (shared with the ORC
+    reader): ``None`` leaf = whole subtree, dict = recurse into a
     struct; ``"s"`` absorbs a later ``"s.a"`` and widens one."""
     tree: dict = {}
     for path in columns:
@@ -1275,8 +1275,11 @@ def decode_table(
     preds: list[tuple] | None = None
     if predicate is not None:
         preds = [predicate] if isinstance(predicate, tuple) else list(predicate)
-        if not preds:
-            preds = None
+        # materialize ``in`` literals once: chunk pruning iterates them
+        # before the residual filter, which would see a spent generator
+        preds = [
+            (p[0], p[1], tuple(p[2])) if p[1] == "in" else p for p in preds
+        ] or None
     if preds is not None and rows is not None:
         raise ValueError("decode_table: predicate and rows are mutually exclusive")
     if preds is not None and columns is not None:

@@ -25,21 +25,13 @@ task re-expressed over our blob container.
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..codecs.container import (
-    DEFAULT_ROW_INDEX_STRIDE,
-    decode_table,
-    encode_table,
-    table_checksum,
-)
+from ..codecs.container import DEFAULT_ROW_INDEX_STRIDE, decode_table
 from ..worker_env import limit_worker_threads
-from .encode import BLOB_SCHEMA
+from .encode import BLOB_SCHEMA, _finish_group
 
 
 def plan_compaction(
@@ -136,31 +128,9 @@ def compact_blobs(
         data = pa.concat_tables(parts).combine_chunks()
         if cluster_by:
             data = data.sort_by([(c, "ascending") for c in cluster_by])
-        blob, lineage = encode_table(
-            data, codec=codec, compression=compression, stride=row_index_stride
-        )
-        leaf = [l for l in lineage if l["codec"] != "list"]
-        codecs = {l["column"]: l["codec"] for l in lineage}
-        return pa.table(
-            {
-                "group_id": pa.array([bucket], pa.int64()),
-                "n_rows": pa.array([data.num_rows], pa.int64()),
-                "n_values": pa.array(
-                    [sum(l["n_present"] for l in leaf)], pa.int64()
-                ),
-                "input_bytes": pa.array(
-                    [sum(l["input_bytes"] for l in lineage)], pa.int64()
-                ),
-                "output_bytes": pa.array([len(blob)], pa.int64()),
-                "checksum": pa.array([table_checksum(data)], pa.string()),
-                "codecs": pa.array(
-                    [json.dumps(codecs, sort_keys=True)], pa.string()
-                ),
-                "lineage": pa.array(
-                    [json.dumps(lineage, sort_keys=True)], pa.string()
-                ),
-                "blob": pa.array([blob], pa.binary()),
-            }
+        return _finish_group(
+            bucket, data, codec, compression, row_index_stride,
+            bloom_columns=None, dest=None,
         )
 
     return tagged.groupBy("bucket").applyInArrow(fn, BLOB_SCHEMA)

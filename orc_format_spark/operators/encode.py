@@ -18,6 +18,7 @@ blobs through ``mapInArrow`` without ever collecting.
 from __future__ import annotations
 
 import json
+import os
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -55,6 +56,22 @@ def _blob_schema(blob_sink, stats: bool) -> str:
     return s
 
 
+def _write_atomic(dest: str, data: bytes) -> None:
+    """Write ``data`` to ``dest`` through a pid-suffixed tmp file and
+    ``os.replace``: readers never see a partial file, and a retried task
+    overwrites with identical bytes instead of duplicating."""
+    tmp = f"{dest}.tmp.{os.getpid()}"
+    with open(tmp, "wb") as out:
+        out.write(data)
+    os.replace(tmp, dest)
+
+
+def _sink_path(blob_sink: str | None, name: str) -> str | None:
+    """A group's sink file (deterministic ``name`` under ``blob_sink``),
+    or None when the payload travels inline."""
+    return None if blob_sink is None else os.path.join(blob_sink, name)
+
+
 def _finish_group(
     gid: int,
     data: pa.Table,
@@ -62,12 +79,15 @@ def _finish_group(
     compression: str,
     row_index_stride,
     bloom_columns,
-    blob_sink,
+    dest: str | None,
     stats: bool = False,
 ) -> pa.Table:
-    """Encode one group's (already sorted) rows into its blob + lineage
-    row — the shared tail of every grouped-encode strategy, so row-,
-    compressed-, and staged-shuffle paths emit byte-identical blobs.
+    """Encode one group's (already ordered) rows into its blob + lineage
+    row. This is the only builder of the blob-row format: the grouped
+    shuffles, ``encode_splits`` and ``compact_blobs`` all end here, so
+    every producer emits byte-identical blobs and rows. ``dest`` is the
+    sink file the blob is written to (the row then carries
+    ``blob_path``), or None to carry the payload inline as ``blob``.
     ``stats`` adds a blob-level min/max (+bloom) column for JVM-side
     stripe elimination (see ``prune_blobs``)."""
     blob, lineage = encode_table(
@@ -81,19 +101,8 @@ def _finish_group(
     n_values = sum(l["n_present"] for l in leaf)
     input_bytes = sum(l["input_bytes"] for l in lineage)
     codecs = {l["column"]: l["codec"] for l in lineage}
-    if blob_sink is not None:
-        import os
-
-        dest = os.path.join(blob_sink, f"group-{gid:08d}.ofs")
-        tmp = f"{dest}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as out:
-            out.write(blob)
-        os.replace(tmp, dest)
-        payload = pa.array([dest], pa.string())
-        pname = "blob_path"
-    else:
-        payload = pa.array([blob], pa.binary())
-        pname = "blob"
+    if dest is not None:
+        _write_atomic(dest, blob)
     cols = {
         "group_id": pa.array([gid], pa.int64()),
         "n_rows": pa.array([data.num_rows], pa.int64()),
@@ -111,7 +120,10 @@ def _finish_group(
             [json.dumps(_chunk_stats(data, bloom_columns), sort_keys=True)],
             pa.string(),
         )
-    cols[pname] = payload
+    if dest is not None:
+        cols["blob_path"] = pa.array([dest], pa.string())
+    else:
+        cols["blob"] = pa.array([blob], pa.binary())
     return pa.table(cols)
 
 
@@ -187,8 +199,6 @@ def encode_groups(
     sort_spec = [(c, "ascending") for c in (cluster_by or []) if c != sort_key]
     sort_spec.append((sort_key, "ascending"))
     if blob_sink is not None:
-        import os
-
         os.makedirs(blob_sink, exist_ok=True)
 
     if shuffle == "compressed":
@@ -209,7 +219,7 @@ def encode_groups(
         data = tbl.drop_columns(["group_id"]).sort_by(sort_spec)
         return _finish_group(
             gid, data, codec, compression, row_index_stride, bloom_columns,
-            blob_sink, stats=stats,
+            _sink_path(blob_sink, f"group-{gid:08d}.ofs"), stats=stats,
         )
 
     return df.groupBy("group_id").applyInArrow(fn, _blob_schema(blob_sink, stats))
@@ -302,115 +312,12 @@ def _encode_groups_compressed(
         data = pa.concat_tables(chunks).combine_chunks().sort_by(sort_spec)
         return _finish_group(
             gid, data, codec, compression, row_index_stride, bloom_columns,
-            blob_sink, stats=stats,
+            _sink_path(blob_sink, f"group-{gid:08d}.ofs"), stats=stats,
         )
 
     return parts.groupBy("group_id").applyInArrow(
         merge_fn, _blob_schema(blob_sink, stats)
     )
-
-
-def encode_groups_staged(
-    df: DataFrame,
-    stage_dir: str,
-    num_groups: int | None = None,
-    codec: str = "auto",
-    compression: str = "zstd",
-    key_col: str | None = None,
-    size_col: str | None = None,
-    row_index_stride: int | None = DEFAULT_ROW_INDEX_STRIDE,
-) -> DataFrame:
-    """Grouped encode via a staged JVM-side shuffle materialization.
-
-    Identical blobs/checksums to ``encode_groups`` (asserted in
-    tests/test_spark_engine.py). Measured on local[32] at 96M tokens the
-    two are comparable (~40 s): the dominant cost of ANY key-regrouping
-    of array<int32> payloads is Spark's row shuffle itself (UnsafeRow
-    ser/de of the arrays, ~35 MB/s/core), whether it surfaces as the
-    applyInArrow exchange (direct) or the repartition+write here. When
-    re-clustering is not semantically required, use
-    ``encode_parquet_splits`` (no payload movement, ~10x faster). This
-    staged variant earns its keep when the grouped stage is read more
-    than once (multi-consumer pipelines) or as a shuffle-fault barrier:
-    each group dir is re-readable without recomputing the shuffle.
-    """
-    import json
-
-    from pyspark.sql import functions as F
-
-    from ..codecs.container import encode_table, table_checksum
-    from .partitioning import with_group_id
-
-    spark = df.sparkSession
-    if "group_id" not in df.columns:
-        if num_groups is None:
-            num_groups = max(1, df.rdd.getNumPartitions())
-        key = key_col or df.columns[0]
-        df = with_group_id(df, num_groups, key_col=key, size_col=size_col)
-    sort_key = key_col or [c for c in df.columns if c != "group_id"][0]
-    (
-        df.repartition(F.col("group_id"))
-        .write.mode("overwrite")
-        .partitionBy("group_id")
-        .parquet(stage_dir)
-    )
-
-    # enumerate staged group dirs via the Hadoop FileSystem API so the
-    # staged path works on cluster filesystems (hdfs://, s3a://, ...), not
-    # just a driver-local POSIX mount
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(stage_dir)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    groups = sorted(
-        int(st.getPath().getName().split("=")[1])
-        for st in fs.listStatus(jpath)
-        if st.isDirectory() and st.getPath().getName().startswith("group_id=")
-    )
-    gdf = spark.createDataFrame([(g,) for g in groups], "group_id long")
-    gdf = gdf.repartition(max(1, min(len(groups), 4096)))
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-
-        limit_worker_threads()
-        for batch in batches:
-            for gid in batch.column("group_id").to_pylist():
-                # pq.read_table resolves URIs through pyarrow.fs (file://,
-                # s3://, gs://, hdfs:// with libhdfs); schemes pyarrow lacks
-                # fail loudly here rather than silently listing nothing
-                data = pq.read_table(f"{stage_dir}/group_id={gid}").sort_by(sort_key)
-                blob, lineage = encode_table(
-                    data, codec=codec, compression=compression,
-                    stride=row_index_stride,
-                )
-                leaf = [l for l in lineage if l["codec"] != "list"]
-                codecs = {l["column"]: l["codec"] for l in lineage}
-                yield pa.record_batch(
-                    [
-                        pa.array([gid], pa.int64()),
-                        pa.array([data.num_rows], pa.int64()),
-                        pa.array([sum(l["n_present"] for l in leaf)], pa.int64()),
-                        pa.array([sum(l["input_bytes"] for l in lineage)], pa.int64()),
-                        pa.array([len(blob)], pa.int64()),
-                        pa.array([table_checksum(data)], pa.string()),
-                        pa.array([json.dumps(codecs, sort_keys=True)], pa.string()),
-                        pa.array([json.dumps(lineage, sort_keys=True)], pa.string()),
-                        pa.array([blob], pa.binary()),
-                    ],
-                    names=[
-                        "group_id",
-                        "n_rows",
-                        "n_values",
-                        "input_bytes",
-                        "output_bytes",
-                        "checksum",
-                        "codecs",
-                        "lineage",
-                        "blob",
-                    ],
-                )
-
-    return gdf.mapInArrow(fn, BLOB_SCHEMA)
 
 
 def _normalize_schema(schema: str) -> str:
@@ -813,6 +720,23 @@ def _decode_one_evolved(
     return _align_decoded_types(pa.table(out), target)
 
 
+def _payload_column(blobs: DataFrame) -> str:
+    """The column a blob frame carries its payload in: ``blob_path``
+    when present (sink rows; the worker opens the file itself, so the
+    payload never crosses the JVM), else the inline ``blob`` bytes."""
+    return "blob_path" if "blob_path" in blobs.columns else "blob"
+
+
+def _payloads(col: pa.Array, pcol: str) -> Iterator[bytes]:
+    """One blob's bytes per value of the ``pcol`` payload column."""
+    for v in col:
+        if pcol == "blob_path":
+            with open(v.as_py(), "rb") as f:
+                yield f.read()
+        else:
+            yield v.as_py()
+
+
 def decode_blobs(
     blobs: DataFrame,
     schema: str,
@@ -822,6 +746,11 @@ def decode_blobs(
     evolution: bool = False,
 ) -> DataFrame:
     """Decode blob rows back into the original table shape.
+
+    The payload is read from whichever column ``blobs`` carries:
+    ``blob_path`` rows (a ``blob_sink`` encode) have each worker open
+    its blob files, ``blob`` rows decode inline; a frame with both reads
+    the files.
 
     ``columns`` projects at the blob level: unwanted columns' streams are
     skipped without decompression (the ORC reader-side column-pruning
@@ -851,56 +780,12 @@ def decode_blobs(
     target = _arrow_target_schema(schema)
     if predicate is not None and "stats" in blobs.columns:
         blobs = prune_blobs(blobs, predicate)  # stripe elimination, JVM-side
+    pcol = _payload_column(blobs)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         limit_worker_threads()
         for batch in batches:
-            col = batch.column(batch.schema.get_field_index("blob"))
-            for v in col:
-                if evolution:
-                    t = _decode_one_evolved(
-                        v.as_py(), target, columns, rows, predicate
-                    )
-                    if t is not None:
-                        yield from t.to_batches()
-                    continue
-                tbl = decode_table(
-                    v.as_py(), columns=columns, rows=rows, predicate=predicate
-                )
-                _check_decoded_names(tbl, expected)
-                yield from _align_decoded_types(tbl, target).to_batches()
-
-    return blobs.select("blob").mapInArrow(fn, schema)
-
-
-def decode_blob_files(
-    blobs: DataFrame,
-    schema: str,
-    columns: list[str] | None = None,
-    rows: tuple[int, int] | None = None,
-    predicate: tuple | list[tuple] | None = None,
-    evolution: bool = False,
-) -> DataFrame:
-    """Decode sink-written blob rows (``blob_path`` column, from
-    ``encode_splits(blob_sink=...)``) back into the original table shape.
-    The worker opens each blob file itself — like the encode side, the
-    payload never crosses the JVM; only paths do. ``evolution=True``
-    resolves each blob's stored schema by name against the declared one
-    (see :func:`decode_blobs`) — the mixed-era read path for a blob
-    table whose schema accreted columns over its life."""
-    schema = _normalize_schema(schema)
-    expected = _ddl_names(schema)
-    target = _arrow_target_schema(schema)
-    if predicate is not None and "stats" in blobs.columns:
-        blobs = prune_blobs(blobs, predicate)  # stripe elimination, JVM-side
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        limit_worker_threads()
-        for batch in batches:
-            col = batch.column(batch.schema.get_field_index("blob_path"))
-            for v in col:
-                with open(v.as_py(), "rb") as f:
-                    raw = f.read()
+            for raw in _payloads(batch.column(0), pcol):
                 if evolution:
                     t = _decode_one_evolved(
                         raw, target, columns, rows, predicate
@@ -914,70 +799,37 @@ def decode_blob_files(
                 _check_decoded_names(tbl, expected)
                 yield from _align_decoded_types(tbl, target).to_batches()
 
-    return blobs.select("blob_path").mapInArrow(fn, schema)
-
-
-def verify_blob_files(blobs: DataFrame) -> DataFrame:
-    """Per-blob roundtrip verification for sink-written rows
-    (``blob_path``): each worker re-opens its blob files, decodes, and
-    compares checksums — same contract as ``verify_blobs``."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        limit_worker_threads()
-        for batch in batches:
-            t = pa.Table.from_batches([batch])
-            gids = t.column("group_id").to_pylist()
-            sums = t.column("checksum").to_pylist()
-            paths = t.column("blob_path").to_pylist()
-            out_ok = []
-            out_sum = []
-            for cs, path in zip(sums, paths):
-                with open(path, "rb") as f:
-                    ds = table_checksum(decode_table(f.read()))
-                out_sum.append(ds)
-                out_ok.append(ds == cs)
-            yield pa.record_batch(
-                [
-                    pa.array(gids, pa.int64()),
-                    pa.array(out_ok, pa.bool_()),
-                    pa.array(sums, pa.string()),
-                    pa.array(out_sum, pa.string()),
-                ],
-                names=["group_id", "ok", "checksum", "checksum_decoded"],
-            )
-
-    return blobs.select("group_id", "checksum", "blob_path").mapInArrow(
-        fn, "group_id long, ok boolean, checksum string, checksum_decoded string"
-    )
+    return blobs.select(pcol).mapInArrow(fn, schema)
 
 
 def verify_blobs(blobs: DataFrame) -> DataFrame:
-    """Per-blob roundtrip verification: decode and compare checksums."""
+    """Per-blob roundtrip verification: decode each payload (inline or
+    sink file, as in :func:`decode_blobs`) and compare checksums."""
+    pcol = _payload_column(blobs)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         limit_worker_threads()
         for batch in batches:
-            t = pa.Table.from_batches([batch])
-            gids = t.column("group_id").to_pylist()
-            sums = t.column("checksum").to_pylist()
-            blobs_col = t.column("blob").to_pylist()
-            out_ok = []
-            out_sum = []
-            for cs, bl in zip(sums, blobs_col):
-                decoded = decode_table(bl)
-                ds = table_checksum(decoded)
-                out_sum.append(ds)
-                out_ok.append(ds == cs)
+            sums = batch.column(1).to_pylist()
+            out_sum = [
+                table_checksum(decode_table(raw))
+                for raw in _payloads(batch.column(2), pcol)
+            ]
             yield pa.record_batch(
                 [
-                    pa.array(gids, pa.int64()),
-                    pa.array(out_ok, pa.bool_()),
+                    pa.array(batch.column(0).to_pylist(), pa.int64()),
+                    pa.array([d == s for d, s in zip(out_sum, sums)], pa.bool_()),
                     pa.array(sums, pa.string()),
                     pa.array(out_sum, pa.string()),
                 ],
                 names=["group_id", "ok", "checksum", "checksum_decoded"],
             )
 
-    return blobs.select("group_id", "checksum", "blob").mapInArrow(
+    return blobs.select("group_id", "checksum", pcol).mapInArrow(
         fn, "group_id long, ok boolean, checksum string, checksum_decoded string"
     )
+
+
+# aliases for callers that name the sink-row (``blob_path``) layout
+decode_blob_files = decode_blobs
+verify_blob_files = verify_blobs

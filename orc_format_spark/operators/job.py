@@ -250,13 +250,9 @@ def read_encoded(
     row-group sub-index. Handles both wave layouts: inline ``blob``
     parquet and sink-mode ``blob_path`` rows (workers re-open the
     blobstore files themselves)."""
-    from .encode import decode_blob_files, decode_blobs
+    from .encode import decode_blobs
 
     blobs = spark.read.parquet(f"{out_dir}/blobs")
-    if "blob_path" in blobs.columns:
-        return decode_blob_files(
-            blobs, schema, columns=columns, rows=rows, predicate=predicate
-        )
     return decode_blobs(blobs, schema, columns=columns, rows=rows, predicate=predicate)
 
 

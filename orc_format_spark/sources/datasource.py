@@ -424,6 +424,7 @@ class OrcFormatWriter(DataSourceArrowWriter):
         import pyarrow as pa
 
         from ..codecs.container import encode_table, table_checksum
+        from ..operators.encode import _write_atomic
         from ..worker_env import limit_worker_threads
         from pyspark import TaskContext
 
@@ -444,11 +445,7 @@ class OrcFormatWriter(DataSourceArrowWriter):
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else 0
         name = f"part-{pid:05d}-{uuid.uuid4().hex}.ofs"
-        dest = os.path.join(self.path, name)
-        tmp = f"{dest}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as out:
-            out.write(blob)
-        os.replace(tmp, dest)
+        _write_atomic(os.path.join(self.path, name), blob)
         # file-level stats (whole-file [min,max] (+ Bloom for opted-in
         # int columns)) ride the commit message into _manifest.json so
         # a later filtered read can eliminate this FILE at planning time
@@ -458,6 +455,8 @@ class OrcFormatWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages: "list[BlobWriteMessage]") -> None:
+        from ..operators.encode import _write_atomic
+
         committed = {m.file for m in messages if m.file}
         entries = {
             m.file: {
@@ -491,10 +490,10 @@ class OrcFormatWriter(DataSourceArrowWriter):
             "total_rows": sum(e["rows"] for e in files),
             "total_bytes": sum(e["bytes"] for e in files),
         }
-        tmp = os.path.join(self.path, f"_manifest.json.tmp.{os.getpid()}")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path, "_manifest.json"))
+        _write_atomic(
+            os.path.join(self.path, "_manifest.json"),
+            json.dumps(manifest, indent=1, sort_keys=True).encode(),
+        )
         if self.overwrite:
             # write-audit-PUBLISH: the new manifest (the authoritative
             # membership record readers list from) lands first; only
@@ -664,6 +663,7 @@ class OrcFormatStreamWriter(DataSourceStreamArrowWriter):
         import pyarrow as pa
 
         from ..codecs.container import encode_table, table_checksum
+        from ..operators.encode import _write_atomic
         from ..worker_env import limit_worker_threads
         from pyspark import TaskContext
 
@@ -678,11 +678,7 @@ class OrcFormatStreamWriter(DataSourceStreamArrowWriter):
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else 0
         name = f"part-{pid:05d}-{uuid.uuid4().hex}.ofs"
-        dest = os.path.join(self.path, name)
-        tmp = f"{dest}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as out:
-            out.write(blob)
-        os.replace(tmp, dest)
+        _write_atomic(os.path.join(self.path, name), blob)
         return BlobWriteMessage(name, tbl.num_rows, len(blob), table_checksum(tbl))
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803

@@ -78,6 +78,7 @@ from typing import BinaryIO
 import numpy as np
 import pyarrow as pa
 
+from ..codecs.container import _proj_tree
 from ..codecs.rle_v1 import (
     decode_byte_rle,
     decode_int_rle_v1,
@@ -902,30 +903,6 @@ def _varlen_from_parts(
         arrow_type, n,
         [validity, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)],
     )
-
-
-def _proj_tree(columns: list[str]) -> dict:
-    """Dotted projection paths -> nested tree. ``None`` leaf = take the
-    whole subtree; a dict = recurse into a struct. ``"s"`` absorbs a
-    later ``"s.a"`` (whole wins) and ``"s"`` after ``"s.a"`` widens."""
-    tree: dict = {}
-    for path in columns:
-        parts = path.split(".")
-        node = tree
-        for i, p in enumerate(parts):
-            if i == len(parts) - 1:
-                node[p] = None
-            else:
-                nxt = node.get(p, _MISSING)
-                if nxt is None:
-                    break  # whole subtree already selected
-                if nxt is _MISSING:
-                    nxt = node[p] = {}
-                node = nxt
-    return tree
-
-
-_MISSING = object()
 
 
 def _validate_proj(types: list["_OrcType"], cid: int, proj,

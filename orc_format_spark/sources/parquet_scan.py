@@ -106,10 +106,8 @@ def encode_splits(
     task and only O(100-byte) lineage rows reach the JVM — on a cluster,
     point ``blob_sink`` at executor-mounted shared storage (the
     object-store variant swaps os.replace for a conditional put)."""
-    import json
-
-    from ..codecs.container import DEFAULT_ROW_INDEX_STRIDE, encode_table, table_checksum
-    from ..operators.encode import BLOB_FILE_SCHEMA, BLOB_SCHEMA
+    from ..codecs.container import DEFAULT_ROW_INDEX_STRIDE
+    from ..operators.encode import _blob_schema, _finish_group, _sink_path
 
     if row_index_stride is None:
         row_index_stride = DEFAULT_ROW_INDEX_STRIDE
@@ -135,8 +133,6 @@ def encode_splits(
         os.makedirs(blob_sink, exist_ok=True)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import os
-
         import pyarrow.parquet as pq
 
         from ..worker_env import limit_worker_threads
@@ -148,49 +144,11 @@ def encode_splits(
                 data = pq.ParquetFile(f).read_row_group(
                     rg, columns=columns, use_threads=False
                 )
-                blob, lineage = encode_table(
-                    data,
-                    codec=codec,
-                    compression=compression,
-                    stride=row_index_stride,
-                    bloom_columns=bloom_columns,
-                )
-                leaf = [l for l in lineage if l["codec"] != "list"]
-                codecs = {l["column"]: l["codec"] for l in lineage}
-                if blob_sink is not None:
-                    # deterministic name + atomic rename: a retried task
-                    # overwrites with identical bytes, never duplicates
-                    dest = os.path.join(blob_sink, f"split-{sid:08d}.ofs")
-                    tmp = f"{dest}.tmp.{os.getpid()}"
-                    with open(tmp, "wb") as out:
-                        out.write(blob)
-                    os.replace(tmp, dest)
-                    payload = pa.array([dest], pa.string())
-                else:
-                    payload = pa.array([blob], pa.binary())
-                yield pa.record_batch(
-                    [
-                        pa.array([sid], pa.int64()),
-                        pa.array([data.num_rows], pa.int64()),
-                        pa.array([sum(l["n_present"] for l in leaf)], pa.int64()),
-                        pa.array([sum(l["input_bytes"] for l in lineage)], pa.int64()),
-                        pa.array([len(blob)], pa.int64()),
-                        pa.array([table_checksum(data)], pa.string()),
-                        pa.array([json.dumps(codecs, sort_keys=True)], pa.string()),
-                        pa.array([json.dumps(lineage, sort_keys=True)], pa.string()),
-                        payload,
-                    ],
-                    names=[
-                        "group_id",
-                        "n_rows",
-                        "n_values",
-                        "input_bytes",
-                        "output_bytes",
-                        "checksum",
-                        "codecs",
-                        "lineage",
-                        "blob_path" if blob_sink is not None else "blob",
-                    ],
-                )
+                # deterministic sink name: a retried task overwrites
+                # with identical bytes, never duplicates
+                yield from _finish_group(
+                    sid, data, codec, compression, row_index_stride,
+                    bloom_columns, _sink_path(blob_sink, f"split-{sid:08d}.ofs"),
+                ).to_batches()
 
-    return sdf.mapInArrow(fn, BLOB_FILE_SCHEMA if blob_sink is not None else BLOB_SCHEMA)
+    return sdf.mapInArrow(fn, _blob_schema(blob_sink, stats=False))

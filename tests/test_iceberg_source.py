@@ -69,26 +69,41 @@ def test_blob_sink_roundtrip(spark, tmp_path):
             assert f.read() == ferry[r.group_id]
 
 
-def test_verify_blob_files(spark, tmp_path):
+@pytest.mark.parametrize("layout", ["blob", "blob_path"])
+def test_verify_blob_files(spark, tmp_path, layout):
+    """One verifier for both payload layouts: inline ``blob`` rows and
+    sink ``blob_path`` rows (``verify_blob_files`` is ``verify_blobs``)."""
     from orc_format_spark import tokenize_documents, verify_blob_files
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     src = str(tmp_path / "toks")
     tokenize_documents(docs).repartition(2).write.parquet(src)
+    sink = str(tmp_path / "sink") if layout == "blob_path" else None
     lineage = encode_splits(
-        spark, list_parquet_splits(src), blob_sink=str(tmp_path / "sink")
+        spark, list_parquet_splits(src), blob_sink=sink
     ).collect()
     # materialized lineage: re-verification must NOT re-run the encode
     # (a lazy plan would rewrite the sink and mask corruption)
     blobs = spark.createDataFrame(lineage)
+    assert layout in blobs.columns
     ver = verify_blob_files(blobs)
     rows = ver.collect()
     assert len(rows) >= 2 and all(r.ok for r in rows)
-    # corrupt one blob file -> its checksum must fail loudly, not silently
-    victim = lineage[0].blob_path
-    raw = bytearray(open(victim, "rb").read())
-    raw[len(raw) // 2] ^= 0xFF
-    open(victim, "wb").write(bytes(raw))
+    # corrupt one blob -> its checksum must fail loudly, not silently
+    if layout == "blob_path":
+        victim = lineage[0].blob_path
+        raw = bytearray(open(victim, "rb").read())
+        raw[len(raw) // 2] ^= 0xFF
+        open(victim, "wb").write(bytes(raw))
+    else:
+        i = blobs.columns.index("blob")
+        rows_in = [list(r) for r in lineage]
+        raw = bytearray(rows_in[0][i])
+        raw[len(raw) // 2] ^= 0xFF
+        rows_in[0][i] = bytes(raw)
+        blobs = spark.createDataFrame(
+            [tuple(r) for r in rows_in], blobs.schema
+        )
     import pyspark.errors
 
     try:

@@ -394,6 +394,10 @@ def test_in_isnull_startswith_exact_and_pruning(monkeypatch):
 
     got = decode_table(blob, predicate=("k", "in", (5, 37, 86, 1000)))
     assert sorted(got.column("k").to_pylist()) == [5, 37, 86]
+    # a one-shot iterable gives the same rows: chunk pruning iterates
+    # the literal before the residual filter does
+    gen = (v for v in (5, 37, 86, 1000))
+    assert decode_table(blob, predicate=("k", "in", gen)).equals(got)
     got = decode_table(blob, predicate=("k", "isnull", None))
     assert got.num_rows == 12 and got.column("k").null_count == 12
     got = decode_table(blob, predicate=("k", "notnull", None))

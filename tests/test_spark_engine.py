@@ -119,29 +119,6 @@ def test_column_statistics_matches_sql(spark):
     assert rows["l_returnflag"].sum_lengths == exp[5]
 
 
-def test_encode_groups_staged_matches_direct(spark, docs, tmp_path):
-    """The staged (JVM-shuffle -> partitioned parquet -> pyarrow) grouped
-    encode must produce the same per-group checksums as the direct
-    applyInArrow path — identical grouping, ordering, and codec choices."""
-    from orc_format_spark import encode_groups_staged
-
-    toks = tokenize_documents(docs)
-    direct = {
-        r.group_id: r.checksum
-        for r in encode_groups(
-            toks, num_groups=6, key_col="doc_id", size_col="n_tok"
-        ).collect()
-    }
-    staged = {
-        r.group_id: r.checksum
-        for r in encode_groups_staged(
-            toks, str(tmp_path / "stage"), num_groups=6,
-            key_col="doc_id", size_col="n_tok",
-        ).collect()
-    }
-    assert staged == direct
-
-
 def test_read_encoded_roundtrip(spark, tmp_path):
     """write (run_encode_job) -> read_encoded: the user-facing façade."""
     from orc_format_spark import (
