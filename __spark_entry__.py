@@ -583,8 +583,8 @@ def q_pruned_decode(spark, sf_dir):
     """Stripe elimination: a range-grouped encode with ``stats=True``
     records blob-level min/max (the stripe statistics the reference
     writes, src/writer/stripe.rs, whose reader-side skip it never
-    shipped); a ``predicate=`` decode then drops whole blobs JVM-side
-    (operators/encode.py prune_blobs) before chunk-level skipping and
+    shipped); a ``predicate=`` decode then drops whole blobs from those
+    stats (operators/encode.py prune_blobs) before chunk-level skipping and
     the exact residual filter — at sf0.01 the int conjunct alone
     eliminates 6 of 8 blobs before any payload moves."""
     import datetime
@@ -2220,7 +2220,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     r03) lead, then this round's new queries (never driver-verified),
     then the r04-green queries whose UNDERLYING CODE CHANGED this round
     (dedup sentinel, pq/brute-force top-k, compact planner, evolution
-    decode, the stats-prune keep-condition's fractional-bounds branch)
+    decode, the stats-prune fractional-bounds handling)
     plus the flagship — so no query's driver row is ever more than one
     round stale. The r04-green remainder sits below the window
     (still covered every round by pytest + scripts/check_oracles.py)."""

@@ -1092,6 +1092,51 @@ _PRED_OPS = (
 )
 
 
+def _normalize_predicate(predicate) -> list[tuple]:
+    """One ``(col, op, literal)`` triple, or any sequence of triples
+    (implicit AND), -> a list of triples; None -> []. Every ``in``
+    literal is materialized ONCE into a tuple: stats pruning iterates it
+    before the residual filter does (a one-shot iterable would leave the
+    filter with no members), and a generator cannot be pickled into a
+    Spark UDF closure."""
+    if predicate is None:
+        return []
+    if (
+        isinstance(predicate, tuple)
+        and len(predicate) == 3
+        and isinstance(predicate[0], str)
+    ):
+        predicate = [predicate]
+    return [
+        (col, op, tuple(lit) if op == "in" else lit)
+        for col, op, lit in predicate
+    ]
+
+
+def _range_may_match(op: str, lo, hi, v) -> bool:
+    """Can some value in ``[lo, hi]`` satisfy ``value op v``? The one
+    comparison rule behind blob, chunk, ORC stripe and ORC row-group
+    pruning. Incomparable domains (``TypeError``) mean unknown: keep."""
+    try:
+        if op == "==":
+            return lo <= v <= hi
+        if op == "!=":
+            # prunable only when EVERY value equals v; null rows fail
+            # != anyway under SQL ternary logic
+            return not (lo == hi == v)
+        if op == "<":
+            return lo < v
+        if op == "<=":
+            return lo <= v
+        if op == ">":
+            return hi > v
+        if op == ">=":
+            return hi >= v
+    except TypeError:
+        return True
+    raise ValueError(f"unsupported predicate op {op!r} (use one of {_PRED_OPS})")
+
+
 def _chunk_may_match(stats: dict | None, predicate: tuple) -> bool:
     """Row-group skip test (the reference's row-index stats purpose,
     common.rs:24-48): False only when the chunk's [min, max] PROVES no
@@ -1174,29 +1219,14 @@ def _chunk_may_match(stats: dict | None, predicate: tuple) -> bool:
         lo, hi = entry
         if lo is None:  # all-null chunk
             return False
-    try:
-        if op == "==":
-            if not lo <= val <= hi:
-                return False
-            b64 = stats.get(f"{col}@bloom")
-            if b64 is not None and isinstance(val, int):
-                from .bloom import bloom_from_b64, bloom_may_contain
+    if not _range_may_match(op, lo, hi, val):
+        return False
+    b64 = stats.get(f"{col}@bloom") if op == "==" else None
+    if b64 is not None and isinstance(val, int):
+        from .bloom import bloom_from_b64, bloom_may_contain
 
-                return bloom_may_contain(bloom_from_b64(b64), val)
-            return True
-        if op == "!=":
-            return not (lo == hi == val)
-        if op == "<":
-            return lo < val
-        if op == "<=":
-            return lo <= val
-        if op == ">":
-            return hi > val
-        if op == ">=":
-            return hi >= val
-    except TypeError:
-        return True  # incomparable domains: never prune on a guess
-    raise ValueError(f"unsupported predicate op {op!r} (use one of {_PRED_OPS})")
+        return bloom_may_contain(bloom_from_b64(b64), val)
+    return True
 
 
 def _apply_predicate(tbl: pa.Table, predicate: tuple) -> pa.Table:
@@ -1221,7 +1251,11 @@ def _apply_predicate(tbl: pa.Table, predicate: tuple) -> pa.Table:
         mask[rows] = True
         return tbl.filter(pa.array(mask))
     if op == "in":
-        mask = pc.is_in(c, value_set=pa.array(list(val), c.type))
+        # null never satisfies ``in``, even with a None member (the
+        # chunk pruning above already treats all-null chunks that way)
+        mask = pc.is_in(
+            c, value_set=pa.array(list(val), c.type), skip_nulls=True
+        )
         return tbl.filter(pc.fill_null(mask, False))
     if op == "isnull":
         return tbl.filter(pc.is_null(c))
@@ -1272,14 +1306,7 @@ def decode_table(
     reader-side skipping (data/common.rs:24-48), which its own reader
     never shipped. ``predicate`` and ``rows`` are mutually exclusive (a
     row slice is positional; filtering renumbers rows)."""
-    preds: list[tuple] | None = None
-    if predicate is not None:
-        preds = [predicate] if isinstance(predicate, tuple) else list(predicate)
-        # materialize ``in`` literals once: chunk pruning iterates them
-        # before the residual filter, which would see a spent generator
-        preds = [
-            (p[0], p[1], tuple(p[2])) if p[1] == "in" else p for p in preds
-        ] or None
+    preds = _normalize_predicate(predicate) or None
     if preds is not None and rows is not None:
         raise ValueError("decode_table: predicate and rows are mutually exclusive")
     if preds is not None and columns is not None:

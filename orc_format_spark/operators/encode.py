@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 
 from ..codecs.container import (
     DEFAULT_ROW_INDEX_STRIDE,
+    _normalize_predicate,
     decode_table,
     encode_table,
     table_checksum,
@@ -49,7 +50,7 @@ BLOB_FILE_SCHEMA = BLOB_SCHEMA.replace("blob binary", "blob_path string")
 def _blob_schema(blob_sink, stats: bool) -> str:
     """Output DDL for a grouped encode: payload column per sink mode,
     plus the optional blob-level ``stats`` column (stripe min/max, same
-    JSON shape as the in-blob chunk stats) for JVM-side pruning."""
+    JSON shape as the in-blob chunk stats) for blob pruning."""
     s = BLOB_FILE_SCHEMA if blob_sink is not None else BLOB_SCHEMA
     if stats:
         s = s.replace(", blob", ", stats string, blob")
@@ -88,7 +89,7 @@ def _finish_group(
     every producer emits byte-identical blobs and rows. ``dest`` is the
     sink file the blob is written to (the row then carries
     ``blob_path``), or None to carry the payload inline as ``blob``.
-    ``stats`` adds a blob-level min/max (+bloom) column for JVM-side
+    ``stats`` adds a blob-level min/max (+bloom) column for
     stripe elimination (see ``prune_blobs``)."""
     blob, lineage = encode_table(
         data,
@@ -147,9 +148,9 @@ def encode_groups(
     isoformat for temporals — plus ``bloom_columns`` bitsets; the same
     JSON shape as the in-blob chunk stats) to every lineage row. It is
     the stripe-elimination index: ``prune_blobs`` / a ``predicate=``
-    decode evaluates it JVM-side and drops whole blobs before any
-    payload is ferried to a Python worker or (sink mode) the blob file
-    is even opened — the ORC stripe-statistics analog of split
+    decode evaluates it over the lineage rows and drops whole blobs
+    before any payload is ferried to a decode worker or (sink mode) the
+    blob file is even opened — the ORC stripe-statistics analog of split
     elimination, which matters more than chunk skipping at 100 TB.
 
     ``cluster_by`` sorts each group's rows by these columns (then
@@ -434,175 +435,9 @@ def _align_decoded_types(tbl: pa.Table, target: "pa.Schema") -> pa.Table:
     return pa.Table.from_arrays(cols, schema=target)
 
 
-def _jvm_keep_condition(preds: list[tuple]):
-    """Pure-JVM keep-condition over the ``stats`` JSON for the given
-    conjuncts, or None when any conjunct needs the Python evaluator
-    (``==`` — so Bloom bitsets keep their pruning power — bool values,
-    or value types the expression path can't compare exactly).
-
-    The condition must NEVER wrongly prune, only wrongly keep (the
-    residual filter at decode is exact). Per conjunct ``(col, op, val)``:
-    missing column / unparseable stats / a form the expression doesn't
-    recognize → keep; array entry ``[null, null]`` (all-null blob) →
-    drop; uncastable bounds (e.g. float repr vs an int value's exact
-    decimal cast) → keep. Int values compare via decimal(38,0) — exact
-    for int64, where a double cast could round across a > or <
-    boundary above 2^53 and wrongly prune."""
-    import datetime
-
-    from pyspark.sql import functions as F
-
-    def cmp(op, lo, hi, v):
-        if op == "!=":
-            return ~((lo == hi) & (lo == v))
-        return {
-            "<": lo < v,
-            "<=": lo <= v,
-            ">": hi > v,
-            ">=": hi >= v,
-        }[op]
-
-    conds = []
-    for col, op, val in preds:
-        if op in (
-            "==", "contains", "in", "isnull", "notnull", "startswith"
-        ) or isinstance(val, bool):
-            # ==/in/contains need the Bloom bitset, the null tests and
-            # prefix window their own stats logic -> UDF path (which
-            # evaluates _chunk_may_match itself)
-            return None
-        if op not in ("!=", "<", "<=", ">", ">="):
-            raise ValueError(f"unsupported predicate op {op!r}")
-        s = F.col("stats")
-        entry = F.get_json_object(s, f"$.{col}")
-        if isinstance(val, (datetime.date, datetime.datetime)):
-            # temporal dict form {"t":"iso","lo":...,"hi":...}; bounds
-            # and value compare in the isoformat domain, exactly like
-            # _chunk_may_match. A cross-domain entry (datetime bounds
-            # for a date value or vice versa, detected by the 'T' in
-            # the lo bound) is kept, never guessed.
-            if (
-                isinstance(val, datetime.datetime)
-                and val.tzinfo is not None
-            ):
-                # stored bounds are tz-naive; an aware value's
-                # isoformat ("+HH:MM" suffix) breaks the lexicographic
-                # order — keep, matching _chunk_may_match's guard
-                conds.append(F.lit(True))
-                continue
-            is_dt = isinstance(val, datetime.datetime)
-            lo = F.get_json_object(s, f"$.{col}.lo")
-            hi = F.get_json_object(s, f"$.{col}.hi")
-            tag = F.get_json_object(s, f"$.{col}.t")
-            domain_ok = (F.instr(lo, "T") > 0) if is_dt else (F.instr(lo, "T") == 0)
-            keep = (
-                F.when(entry.isNull(), F.lit(True))
-                # an all-null temporal column stats as the ARRAY form
-                # [null,null] (the all-null check precedes the iso-dict
-                # branch in _chunk_stats) — provably unmatchable, same
-                # as the numeric/string branches
-                .when(entry == F.lit("[null,null]"), F.lit(False))
-                .when(tag.isNull() | (tag != "iso"), F.lit(True))
-                .when(~domain_ok, F.lit(True))
-                .otherwise(cmp(op, lo, hi, F.lit(val.isoformat())))
-            )
-        else:
-            if isinstance(val, int):
-                # integral bounds text -> exact decimal(38,0) compare.
-                # Fractional bounds (float-column stats against an int
-                # predicate) must NOT go through decimal(38,0):
-                # try_cast ROUNDS "16.6" to 17 instead of returning
-                # NULL, which would wrongly prune strict boundaries
-                # (stats [16.6, 17.4] vs '< 17'). Those compare in the
-                # double domain — exact for |val| <= 2^53, matching
-                # the Python evaluator's exact int-vs-float compare;
-                # beyond 2^53 widen to the non-strict superset and
-                # never prune on != (same rule as the float branch).
-                lo_s = F.get_json_object(s, f"$.{col}[0]")
-                hi_s = F.get_json_object(s, f"$.{col}[1]")
-                is_arr = F.substring(entry, 1, 1) == F.lit("[")
-                int_like = (
-                    lo_s.rlike("^-?[0-9]+$") & hi_s.rlike("^-?[0-9]+$")
-                )
-                lo_i = lo_s.try_cast("decimal(38,0)")
-                hi_i = hi_s.try_cast("decimal(38,0)")
-                v_i = F.lit(val).cast("decimal(38,0)")
-                lo_d = lo_s.try_cast("double")
-                hi_d = hi_s.try_cast("double")
-                v_d = F.lit(float(val))
-                if abs(val) <= 2**53:
-                    frac_keep = cmp(op, lo_d, hi_d, v_d)
-                elif op == "!=":
-                    frac_keep = F.lit(True)
-                else:
-                    op_w = {"<": "<=", ">": ">="}.get(op, op)
-                    frac_keep = cmp(op_w, lo_d, hi_d, v_d)
-                keep = (
-                    F.when(entry.isNull() | ~is_arr, F.lit(True))
-                    .when(entry == F.lit("[null,null]"), F.lit(False))
-                    .when(
-                        int_like,
-                        F.when(
-                            lo_i.isNull() | hi_i.isNull(), F.lit(True)
-                        ).otherwise(cmp(op, lo_i, hi_i, v_i)),
-                    )
-                    .when(lo_d.isNull() | hi_d.isNull(), F.lit(True))
-                    .otherwise(frac_keep)
-                )
-                conds.append(F.col("stats").isNull() | keep)
-                continue
-            if isinstance(val, float):
-                # double-domain compares can round int64 bounds > 2^53
-                # across a strict boundary; widen to the non-strict
-                # superset (never wrong-prunes) and never prune on !=
-                cast_t, v = "double", F.lit(val)
-                if op == "!=":
-                    conds.append(F.lit(True))
-                    continue
-                op = {"<": "<=", ">": ">="}.get(op, op)
-            elif isinstance(val, str):
-                cast_t, v = None, F.lit(val)
-            else:
-                return None
-            lo_s = F.get_json_object(s, f"$.{col}[0]")
-            hi_s = F.get_json_object(s, f"$.{col}[1]")
-            # try_cast, not cast: ANSI mode hard-fails on uncastable
-            # bounds (e.g. a float column's "17.0" against an int
-            # value's exact decimal domain); NULL here must mean
-            # "unknown, keep". JSON null bounds surface as the STRING
-            # "null" (indistinguishable from a real "null" string
-            # value), so the all-null-blob test uses the entry's
-            # re-serialized array text instead.
-            lo = lo_s.try_cast(cast_t) if cast_t else lo_s
-            hi = hi_s.try_cast(cast_t) if cast_t else hi_s
-            is_arr = F.substring(entry, 1, 1) == F.lit("[")
-            keep = F.when(entry.isNull() | ~is_arr, F.lit(True)).when(
-                entry == F.lit("[null,null]"), F.lit(False)
-            )
-            if cast_t is None:
-                # string predicate: the bounds must BE strings (the
-                # re-serialized entry's first bound starts with '"');
-                # a lexicographic compare against numeric/bool bounds
-                # text could wrongly prune a cross-typed predicate the
-                # Python evaluator keeps (TypeError -> True) and the
-                # residual filter rejects loudly
-                keep = keep.when(
-                    F.substring(entry, 2, 1) != F.lit('"'), F.lit(True)
-                )
-            keep = keep.when(
-                lo.isNull() | hi.isNull(), F.lit(True)  # uncastable
-            ).otherwise(cmp(op, lo, hi, v))
-        conds.append(F.col("stats").isNull() | keep)
-    out = conds[0]
-    for c in conds[1:]:
-        out = out & c
-    return out
-
-
 def prune_blobs(
     blobs: DataFrame,
     predicate: tuple | list[tuple],
-    force_python: bool = False,
 ) -> DataFrame:
     """Stripe elimination: drop blobs whose blob-level ``stats`` (written
     by ``encode_groups(stats=True)``) PROVE no row matches ``predicate``
@@ -613,16 +448,14 @@ def prune_blobs(
     (the reference stores stripe stats, src/writer/stripe.rs, but its
     reader never shipped the skip).
 
-    Range/inequality conjuncts evaluate as pure JVM expressions over the
-    stats JSON (whole-stage-codegen Filter, no extra Python stage — the
-    shape that stays cheap on a 25M-row lineage table). ``==`` conjuncts
-    and exotic value types fall back to an Arrow-batched scalar UDF so
-    per-blob Bloom bitsets keep their pruning power; only the stats
-    string crosses to Python there. Rows with a null/absent stats value
-    are kept (unknown never prunes), and the exact residual filter still
-    runs at decode, so the result is identical to an unpruned
-    ``predicate=`` decode. ``force_python`` pins the UDF evaluator
-    (parity testing)."""
+    Every conjunct is decided by the chunk-level evaluator
+    (``container._chunk_may_match``: min/max range, Bloom bitsets for
+    ``==``/``in``, prefix window, null tests) in one Arrow-batched
+    pandas UDF; only the stats string crosses to Python, and each row's
+    JSON is parsed once. Rows with a null/absent stats value are kept
+    (unknown never prunes), and the exact residual filter still runs at
+    decode, so the result is identical to an unpruned ``predicate=``
+    decode."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -633,13 +466,9 @@ def prune_blobs(
             "prune_blobs: input has no 'stats' column — encode with "
             "encode_groups(..., stats=True)"
         )
-    preds = [predicate] if isinstance(predicate, tuple) else list(predicate)
+    preds = _normalize_predicate(predicate)
     if not preds:
         return blobs
-    if not force_python:
-        cond = _jvm_keep_condition(preds)
-        if cond is not None:
-            return blobs.filter(cond)
 
     def _may_match(s: pd.Series) -> pd.Series:
         def one(v):
@@ -676,9 +505,7 @@ def _decode_one_evolved(
     from ..codecs.container import blob_schema
 
     have = set(blob_schema(blob_bytes).names)
-    preds = (
-        [predicate] if isinstance(predicate, tuple) else list(predicate or [])
-    )
+    preds = _normalize_predicate(predicate)
     for p in preds:
         if p[0] not in have and p[1] != "isnull":
             return None  # null never satisfies a non-isnull predicate
@@ -778,8 +605,11 @@ def decode_blobs(
     schema = _normalize_schema(schema)
     expected = _ddl_names(schema)
     target = _arrow_target_schema(schema)
+    # normalized before the worker closures capture it (a generator
+    # ``in`` literal would not pickle)
+    predicate = _normalize_predicate(predicate) or None
     if predicate is not None and "stats" in blobs.columns:
-        blobs = prune_blobs(blobs, predicate)  # stripe elimination, JVM-side
+        blobs = prune_blobs(blobs, predicate)  # stripe elimination
     pcol = _payload_column(blobs)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -137,7 +137,7 @@ def run_encode_job(
     blob bytes stay deterministic across waves and resume. ``stats``
     adds the blob-level stripe-elimination column (see
     ``encode_groups``) — ``read_encoded(predicate=...)`` then skips
-    whole blobs JVM-side. Like ``cluster_by``, keep it stable across a
+    whole blobs before decode. Like ``cluster_by``, keep it stable across a
     job's waves (it shapes the per-wave parquet schema).
     """
     if num_groups is None:

@@ -78,7 +78,11 @@ from typing import BinaryIO
 import numpy as np
 import pyarrow as pa
 
-from ..codecs.container import _proj_tree
+from ..codecs.container import (
+    _normalize_predicate,
+    _proj_tree,
+    _range_may_match,
+)
 from ..codecs.rle_v1 import (
     decode_byte_rle,
     decode_int_rle_v1,
@@ -577,27 +581,11 @@ def _stats_admit(stt: dict | None, op: str, lit, ts_slack_ns: int = 0) -> bool:
         if op == "!=":
             # widened bounds can no longer PROVE every value == lit
             return True
-    # a cross-typed literal (int predicate on a string column, …) must
-    # keep the range, never crash: unknown never prunes
-    try:
-        if op == "in":
-            return any(lo <= _conv_lit(m, sk) <= hi for m in lit)
-        if op == "==":
-            return lo <= _conv_lit(lit, sk) <= hi
-        if op == "!=":
-            # skippable only when EVERY row fails col != lit: all
-            # non-null values equal lit (lo == hi == lit) and null rows
-            # fail it anyway under SQL ternary logic
-            return not (lo == hi == _conv_lit(lit, sk))
-        if op == "<":
-            return lo < _conv_lit(lit, sk)
-        if op == "<=":
-            return lo <= _conv_lit(lit, sk)
-        if op == ">":
-            return hi > _conv_lit(lit, sk)
-        return hi >= _conv_lit(lit, sk)
-    except TypeError:
-        return True
+    if op == "in":
+        return any(
+            _range_may_match("==", lo, hi, _conv_lit(m, sk)) for m in lit
+        )
+    return _range_may_match(op, lo, hi, _conv_lit(lit, sk))
 
 
 def _parse_row_index(raw) -> list[tuple[list[int], dict | None]]:
@@ -1256,7 +1244,7 @@ def read_orc(source, columns: list[str] | None = None,
     keep = None
     terms: list[tuple] = []
     if predicate is not None:
-        terms = _normalize_predicate(predicate, root, types)
+        terms = _validated_terms(predicate, root, types)
         # writerTimezone lives in the stripe footers (constant per
         # writer process): peek stripe 0's before stats pruning so
         # wall-vs-instant skew on foreign-timezone files can't
@@ -1533,25 +1521,13 @@ def _pred_cid(types: list[_OrcType], root: _OrcType, path: str) -> int:
     return cid
 
 
-def _normalize_predicate(predicate, root: _OrcType,
-                         types: list[_OrcType] | None = None) -> list[tuple]:
-    """Accept one ``(col, op, literal)`` triple or a list/tuple of
-    triples (implicit AND — the ORC SearchArgument conjunction shape);
-    return a validated list with every ``in`` literal materialized
-    ONCE (a one-shot iterable consumed during stripe pruning would
-    leave the per-stripe bloom probe with zero members, silently
-    pruning every bloom-carrying stripe)."""
-    if (
-        isinstance(predicate, tuple)
-        and len(predicate) == 3
-        and isinstance(predicate[0], str)
-    ):
-        terms = [predicate]
-    else:
-        terms = list(predicate)
-    out = []
-    for term in terms:
-        col_name, op, lit = term
+def _validated_terms(predicate, root: _OrcType,
+                     types: list[_OrcType] | None = None) -> list[tuple]:
+    """The container's predicate shape rule (one triple or a sequence of
+    them, ANDed, ``in`` literals materialized once), plus the ORC
+    reader's op and column-path checks."""
+    terms = _normalize_predicate(predicate)
+    for col_name, op, _lit in terms:
         if op not in ("<", "<=", "==", "!=", ">=", ">", "in",
                       "isnull", "notnull"):
             raise ValueError(f"orc_read: predicate op {op!r}")
@@ -1559,8 +1535,7 @@ def _normalize_predicate(predicate, root: _OrcType,
             _pred_cid(types, root, col_name)  # loud on a bad path
         elif col_name.split(".", 1)[0] not in root.names:
             raise KeyError(f"orc_read: predicate column {col_name!r}")
-        out.append((col_name, op, list(lit) if op == "in" else lit))
-    return out
+    return terms
 
 
 def _prune_stripes(meta_raw, root: _OrcType, terms: list[tuple],

@@ -124,24 +124,15 @@ def main() -> None:
         stats=True,
     ).write.mode("overwrite").parquet(f"{work}/pruneblobs")
     show(
-        "stats-pruned decode, range predicate (expect: the stripe-"
-        "elimination Filter is a pure get_json_object expression inside "
-        "WholeStageCodegen on the lineage scan — no extra Python stage; "
-        "eliminated blobs never reach the MapInArrow decode worker)",
+        "stats-pruned decode (expect: ArrowEvalPython runs the stats-only "
+        "pandas UDF before MapInArrow, and the Filter holds no JSON-path "
+        "expression; range and == predicates share this plan — the UDF "
+        "also probes per-blob Bloom bitsets — and eliminated blobs never "
+        "reach the MapInArrow decode worker)",
         decode_blobs(
             spark.read.parquet(f"{work}/pruneblobs"),
             "l_orderkey bigint, l_quantity double",
             predicate=("l_orderkey", ">=", 9000),
-        ),
-    )
-    show(
-        "stats-pruned decode, == predicate (expect: ArrowEvalPython "
-        "evaluates the stats-only pandas UDF before MapInArrow — the "
-        "UDF path keeps per-blob Bloom bitsets in play for equality)",
-        decode_blobs(
-            spark.read.parquet(f"{work}/pruneblobs"),
-            "l_orderkey bigint, l_quantity double",
-            predicate=("l_orderkey", "==", 9000),
         ),
     )
     from orc_format_spark.functions.token_pipeline import (

@@ -287,6 +287,10 @@ def test_and_predicates(monkeypatch):
     assert len(calls) == 2
     # empty list behaves like no predicate
     assert decode_table(blob, predicate=[]).num_rows == 100
+    # a tuple of triples is the same AND as the list (read_orc's shape)
+    assert decode_table(
+        blob, predicate=(("k", ">=", 20), ("k", "<", 40))
+    ).equals(decode_table(blob, predicate=[("k", ">=", 20), ("k", "<", 40)]))
 
 
 # ------------------------------------------------- list-element contains
@@ -398,6 +402,17 @@ def test_in_isnull_startswith_exact_and_pruning(monkeypatch):
     # the literal before the residual filter does
     gen = (v for v in (5, 37, 86, 1000))
     assert decode_table(blob, predicate=("k", "in", gen)).equals(got)
+    # null never satisfies IN, even with a None member, so the result
+    # cannot depend on which chunks the all-null pruning skipped
+    got = decode_table(blob, predicate=("k", "in", (None, 5)))
+    assert got.column("k").to_pylist() == [5]
+    nulls_first = pa.table(
+        {"k": pa.array([None] * 1000 + [1, None, 5, 7] * 250, pa.int64())}
+    )
+    for stride in (None, 1000):
+        b2, _ = encode_table(nulls_first, stride=stride)
+        got = decode_table(b2, predicate=("k", "in", [None, 5]))
+        assert got.column("k").to_pylist() == [5] * 250, stride
     got = decode_table(blob, predicate=("k", "isnull", None))
     assert got.num_rows == 12 and got.column("k").null_count == 12
     got = decode_table(blob, predicate=("k", "notnull", None))
@@ -450,3 +465,131 @@ def test_in_pruning_uses_bloom(monkeypatch):
     out = decode_table(blob, predicate=("k", "in", odd_probes))
     assert out.num_rows == 0
     assert len(calls) <= 1  # Bloom may rarely false-positive one chunk
+
+
+# ------------------------------------------------- evaluator soundness
+
+
+def test_chunk_may_match_sound_fuzz():
+    """Randomized soundness of the one stats evaluator over writer-shaped
+    stats: per trial a fixed column typing (every blob of one table
+    shares column types), 200 random stats rows (bounds / [None, None] /
+    missing column; ints to +-2^62 and 2^53+k, fractional floats,
+    strings, iso temporals) and range predicates, usually typed to the
+    column but sometimes CROSS-typed. Invariants: whenever lo, hi or an
+    in-range literal satisfies the predicate, the chunk is kept (pruning
+    never drops a matching row); a missing column is kept; a cross-typed
+    literal never prunes a chunk that has values."""
+    import datetime
+    import operator
+
+    from orc_format_spark.codecs.container import _chunk_may_match
+
+    rng = np.random.default_rng(47)
+    I64 = 2**62
+    cmp = {
+        "==": operator.eq, "!=": operator.ne, "<": operator.lt,
+        "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+    }
+
+    def bound(domain):
+        if domain == "int":
+            return int(
+                rng.choice(
+                    [
+                        int(rng.integers(-25, 26)),
+                        int(rng.integers(-I64, I64)),
+                        2**53 + int(rng.integers(0, 9)),
+                    ]
+                )
+            )
+        if domain == "float":
+            k = int(rng.integers(-25, 26))
+            return float(
+                rng.choice([k + 0.6, k + 0.5, float(k), k * 1e12 + 0.25])
+            )
+        if domain == "str":
+            return f"s{int(rng.integers(0, 10))}"
+        return datetime.datetime(2020, 1, 1) + datetime.timedelta(
+            hours=int(rng.integers(0, 500))
+        )
+
+    def value(domain):
+        if domain in ("int", "float"):
+            # int and float literals are BOTH well-typed on a numeric
+            # column; near-boundary ints exercise the 2^53 rounding trap
+            if rng.random() < 0.6:
+                return int(
+                    rng.choice(
+                        [int(rng.integers(-25, 26)), 2**53 + 4, -(2**60)]
+                    )
+                )
+            return float(int(rng.integers(-25, 26)) + 0.5)
+        if domain == "str":
+            return f"s{int(rng.integers(0, 10))}"
+        v = bound("dt")
+        return v.date() if rng.random() < 0.3 else v
+
+    def kind(v):
+        if isinstance(v, (int, float)):
+            return "num"
+        if isinstance(v, str):
+            return "str"
+        return "dt" if isinstance(v, datetime.datetime) else "date"
+
+    checked = 0
+    for trial in range(40):
+        domains = {
+            c: str(rng.choice(["int", "float", "str", "dt"])) for c in "abc"
+        }
+        rows = []
+        for _ in range(200):
+            st, raw = {}, {}
+            for col, dom in domains.items():
+                r = rng.random()
+                if r < 0.10:
+                    continue  # column missing from this chunk's stats
+                if r < 0.20:
+                    st[col] = [None, None]  # all-null column
+                    continue
+                lo, hi = sorted((bound(dom), bound(dom)))
+                raw[col] = (lo, hi)
+                if dom == "dt":
+                    st[col] = {"t": "iso", "lo": lo.isoformat(), "hi": hi.isoformat()}
+                else:
+                    st[col] = [lo, hi]
+            rows.append((st, raw))
+        for _ in range(8):
+            col = str(rng.choice(["a", "b", "c", "zz"]))
+            dom = domains.get(col, "int")
+            if rng.random() < 0.2:  # cross-typed predicate
+                dom = str(rng.choice(["int", "float", "str", "dt"]))
+            op = str(rng.choice(list(cmp) + ["in"]))
+            if op == "in":
+                val = tuple(value(dom) for _ in range(int(rng.integers(1, 4))))
+                members = val
+            else:
+                val = value(dom)
+                members = (val,)
+            for st, raw in rows:
+                got = _chunk_may_match(st, (col, op, val))
+                ctx = f"{(col, op, val)} on {st.get(col)} (trial {trial})"
+                if col not in st:
+                    assert got, f"missing column pruned: {ctx}"
+                    continue
+                if col not in raw:
+                    continue  # all-null chunk: provably unmatchable
+                lo, hi = raw[col]
+                if any(kind(m) != kind(lo) for m in members):
+                    assert got, f"cross-typed literal pruned: {ctx}"
+                    continue
+                tests = [("==", m) for m in members] if op == "in" else [(op, val)]
+                match = any(
+                    cmp[o](x, m)
+                    for o, m in tests
+                    for x in [lo, hi] + ([m] if lo <= m <= hi else [])
+                )
+                if match:
+                    assert got, f"matching chunk pruned: {ctx}"
+                checked += 1
+    assert checked > 10_000

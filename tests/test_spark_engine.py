@@ -443,7 +443,7 @@ def test_run_encode_job_cluster_by_resume_stable(spark, tmp_path):
 
 def test_stats_prune_blobs(spark):
     """Stripe elimination: blob-level stats written by stats=True let
-    prune_blobs drop whole blobs JVM-side; a predicate decode over the
+    prune_blobs drop whole blobs before decode; a predicate decode over the
     pruned set equals the unpruned filter exactly, an impossible
     predicate eliminates every blob, and pruning never changes results
     (unknown stats are kept, residual filter is exact)."""
@@ -471,6 +471,17 @@ def test_stats_prune_blobs(spark):
     early = datetime.datetime(1990, 1, 1)
     assert prune_blobs(blobs, ("l_shipdate", "<", early)).count() == 0
     assert decode_blobs(blobs, sch, predicate=("l_shipdate", "<", early)).count() == 0
+    # a one-shot ``in`` literal is materialized once, before the UDF
+    # closures capture it: a pickled iterator would be spent after the
+    # first blob, and a generator does not pickle at all
+    keys = (1, 1201, 1450)
+    assert prune_blobs(blobs, ("l_orderkey", "in", iter(keys))).count() == 3
+    got = decode_blobs(
+        blobs, sch, predicate=("l_orderkey", "in", (k for k in keys))
+    )
+    want_in = li.filter(F.col("l_orderkey").isin(*keys))
+    assert got.exceptAll(want_in).count() == 0
+    assert want_in.exceptAll(got).count() == 0
     # stats-less blobs: prune_blobs refuses loudly, predicate decode
     # still works (chunk-level + residual only)
     plain = encode_groups(g, key_col="l_orderkey")
@@ -483,13 +494,14 @@ def test_stats_prune_blobs(spark):
     blobs.unpersist()
 
 
-def test_prune_blobs_jvm_matches_python(spark):
-    """The JVM-expression prune path keeps exactly the blobs the Python
-    _chunk_may_match evaluator keeps, across value domains (int range,
-    float, string, temporal, missing column, all-null column), and its
-    plan carries no Python stage. == predicates route to the UDF (Bloom
-    power) by design."""
+def test_prune_blobs_sound_across_domains(spark):
+    """prune_blobs never drops a blob holding a matching row, across
+    value domains (int range, float, string, temporal, cross-domain
+    date, missing column, all-null column, int predicates against
+    fractional float bounds, an AND list), and provably empty
+    predicates keep nothing."""
     import datetime
+    import operator
 
     from pyspark.sql import functions as F
 
@@ -501,13 +513,14 @@ def test_prune_blobs_jvm_matches_python(spark):
         "l_returnflag",
         "l_shipdate",
         F.lit(None).cast("bigint").alias("nullcol"),
-        # fractional bounds: int predicates against these must compare
-        # in the double domain — decimal(38,0) try_cast ROUNDS "1.6"
-        # to 2 and would wrongly prune strict boundaries like "< 2"
+        # fractional bounds: an int predicate must compare exactly
+        # against them (stats lo ~1.6 vs "< 2" keeps)
         (F.col("l_quantity") + F.lit(0.6)).alias("fracq"),
     )
     g = li.withColumn("group_id", F.floor(F.col("l_orderkey") / F.lit(200)))
     blobs = encode_groups(g, key_col="l_orderkey", stats=True).cache()
+    source = g.collect()
+    all_groups = {r.group_id for r in source}
     cases = [
         ("l_orderkey", ">=", 1200),
         ("l_orderkey", "<", 200),
@@ -520,11 +533,9 @@ def test_prune_blobs_jvm_matches_python(spark):
         ("l_returnflag", "<", "A"),
         ("l_shipdate", "<", datetime.datetime(1996, 1, 1)),
         ("l_shipdate", ">=", datetime.datetime(2002, 1, 1)),
-        ("l_shipdate", "<", datetime.date(1996, 1, 1)),  # cross-domain: keep
+        ("l_shipdate", "<", datetime.date(1996, 1, 1)),  # cross-domain
         ("no_such_col", ">=", 5),  # unknown column: keep
         ("nullcol", ">=", 5),  # all-null blobs: drop everywhere
-        # int predicate vs fractional float bounds (stats lo ~1.6):
-        # "< 2" must keep (1.6 < 2) even though round("1.6")==2
         ("fracq", "<", 2),
         ("fracq", "<=", 1),
         ("fracq", ">", 50),
@@ -532,142 +543,40 @@ def test_prune_blobs_jvm_matches_python(spark):
         ("fracq", "!=", 3),
         [("l_orderkey", ">=", 600), ("l_quantity", "<=", 10.0)],  # AND list
     ]
+    cmp = {
+        "!=": operator.ne, "<": operator.lt, "<=": operator.le,
+        ">": operator.gt, ">=": operator.ge,
+    }
+
+    def row_matches(r, col, op, val):
+        x = r[col]
+        if x is None:
+            return False
+        if isinstance(x, datetime.datetime) and not isinstance(
+            val, datetime.datetime
+        ):
+            val = datetime.datetime.combine(val, datetime.time())
+        return cmp[op](x, val)
+
     for pred in cases:
-        jvm = prune_blobs(blobs, pred)
-        plan = jvm._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan, f"python stage leaked: {pred}"
-        got = {r.group_id for r in jvm.select("group_id").collect()}
+        conj = pred if isinstance(pred, list) else [pred]
+        kept = {
+            r.group_id
+            for r in prune_blobs(blobs, pred).select("group_id").collect()
+        }
+        if any(c not in g.columns for c, _, _ in conj):
+            assert kept == all_groups, f"unknown column pruned: {pred}"
+            continue
         want = {
             r.group_id
-            for r in prune_blobs(blobs, pred, force_python=True)
-            .select("group_id")
-            .collect()
+            for r in source
+            if all(row_matches(r, *c) for c in conj)
         }
-        assert got == want, f"JVM/Python prune disagree for {pred}: {got} vs {want}"
-    # == stays on the UDF path so Bloom bitsets participate
-    eq = prune_blobs(blobs, ("l_orderkey", "==", 7))
-    assert "ArrowEvalPython" in eq._jdf.queryExecution().executedPlan().toString()
+        assert kept >= want, f"matching blobs pruned for {pred}: {want - kept}"
+    assert prune_blobs(blobs, ("nullcol", ">=", 5)).count() == 0
+    early = ("l_shipdate", "<", datetime.datetime(1990, 1, 1))
+    assert prune_blobs(blobs, early).count() == 0
     blobs.unpersist()
-
-
-def test_prune_keep_condition_fuzz(spark):
-    """Randomized JVM-vs-Python prune parity over writer-shaped stats
-    JSON: per trial a fixed column typing (the real-blob invariant —
-    every blob of one table shares column types), 200 random stats rows
-    (bounds / [null,null] / missing), and typed range predicates.
-    Predicates are usually typed to the column but sometimes CROSS-typed
-    (a str value against numeric bounds etc.) — the Python evaluator
-    keeps on TypeError and the JVM expression must never lexicographic-
-    compare across domains into a wrong prune.
-    Invariants: the JVM keep set is a SUPERSET of the Python keep set
-    (the expression path may wrongly keep, never wrongly prune — the
-    residual decode filter is exact), and the two sets are EQUAL when
-    every conjunct value is a string, a temporal, or an int within the
-    double-exact domain (|v| <= 2^53); only float values and ints past
-    2^53 retain the deliberate widen-only slack."""
-    import datetime
-    import json
-
-    from orc_format_spark import prune_blobs
-
-    rng = np.random.default_rng(47)
-    I64 = 2**62
-
-    def bound(domain):
-        if domain == "int":
-            return int(
-                rng.choice(
-                    [
-                        int(rng.integers(-25, 26)),
-                        int(rng.integers(-I64, I64)),
-                        2**53 + int(rng.integers(0, 9)),
-                    ]
-                )
-            )
-        if domain == "float":
-            k = int(rng.integers(-25, 26))
-            return float(
-                rng.choice([k + 0.6, k + 0.5, float(k), k * 1e12 + 0.25])
-            )
-        if domain == "str":
-            return f"s{int(rng.integers(0, 10))}"
-        base = datetime.datetime(2020, 1, 1) + datetime.timedelta(
-            hours=int(rng.integers(0, 500))
-        )
-        return base
-
-    def value(domain):
-        if domain in ("int", "float"):
-            # int vs float predicates are BOTH well-typed on a numeric
-            # column; near-boundary ints exercise the rounding trap
-            if rng.random() < 0.6:
-                return int(
-                    rng.choice(
-                        [int(rng.integers(-25, 26)), 2**53 + 4, -(2**60)]
-                    )
-                )
-            return float(int(rng.integers(-25, 26)) + 0.5)
-        if domain == "str":
-            return f"s{int(rng.integers(0, 10))}"
-        v = bound("dt")
-        return v.date() if rng.random() < 0.3 else v
-
-    OPS = ["!=", "<", "<=", ">", ">="]
-    for trial in range(12):
-        domains = {
-            c: str(rng.choice(["int", "float", "str", "dt"]))
-            for c in ("a", "b", "c")
-        }
-        rows = []
-        for i in range(200):
-            d = {}
-            for col, dom in domains.items():
-                r = rng.random()
-                if r < 0.10:
-                    continue  # column missing from this blob's stats
-                if r < 0.20:
-                    d[col] = [None, None]  # all-null column
-                    continue
-                lo, hi = sorted((bound(dom), bound(dom)))
-                if dom == "dt":
-                    d[col] = {"t": "iso", "lo": lo.isoformat(), "hi": hi.isoformat()}
-                else:
-                    d[col] = [lo, hi]
-            rows.append((i, json.dumps(d, sort_keys=True)))
-        rows.append((990, None))  # null stats: always kept
-        df = spark.createDataFrame(rows, "group_id long, stats string")
-        parsed = {i: (json.loads(s) if s is not None else None) for i, s in rows}
-        for _ in range(4):
-            preds = []
-            for _ in range(int(rng.integers(1, 3))):
-                col = str(rng.choice(["a", "b", "c", "zz"]))
-                dom = domains.get(col, "int")
-                if rng.random() < 0.2:  # cross-typed predicate
-                    dom = str(rng.choice(["int", "float", "str", "dt"]))
-                preds.append((col, str(rng.choice(OPS)), value(dom)))
-            jvm = {r.group_id for r in prune_blobs(df, preds).collect()}
-            py = {
-                r.group_id
-                for r in prune_blobs(df, preds, force_python=True).collect()
-            }
-            assert jvm >= py, (
-                f"JVM wrongly pruned {py - jvm} for {preds} "
-                f"(trial {trial}, domains {domains})"
-            )
-            exact = all(
-                isinstance(v, (str, datetime.date, datetime.datetime))
-                or (
-                    isinstance(v, int)
-                    and not isinstance(v, bool)
-                    and abs(v) <= 2**53
-                )
-                for _, _, v in preds
-            )
-            if exact:
-                assert jvm == py, (
-                    f"JVM over-kept {jvm - py} in the exact domain for "
-                    f"{preds} (trial {trial}, domains {domains})"
-                )
 
 
 def test_ddl_names_backticked_with_spaces():
