@@ -863,11 +863,23 @@ def decode_entries(entries: list[ColumnEntry], start: int = 0,
             )
     elif pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_binary(t) or pa.types.is_large_binary(t):
         data, off = _decode_str_values(e.codec, raw_streams[DATA])
+        if off.size != e.n_present + 1 or int(off[-1]) > len(data):
+            # from_buffers trusts its offsets: check before building
+            raise ValueError(
+                f"column {e.name!r}: string stream does not hold "
+                f"{e.n_present} values"
+            )
         values = pa.LargeBinaryArray.from_buffers(
             pa.large_binary(), e.n_present, [None, pa.py_buffer(off), pa.py_buffer(np.ascontiguousarray(data))]
         ).cast(t)
     else:
         raise NotImplementedError(e.type)
+    if len(values) != e.n_present:
+        # a forged or mismatched stream must not decode to a short column
+        raise ValueError(
+            f"column {e.name!r}: decoded {len(values)} values, the entry "
+            f"header says {e.n_present}"
+        )
     return e.name, _rebuild_with_nulls(values, e.has_null, e.n_rows, present), nxt
 
 

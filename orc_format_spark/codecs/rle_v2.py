@@ -33,14 +33,24 @@ Header layouts (byte0 top 2 bits select the sub-encoding; ORC v1 spec
                 first delta signed zigzag varint; monotonic runs only;
                 count 2..512
 
-The encoder segments the input into equal-value runs (>=3) and 512-value
-literal chunks, then picks the cheapest applicable sub-encoding per chunk.
-Encoder *strategy* (which valid sub-encoding/width a writer picks — e.g.
-our exact-count 95th-percentile patched-base split) is a writer freedom
-the spec grants; the emitted bytes are always spec-decodable.
+The encoder splits the input into long equal-value runs (>= 32 values,
+found with one flatnonzero) and the literal stretches between them, cut
+into 512-value chunks from each stretch's start, and picks the cheapest
+applicable sub-encoding per chunk. Its Python steps once per long run
+and once per literal stretch, never per value or per short segment: all
+full 512-value literal chunks are scored together on (k, 512) matrices
+(``_full_chunk_entries``), only patched-base candidates and each
+stretch's ragged tail go through the per-chunk ``_encode_literal_chunk``,
+and the bit packs of every chunk are batched per width at the end
+(``_join_deferred``). Encoder *strategy* (which valid sub-encoding/width
+a writer picks — e.g. our exact-count 95th-percentile patched-base
+split) is a writer freedom the spec grants; the emitted bytes are always
+spec-decodable.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
@@ -63,6 +73,7 @@ _MAX_CHUNK = 512
 _U64_MASK = 0xFFFFFFFFFFFFFFFF
 
 _POW2 = np.array([1 << k for k in range(64)], dtype=np.uint64)
+_ZEROS_U64 = np.zeros(8, np.uint64)
 
 
 def _bit_lengths(u: np.ndarray) -> np.ndarray:
@@ -130,26 +141,28 @@ def _delta_width_field(d0: int, rest_abs: np.ndarray) -> int | None:
     return 0  # fixed delta: decoder replays |d0| with d0's sign
 
 
+def _delta_prefix(n: int, dfield: int, base_u, d0: int, signed: bool) -> bytes:
+    """Header, base varint (zigzag if signed) and first-delta zigzag
+    varint of an ``n``-value delta run; the |deltas[1:]| pack follows
+    when ``dfield`` is non-zero."""
+    base = int(base_u)
+    if signed:
+        base = _zigzag_one(base - (1 << 64) if base >> 63 else base)
+    return (
+        bytes(((3 << 6) | (dfield << 1) | ((n - 1) >> 8), (n - 1) & 0xFF))
+        + encode_varint_one(base)
+        + encode_varint_one(_zigzag_one(d0))
+    )
+
+
 def _emit_delta(
     out: list[bytes], seg_u: np.ndarray, d0: int, rest_abs: np.ndarray, signed: bool
 ):
-    n = seg_u.size
     dfield = _delta_width_field(d0, rest_abs)
     assert dfield is not None, "caller must pre-check _delta_width_field"
+    out.append(_delta_prefix(seg_u.size, dfield, seg_u[0], d0, signed))
     if dfield:
-        w = code_width(dfield)
-    else:
-        w = 0
-    out.append(bytes(((3 << 6) | (dfield << 1) | ((n - 1) >> 8), (n - 1) & 0xFF)))
-    base = int(seg_u[0])
-    if signed:
-        base_s = base - (1 << 64) if base >> 63 else base
-        out.append(encode_varint_one(_zigzag_one(base_s)))
-    else:
-        out.append(encode_varint_one(base))
-    out.append(encode_varint_one(_zigzag_one(d0)))
-    if dfield:
-        out.append(bitpack(rest_abs, w))
+        out.append(bitpack(rest_abs, code_width(dfield)))
 
 
 def _bitpack_py(vals, width: int) -> bytes:
@@ -244,21 +257,13 @@ def _direct_size(n: int, w: int) -> int:
 
 
 def _encode_literal_chunk(
-    out: list,
-    seg_u: np.ndarray,
-    signed: bool,
-    zz: np.ndarray | None = None,
-    bl: np.ndarray | None = None,
+    out: list, seg_u: np.ndarray, signed: bool, zz: np.ndarray | None = None
 ):
     """Pick the cheapest of delta/patched/direct for a <=512 chunk.
 
-    DIRECT payloads are not packed here: a ("direct", zz, w, n) marker
-    is appended instead, and encode_int_rle_v2 batches all same-width
-    markers into one bitpack at the end (full 512-value chunks are
-    byte-aligned at any width, so concatenated packing emits the
-    identical bytes). `bl` is the precomputed per-value bit length of
-    `zz` — one global pass in the caller replaces a searchsorted per
-    chunk."""
+    DIRECT payloads are not packed here: a (header, zz, w, b"") entry
+    is appended instead, and ``_join_deferred`` packs all same-width
+    entries in one bitpack at the end."""
     n = seg_u.size
     if n == 1:
         _emit_direct(out, seg_u, signed, zz)
@@ -268,8 +273,7 @@ def _encode_literal_chunk(
         return
     if zz is None:
         zz = zigzag_encode(seg_u.view(np.int64)) if signed else seg_u
-    if bl is None:
-        bl = _bit_lengths(zz)
+    bl = _bit_lengths(zz)
     w_direct = round_width(max(1, int(bl.max())))
     dsize = _direct_size(n, w_direct)
     # monotonic? (compare in the value domain)
@@ -315,6 +319,97 @@ def _encode_literal_chunk(
         out.append((_direct_header(w_direct, n), zz, w_direct, b""))
 
 
+def _emit_run(out: list, u: np.ndarray, s: int, L: int, signed: bool):
+    """One equal-value run of ``L`` (>= 32) values at ``u[s]``: fixed-zero
+    delta chunks of 512, then the tail as short-repeat (3..10 values),
+    direct (1..2) or another zero delta."""
+    full, r = divmod(L, _MAX_CHUNK)
+    out.extend([_delta_prefix(_MAX_CHUNK, 0, u[s], 0, signed)] * full)
+    if 3 <= r <= 10:
+        _emit_short_repeat(out, int(u[s]), r, signed)
+    elif r >= 11:
+        out.append(_delta_prefix(r, 0, u[s], 0, signed))
+    elif r:
+        _emit_direct(out, u[s : s + r], signed)
+
+
+# round_width / the aligned delta width / the varint length as lookup
+# tables indexed by bit length 0..64, for the (k, 512) chunk matrices
+_ROUND_W = np.array([round_width(b) for b in range(65)], np.int64)
+_DELTA_W = np.array([_delta_packed_width(b) for b in range(65)], np.int64)
+_VARINT_LEN = np.array([max(1, (b + 6) // 7) for b in range(65)], np.int64)
+_P95 = int(np.ceil(0.95 * _MAX_CHUNK)) - 1  # patched-base width rank
+_BATCH_CHUNKS = 256  # full chunks scored per matrix pass (128Ki values)
+
+
+def _full_chunk_entries(u: np.ndarray, zz: np.ndarray, cs: np.ndarray,
+                        signed: bool) -> list:
+    """One output entry per full 512-value literal chunk ``u[c:c+512]``
+    for ``c`` in ``cs``: ``_encode_literal_chunk``'s delta / patched /
+    direct choice, scored for all chunks at once on (k, 512) matrices.
+
+    Per row: the max bit length gives the direct width and size; the
+    monotone flags, first delta and delta width field give the exact
+    delta size; the 95th-percentile residual width says whether
+    patched-base can apply. Only those patched-eligible chunks run
+    ``_encode_literal_chunk`` itself; delta and direct payloads are
+    deferred for ``_join_deferred``'s batched bitpack."""
+    entries: list = []
+    lane = np.arange(_MAX_CHUNK)
+    for b0 in range(0, cs.size, _BATCH_CHUNKS):
+        rows = cs[b0 : b0 + _BATCH_CHUNKS, None] + lane
+        U = u[rows]
+        Z = zz[rows]
+        w_direct = _ROUND_W[_bit_lengths(Z.max(axis=1))]
+        dsize = _direct_size(_MAX_CHUNK, w_direct)
+        V = U.view(np.int64) if signed else U
+        nondec = (V[:, 1:] >= V[:, :-1]).all(axis=1)
+        noninc = (V[:, 1:] <= V[:, :-1]).all(axis=1)
+        D = np.where(nondec[:, None], U[:, 1:] - U[:, :-1], U[:, :-1] - U[:, 1:])
+        d0 = D[:, 0]
+        # the decoder takes the direction from sign(d0): a decreasing
+        # chunk whose first delta is 0 cannot be a delta run
+        delta = (
+            (nondec | noninc)
+            & (nondec | (d0 != 0) | ~D.any(axis=1))
+            & (D.max(axis=1) < np.uint64(1 << 63))
+        )
+        fixed = (D[:, 1:] == d0[:, None]).all(axis=1)
+        dw = _DELTA_W[_bit_lengths(D[:, 1:].max(axis=1))]
+        neg = ~nondec  # a decreasing delta chunk has d0 != 0
+        d0_zz = (d0 << np.uint64(1)) - neg  # zigzag of -d0 when neg
+        dsize_delta = (
+            2
+            + _VARINT_LEN[_bit_lengths(Z[:, 0] if signed else U[:, 0])]
+            + _VARINT_LEN[_bit_lengths(d0_zz)]
+            + np.where(fixed, 0, ((_MAX_CHUNK - 2) * dw + 7) // 8)
+        )
+        # patched-base needs residuals wider than the rounded
+        # 95th-percentile residual width (see _try_patched; at most 25
+        # of 512 are, within its 31-patch limit); bit length is
+        # monotone, so the rank is taken on the residuals
+        patch = np.zeros(delta.size, bool)
+        rest = np.flatnonzero(~delta)
+        if rest.size:
+            R = U[rest] - V[rest].min(axis=1).view(np.uint64)[:, None]
+            w95 = _bit_lengths(np.partition(R, _P95, axis=1)[:, _P95])
+            patch[rest] = _ROUND_W[np.maximum(1, w95)] < _bit_lengths(R.max(axis=1))
+        for k, (is_delta, is_patch) in enumerate(zip(delta.tolist(), patch.tolist())):
+            if is_patch:
+                _encode_literal_chunk(entries, U[k], signed, Z[k])
+            elif is_delta and dsize_delta[k] <= dsize[k]:
+                w = int(dw[k])
+                prefix = _delta_prefix(
+                    _MAX_CHUNK, 0 if fixed[k] else width_code(w), U[k, 0],
+                    -int(d0[k]) if neg[k] else int(d0[k]), signed,
+                )
+                entries.append(prefix if fixed[k] else (prefix, D[k, 1:], w, b""))
+            else:
+                w = int(w_direct[k])
+                entries.append((_direct_header(w, _MAX_CHUNK), Z[k], w, b""))
+    return entries
+
+
 def encode_int_rle_v2(values: np.ndarray, signed: bool = True) -> bytes:
     v = np.asarray(values)
     if signed:
@@ -325,76 +420,70 @@ def encode_int_rle_v2(values: np.ndarray, signed: bool = True) -> bytes:
     if n == 0:
         return b""
     zz_full = zigzag_encode(u.view(np.int64)) if signed else u
-    out: list = []
-    # segment into equal-value runs (>=4) and literal stretches
+    # Only long equal-value runs (>= 32) are split out: short runs inside
+    # a monotonic stretch are cheaper in a 1-bit-delta 512-chunk than as
+    # standalone groups. The literal stretches are the gaps before,
+    # between and after the long runs; stretch j precedes run j.
     change = np.empty(n, bool)
     change[0] = True
     change[1:] = u[1:] != u[:-1]
     starts = np.flatnonzero(change)
     lengths = np.diff(np.append(starts, n))
-    # Only split out long equal-value runs: short runs embedded in a
-    # monotonic stretch are cheaper inside a 1-bit-delta 512-chunk than as
-    # standalone groups.
-    run_mask = lengths >= 32
-    i = 0
-    nseg = len(starts)
-    si = 0
-    while si < nseg:
-        if run_mask[si]:
-            s = int(starts[si])
-            L = int(lengths[si])
-            val = int(u[s])
-            pos = 0
-            while pos < L:
-                r = min(L - pos, _MAX_CHUNK)
-                if 3 <= r <= 10:
-                    _emit_short_repeat(out, val, r, signed)
-                elif r < 3:
-                    _emit_direct(out, u[s + pos : s + pos + r], signed)
-                else:
-                    _emit_delta(out, u[s + pos : s + pos + r], 0, np.empty(0, np.uint64), signed)
-                pos += r
-            si += 1
-        else:
-            # coalesce consecutive non-run segments into literal stretch
-            s = int(starts[si])
-            sj = si
-            while sj < nseg and not run_mask[sj]:
-                sj += 1
-            e = int(starts[sj]) if sj < nseg else n
-            # one bit-length pass per literal stretch (run regions
-            # never pay for it), sliced per chunk
-            bl_stretch = _bit_lengths(zz_full[s:e])
-            for cs in range(s, e, _MAX_CHUNK):
-                ce = min(cs + _MAX_CHUNK, e)
-                _encode_literal_chunk(
-                    out,
-                    u[cs:ce],
-                    signed,
-                    zz_full[cs:ce],
-                    bl_stretch[cs - s : ce - s],
-                )
-            si = sj
-    # ---- resolve deferred packs (direct values / patched residuals):
-    # one bitpack per width over every byte-aligned chunk (512*w bits
-    # always is), split afterwards
-    dpos = [k for k, p in enumerate(out) if type(p) is tuple]
-    if dpos:
-        by_w: dict[int, list[int]] = {}
-        for k in dpos:
-            prefix, arr, w, suffix = out[k]
-            if (arr.size * w) % 8 == 0:
+    long_runs = np.flatnonzero(lengths >= 32)
+    run_s = starts[long_runs]
+    run_len = lengths[long_runs]
+    lit_s = np.concatenate(([0], run_s + run_len))
+    lit_e = np.append(run_s, n)
+    nfull = (lit_e - lit_s) // _MAX_CHUNK
+    first = np.cumsum(nfull) - nfull
+    cs = np.repeat(lit_s, nfull) + _MAX_CHUNK * (
+        np.arange(int(nfull.sum())) - np.repeat(first, nfull)
+    )
+    full_entries = _full_chunk_entries(u, zz_full, cs, signed)
+    out: list = []
+    runs = zip(run_s.tolist(), run_len.tolist())
+    for s, e, k, c in zip(lit_s.tolist(), lit_e.tolist(), nfull.tolist(),
+                          first.tolist()):
+        out += full_entries[c : c + k]
+        ts = s + k * _MAX_CHUNK
+        if ts < e:
+            _encode_literal_chunk(out, u[ts:e], signed, zz_full[ts:e])
+        run = next(runs, None)
+        if run is not None:
+            _emit_run(out, u, run[0], run[1], signed)
+    return _join_deferred(out)
+
+
+def _join_deferred(out: list) -> bytes:
+    """Join the output entries, resolving the deferred packs (direct
+    values, delta magnitudes, patched residuals) with one bitpack per
+    width. MSB-first packing of byte-aligned payloads concatenates, and
+    a payload whose last byte is partly filled is made aligned with
+    zero values when they fit inside that byte (510 delta magnitudes at
+    2 bits: two zeros), so the split packing is byte-identical."""
+    by_w: dict[int, list[int]] = {}
+    for k, p in enumerate(out):
+        if type(p) is tuple:
+            prefix, arr, w, suffix = p
+            if (-arr.size % (8 // math.gcd(w, 8))) * w < 8:
                 by_w.setdefault(w, []).append(k)
             else:
                 out[k] = prefix + bitpack(arr, w) + suffix
-        for w, ks in by_w.items():
-            packed = bitpack(np.concatenate([out[k][1] for k in ks]), w)
-            off = 0
-            for k in ks:
-                prefix, arr, _, suffix = out[k]
-                nb = arr.size * w // 8
-                out[k] = prefix + packed[off : off + nb] + suffix
-                off += nb
+    for w, ks in by_w.items():
+        step = 8 // math.gcd(w, 8)
+        parts = []
+        for k in ks:
+            arr = out[k][1]
+            parts.append(arr)
+            if arr.size % step:
+                parts.append(_ZEROS_U64[: -arr.size % step])
+        packed = bitpack(np.concatenate(parts), w)
+        off = 0
+        for k in ks:
+            prefix, arr, _, suffix = out[k]
+            nb = (arr.size * w + 7) // 8
+            out[k] = prefix + packed[off : off + nb] + suffix
+            off += nb
     return b"".join(out)
 
 

@@ -1028,3 +1028,410 @@ def test_nested_projection_fuzz_blob(trial):
 
     want = [prune(r, parts[1:]) for r in full.column(parts[0]).to_pylist()]
     assert got.column(parts[0]).to_pylist() == want, (trial, path, comp)
+
+
+# ---------------------------------------------------------------------------
+# Write-kernel byte identity. The digests below were computed with the
+# previous kernels (the exhaustive 153-pair ALP chooser and the
+# segment-by-segment RLEv2 walk); the vectorized kernels must reproduce
+# every byte of every shape.
+
+
+def _digest(encodings) -> str:
+    import hashlib
+
+    h = hashlib.sha256()
+    for enc in encodings:
+        h.update(len(enc).to_bytes(8, "little"))
+        h.update(enc)
+    return h.hexdigest()
+
+
+def _rle_v2_corpus(signed: bool) -> dict:
+    """Seeded RLEv2 input shapes, each a list of int64/uint64 vectors."""
+    dt = np.int64 if signed else np.uint64
+    lo = -(2**63) if signed else 0
+    hi = 2**63 - 1 if signed else 2**64 - 1
+    rng = np.random.default_rng(404 + signed)
+
+    def arr(x):
+        return np.asarray(x).astype(dt)
+
+    shapes = {}
+    off = -(10**7) if signed else 10**7
+    shapes["sorted_short_runs"] = [
+        arr(off + np.repeat(np.cumsum(rng.integers(0, 4, m)), rng.integers(1, 6, m)))
+        for m in (5, 200, 700, 1500, 4000)
+    ] + [  # arithmetic 512-value chunks with one delta bumped
+        arr(off + np.cumsum(np.where(np.arange(1024) % 512 == j, 5, 3)))
+        for j in (1, 2, 300, 511)
+    ]
+    runs = []
+    for _ in range(6):
+        parts = []
+        for _ in range(12):
+            L = int(rng.choice([3, 31, 32, 33, 40, 100, 511, 512, 513, 514,
+                                515, 520, 1024, 1030]))
+            v = int(rng.integers(-500 if signed else 0, 1000))
+            parts.append(np.full(L, v))
+            parts.append(rng.integers(0, 1000, int(rng.integers(0, 40))))
+        runs.append(arr(np.concatenate(parts)))
+    shapes["long_runs"] = runs
+    shapes["random_wide"] = [
+        rng.integers(lo, hi, m, dtype=dt, endpoint=True) for m in (1, 2, 511, 512, 5000)
+    ] + [arr(rng.integers(0, 1 << int(b), 2000)) for b in (1, 7, 13, 33, 62)]
+    patched = []
+    for k in (1, 5, 20, 31, 32, 40):
+        base = rng.integers(0, 1 << 10, 2048)
+        if signed:
+            base = base - 600
+        idx = rng.choice(2048, k, replace=False)
+        base[idx] = rng.integers(1 << 40, 1 << 44, k)
+        patched.append(arr(base))
+    for k in (25, 26, 31, 32):  # exactly k outliers in each 512-value chunk
+        x = rng.integers(0, 1 << 9, 1024)
+        for c in (0, 512):
+            x[c + rng.choice(512, k, replace=False)] = rng.integers(1 << 30, 1 << 31, k)
+        patched.append(arr(x))
+    spaced = rng.integers(0, 256, 2048)
+    spaced[::300] = 1 << 50  # patch gaps > 255 need filler entries
+    patched.append(arr(spaced))
+    patched.append(arr(np.where(rng.random(3000) < 0.02, 1 << 20, rng.integers(0, 16, 3000))))
+    shapes["patched_outliers"] = patched
+    dec = []
+    for m in (7, 20, 513, 2000):
+        d = rng.integers(0, 4, m)
+        d[1::512] = 0  # first delta of every 512-value chunk is zero
+        d[0] = 0
+        dec.append(arr(10**6 - np.cumsum(d)))
+    dec.append(arr([9, 9, 8, 7, 6]))
+    dec.append(arr([5, 5, 5, 5, 4]))
+    shapes["decreasing_zero_first_delta"] = dec
+    if signed:
+        ext = [
+            [2**63 - 1, -(2**63), 0, 1, -1],
+            [-(2**63), 0, 2**63 - 1],
+            [2**63 - 1, 0, -(2**63)],
+            [-(2**63)] * 40 + [2**63 - 1] * 40,
+            [2**63 - 1 - i for i in range(600)],
+            [-(2**63) + 3 * i for i in range(600)],
+        ]
+        ext = [np.array(x, np.int64) for x in ext]
+        # a monotone 512-value chunk whose last delta is >= 2^63
+        ext.append(np.append(np.arange(511, dtype=np.int64) + np.int64(-(2**63)), 2**63 - 1))
+        ext.append(np.sort(rng.integers(lo, hi, 1500, dtype=dt, endpoint=True)))
+        ext.append(np.sort(rng.integers(lo, hi, 1500, dtype=dt, endpoint=True))[::-1].copy())
+    else:
+        ext = [
+            [2**64 - 1, 0, 2**63, 1],
+            [0, 2**64 - 1],
+            [2**64 - 1] * 40 + [0] * 40,
+            [2**64 - 1 - i for i in range(600)],
+            [2**63 + 5 * i for i in range(600)],
+        ]
+        ext = [np.array(x, np.uint64) for x in ext]
+        ext.append(np.append(np.arange(511, dtype=np.uint64), np.uint64(2**63 + 5)))
+        ext.append(np.sort(rng.integers(lo, hi, 1500, dtype=dt, endpoint=True)))
+    shapes["extremes"] = ext
+    tails = []
+    for L in range(1, 512):
+        head = rng.integers(0, 1 << 20, 512)
+        tails.append(arr(np.concatenate([head, rng.integers(0, 1 << 20, L)])))
+        tails.append(arr(np.sort(np.concatenate([head, rng.integers(0, 1 << 20, L)]))))
+        tails.append(arr(np.concatenate([head, np.full(L, 7)])))
+        tails.append(arr(np.full(512 + L, 3)))
+    shapes["tails"] = tails
+    return shapes
+
+
+@np.errstate(over="ignore")  # f4 casts of the large magnitudes -> inf
+def _alp_corpus(double: bool) -> dict:
+    """Seeded float input shapes for encode_alp."""
+    ft = np.float64 if double else np.float32
+    rng = np.random.default_rng(808 + double)
+    sizes = (1, 2, 63, 64, 65, 257, 1000, 1024, 3000)
+    shapes = {}
+    shapes["decimals"] = [
+        np.round(rng.uniform(-1e4, 1e4, m), d).astype(ft)
+        for d in range(0, 7) for m in sizes[::2]
+    ]
+    shapes["reals"] = [rng.standard_normal(m).astype(ft) for m in sizes]
+    mixed = []
+    for m in sizes[3:]:
+        v = np.round(rng.uniform(0, 1000, m), 2)
+        v[:: int(rng.integers(3, 40))] *= np.pi
+        mixed.append(v.astype(ft))
+    shapes["mixed"] = mixed
+    sp = np.array([0.0, -0.0, np.nan, np.inf, -np.inf, 5e-324, 1e308])
+    specials = [sp.astype(ft), np.full(100, np.nan, ft)]
+    for m in (64, 1000):
+        v = np.round(rng.uniform(-50, 50, m), 1)
+        v[rng.choice(m, 6, replace=False)] = sp[:6]
+        specials.append(v.astype(ft))
+    shapes["specials"] = specials
+    shapes["big_ints"] = [
+        (rng.integers(2**53, 2**60, m) * rng.choice([-1, 1], m)).astype(ft)
+        for m in (10, 1000)
+    ] + [rng.integers(-(2**20), 2**20, 1500).astype(ft)]
+    shapes["scales"] = [
+        (np.round(rng.uniform(1, 9, 500), 3) * s).astype(ft)
+        for s in (1e-300, 1e-12, 1e-5, 1e5, 1e12, 1e300)
+    ]
+    return shapes
+
+
+_RLE_V2_DIGESTS = {
+    True: {
+        "decreasing_zero_first_delta": "ffd83133a9d2cbbd7d950014b1d0c3b93839b83030fb84f0df86ca36e6403e0b",
+        "extremes": "db811ff7d10bb69d9d67e3be3a6d48a767ad662073bd259a1a398616398736be",
+        "long_runs": "5e5aa1220a7f4d16b071c4469015444a99c694d70add08f9fe249b2f05fec80b",
+        "patched_outliers": "895cb420c4e50a26aa80264f5ee4a20142b2119f0ef8156a92af644079aa657d",
+        "random_wide": "bdc7cb8d9ac44603e339c83eae8913a72421e45f32e33adedd9039eaf842c8ff",
+        "sorted_short_runs": "1fc97076cc4be8db059b37c9f2364818e6ffe1f9f0f095be92c44fe520a3905a",
+        "tails": "37f71887860f977092cc1e4e7406c9a14b819d2fa35e137b8ef522c8a3e56355",
+    },
+    False: {
+        "decreasing_zero_first_delta": "ec39013793b98c0dcf27be438782a6102adaf47ed88668188f148ef212b0603f",
+        "extremes": "479dd2c547362164600e6ce9821b465b7f53d57a6d83bd17087bc713239a626d",
+        "long_runs": "837930dfe24f926ac2d4c2b6dd5d2294dc7cb9fdac9352bae8e2cd5506dbe5a4",
+        "patched_outliers": "42dca635864f6f7908de949d5ed43abcb8352ff39ecdbb7bb1dd17fe8e15e564",
+        "random_wide": "ff3bf82f7875e30d6d330e1a31414868e780b1a5c9aef86fa43aa178323818ee",
+        "sorted_short_runs": "7d0a8f5a3a2ab2696ec554a305ea0e29a80fb7ddd5f7be7b8f1daa5784310abe",
+        "tails": "79a662df1757bbf1f03fd5f1f9dfd3625c04fa52305614a9eda1e7ac9cdab9fb",
+    },
+}
+_ALP_DIGESTS = {
+    True: {
+        "big_ints": "859254f0e9c897e50cff4dd45c356e6804c06a2e8e28e95a092359dfe3ddb262",
+        "decimals": "a426a0cf9a86bba45d9938bff06a1fb3913da002861cf7e05c4fc440f216af76",
+        "mixed": "d7a237e0c541eb9f39ce45c6a9cf571849ea7104395c44d2800e741c749c87f3",
+        "reals": "4d18c5c5801ea15df3afa6722ea5196fd5480aa00aefce15185242c138e1d413",
+        "scales": "d7f8d5012f390fd2544e6fd593f3f181bd67b839eedeadcaf7df602d2a4accd1",
+        "specials": "a9d8676f14eb028b3d79ea9dbb11b99a54fd41dcabea5a402788d403ed36b5ab",
+    },
+    False: {
+        "big_ints": "1dfbd29bb0589ac3f3a6f69ad6c3871234f2e3c1f11de0107909c8e323c18d11",
+        "decimals": "be55a69448b455a9829553b2cbef27070e0a497e063825b28c03169d5b55b4e9",
+        "mixed": "f7c7b8eb2979aeeb2ca6f426f9fe5281c445ea33f11c1df912cdb12f3cb932bb",
+        "reals": "7eb0cda0b5965bf6e49d8098b2518d430e29930ab7b6425edd66858648998cdc",
+        "scales": "f1e7218788651354cee2ad725a3935f75fd4954877b651abf6e723f547c35cfd",
+        "specials": "15fbe4eaf583018b8ead0623185d5dc1f6255942663ad3accd6720513d3a82a8",
+    },
+}
+
+
+@pytest.mark.parametrize("signed", [True, False])
+def test_rle_v2_encode_bytes_pinned(signed):
+    """encode_int_rle_v2 emits the pinned bytes for every corpus shape
+    (and every stream decodes back)."""
+    got = {}
+    for name, vecs in _rle_v2_corpus(signed).items():
+        encs = [encode_int_rle_v2(v, signed) for v in vecs]
+        for v, enc in zip(vecs, encs):
+            assert np.array_equal(decode_int_rle_v2(enc, signed), v), name
+        got[name] = _digest(encs)
+    assert got == _RLE_V2_DIGESTS[signed]
+
+
+@pytest.mark.parametrize("double", [True, False])
+def test_alp_encode_bytes_pinned(double):
+    from orc_format_spark.codecs.alp import decode_alp, encode_alp
+
+    got = {}
+    for name, vecs in _alp_corpus(double).items():
+        encs = [encode_alp(v, double) for v in vecs]
+        for v, enc in zip(vecs, encs):
+            assert decode_alp(enc, double).tobytes() == v.tobytes(), name
+        got[name] = _digest(encs)
+    assert got == _ALP_DIGESTS[double]
+
+
+def _choose_exponents_exhaustive(v64, sample=1024):
+    """The previous ALP chooser, kept as the oracle of the bounded
+    search: all 153 (e, f) pairs scored on the whole head sample in one
+    candidates x sample matrix, first minimum of the estimated bits."""
+    from orc_format_spark.codecs import alp
+
+    s = np.ascontiguousarray(v64[: min(v64.size, sample)])
+    n = s.size
+    pe = alp._POW10[alp._CAND_E][:, None]
+    ipf = alp._IPOW10[alp._CAND_F][:, None]
+    with np.errstate(over="ignore", invalid="ignore"):
+        scaled = s[None, :] * pe * ipf
+        in_range = np.isfinite(scaled) & (np.abs(scaled) < alp._SAFE_DIGITS)
+        d_int = np.round(np.where(in_range, scaled, 0.0)).astype(np.int64)
+        recon = d_int * alp._POW10[alp._CAND_F][:, None] * alp._IPOW10[alp._CAND_E][:, None]
+    exact = in_range & (recon.view(np.int64) == s.view(np.int64)[None, :])
+    n_exc = n - exact.sum(axis=1)
+    hi = np.where(exact, d_int, np.int64(-(1 << 62))).max(axis=1)
+    lo = np.where(exact, d_int, np.int64(1 << 62)).min(axis=1)
+    span = np.maximum(hi - lo, 0)
+    width = np.array([max(1, int(x).bit_length()) for x in span])
+    cost = np.where(n_exc == n, np.inf, width * n + 80 * n_exc)
+    if not np.isfinite(cost).any():
+        return (0, 0)
+    return alp._CAND[int(np.argmin(cost))]
+
+
+def _alp_fuzz_vector(rng):
+    """One seeded float vector: decimals, reals, mixes, specials, big
+    ints, or a head whose shape differs from the rest of the sample."""
+    m = int(rng.integers(1, 1500))
+    kind = int(rng.integers(0, 8))
+    if kind == 0:
+        v = np.round(rng.uniform(-1e6, 1e6, m), int(rng.integers(0, 9)))
+    elif kind == 1:
+        v = rng.standard_normal(m) * 10.0 ** int(rng.integers(-8, 9))
+    elif kind == 2:
+        v = np.round(rng.uniform(0, 1e3, m), int(rng.integers(0, 5)))
+        v[rng.random(m) < rng.uniform(0, 0.5)] *= np.pi
+    elif kind == 3:
+        v = np.round(rng.uniform(-100, 100, m), int(rng.integers(0, 4)))
+        sp = np.array([np.nan, np.inf, -np.inf, -0.0, 0.0, 5e-324])
+        hit = rng.random(m) < rng.uniform(0, 1)
+        v[hit] = rng.choice(sp, int(hit.sum()))
+    elif kind == 4:
+        v = rng.integers(-(2**62), 2**62, m).astype(np.float64)
+    elif kind == 5:
+        v = np.round(rng.uniform(1, 9, m), int(rng.integers(0, 6)))
+        v *= 10.0 ** int(rng.integers(-20, 21))
+    else:
+        # the head (what the early bounds see) differs from the tail
+        cut = int(rng.integers(0, m + 1))
+        a = np.round(rng.uniform(-50, 50, m), int(rng.integers(0, 3)))
+        b = np.round(rng.uniform(-5e3, 5e3, m), int(rng.integers(2, 7)))
+        if kind == 7:
+            b = rng.standard_normal(m)
+        v = np.concatenate([a[:cut], b[cut:]])
+        if rng.random() < 0.3:
+            v[: min(cut, 64)] = np.nan
+    return v
+
+
+def test_alp_bounded_chooser_matches_exhaustive():
+    """The branch-and-bound chooser picks the exhaustive chooser's (e, f)
+    on 2,400 seeded vectors, f8 and f4-widened."""
+    from orc_format_spark.codecs.alp import _choose_exponents
+
+    rng = np.random.default_rng(2024)
+    for i in range(2400):
+        v = _alp_fuzz_vector(rng)
+        if i % 3 == 0:
+            with np.errstate(over="ignore"):
+                v = v.astype(np.float32).astype(np.float64)
+        assert _choose_exponents(v) == _choose_exponents_exhaustive(v), i
+
+
+def test_alp_bounded_chooser_keeps_earlier_tie():
+    """On 128 three-decimal values then integers up to 1050, (0, 0) costs
+    11 * 1024 + 80 * 128 bits, and for most seeds a later (e, e-3) pair
+    exact on every value ties with it. That pair is the incumbent when
+    (0, 0)'s bound reaches the tied cost at the 256-value stage; only
+    the rule that keeps an earlier candidate on a tie lets the first
+    minimum, (0, 0), win."""
+    from orc_format_spark.codecs.alp import _choose_exponents
+
+    for seed in range(12):
+        rng = np.random.default_rng(seed)
+        frac = rng.integers(0, 1040, 128) + rng.integers(1, 1000, 128) / 1000
+        ints = rng.integers(0, 1041, 1024 - 128).astype(np.float64)
+        ints[:2] = (0, 1040)
+        ints[-1] = 1050  # widens the later pair's span by one bit
+        v = np.concatenate([np.round(frac, 3), ints])
+        assert _choose_exponents(v) == _choose_exponents_exhaustive(v), seed
+
+
+def _encode_int_rle_v2_segment_walk(values, signed=True):
+    """The previous RLEv2 encoder walk, kept as the oracle of the
+    vectorized one: one interpreter step per equal-value segment, one
+    ``_encode_literal_chunk`` per 512-value literal chunk."""
+    from orc_format_spark.codecs import rle_v2 as r
+
+    v = np.asarray(values)
+    if signed:
+        u = np.ascontiguousarray(v, dtype=np.int64).view(np.uint64)
+    else:
+        u = np.ascontiguousarray(v, dtype=np.uint64)
+    n = u.size
+    if n == 0:
+        return b""
+    zz_full = r.zigzag_encode(u.view(np.int64)) if signed else u
+    out = []
+    change = np.empty(n, bool)
+    change[0] = True
+    change[1:] = u[1:] != u[:-1]
+    starts = np.flatnonzero(change)
+    lengths = np.diff(np.append(starts, n))
+    run_mask = lengths >= 32
+    nseg = len(starts)
+    si = 0
+    while si < nseg:
+        if run_mask[si]:
+            s = int(starts[si])
+            L = int(lengths[si])
+            pos = 0
+            while pos < L:
+                m = min(L - pos, r._MAX_CHUNK)
+                if 3 <= m <= 10:
+                    r._emit_short_repeat(out, int(u[s]), m, signed)
+                elif m < 3:
+                    r._emit_direct(out, u[s + pos : s + pos + m], signed)
+                else:
+                    r._emit_delta(out, u[s + pos : s + pos + m], 0,
+                                  np.empty(0, np.uint64), signed)
+                pos += m
+            si += 1
+        else:
+            s = int(starts[si])
+            sj = si
+            while sj < nseg and not run_mask[sj]:
+                sj += 1
+            e = int(starts[sj]) if sj < nseg else n
+            for cs in range(s, e, r._MAX_CHUNK):
+                ce = min(cs + r._MAX_CHUNK, e)
+                r._encode_literal_chunk(out, u[cs:ce], signed, zz_full[cs:ce])
+            si = sj
+    return r._join_deferred(out)
+
+
+def _rle_v2_fuzz_vector(rng, signed):
+    """Concatenated pieces: runs of every length class, sorted and
+    reverse-sorted ramps, patched-base shapes, random widths."""
+    parts = []
+    for _ in range(int(rng.integers(1, 8))):
+        m = int(rng.integers(1, 1400))
+        kind = int(rng.integers(0, 7))
+        b = int(rng.integers(1, 64))
+        if kind == 0:
+            parts.append(np.full(m, int(rng.integers(0, 1 << b))))
+        elif kind == 1:
+            step = rng.integers(0, 1 << int(rng.integers(1, 12)), m)
+            x = np.cumsum(step)
+            parts.append(x[::-1] if rng.random() < 0.5 else x)
+        elif kind == 2:
+            x = rng.integers(0, 1 << int(rng.integers(1, 16)), m)
+            k = int(rng.integers(1, 40))
+            x[rng.integers(0, m, k)] = rng.integers(1 << 30, 1 << 50, k)
+            parts.append(x)
+        elif kind == 3:
+            parts.append(np.repeat(rng.integers(0, 50, m), rng.integers(1, 40, m))[:m * 4])
+        elif kind == 4:
+            parts.append(rng.integers(0, 1 << b, m, dtype=np.uint64))
+        elif kind == 5:
+            step = np.full(m, int(rng.integers(1, 1 << 20)))
+            step[rng.integers(0, m, int(rng.integers(0, 3)))] += 1
+            parts.append(np.cumsum(step))
+        else:
+            parts.append(np.sort(rng.integers(0, 1 << b, m, dtype=np.uint64)))
+    x = np.concatenate([np.asarray(p).astype(np.uint64) for p in parts])
+    if signed and rng.random() < 0.5:
+        x = (x.view(np.int64) - np.int64(1 << int(rng.integers(0, 62)))).view(np.uint64)
+    return x.view(np.int64) if signed else x
+
+
+@pytest.mark.parametrize("signed", [True, False])
+def test_rle_v2_encoder_matches_segment_walk(signed):
+    rng = np.random.default_rng(77 + signed)
+    for i in range(250):
+        v = _rle_v2_fuzz_vector(rng, signed)
+        assert encode_int_rle_v2(v, signed) == _encode_int_rle_v2_segment_walk(v, signed), i

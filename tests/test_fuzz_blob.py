@@ -6,10 +6,15 @@ behavior, reader errors not wrong values): for ANY truncation or
 single-byte flip of a blob, `decode_table` either (a) raises a clean
 Python exception, (b) returns a table logically EQUAL to the original
 (the flipped byte is genuinely decode-redundant — e.g. the
-informational engine tag, or `n_present` under has_null=False), or
+informational engine tag), or
 (c) returns a table whose `table_checksum` differs from the original's
 — which `verify_blobs` (and the encode job's lineage checksums) catch.
 There is no fourth outcome: a wrong table that PASSES the checksum.
+
+A flipped `n_present` raises: every column entry's decoded value count
+must equal its header's `n_present`, so a stream swapped for a shorter
+valid one (the forged cases below) is refused instead of decoding to a
+short column.
 """
 
 import numpy as np
@@ -18,7 +23,9 @@ import pytest
 
 from orc_format_spark.codecs.container import (
     decode_table,
+    deserialize_blob,
     encode_table,
+    serialize_blob,
     table_checksum,
 )
 
@@ -80,3 +87,33 @@ def test_random_garbage_raises():
     # right magic, absurd entry count, garbage tail
     with pytest.raises(Exception):
         decode_table(b"OFS1\x03\xff\xff" + bytes(64))
+
+
+@pytest.mark.parametrize(
+    "codec,values",
+    [
+        ("alp", pa.array(np.round(np.linspace(0, 99, 100), 2), pa.float64())),
+        ("for_bitpack", pa.array(np.arange(100) * 7, pa.int64())),
+    ],
+)
+def test_forged_short_leaf_stream_raises(codec, values):
+    """A column's DATA stream replaced by the (valid) stream of its first
+    50 values must raise, not decode to a 50-row table."""
+    t = pa.table({"x": values})
+    blob, _ = encode_table(t, codec={"x": codec}, compression="none")
+    short, _ = encode_table(t.slice(0, 50), codec={"x": codec}, compression="none")
+    entries = deserialize_blob(blob)
+    assert entries[0].codec == codec
+    entries[0].streams = deserialize_blob(short)[0].streams
+    with pytest.raises(ValueError):
+        decode_table(serialize_blob(entries))
+
+
+def test_alp_digit_count_must_match_header():
+    from orc_format_spark.codecs.alp import decode_alp, encode_alp
+
+    enc = bytearray(encode_alp(np.round(np.linspace(0, 99, 100), 2)))
+    assert enc[2] == 100  # varint n, one byte
+    enc[2] = 50
+    with pytest.raises(ValueError):
+        decode_alp(bytes(enc))
