@@ -22,6 +22,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..worker_env import limit_worker_threads
+
 FEATURE_DIM = 8
 _MOD = 997
 
@@ -73,6 +75,7 @@ def extract_features(df: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
     """
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        limit_worker_threads()
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
             pay = tbl.column("payload").combine_chunks().cast(pa.large_binary())
@@ -117,6 +120,7 @@ def frame_sample(df: DataFrame, stride: int = 16) -> DataFrame:
     shape: seek + slice without decoding). Arrow-batched, zero-copy in."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        limit_worker_threads()
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
             pay = tbl.column("payload").combine_chunks().cast(pa.large_binary())
@@ -164,6 +168,7 @@ def resize_payload(df: DataFrame, target: int = 32) -> DataFrame:
     behind the same Arrow-batched signature (see decode_image's gate)."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        limit_worker_threads()
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
             pay = tbl.column("payload").combine_chunks().cast(pa.large_binary())
@@ -307,6 +312,7 @@ def decode_images(df: DataFrame) -> DataFrame:
     NotImplementedError gate."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        limit_worker_threads()
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
             pay = tbl.column("payload").combine_chunks()

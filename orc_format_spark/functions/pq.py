@@ -43,6 +43,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..worker_env import limit_worker_threads
 from .similarity import MAX_CENTROIDS, _with_quant, batch_qmatrix, topk_cut
 
 QUANT_SQL = (
@@ -158,6 +159,7 @@ def pq_encode(
     corpus = _with_quant(emb, id_col, vec_col)
 
     def encode(batches):
+        limit_worker_threads()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -223,6 +225,7 @@ def pq_topk(
         ).sum(axis=2)
 
     def score(batches):
+        limit_worker_threads()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -454,6 +457,7 @@ def ivf_pq_topk(
         )
 
     def score(batches):
+        limit_worker_threads()
         for batch in batches:
             if batch.num_rows == 0:
                 continue

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..worker_env import limit_worker_threads
 from .similarity import _with_quant, batch_qmatrix, cosine_e6, resolve_centroids
 
 
@@ -69,6 +70,7 @@ def assign_ivf_lists(
     )
 
     def assign(batches):
+        limit_worker_threads()
         for batch in batches:
             if batch.num_rows == 0:
                 continue

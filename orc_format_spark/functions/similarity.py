@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..worker_env import limit_worker_threads
+
 QUANT = 1000.0
 
 
@@ -218,6 +220,7 @@ def brute_force_topk(
     dims = q_mat.shape[1]
 
     def score(batches):
+        limit_worker_threads()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -558,6 +561,7 @@ def ivf_topk(
     # exact operand order of cosine_e6, all IEEE-754 correctly-rounded
     # ops, so results stay bit-identical to the SQL oracle.
     def assign(batches):
+        limit_worker_threads()
         for batch in batches:
             if batch.num_rows == 0:
                 continue

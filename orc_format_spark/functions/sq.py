@@ -50,6 +50,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..worker_env import limit_worker_threads
 from .similarity import _with_quant, batch_qmatrix, topk_cut
 
 QUANT_SQL = (
@@ -78,6 +79,7 @@ def _bounds(corpus: DataFrame):
     import pyarrow as pa
 
     def partial(batches):
+        limit_worker_threads()
         mn = mx = None
         for batch in batches:
             if batch.num_rows == 0:
@@ -142,6 +144,7 @@ def sq8_encode(
     dims = len(mn)
 
     def encode(batches):
+        limit_worker_threads()
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -189,6 +192,7 @@ def sq8_topk(
     q_n2 = (q_mat * q_mat).sum(axis=1)
 
     def score(batches):
+        limit_worker_threads()
         for batch in batches:
             if batch.num_rows == 0:
                 continue

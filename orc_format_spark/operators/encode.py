@@ -471,6 +471,8 @@ def prune_blobs(
         return blobs
 
     def _may_match(s: pd.Series) -> pd.Series:
+        limit_worker_threads()
+
         def one(v):
             if v is None:
                 return True

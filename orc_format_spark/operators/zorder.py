@@ -34,6 +34,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from ..worker_env import limit_worker_threads
+
 MAX_BITS = 16  # per-column; bits*cols must stay <= 63 (signed LongType z)
 
 # arrow timestamp unit -> divisor to epoch SECONDS, matching Spark's
@@ -138,6 +140,7 @@ def with_zorder_key(
     out_schema = StructType(df.schema.fields + [StructField(out_col, LongType())])
 
     def fn(it):
+        limit_worker_threads()
         for batch in it:
             arrs = []
             for c in cols:

@@ -113,12 +113,14 @@ def encode_splits(
         row_index_stride = DEFAULT_ROW_INDEX_STRIDE
 
     if parallelism is None:
-        # several splits per task: task-dispatch latency is a serial cost
-        # (the driver schedules tasks one at a time), so 1 task per
-        # row-group caps throughput at scheduler speed; 2 waves of
-        # core-count-sized tasks keeps dispatch off the critical path
-        # while still load-balancing. Spark's own parquet scan packs
-        # row-groups into maxPartitionBytes-sized tasks for this reason.
+        # several splits per task: each wave of core-count tasks pays a
+        # fixed cost in the Python workers, ~0.07 s for an empty job on
+        # a 4-core VM once worker_env's zip guard stops PySpark's
+        # per-task importlib.invalidate_caches() from re-reading
+        # pyspark.zip and the Spark jar (0.2-0.35 s per wave without
+        # it, BENCH.md §15). 2 waves of core-count-sized tasks still
+        # load-balance uneven splits; Spark's own parquet scan packs
+        # row-groups into maxPartitionBytes-sized tasks likewise.
         parallelism = 2 * spark.sparkContext.defaultParallelism
     # ONE stage, no shuffle: a native range source partitioned over split
     # ids + a broadcast split table looked up in the worker. (The earlier

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..worker_env import limit_worker_threads
+
 _STATE_SCHEMA = T.StructType([T.StructField("admitted_key", T.StringType())])
 
 
@@ -63,6 +65,7 @@ def stream_dedup(
     out_cols = [key_col, fingerprint_col, *carry_cols]
 
     def update(key, pdfs, state: GroupState):
+        limit_worker_threads()
         import pandas as pd
 
         if state.hasTimedOut:

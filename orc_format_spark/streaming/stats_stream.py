@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..worker_env import limit_worker_threads
+
 RUNNING_SCHEMA = T.StructType(
     [
         T.StructField("source", T.StringType()),
@@ -79,6 +81,7 @@ def token_running_totals(stream_df: DataFrame) -> DataFrame:
     """
 
     def update(key, pdfs, state: GroupState):
+        limit_worker_threads()
         import pandas as pd
 
         docs = 0

@@ -1,24 +1,77 @@
-"""Per-worker runtime tuning for Arrow-batched UDFs.
+"""Once-per-worker runtime setup for the library's Python UDFs.
 
-Spark runs one Python worker per core; pyarrow's default CPU/IO thread
-pools are sized to the whole machine, so N workers x N arrow threads
-oversubscribes the box quadratically (32 workers x 32 threads = 1024
-runnable threads at local[32]) — thread thrash and allocator contention
-that shows up as collapsing per-core throughput as parallelism rises.
-Every mapInArrow/applyInArrow entrypoint in this package calls
-``limit_worker_threads()`` once per process: each worker is a single
-lane; parallelism comes from Spark's task scheduling, not nested pools.
+Every UDF body in this package (``mapInArrow``, ``applyInArrow``, the
+pandas UDF of ``prune_blobs`` and the ``applyInPandasWithState``
+operators in ``streaming/``) calls ``limit_worker_threads()`` first.
+The first call in a Python worker sets up two things for the rest of
+that worker's life:
+
+- **One Arrow lane per worker.** Spark runs one Python worker per core;
+  pyarrow's default CPU/IO thread pools are sized to the whole machine,
+  so N workers x N arrow threads oversubscribes the box quadratically
+  (32 workers x 32 threads = 1024 runnable threads at local[32]) —
+  thread thrash and allocator contention that shows up as collapsing
+  per-core throughput as parallelism rises. Each worker is a single
+  lane; parallelism comes from Spark's task scheduling, not nested pools.
+- **No per-task zip re-read.** Before every task PySpark's worker calls
+  ``importlib.invalidate_caches()`` (``setup_spark_files``). Before
+  CPython 3.13 that makes every cached ``zipimporter`` re-parse its
+  archive's whole central directory. A Spark 4.1 worker holds 16 of
+  them (pyspark.zip's packages, py4j, the Spark jar on the worker's
+  PYTHONPATH, plus any ``--py-files`` zip): 0.14-0.25 s of CPU per task,
+  most of an empty job's wall (BENCH.md §15). With the guard an archive is
+  re-read only when its (inode, size, mtime) stamp changed since this
+  process last read it; otherwise the importer adopts the directory
+  already in ``zipimport._zip_directory_cache``. CPython 3.13 invalidates
+  lazily, so there the guard is not installed.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
+
 _done = False
+# archive path -> (st_ino, st_size, st_mtime_ns) taken just before this
+# process last read the archive's directory
+_stamps: dict[str, tuple[int, int, int]] = {}
+_reread = zipimport.zipimporter.invalidate_caches  # the eager re-read
+
+
+def _invalidate_if_changed(self) -> None:
+    try:
+        st = os.stat(self.archive)
+        stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+    except OSError:
+        stamp = None
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if stamp is not None and files is not None and _stamps.get(self.archive) == stamp:
+        self._files = files
+        return
+    _reread(self)
+    if stamp is not None and self.archive in zipimport._zip_directory_cache:
+        _stamps[self.archive] = stamp
+    else:
+        _stamps.pop(self.archive, None)
+
+
+def _install_zip_guard() -> None:
+    if sys.version_info >= (3, 13):
+        return
+    zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+    # read and stamp every archive now (once each, not once per
+    # importer), so the next task already finds them unchanged
+    for imp in list(sys.path_importer_cache.values()):
+        if isinstance(imp, zipimport.zipimporter):
+            imp.invalidate_caches()
 
 
 def limit_worker_threads() -> None:
     global _done
     if _done:
         return
+    _install_zip_guard()
     import pyarrow as pa
 
     try:

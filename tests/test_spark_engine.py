@@ -693,3 +693,74 @@ def test_decode_blobs_nested_projection_evolution(spark):
     )
     got = sorted((r.k, r.s.inner.y, r.extra) for r in out.collect())
     assert got == [(i, f"y{i}", None) for i in range(200)]
+
+
+_ZIP_IDENTITY_JOB = r'''
+import json, os, sys
+from pyspark.sql import SparkSession
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.ui.showConsoleProgress", "false").getOrCreate())
+
+
+def first(batches):
+    import types
+    import zipimport
+    import pyarrow as pa
+    from orc_format_spark.worker_env import limit_worker_threads
+
+    limit_worker_threads()
+    held = types.ModuleType("_held_zip_directories")
+    held.pid = os.getpid()
+    held.dirs = {p: zipimport._zip_directory_cache[p]
+                 for p in sys.path if p in zipimport._zip_directory_cache}
+    sys.modules[held.__name__] = held  # kept alive for the next task
+    for _ in batches:
+        pass
+    yield pa.record_batch([pa.array([json.dumps(sorted(held.dirs))])], names=["r"])
+
+
+def second(batches):
+    import zipimport
+    import pyarrow as pa
+
+    held = sys.modules.get("_held_zip_directories")
+    same = {p: zipimport._zip_directory_cache.get(p) is d for p, d in held.dirs.items()}
+    for _ in batches:
+        pass
+    r = {"pid": held.pid == os.getpid(), "same": same}
+    yield pa.record_batch([pa.array([json.dumps(r)])], names=["r"])
+
+
+archives = json.loads(spark.range(0, 1, 1, 1).mapInArrow(first, "r string").collect()[0].r)
+second_task = json.loads(spark.range(0, 1, 1, 1).mapInArrow(second, "r string").collect()[0].r)
+print(json.dumps({"archives": archives, **second_task}))
+spark.stop()
+'''
+
+
+def test_worker_keeps_zip_directories_across_tasks(tmp_path):
+    """PySpark's worker calls importlib.invalidate_caches() before every
+    task; once a library UDF has run in a worker (the hook installs the
+    zip guard), the next task must find the very same zip directory
+    objects for every zip on the worker's sys.path (pyspark.zip, the Spark
+    jar): nothing was re-read. Fresh local[1] process, so both
+    single-task jobs run in the one Python worker."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, PYSPARK_PYTHON=sys.executable)
+    proc = subprocess.run(
+        [sys.executable, "-c", _ZIP_IDENTITY_JOB],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
+    assert out["archives"], "no zip archive on the worker's sys.path"
+    assert out["pid"], "the two tasks ran in different Python workers"
+    assert set(out["same"]) == set(out["archives"])
+    assert all(out["same"].values()), out["same"]
