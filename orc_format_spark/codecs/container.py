@@ -33,6 +33,8 @@ has no nulls (the reference's has_null gate, e.g. long.rs:136-145).
 
 from __future__ import annotations
 
+import datetime
+import functools
 import hashlib
 
 import numpy as np
@@ -42,6 +44,7 @@ import pyarrow.compute as pc
 from . import dictionary, raw, rle_v1, rle_v2, timestamp as ts_codec
 from .bitpack import decode_for_bitpack
 from .blocks import compress_stream, decompress_stream
+from .bloom import bloom_from_b64, bloom_may_contain
 from .fsst import fsst_decode
 from .selector import (
     _encode_float,
@@ -51,6 +54,7 @@ from .selector import (
     select_and_encode_int,
     select_and_encode_str,
 )
+from ..predicate import Stats, filter_table, leaves, may_match, normalize
 from .varint import decode_varint_one, encode_varint_one
 
 MAGIC = b"OFS1"
@@ -1098,203 +1102,51 @@ def _decode_body(blob: bytes, columns: list[str] | None = None) -> pa.Table:
     return pa.table(cols, names=names)
 
 
-_PRED_OPS = (
-    "==", "!=", "<", "<=", ">", ">=", "contains",
-    "in", "isnull", "notnull", "startswith",
-)
+def _iso(v, datetime_bounds: bool) -> str:
+    """A literal in the isoformat domain of temporal stats. One outside
+    the bounds' domain (datetime bounds contain "T"), or tz-aware (its
+    "+HH:MM" suffix breaks the order), is unknown: TypeError."""
+    if (datetime_bounds != isinstance(v, datetime.datetime)
+            or not isinstance(v, datetime.date)
+            or getattr(v, "tzinfo", None) is not None):
+        raise TypeError(v)
+    return v.isoformat()
 
 
-def _normalize_predicate(predicate) -> list[tuple]:
-    """One ``(col, op, literal)`` triple, or any sequence of triples
-    (implicit AND), -> a list of triples; None -> []. Every ``in``
-    literal is materialized ONCE into a tuple: stats pruning iterates it
-    before the residual filter does (a one-shot iterable would leave the
-    filter with no members), and a generator cannot be pickled into a
-    Spark UDF closure."""
-    if predicate is None:
-        return []
-    if (
-        isinstance(predicate, tuple)
-        and len(predicate) == 3
-        and isinstance(predicate[0], str)
-    ):
-        predicate = [predicate]
-    return [
-        (col, op, tuple(lit) if op == "in" else lit)
-        for col, op, lit in predicate
-    ]
+def stats_view(stats: dict | None):
+    """A :func:`_chunk_stats` dict (chunk, blob-level or manifest
+    stats) -> the ``col -> Stats`` view of :func:`predicate.may_match`:
+    ``[lo, hi]`` bounds (``[None, None]`` = all-null), iso temporal or
+    list-element bounds, and ``<col>@bloom`` bitsets (probed with int
+    literals). Absent columns and unknown tags are unknown."""
 
-
-def _range_may_match(op: str, lo, hi, v) -> bool:
-    """Can some value in ``[lo, hi]`` satisfy ``value op v``? The one
-    comparison rule behind blob, chunk, ORC stripe and ORC row-group
-    pruning. Incomparable domains (``TypeError``) mean unknown: keep."""
-    try:
-        if op == "==":
-            return lo <= v <= hi
-        if op == "!=":
-            # prunable only when EVERY value equals v; null rows fail
-            # != anyway under SQL ternary logic
-            return not (lo == hi == v)
-        if op == "<":
-            return lo < v
-        if op == "<=":
-            return lo <= v
-        if op == ">":
-            return hi > v
-        if op == ">=":
-            return hi >= v
-    except TypeError:
-        return True
-    raise ValueError(f"unsupported predicate op {op!r} (use one of {_PRED_OPS})")
-
-
-def _chunk_may_match(stats: dict | None, predicate: tuple) -> bool:
-    """Row-group skip test (the reference's row-index stats purpose,
-    common.rs:24-48): False only when the chunk's [min, max] PROVES no
-    row satisfies the predicate. Unknown stats -> True (decode it).
-    Null rows never satisfy a comparison, so an all-null chunk
-    ([None, None]) is provably unmatchable."""
-    import datetime
-
-    col, op, val = predicate
-    if stats is None or col not in stats:
-        return True
-    entry = stats[col]
-    if op == "contains":
-        # list<int> membership: prune only from an element-stats entry
-        # (written when the column was in bloom_columns); anything else
-        # is unknown -> decode
-        if not (isinstance(entry, dict) and entry.get("t") == "elem"):
-            return True
-        lo = entry.get("lo")
-        if lo is None:
-            return False  # chunk has no elements at all
-        if not isinstance(val, int) or isinstance(val, bool):
-            return True
-        if val < lo or val > entry["hi"]:
-            return False
+    def view(col):
+        entry = None if stats is None else stats.get(col)
+        if entry is None:
+            return None
         b64 = stats.get(f"{col}@bloom")
-        if b64 is not None:
-            from .bloom import bloom_from_b64, bloom_may_contain
-
-            return bloom_may_contain(bloom_from_b64(b64), val)
-        return True
-    if op == "in":
-        # membership = OR of per-value equality tests (min/max window +
-        # Bloom each); an empty value list matches nothing
-        return any(_chunk_may_match(stats, (col, "==", v)) for v in val)
-    if op == "isnull":
-        return True  # [min,max] bounds cannot prove a chunk null-free
-    if op == "notnull":
-        # only an all-null chunk ([None, None] bounds) provably has no
-        # non-null row; element/temporal entries stay unknown
-        return not (isinstance(entry, (list, tuple)) and entry[0] is None)
-    if op == "startswith":
-        if not isinstance(entry, (list, tuple)):
-            return True  # element/temporal entry: unknown for prefixes
-        slo, shi = entry
-        if slo is None:
-            return False  # all-null chunk
-        if not isinstance(val, str) or not isinstance(slo, str):
-            return True
-        # bounds are EXACT min/max (never ORC-style truncated), so the
-        # prefix window test is sound: every val-prefixed string s has
-        # s >= val and s[:len(val)] == val — the chunk can hold one iff
-        # hi >= val and lo is not already past the whole prefix range
-        return shi >= val and slo[: len(val)] <= val
-    if isinstance(entry, dict) and entry.get("t") == "elem":
-        return True  # element stats say nothing about row-level compares
-    if isinstance(entry, dict):  # temporal entry: compare in iso domain
-        if entry.get("t") != "iso":
-            return True  # future tag: unknown, decode
-        lo, hi = entry["lo"], entry["hi"]
-        # the predicate value's class must match the bounds' domain
-        # (datetime bounds contain "T"); a cross-domain iso compare could
-        # wrongly prune, so fall back to decoding instead
-        if "T" in lo:
-            if not isinstance(val, datetime.datetime):
-                return True
-            if val.tzinfo is not None:
-                # bounds are tz-naive (tz-aware columns are never
-                # statable); an aware isoformat carries a "+HH:MM"
-                # suffix that breaks the lexicographic order and the
-                # exact filter normalizes the value anyway — unknown,
-                # decode
-                return True
-        elif not isinstance(val, datetime.date) or isinstance(
-            val, datetime.datetime
-        ):
-            return True
-        val = val.isoformat()
-    else:
-        lo, hi = entry
-        if lo is None:  # all-null chunk
-            return False
-    if not _range_may_match(op, lo, hi, val):
-        return False
-    b64 = stats.get(f"{col}@bloom") if op == "==" else None
-    if b64 is not None and isinstance(val, int):
-        from .bloom import bloom_from_b64, bloom_may_contain
-
-        return bloom_may_contain(bloom_from_b64(b64), val)
-    return True
-
-
-def _apply_predicate(tbl: pa.Table, predicate: tuple) -> pa.Table:
-    """Exact residual filter after pruning (chunk stats give a superset)."""
-    col, op, val = predicate
-    c = tbl.column(col)
-    if op == "contains":
-        cc = c.combine_chunks()
-        if not (pa.types.is_list(cc.type) or pa.types.is_large_list(cc.type)):
-            raise ValueError(
-                f"contains predicate requires a list column, got {cc.type}"
-            )
-        lens = pc.list_value_length(cc)
-        lens = np.asarray(pc.fill_null(lens, 0).cast(pa.int64()))
-        flat = pc.list_flatten(cc)  # null/empty rows contribute nothing
-        hits = np.asarray(
-            pc.fill_null(pc.equal(flat, pa.scalar(val, cc.type.value_type)), False)
+        bloom = None if b64 is None else (
+            lambda v: not isinstance(v, int)
+            or bloom_may_contain(bloom_from_b64(b64), v)
         )
-        ends = np.cumsum(lens)
-        rows = np.searchsorted(ends, np.flatnonzero(hits), side="right")
-        mask = np.zeros(len(cc), bool)
-        mask[rows] = True
-        return tbl.filter(pa.array(mask))
-    if op == "in":
-        # null never satisfies ``in``, even with a None member (the
-        # chunk pruning above already treats all-null chunks that way)
-        mask = pc.is_in(
-            c, value_set=pa.array(list(val), c.type), skip_nulls=True
-        )
-        return tbl.filter(pc.fill_null(mask, False))
-    if op == "isnull":
-        return tbl.filter(pc.is_null(c))
-    if op == "notnull":
-        return tbl.filter(pc.is_valid(c))
-    if op == "startswith":
-        mask = pc.starts_with(c, pattern=val)
-        return tbl.filter(pc.fill_null(mask, False))
-    fns = {
-        "==": pc.equal,
-        "!=": pc.not_equal,
-        "<": pc.less,
-        "<=": pc.less_equal,
-        ">": pc.greater,
-        ">=": pc.greater_equal,
-    }
-    if op not in fns:
-        raise ValueError(f"unsupported predicate op {op!r} (use one of {_PRED_OPS})")
-    mask = fns[op](c, pa.scalar(val, c.type))
-    return tbl.filter(pc.fill_null(mask, False))
+        if isinstance(entry, (list, tuple)):
+            lo, hi = entry
+            return Stats(lo, hi, n=0 if lo is None else None, bloom=bloom)
+        lo, hi = entry.get("lo"), entry.get("hi")
+        if entry.get("t") == "elem":
+            return Stats(lo, hi, n=0 if lo is None else None, bloom=bloom, elem=True)
+        if entry.get("t") == "iso":
+            return Stats(lo, hi, conv=functools.partial(_iso, datetime_bounds="T" in lo))
+        return None
+
+    return view
 
 
 def decode_table(
     blob: bytes,
     columns: list[str] | None = None,
     rows: tuple[int, int] | None = None,
-    predicate: tuple | list[tuple] | None = None,
+    predicate=None,
 ) -> pa.Table:
     """Decode a blob; ``columns`` projects at the blob level (unwanted
     columns' streams are skipped without decompression) — dotted paths
@@ -1308,21 +1160,20 @@ def decode_table(
     covering chunks are decompressed (the ORC row-index point-read path);
     on a v1 blob the slice is applied after a full decode.
 
-    ``predicate=(col, op, value)`` — or a list of such triples, ANDed —
-    with op in ``== != < <= > >= in isnull notnull startswith`` (value
-    is a tuple for ``in``, ignored for the null tests) returns exactly
-    the matching rows; on a stats-bearing chunked blob (engine >= 3.1)
-    chunks that any conjunct's min/max (or Bloom bitset, for ``==`` and
-    each ``in`` member; prefix-window for ``startswith``) proves
-    unmatchable are skipped without decompression — the reference's row-index-stats
-    reader-side skipping (data/common.rs:24-48), which its own reader
-    never shipped. ``predicate`` and ``rows`` are mutually exclusive (a
+    ``predicate`` — a ``(col, op, value)`` leaf (op in ``== != < <= >
+    >= in isnull notnull startswith contains``), a list of nodes (AND),
+    ``("and"|"or", [nodes])`` or ``("not", node)``; see
+    :mod:`orc_format_spark.predicate` — returns exactly the matching
+    rows; chunks whose stats (engine >= 3.1) prove it never TRUE are
+    skipped without decompression — the reference's row-index-stats
+    skipping (data/common.rs:24-48), which its own reader never
+    shipped. ``predicate`` and ``rows`` are mutually exclusive (a
     row slice is positional; filtering renumbers rows)."""
-    preds = _normalize_predicate(predicate) or None
-    if preds is not None and rows is not None:
+    tree = normalize(predicate)
+    if tree is not None and rows is not None:
         raise ValueError("decode_table: predicate and rows are mutually exclusive")
-    if preds is not None and columns is not None:
-        for pcol in (pr[0] for pr in preds):
+    if tree is not None and columns is not None:
+        for pcol in (leaf.col for leaf in leaves(tree)):
             if pcol not in columns:
                 raise ValueError(
                     f"decode_table: predicate column {pcol!r} must be in columns"
@@ -1362,14 +1213,12 @@ def decode_table(
         body_pos = pos
         for k, (nr, blen) in enumerate(metas):
             wanted = off + nr > a and off < b
-            if wanted and preds is not None:
-                cs = stats[k] if stats else None
-                wanted = all(_chunk_may_match(cs, pr) for pr in preds)
+            if wanted and tree is not None:
+                wanted = may_match(tree, stats_view(stats[k] if stats else None))
             if wanted:
                 t = _decode_body(blob[body_pos : body_pos + blen], columns)
-                if preds is not None:
-                    for pr in preds:
-                        t = _apply_predicate(t, pr)
+                if tree is not None:
+                    t = filter_table(t, tree)
                 else:
                     lo = max(a - off, 0)
                     hi = min(b - off, nr)
@@ -1383,10 +1232,8 @@ def decode_table(
             return _decode_body(blob[pos : pos + blen0], columns).slice(0, 0)
         return pa.concat_tables(tables).combine_chunks()
     tbl = _decode_body(blob, columns)
-    if preds is not None:
-        for pr in preds:
-            tbl = _apply_predicate(tbl, pr)
-        return tbl
+    if tree is not None:
+        return filter_table(tbl, tree)
     if rows is not None:
         a = max(0, min(rows[0], tbl.num_rows))
         b = max(a, min(rows[1], tbl.num_rows))

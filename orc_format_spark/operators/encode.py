@@ -28,11 +28,12 @@ from pyspark.sql import DataFrame
 
 from ..codecs.container import (
     DEFAULT_ROW_INDEX_STRIDE,
-    _normalize_predicate,
     decode_table,
     encode_table,
+    stats_view,
     table_checksum,
 )
+from ..predicate import FALSE, leaves, may_match, normalize
 from ..worker_env import limit_worker_threads
 from .partitioning import with_group_id
 
@@ -437,55 +438,42 @@ def _align_decoded_types(tbl: pa.Table, target: "pa.Schema") -> pa.Table:
 
 def prune_blobs(
     blobs: DataFrame,
-    predicate: tuple | list[tuple],
+    predicate,
 ) -> DataFrame:
     """Stripe elimination: drop blobs whose blob-level ``stats`` (written
     by ``encode_groups(stats=True)``) PROVE no row matches ``predicate``
-    (a ``(col, op, val)`` triple or an AND-list of them, ops as in
-    ``decode_table``). The filter runs before any decode: eliminated
+    — a ``(col, op, val)`` leaf, a list of nodes (AND), ``("and"|"or",
+    [nodes])`` or ``("not", node)``, as in ``decode_table``. Eliminated
     blobs never reach a decode worker, and in sink mode their files are
     never opened — the ORC stripe-statistics analog of split elimination
     (the reference stores stripe stats, src/writer/stripe.rs, but its
-    reader never shipped the skip).
-
-    Every conjunct is decided by the chunk-level evaluator
-    (``container._chunk_may_match``: min/max range, Bloom bitsets for
-    ``==``/``in``, prefix window, null tests) in one Arrow-batched
-    pandas UDF; only the stats string crosses to Python, and each row's
-    JSON is parsed once. Rows with a null/absent stats value are kept
-    (unknown never prunes), and the exact residual filter still runs at
-    decode, so the result is identical to an unpruned ``predicate=``
-    decode."""
+    reader never shipped the skip). One Arrow-batched pandas UDF runs
+    ``predicate.may_match`` over each row's parsed stats string; rows
+    with null stats are kept, and the exact residual filter still runs
+    at decode."""
     import pandas as pd
     from pyspark.sql import functions as F
-
-    from ..codecs.container import _chunk_may_match
 
     if "stats" not in blobs.columns:
         raise ValueError(
             "prune_blobs: input has no 'stats' column — encode with "
             "encode_groups(..., stats=True)"
         )
-    preds = _normalize_predicate(predicate)
-    if not preds:
+    tree = normalize(predicate)
+    if tree is None:
         return blobs
 
     def _may_match(s: pd.Series) -> pd.Series:
         limit_worker_threads()
-
-        def one(v):
-            if v is None:
-                return True
-            st = json.loads(v)
-            return all(_chunk_may_match(st, pr) for pr in preds)
-
-        return s.map(one)
+        return s.map(
+            lambda v: v is None or may_match(tree, stats_view(json.loads(v)))
+        )
 
     # concrete annotation objects: the module's deferred (string)
     # annotations defeat pandas_udf's hint inference
     _may_match.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    may_match = F.pandas_udf(_may_match, "boolean")
-    return blobs.filter(may_match(F.col("stats")))
+    udf = F.pandas_udf(_may_match, "boolean")
+    return blobs.filter(udf(F.col("stats")))
 
 
 def _decode_one_evolved(
@@ -499,19 +487,21 @@ def _decode_one_evolved(
     reader rule — resolve by NAME): declared columns the blob lacks
     decode as all-null of the declared type; stored columns absent from
     the declared schema are skipped at the stream level; output order
-    follows the declared schema. Predicates on a column the blob
-    predates are decided on the virtual all-null column WITHOUT
-    decoding payload: ``isnull`` keeps every row, every other op
-    matches nothing (None is returned -> the blob contributes no
-    batches). Returns the aligned table, or None when provably empty."""
+    follows the declared schema. Leaves on a column the blob predates
+    are decided on the virtual all-null column WITHOUT decoding
+    payload: ``isnull`` is TRUE on every row, every other leaf on none;
+    the tree folds around them (None is returned when it folds to
+    never-TRUE -> the blob contributes no batches). Returns the aligned
+    table, or None when provably empty."""
     from ..codecs.container import blob_schema
 
     have = set(blob_schema(blob_bytes).names)
-    preds = _normalize_predicate(predicate)
-    for p in preds:
-        if p[0] not in have and p[1] != "isnull":
-            return None  # null never satisfies a non-isnull predicate
-    preds_eff = [p for p in preds if p[0] in have] or None
+    tree = normalize(
+        predicate,
+        known=lambda leaf: None if leaf.col in have else leaf.op == "isnull",
+    )
+    if tree == FALSE:
+        return None
     cols_eff = None
     if columns is not None:
         # A declared field the blob DOES store must be projected, or the
@@ -533,11 +523,11 @@ def _decode_one_evolved(
                 "or narrow the declared schema to the projection"
             )
         keep = [c for c in columns if c.split(".", 1)[0] in have]
-        if preds_eff:  # decode_table requires predicate cols projected
-            keep += [p[0] for p in preds_eff if p[0] not in keep]
+        # decode_table requires predicate columns projected
+        keep += [c.col for c in leaves(tree) if c.col not in keep]
         cols_eff = keep or None  # no overlap: full decode for row count
     tbl = decode_table(
-        blob_bytes, columns=cols_eff, rows=rows, predicate=preds_eff
+        blob_bytes, columns=cols_eff, rows=rows, predicate=tree
     )
     out = {}
     for f in target:  # `schema` already names the (projected) output
@@ -571,7 +561,7 @@ def decode_blobs(
     schema: str,
     columns: list[str] | None = None,
     rows: tuple[int, int] | None = None,
-    predicate: tuple | list[tuple] | None = None,
+    predicate=None,
     evolution: bool = False,
 ) -> DataFrame:
     """Decode blob rows back into the original table shape.
@@ -590,7 +580,9 @@ def decode_blobs(
     never decompress.
     ``rows=(a, b)`` decodes only that per-blob row slice; on chunked
     blobs only covering row-group chunks are decompressed (F3).
-    ``predicate=(col, op, value)`` returns exactly the matching rows,
+    ``predicate`` (a ``(col, op, value)`` leaf, a list of nodes (AND),
+    ``("and"|"or", [nodes])`` or ``("not", node)``) returns exactly the
+    matching rows,
     skipping whole row-group chunks whose min/max stats prove no match
     (reader-side predicate pushdown over our own blobs — the stats half
     of the reference's row index, data/common.rs:24-48).
@@ -601,15 +593,15 @@ def decode_blobs(
     Parquet/ORC/Iceberg reader rule) for long-lived blob tables whose
     schema accreted columns over time: blobs predating a declared
     column yield it as all-null, stored columns not declared are
-    dropped, and predicates on a missing column are decided without
-    decoding payload. Default (False) keeps the strict
+    dropped, and predicate leaves on a missing column are decided
+    without decoding payload. Default (False) keeps the strict
     exact-schema-match contract."""
     schema = _normalize_schema(schema)
     expected = _ddl_names(schema)
     target = _arrow_target_schema(schema)
     # normalized before the worker closures capture it (a generator
     # ``in`` literal would not pickle)
-    predicate = _normalize_predicate(predicate) or None
+    predicate = normalize(predicate)
     if predicate is not None and "stats" in blobs.columns:
         blobs = prune_blobs(blobs, predicate)  # stripe elimination
     pcol = _payload_column(blobs)

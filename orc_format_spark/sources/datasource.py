@@ -17,12 +17,14 @@ Read path:
   stream decompressed — codecs/container.blob_schema),
 - one input partition per ``.ofs`` file (at 100 TB that is the split
   granularity Spark schedules; files are independent stripes),
-- **filter pushdown** (``DataSourceReader.pushFilters``): =, <, <=, >,
-  >= and negations on top-level columns translate to the container's
-  predicate triples, so row groups are skipped via chunk min/max +
-  Bloom stats inside the worker; handled filters are consumed exactly
-  (the residual in-chunk filter is exact), unsupported ones are
-  returned for Spark to evaluate.
+- **filter pushdown** (``DataSourceReader.pushFilters``): top-level
+  column filters and their negations become predicate-tree leaves, so
+  files and row groups are skipped via min/max + Bloom stats; handled
+  filters are consumed exactly (the residual filter is exact), the rest
+  (incl. ordered comparisons on float/double columns: Spark orders NaN
+  above every number, Arrow does not) go back to Spark. PySpark 4.1
+  exports ``Not`` but no ``And``/``Or`` filter class, so a Spark OR
+  never reaches this reader.
 
 Write path (``DataSourceArrowWriter``): each task encodes its
 partition's batches with the normal auto-selection pipeline
@@ -83,16 +85,22 @@ from pyspark.sql.datasource import (
     StringStartsWith,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DoubleType, FloatType, StructType
+
+from ..codecs.container import stats_view
+from ..predicate import may_match, normalize
 
 _OPS = {
     EqualTo: "==",
+    EqualNullSafe: "==",
     GreaterThan: ">",
     GreaterThanOrEqual: ">=",
     LessThan: "<",
     LessThanOrEqual: "<=",
 }
-_NEG = {"==": "!=", ">": "<=", ">=": "<", "<": ">=", "<=": ">"}
+# Spark orders NaN above every number, Arrow fails every ordered
+# comparison on it: these ops on float/double columns stay Spark-side
+_ORDERED = ("<", "<=", ">", ">=")
 
 
 def _comparable_literal(val) -> bool:
@@ -108,44 +116,40 @@ def _comparable_literal(val) -> bool:
     return not (isinstance(val, float) and math.isnan(val))
 
 
-def _filter_to_pred(f: Filter) -> tuple | None:
-    """Spark Filter -> container predicate triple, or None if out of
-    the container's predicate domain (then Spark keeps the filter)."""
-    neg = False
-    if isinstance(f, Not):
-        f, neg = f.child, True
+def _filter_to_pred(f: Filter):
+    """Spark Filter -> predicate tree node, or None if out of the
+    predicate domain (then Spark keeps the filter). A ``Not`` wraps its
+    child's leaf; normalization pushes it into the op's dual."""
+    neg = isinstance(f, Not)
+    if neg:
+        f = f.child
     attr = getattr(f, "attribute", None)
     if attr is None or len(attr) != 1:  # nested column path: not prunable
         return None
     col = attr[0]
-    if isinstance(f, IsNull):
-        return (col, "notnull" if neg else "isnull", None)
-    if isinstance(f, IsNotNull):
-        return (col, "isnull" if neg else "notnull", None)
-    if isinstance(f, In):
-        # NOT IN has three-valued null semantics; leave it to Spark.
-        # Any null/NaN/non-primitive member likewise disqualifies.
+    if isinstance(f, (IsNull, IsNotNull)):
+        leaf = (col, "isnull" if isinstance(f, IsNull) else "notnull", None)
+    elif neg and isinstance(f, (In, StringStartsWith, EqualNullSafe)):
+        # NOT IN / NOT STARTS WITH stay with Spark; NOT(<=>) would MATCH
+        # null rows, which the three-valued residual cannot express
+        return None
+    elif isinstance(f, In):
+        # any null/NaN/non-primitive member disqualifies
         vals = tuple(f.value)
-        if neg or not vals or not all(_comparable_literal(v) for v in vals):
+        if not vals or not all(_comparable_literal(v) for v in vals):
             return None
-        return (col, "in", vals)
-    if isinstance(f, StringStartsWith):
-        if neg or not isinstance(f.value, str):
+        leaf = (col, "in", vals)
+    elif isinstance(f, StringStartsWith):
+        if not isinstance(f.value, str):
             return None
-        return (col, "startswith", f.value)
-    if isinstance(f, EqualNullSafe):
-        # <=> with a non-null literal ignores null rows exactly like
-        # the container's fill_null(False) residual; NOT(<=>) would
-        # MATCH null rows, which the residual cannot express.
-        if neg or f.value is None or not _comparable_literal(f.value):
+        leaf = (col, "startswith", f.value)
+    else:
+        # <=> with a non-null literal ignores null rows exactly like ==
+        op = _OPS.get(type(f))
+        if op is None or not _comparable_literal(f.value):
             return None
-        return (col, "==", f.value)
-    op = _OPS.get(type(f))
-    if op is None:
-        return None
-    if not _comparable_literal(f.value):
-        return None
-    return (col, _NEG[op] if neg else op, f.value)
+        leaf = (col, op, f.value)
+    return ("not", leaf) if neg else leaf
 
 
 def _local_path(path: str) -> str:
@@ -331,9 +335,11 @@ class OrcFormatReader(DataSourceReader):
         # of append, or one scan's filters leak into the next
         self.preds = []
         out = []
+        floats = {fld.name for fld in self.spark_schema.fields
+                  if isinstance(fld.dataType, (FloatType, DoubleType))}
         for f in filters:
-            pred = _filter_to_pred(f)
-            if pred is None:
+            pred = normalize(_filter_to_pred(f))
+            if pred is None or (pred.op in _ORDERED and pred.col in floats):
                 out.append(f)  # unsupported: Spark evaluates it
             else:
                 self.preds.append(pred)  # consumed exactly in read()
@@ -352,18 +358,10 @@ class OrcFormatReader(DataSourceReader):
             # empty committed manifest -> explicit empty sentinel (Spark
             # substitutes a lone None partition for an empty list)
             return [BlobPartition(p) for p in files] or [BlobPartition("")]
-        from ..codecs.container import _chunk_may_match
-
         stats = _load_manifest_stats(self.path)
-        kept = [
-            p
-            for p in files
-            if os.path.basename(p) not in stats
-            or all(
-                _chunk_may_match(stats[os.path.basename(p)], pred)
-                for pred in self.preds
-            )
-        ]
+        tree = normalize(self.preds)
+        kept = [p for p in files
+                if may_match(tree, stats_view(stats.get(os.path.basename(p))))]
         # Spark substitutes a lone None partition for an empty list;
         # an explicit empty sentinel keeps read() well-defined when
         # every file was eliminated

@@ -1573,48 +1573,43 @@ def _kv_dict(maybe_list) -> dict:
     return {e["key"]: e["value"] for e in maybe_list} if maybe_list else {}
 
 
+_ICEBERG_OPS = {
+    "=": "==", "<": "<", "<=": "<=", ">": ">", ">=": ">=",
+    "is_null": "isnull", "not_null": "notnull",
+}
+
+
 def _file_matches_predicates(
     df: dict, preds: list[tuple[str, str, object]], fields: dict
 ) -> bool:
-    """min/max + null-count file skipping (Iceberg 'metrics evaluation'):
-    True when the file MIGHT contain matching rows. Missing stats never
+    """min/max + null-count file skipping (Iceberg 'metrics evaluation')
+    through the one stats evaluator (orc_format_spark.predicate): True
+    when the file MIGHT contain matching rows. Missing stats never
     prune — absence of evidence keeps the file."""
+    from ..predicate import Stats, may_match, normalize
+
     vc = _kv_dict(df.get("value_counts"))
     nc = _kv_dict(df.get("null_value_counts"))
     lob = _kv_dict(df.get("lower_bounds"))
     upb = _kv_dict(df.get("upper_bounds"))
-    for col, op, val in preds:
+    for col, op, _val in preds:
         if col not in fields:
             raise ValueError(f"iceberg_meta: predicate column {col!r} not in schema")
-        fid, itype = fields[col]
-        all_null = fid in vc and fid in nc and nc[fid] == vc[fid] and vc[fid] > 0
-        if op == "is_null":
-            if fid in nc and nc[fid] == 0:
-                return False
-            continue
-        if op == "not_null":
-            if all_null:
-                return False
-            continue
-        if all_null:
-            return False  # comparison predicates never match nulls
-        lo = _deserialize_col_bound(itype, lob.get(fid))
-        hi = _deserialize_col_bound(itype, upb.get(fid))
-        if lo is None or hi is None:
-            continue
-        if op == "=" and (val < lo or val > hi):
-            return False
-        if op == "<" and lo >= val:
-            return False
-        if op == "<=" and lo > val:
-            return False
-        if op == ">" and hi <= val:
-            return False
-        if op == ">=" and hi < val:
-            return False
-        if op not in ("=", "<", "<=", ">", ">=", "is_null", "not_null"):
+        if op not in _ICEBERG_OPS:
             raise ValueError(f"iceberg_meta: unsupported predicate op {op!r}")
-    return True
+
+    def view(col):
+        fid, itype = fields[col]
+        return Stats(
+            _deserialize_col_bound(itype, lob.get(fid)),
+            _deserialize_col_bound(itype, upb.get(fid)),
+            nc[fid] > 0 if fid in nc else None,
+            # value_counts include nulls: the non-null count
+            vc[fid] - nc[fid] if fid in vc and fid in nc else None,
+        )
+
+    tree = normalize([(col, _ICEBERG_OPS[op], v) for col, op, v in preds])
+    return may_match(tree, view)
 
 
 def list_data_files(

@@ -40,20 +40,13 @@ Scope (matches + exceeds the writer):
   saver), and lists are transparent to them (``"evs.id"`` prunes the
   element fields of a ``list<struct>`` — Spark's nested-pruning
   convention); ``"s"`` alongside ``"s.a"`` widens to the whole struct;
-- stripe pruning: ``predicate=(col, op, literal)`` or an AND-list of
-  triples (SearchArgument conjunction), op in <,<=,==,!=,>=,>,in,
-  isnull,notnull — ``col`` may be a dotted nested leaf
-  (``"s.inner.x"``, lists transparent): Apache files carry statistics
-  and blooms for every column id, so nested leaves prune exactly like
-  top-level columns (``isnull`` on a nested leaf never prunes —
-  ancestor nulls are invisible to the leaf's hasNull) — over every
-  min/max-carrying ColumnStatistics kind
-  (Integer, Double, String, Decimal, Date, Timestamp — the UTC ms
-  pair only, widened 1 ms per side) plus hasNull/numberOfValues for
-  the null ops — the read side of the writer's stripe-elimination
-  statistics; ``==``/``in`` terms also probe per-stripe bloom
-  filters. Temporal literals convert (date→epoch days, datetime→UTC
-  ns); a cross-typed literal keeps the stripe, never crashes;
+- stripe pruning: ``predicate=`` (orc_format_spark.predicate) over
+  every min/max-carrying ColumnStatistics kind (the Timestamp UTC ms
+  pair widened 1 ms per side), hasNull/numberOfValues and bloom
+  filters; a leaf may name a dotted nested leaf (``"s.inner.x"``,
+  lists transparent; ``isnull`` there never prunes: ancestor nulls are
+  invisible to its hasNull). Temporal literals convert (date→epoch
+  days, datetime→UTC ns); a cross-typed literal keeps the stripe;
 - row-group elimination inside surviving stripes: RowIndexEntry
   statistics and per-group bloom filters narrow the decode to the
   covering groups; every projected column's streams (all types, all
@@ -78,11 +71,8 @@ from typing import BinaryIO
 import numpy as np
 import pyarrow as pa
 
-from ..codecs.container import (
-    _normalize_predicate,
-    _proj_tree,
-    _range_may_match,
-)
+from ..codecs.container import _proj_tree
+from ..predicate import Stats, leaves, may_match, normalize
 from ..codecs.rle_v1 import (
     decode_byte_rle,
     decode_int_rle_v1,
@@ -559,33 +549,36 @@ def _conv_lit(lit, sk):
     return lit
 
 
-def _stats_admit(stt: dict | None, op: str, lit, ts_slack_ns: int = 0) -> bool:
-    """Can any row in a range with ColumnStatistics ``stt`` satisfy
-    ``col op lit``? Shared by stripe elimination (Metadata stats) and
-    row-group elimination (RowIndexEntry stats); unknown never prunes."""
-    if stt is None:
-        return True
-    if op == "isnull":
-        # prune only on an EXPLICIT hasNull=false (None = pre-1.x
-        # writer omitted the field: unknown keeps)
-        return stt["has_null"] is not False
-    if op == "notnull":
-        # numberOfValues counts NON-null values: 0 proves all-null
-        return stt["n"] != 0
-    if stt["min"] is None or stt["max"] is None:
-        return True
-    lo, hi = stt["min"], stt["max"]
-    sk = stt.get("sk")
-    if sk == "ts" and ts_slack_ns:
-        lo, hi = lo - ts_slack_ns, hi + ts_slack_ns
-        if op == "!=":
-            # widened bounds can no longer PROVE every value == lit
-            return True
-    if op == "in":
-        return any(
-            _range_may_match("==", lo, hi, _conv_lit(m, sk)) for m in lit
+def _orc_view(cid_of: dict, types, stats: dict, ts_slack_ns: int,
+              blooms_of=None):
+    """``col -> Stats`` over one range's ORC ColumnStatistics
+    (``stats[cid]``: Metadata stripe stats or RowIndexEntry stats, None
+    = unknown) and bloom filters (``blooms_of(cid)``: OrcBloomFilters,
+    None = none usable). ``ts_slack_ns`` widens TimestampStatistics: on
+    a non-UTC writerTimezone file the decoded NTZ values are WALL clocks
+    while minimumUtc/maximumUtc are instants."""
+
+    def view(col):
+        cid = cid_of[col]
+        stt = stats[cid]
+        bfs = blooms_of(cid) if blooms_of is not None else None
+        bloom = None if bfs is None else _bloom_probe(bfs, types[cid].kind)
+        if stt is None:
+            return None if bloom is None else Stats(bloom=bloom)
+        lo, hi, sk = stt["min"], stt["max"], stt.get("sk")
+        if sk == "ts" and lo is not None and hi is not None:
+            lo, hi = lo - ts_slack_ns, hi + ts_slack_ns
+        return Stats(
+            lo, hi,
+            # a nested leaf is also null wherever an ANCESTOR is null,
+            # which its own hasNull does not cover: unknown there
+            None if "." in col else stt["has_null"],
+            stt["n"],  # numberOfValues counts NON-null values
+            bloom,
+            lambda v: _conv_lit(v, sk),
         )
-    return _range_may_match(op, lo, hi, _conv_lit(lit, sk))
+
+    return view
 
 
 def _parse_row_index(raw) -> list[tuple[list[int], dict | None]]:
@@ -751,37 +744,27 @@ def _build_seeks(st: "_Stripe", types: list[_OrcType],
     return seeks
 
 
-def _select_row_groups(st: "_Stripe", types, root: _OrcType,
-                       terms: list[tuple], n_rows: int, stride: int,
-                       ts_slack_ns: int, idx_cache: dict) -> list[bool] | None:
-    """Per-row-group keep flags from RowIndexEntry statistics (ANDed
-    across terms) and per-group bloom filters (``==``/``in``). None =
-    nothing eliminable (no usable index, or every group admits)."""
+def _select_row_groups(st: "_Stripe", types, cid_of: dict, tree,
+                       n_rows: int, stride: int, ts_slack_ns: int,
+                       idx_cache: dict) -> list[bool] | None:
+    """Per-row-group keep flags from RowIndexEntry statistics and
+    per-group bloom filters. None = every group admits (or no usable
+    index)."""
     n_groups = (n_rows + stride - 1) // stride
-    keep = [True] * n_groups
-    any_info = False
-    for col_name, op, lit in terms:
-        if "." in col_name and op == "isnull":
-            continue  # ancestor nulls invisible to the leaf's hasNull
-        cid = _pred_cid(types, root, col_name)
-        entries = _stripe_row_index(st, cid, idx_cache)
-        if entries is not None:
-            if len(entries) == n_groups:
-                any_info = True
-                for g, (_pos, stt) in enumerate(entries):
-                    if keep[g] and not _stats_admit(stt, op, lit,
-                                                    ts_slack_ns):
-                        keep[g] = False
-        if op in ("==", "in"):
-            lits = [lit] if op == "==" else lit
-            hits = _bloom_entry_hits(st, cid, types[cid].kind, lits)
-            if hits is not None and len(hits) == n_groups:
-                any_info = True
-                for g in range(n_groups):
-                    keep[g] = keep[g] and hits[g]
-    if not any_info or all(keep):
-        return None
-    return keep
+    index = {c: _stripe_row_index(st, c, idx_cache) for c in cid_of.values()}
+    index = {c: e if e is not None and len(e) == n_groups else None
+             for c, e in index.items()}
+
+    def group_view(g):
+        def blooms_of(cid):
+            bfs = _bloom_filters(st, cid, types[cid].kind)
+            return [bfs[g]] if bfs is not None and len(bfs) == n_groups else None
+
+        stats = {c: e and e[g][1] for c, e in index.items()}
+        return _orc_view(cid_of, types, stats, ts_slack_ns, blooms_of)
+
+    keep = [may_match(tree, group_view(g)) for g in range(n_groups)]
+    return None if all(keep) else keep
 
 
 # ---------------------------------------------------------- stripe decode
@@ -806,6 +789,7 @@ class _Stripe:
         # bit_off)} — positions a decode at a row-group boundary
         # (_build_seeks); empty/None = decode from the stripe start
         self.seeks = seeks or {}
+        self.blooms: dict = {}  # cid -> _bloom_filters, parsed once
         self._ranges: dict[tuple[int, int], tuple[int, int]] = {}
         off = 0
         for kind, col, ln in footer["streams"]:
@@ -1200,22 +1184,18 @@ def _file_tail(data: bytes):
 
 
 def read_orc(source, columns: list[str] | None = None,
-             predicate: tuple[str, str, object] | None = None) -> pa.Table:
+             predicate=None) -> pa.Table:
     """Read an ORC file into an Arrow table with the repo's decoders.
 
     ``source``: path, bytes, or binary file-like. ``columns`` projects
     fields (unselected column streams are never decompressed); dotted
     paths like ``"s.a"`` prune inside structs at any depth.
-    ``predicate=(col, op, literal)`` with op in <,<=,==,!=,>=,>,in,
-    isnull,notnull (``in`` takes an iterable literal; the null ops
-    ignore theirs — pass None) skips whole stripes whose
-    Metadata ColumnStatistics prove no row can match — the read side of
-    the writer's stripe-elimination stats; a LIST of such triples is an
-    implicit AND (the ORC SearchArgument conjunction shape): a stripe
-    survives only if every term admits a match. ``==``/``in`` terms
-    additionally probe each surviving stripe's BLOOM_FILTER_UTF8
-    stream when one exists (ours or Apache-written), dropping stripes
-    whose filters prove every member absent. Rows are NOT row-filtered
+    ``predicate`` — a ``(col, op, literal)`` leaf (op in <,<=,==,!=,>=,
+    >,in,isnull,notnull), a list of nodes (AND), ``("and"|"or",
+    [nodes])`` or ``("not", node)`` — skips stripes and row groups
+    whose statistics (Metadata, RowIndexEntry) and BLOOM_FILTER_UTF8
+    streams (ours or Apache-written) prove it never TRUE. Rows are NOT
+    row-filtered
     (same contract as ORC readers' SearchArguments).
     """
     data = _load(source)
@@ -1241,22 +1221,22 @@ def read_orc(source, columns: list[str] | None = None,
                            proj, c)
     names = [root.names[i] for i in sel]
 
-    keep = None
-    terms: list[tuple] = []
-    if predicate is not None:
-        terms = _validated_terms(predicate, root, types)
+    pred = normalize(predicate)
+    for leaf in leaves(pred):
+        if leaf.op in ("startswith", "contains"):
+            raise ValueError(f"orc_read: predicate op {leaf.op!r}")
+    cid_of = {c.col: _pred_cid(types, root, c.col) for c in leaves(pred)}
+    ts_slack = 0
+    per_stripe = [{}] * len(footer["stripes"])
+    if pred is not None:
         # writerTimezone lives in the stripe footers (constant per
         # writer process): peek stripe 0's before stats pruning so
         # wall-vs-instant skew on foreign-timezone files can't
         # eliminate a matching stripe. 15h = max real zone offset
         # (14h) + 1h DST fold headroom. The peek costs a footer
-        # decompress, so it only runs when a predicate term actually
+        # decompress, so it only runs when a predicate leaf actually
         # touches a (non-instant) TIMESTAMP column.
-        ts_slack = 0
-        ts_terms = any(
-            types[_pred_cid(types, root, tc)].kind == _K_TIMESTAMP
-            for tc, _op, _lit in terms
-        )
+        ts_terms = any(types[c].kind == _K_TIMESTAMP for c in cid_of.values())
         if ts_terms and footer["stripes"]:
             info0 = footer["stripes"][0]
             e0 = info0["offset"] + info0["index_len"] + info0["data_len"]
@@ -1265,12 +1245,14 @@ def read_orc(source, columns: list[str] | None = None,
             )["tz"]
             if tz0 not in _UTC_NAMES:
                 ts_slack = 15 * 3600 * 1_000_000_000
-        keep = _prune_stripes(meta_raw, root, terms,
-                              len(footer["stripes"]), ts_slack, types)
+        per_stripe = _stripe_stats(meta_raw, sorted(set(cid_of.values())),
+                                   len(per_stripe))
 
     tables = []
-    for si, info in enumerate(footer["stripes"]):
-        if keep is not None and not keep[si]:
+    for stripe_stats, info in zip(per_stripe, footer["stripes"]):
+        # stripe elimination from Metadata stats alone: a pruned
+        # stripe's footer is never read
+        if not may_match(pred, _orc_view(cid_of, types, stripe_stats, ts_slack)):
             continue
         start = info["offset"]
         end = start + info["index_len"] + info["data_len"]
@@ -1282,16 +1264,10 @@ def read_orc(source, columns: list[str] | None = None,
         # only ever re-slices, so a memoryview suffices
         st = _Stripe(memoryview(data)[start:end], sf, comp, bs,
                      info["n_rows"], writer=footer.get("writer"))
-        bloom_pruned = False
-        for tcol, top, tlit in terms:
-            if top not in ("==", "in"):
-                continue
-            pcid = _pred_cid(types, root, tcol)
-            lits = [tlit] if top == "==" else tlit
-            if not _bloom_may_match(st, pcid, types[pcid].kind, lits):
-                bloom_pruned = True
-                break
-        if bloom_pruned:
+        if not may_match(pred, _orc_view(
+            cid_of, types, stripe_stats, ts_slack,
+            lambda cid: _bloom_filters(st, cid, types[cid].kind),
+        )):
             continue
         # row-group elimination (the SearchArgument row-index skip the
         # reference's reader never shipped): per-group RowIndexEntry
@@ -1305,9 +1281,9 @@ def read_orc(source, columns: list[str] | None = None,
         rows_lo = 0
         gmask = None
         stride = footer["stride"]
-        if terms and stride and info["n_rows"] > stride:
+        if pred is not None and stride and info["n_rows"] > stride:
             idx_cache: dict = {}
-            gkeep = _select_row_groups(st, types, root, terms,
+            gkeep = _select_row_groups(st, types, cid_of, pred,
                                        info["n_rows"], stride, ts_slack,
                                        idx_cache)
             if gkeep is not None:
@@ -1411,16 +1387,20 @@ _K_BLOOM_OK = (
 )
 
 
-def _bloom_entry_hits(st: "_Stripe", cid: int, kind: int,
-                      lits) -> list[bool] | None:
-    """Probe the stripe's BLOOM_FILTER_UTF8 stream for ``==``/``in``
-    literals, one verdict per RowIndexEntry (= per row group): True
-    when that row group may hold ANY of them. None = no usable filter
-    (absent stream, unsupported kind, malformed entry) — unknown never
-    prunes. Works against both our own writer's filters and
-    Apache-written ones (pyarrow bloom_filter_columns), and accepts
-    either the utf8bitset or the legacy repeated-fixed64 form.
+def _bloom_filters(st: "_Stripe", cid: int, kind: int) -> list | None:
+    """The column's BLOOM_FILTER_UTF8 entries, one OrcBloomFilter per
+    RowIndexEntry (= per row group), memoized on the stripe.
+    None = no usable filter (absent stream, unsupported kind, malformed
+    entry) — unknown never prunes. Works against both our own writer's
+    filters and Apache-written ones (pyarrow bloom_filter_columns), and
+    accepts either the utf8bitset or the legacy repeated-fixed64 form.
     """
+    if cid not in st.blooms:
+        st.blooms[cid] = _parse_bloom_filters(st, cid, kind)
+    return st.blooms[cid]
+
+
+def _parse_bloom_filters(st: "_Stripe", cid: int, kind: int) -> list | None:
     from ..codecs.orc_bloom import OrcBloomFilter
 
     if kind not in _K_BLOOM_OK:
@@ -1441,28 +1421,7 @@ def _bloom_entry_hits(st: "_Stripe", cid: int, kind: int,
     raw = st.stream(cid, 8)  # Stream.Kind BLOOM_FILTER_UTF8
     if raw is None:
         return None
-    probes = []
-    for lit in lits:
-        if kind in (_K_STRING, _K_VARCHAR, _K_CHAR):
-            probes.append(("bytes", str(lit).encode()))
-        elif kind == _K_BINARY:
-            if not isinstance(lit, (bytes, bytearray)):
-                return None
-            probes.append(("bytes", bytes(lit)))
-        else:
-            try:
-                # datetime.date -> epoch days (how ORC hashes DATE)
-                pv = int(_conv_lit(lit, 'date'))
-            except (TypeError, ValueError, OverflowError):
-                return None
-            if -(1 << 63) <= pv < (1 << 63):
-                probes.append(("long", pv))
-            # an out-of-int64-range literal can never equal a stored
-            # ORC long: skip the member rather than feed wang_hash64 a
-            # value numpy can't cast (OverflowError would kill the
-            # task); an IN list that is ENTIRELY out of range matches
-            # nothing, so the all-miss entry below prunes soundly
-    hits: list[bool] = []
+    out = []
     for fno, _wt, v in _proto_fields(raw):
         if fno != 1:  # BloomFilterIndex.bloomFilter
             continue
@@ -1482,19 +1441,32 @@ def _bloom_entry_hits(st: "_Stripe", cid: int, kind: int,
         # double digits; treat anything implausible as malformed.
         if not k or k > 128 or not bitset or len(bitset) % 8:
             return None  # malformed/absent entry: never prune on it
-        bf = OrcBloomFilter.from_utf8bitset(k, bitset)
-        hits.append(any(
-            bf.test_long(pv) if pt == "long" else bf.test_bytes(pv)
-            for pt, pv in probes
-        ))
-    return hits or None
+        out.append(OrcBloomFilter.from_utf8bitset(k, bitset))
+    return out or None
 
 
-def _bloom_may_match(st: "_Stripe", cid: int, kind: int, lits) -> bool:
-    """Stripe-level view of :func:`_bloom_entry_hits`: a stripe may
-    span several row groups, any (row group, member) hit keeps it."""
-    hits = _bloom_entry_hits(st, cid, kind, lits)
-    return hits is None or any(hits)
+def _bloom_probe(bfs: list, kind: int):
+    """``lit -> bool``: may any of the filters ``bfs`` hold ``lit``?"""
+
+    def probe(lit) -> bool:
+        if kind in (_K_STRING, _K_VARCHAR, _K_CHAR, _K_BINARY):
+            if kind == _K_BINARY and not isinstance(lit, (bytes, bytearray)):
+                return True
+            pv = bytes(lit) if kind == _K_BINARY else str(lit).encode()
+        else:
+            try:
+                # datetime.date -> epoch days (how ORC hashes DATE)
+                pv = int(_conv_lit(lit, "date"))
+            except (TypeError, ValueError, OverflowError):
+                return True
+            # an out-of-int64-range literal can never equal a stored
+            # ORC long (and wang_hash64 can't take it): a miss
+            if not -(1 << 63) <= pv < (1 << 63):
+                return False
+            return any(bf.test_long(pv) for bf in bfs)
+        return any(bf.test_bytes(pv) for bf in bfs)
+
+    return probe
 
 
 def _pred_cid(types: list[_OrcType], root: _OrcType, path: str) -> int:
@@ -1521,72 +1493,17 @@ def _pred_cid(types: list[_OrcType], root: _OrcType, path: str) -> int:
     return cid
 
 
-def _validated_terms(predicate, root: _OrcType,
-                     types: list[_OrcType] | None = None) -> list[tuple]:
-    """The container's predicate shape rule (one triple or a sequence of
-    them, ANDed, ``in`` literals materialized once), plus the ORC
-    reader's op and column-path checks."""
-    terms = _normalize_predicate(predicate)
-    for col_name, op, _lit in terms:
-        if op not in ("<", "<=", "==", "!=", ">=", ">", "in",
-                      "isnull", "notnull"):
-            raise ValueError(f"orc_read: predicate op {op!r}")
-        if types is not None:
-            _pred_cid(types, root, col_name)  # loud on a bad path
-        elif col_name.split(".", 1)[0] not in root.names:
-            raise KeyError(f"orc_read: predicate column {col_name!r}")
-    return terms
-
-
-def _prune_stripes(meta_raw, root: _OrcType, terms: list[tuple],
-                   n_stripes: int, ts_slack_ns: int = 0,
-                   types: list[_OrcType] | None = None) -> list[bool]:
-    """True = must read. Uses StripeStatistics from the Metadata
-    section (same exact-or-wider contract the writer emits); a stripe
-    without usable min/max stays selected. ``terms`` AND together: a
-    stripe survives only if EVERY term's stats range admits a match
-    (conjunction may eliminate stripes no single term can).
-
-    ``ts_slack_ns`` widens TimestampStatistics bounds: on a non-UTC
-    writerTimezone file the decoded NTZ values are the writer's WALL
-    clocks while minimumUtc/maximumUtc are instants, so a wall-clock
-    literal may sit up to |zone offset| (+1h DST fold) away from the
-    instant range — slack keeps elimination a sound superset there."""
-    def _cid(name):
-        if types is not None:
-            return _pred_cid(types, root, name)
-        return root.subtypes[root.names.index(name)]
-
-    cids = sorted({_cid(t[0]) for t in terms})
-    # one Metadata pass gathers every predicate column's per-stripe stats
-    per_stripe: dict[int, list[dict | None]] = {
-        c: [None] * n_stripes for c in cids
-    }
-    si = 0
-    for fno, _wt, v in _proto_fields(meta_raw):
-        if fno != 1:  # StripeStatistics
-            continue
+def _stripe_stats(meta_raw, cids: list[int], n_stripes: int) -> list[dict]:
+    """Per stripe, {cid: ColumnStatistics | None} for the predicate
+    columns, in one pass over the Metadata section's StripeStatistics
+    (the same exact-or-wider contract the writer emits)."""
+    out = [dict.fromkeys(cids) for _ in range(n_stripes)]
+    stripes = (v for fno, _wt, v in _proto_fields(meta_raw) if fno == 1)
+    for stats, v in zip(out, stripes):
         col_stats = [v2 for f2, _w2, v2 in _proto_fields(v) if f2 == 1]
-        if si < n_stripes:
-            for c in cids:
-                if c < len(col_stats):
-                    per_stripe[c][si] = _parse_stats(col_stats[c])
-        si += 1
-    keep = [True] * n_stripes
-    for col_name, op, lit in terms:
-        if op == "in" and not lit:
-            return [False] * n_stripes  # IN () matches nothing
-        if "." in col_name and op == "isnull":
-            # a nested leaf is also null wherever an ANCESTOR is null,
-            # which its own hasNull does not cover — pruning on it
-            # could drop matching rows; never prune isnull-on-nested
-            continue
-        cid = _cid(col_name)
-        for si, stt in enumerate(per_stripe[cid]):
-            if not keep[si] or stt is None:
-                continue
-            keep[si] = _stats_admit(stt, op, lit, ts_slack_ns)
-    return keep
+        stats.update((c, _parse_stats(col_stats[c]))
+                     for c in cids if c < len(col_stats))
+    return out
 
 
 # ------------------------------------------------------ distributed read
@@ -1599,8 +1516,7 @@ def read_orc_files_native(files, schema: str,
     inside each task — the native-decoder counterpart of
     orc_file.read_orc_files (which routes through pyarrow.orc): same
     mapInArrow shape, payload never crosses the Python->JVM socket
-    until after decode. ``predicate`` is :func:`read_orc`'s triple or
-    AND-list of triples,
+    until after decode. ``predicate`` is :func:`read_orc`'s tree,
     applied inside each task: stripes are stats/bloom-eliminated before
     their streams are ever decompressed, so a selective point lookup
     over a many-file table decodes only the stripes that may match

@@ -390,6 +390,42 @@ def test_nan_equality_filter_stays_spark_side(ds_spark, tmpdir_path):
     assert sorted(r.k for r in got.collect()) == [1, 3]
 
 
+def test_float_order_filters_stay_spark_side(ds_spark, tmpdir_path):
+    """Spark orders NaN above every number; Arrow fails every ordered
+    comparison on it. Ordered filters on a double column, negated or
+    not, must go back to Spark (neither consumed nor used to prune);
+    != and NOT(<=>) keep their own rules."""
+    from pyspark.sql.datasource import (
+        EqualNullSafe, EqualTo, GreaterThan, LessThanOrEqual, Not,
+    )
+
+    from orc_format_spark.sources.datasource import OrcFormatReader
+
+    rows = [Row(k=1, f=3.0), Row(k=2, f=float("nan")), Row(k=3, f=5.0),
+            Row(k=4, f=1.0), Row(k=5, f=None)]
+    ref = ds_spark.createDataFrame(rows, "k long, f double")
+    ref.write.format("orc_format").mode("append").option("stride", "2").save(
+        tmpdir_path
+    )
+    back = ds_spark.read.format("orc_format").load(tmpdir_path)
+    got = back.filter(F.col("f") > 2.0).select("k")
+    assert sorted(r.k for r in got.collect()) == [1, 2, 3]
+    for cond in (F.col("f") >= 2.0, F.col("f") < 4.0, ~(F.col("f") <= 2.0),
+                 ~(F.col("f") > 2.0), F.col("f") != 3.0,
+                 ~F.col("f").eqNullSafe(3.0)):
+        got = ds_spark.read.format("orc_format").load(tmpdir_path).filter(cond)
+        assert sorted(r.k for r in got.collect()) == sorted(
+            r.k for r in ref.filter(cond).collect()
+        ), cond
+    reader = OrcFormatReader({"path": tmpdir_path}, back.schema)
+    left = list(reader.pushFilters([
+        GreaterThan(("f",), 2.0), Not(LessThanOrEqual(("f",), 2.0)),
+        Not(EqualNullSafe(("f",), 3.0)), Not(EqualTo(("f",), 3.0)),
+        GreaterThan(("k",), 2),
+    ]))
+    assert len(left) == 3 and len(reader.preds) == 2
+
+
 def test_pushdown_in_null_prefix_filters(ds_spark, tmpdir_path):
     """Round-4 pushdown surface: IN lists, IS [NOT] NULL, <=> and
     startswith are consumed by the reader (and NOT IN, with its

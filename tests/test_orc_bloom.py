@@ -321,7 +321,9 @@ def test_corrupt_num_hashes_never_prunes_or_allocates(tmp_path):
     (flipped varint) must fall into the malformed-entry keep path, not
     size gigabyte position arrays or wrongly prune."""
     from orc_format_spark.sources.orc_file import _pb, _pv
-    from orc_format_spark.sources.orc_read import _bloom_may_match, _K_LONG
+    from orc_format_spark.sources.orc_read import (
+        _K_LONG, _bloom_probe, _parse_bloom_filters,
+    )
 
     bf = OrcBloomFilter(10, 0.05)
     bf.add_longs(np.array([1, 2, 3]))
@@ -335,11 +337,15 @@ def test_corrupt_num_hashes_never_prunes_or_allocates(tmp_path):
         def stream(self, cid, kind):
             return self._raw if kind == 8 else None
 
+    def may_match(raw, lit):
+        bfs = _parse_bloom_filters(_Stub(raw), 1, _K_LONG)
+        return bfs is None or _bloom_probe(bfs, _K_LONG)(lit)
+
     # sane entry: absent value prunes, present value kept
-    assert _bloom_may_match(_Stub(good), 1, _K_LONG, [2]) is True
-    assert _bloom_may_match(_Stub(good), 1, _K_LONG, [999]) is False
+    assert may_match(good, 2) is True
+    assert may_match(good, 999) is False
     # corrupt k: never prunes (and returns fast — no huge allocation)
-    assert _bloom_may_match(_Stub(evil), 1, _K_LONG, [999]) is True
+    assert may_match(evil, 999) is True
 
 
 def test_pyarrow_still_reads_files_with_bloom_streams(tmp_path):

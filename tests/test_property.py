@@ -246,55 +246,6 @@ def test_chunked_vs_unchunked_lineage_totals():
     assert t1 == t2
 
 
-def test_predicate_decode_fuzz():
-    """decode(predicate=...) == full-decode-then-filter, across random
-    tables, strides, ops, columns (incl. nullable), and conjunctions —
-    pruning may never change the result set."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from orc_format_spark.codecs.container import decode_table, encode_table
-
-    fns = {
-        "==": pc.equal,
-        "!=": pc.not_equal,
-        "<": pc.less,
-        "<=": pc.less_equal,
-        ">": pc.greater,
-        ">=": pc.greater_equal,
-    }
-    rng = np.random.default_rng(13)
-    ops = list(fns)
-    for _ in range(15):
-        n = int(rng.integers(1, 3000))
-        stride = int(rng.integers(1, 900))
-        tbl = _rand_table(rng, n)
-        blob, _ = encode_table(tbl, stride=stride, bloom_columns=["i32", "i64"])
-        preds = []
-        for _ in range(int(rng.integers(1, 3))):
-            col = str(rng.choice(["i32", "i64", "f", "s", "b"]))
-            op = str(rng.choice(ops))
-            if col == "i32":
-                val = int(rng.integers(-1100, 1100))
-            elif col == "i64":
-                val = int(rng.choice([0, 1, -1, 2**40, 5]))
-            elif col == "f":
-                val = float(rng.normal())
-            elif col == "s":
-                val = f"v{int(rng.integers(0, 20))}"
-            else:
-                val = bool(rng.integers(0, 2))
-            preds.append((col, op, val))
-        got = decode_table(blob, predicate=preds)
-        want = tbl
-        for col, op, val in preds:
-            mask = fns[op](want.column(col), pa.scalar(val))
-            want = want.filter(pc.fill_null(mask, False))
-        # row-order within the blob is preserved by both paths
-        assert got.num_rows == want.num_rows, (preds, n, stride)
-        assert got.equals(want), (preds, n, stride)
-
-
 FLOATS = st.floats(
     allow_nan=True, allow_infinity=True, allow_subnormal=True, width=64
 )
