@@ -893,85 +893,6 @@ def q_dedup_ladder(spark, sf_dir):
     )
 
 
-def q_pq_encode(spark, sf_dir):
-    """Product-quantization encode (Jegou et al., TPAMI 2011): every
-    embedding compresses to m=8 codes (argmin exact-int L2 per subspace
-    against stride-sampled codebooks — 32x smaller than the raw floats
-    at D=64). Map-side only; codes CSV for byte-exact oracle compare."""
-    from orc_format_spark.functions.pq import pq_encode
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return pq_encode(emb, m=8, k=16, stride=31)
-
-
-def q_pq_ann(spark, sf_dir):
-    """ANN over PQ codes via asymmetric distance: per query one exact
-    integer (m x k) lookup table, per corpus vector m gathers + a sum —
-    the IVF-PQ search kernel. Ranks reproduced exactly by the SQL
-    oracle (same codes, tables, tie rules)."""
-    from orc_format_spark.functions.pq import pq_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return pq_topk(emb, k_nn=5, n_queries=10, m=8, k=16, stride=31)
-
-
-def q_sq8_roundtrip(spark, sf_dir):
-    """SQ8 scalar-quantization encode (faiss ScalarQuantizer QT_8bit
-    shape): every embedding compresses to D uint8 codes under
-    per-dimension affine bounds (4x smaller than float32, one
-    map-side-combinable bounds aggregate then pure map-side encode).
-    Codes CSV for byte-exact oracle compare."""
-    from orc_format_spark.functions.sq import sq8_encode
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return sq8_encode(emb)
-
-
-def q_sq8_ann(spark, sf_dir):
-    """ANN over SQ8 codes via asymmetric distance: exact integer query
-    vectors against per-batch integer reconstructions, partial top-k
-    cut inside the kernel (Exchange carries <= Q*k rows per batch).
-    Ranks reproduced exactly by the SQL oracle (same bounds, codes,
-    reconstruction, tie rules)."""
-    from orc_format_spark.functions.sq import sq8_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return sq8_topk(emb, k_nn=5, n_queries=10)
-
-
-def q_ivf_pq_ann(spark, sf_dir):
-    """IVF-ADC composed index (faiss IndexIVFPQ layout): IVF prunes
-    which vectors are scored (nprobe nearest centroid lists), PQ prunes
-    the per-vector cost (m ADC table lookups over codes). One map-side
-    Arrow kernel assigns lists, PQ-encodes, scores, and cuts partial
-    top-k per batch; the Exchange carries <= Q*k rows per batch. The
-    oracle composes the IVF assignment CTEs with the PQ codes/ADC CTEs
-    — exact match on ranks and distances."""
-    from orc_format_spark.functions.pq import ivf_pq_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ivf_pq_topk(
-        emb, k_nn=5, n_queries=10, m=8, k=16, pq_stride=31,
-        centroid_stride=37, nprobe=4,
-    )
-
-
-def q_ivf_pq_rerank(spark, sf_dir):
-    """IVF-PQ + exact rerank (faiss IndexRefineFlat stage): the
-    composed index shortlists k*refine candidates via ADC codes, then
-    the shortlist is re-scored against exact quantized vectors — the
-    rerank is pure Catalyst (broadcast shortlist + broadcast query
-    vectors, zip_with/aggregate integer L2, whole-stage codegen), no
-    Python. Oracle wraps the full ivf_pq oracle as a candidate CTE."""
-    from orc_format_spark.functions.pq import ivf_pq_rerank_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ivf_pq_rerank_topk(
-        emb, k_nn=5, refine=4, n_queries=10, m=8, k=16, pq_stride=31,
-        centroid_stride=37, nprobe=4,
-    )
-
-
 def q_ngram_jaccard(spark, sf_dir):
     """Char-4-gram Jaccard near-dup pairs (first 80 docs) with the
     document-frequency ceiling active (the stop-gram safety valve the
@@ -1011,57 +932,6 @@ def q_simhash(spark, sf_dir):
         .repartition(32, "doc_id")  # see q_minhash_lsh
     )
     return simhash_near_pairs(docs, n=4, max_hamming=10, hasher="md5")
-
-
-def q_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs (int-quantized, exact)."""
-    from orc_format_spark.functions.similarity import near_duplicate_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return near_duplicate_pairs(emb, threshold_e6=300000, max_id=300)
-
-
-def q_ann_topk(spark, sf_dir):
-    """Brute-force cosine top-5 neighbors for the first 10 vectors."""
-    from orc_format_spark.functions.similarity import brute_force_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return brute_force_topk(emb, k=5, n_queries=10)
-
-
-def q_ann_lsh(spark, sf_dir):
-    """Multi-table sign-bit-bucketed approximate top-k; 4 tables x 8
-    sign bits over the 32-dim vectors. Approximate in recall yet fully
-    deterministic, so the DuckDB oracle replicates buckets, candidates,
-    scores and ranks exactly."""
-    from orc_format_spark.functions.similarity import lsh_bucketed_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return lsh_bucketed_topk(emb, k=5, n_queries=10, sign_dims=8, n_tables=4)
-
-
-def q_ann_ivf(spark, sf_dir):
-    """IVF (inverted-file) approximate top-k: deterministic stride-
-    sampled centroids (k-means stand-in), map-side max-cosine list
-    assignment, 3-probe search. The second ANN scale path next to LSH
-    buckets; fully deterministic, so the DuckDB oracle replicates
-    lists, probes, candidates, scores, and ranks exactly."""
-    from orc_format_spark.functions.similarity import ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ivf_topk(emb, k=5, n_queries=10, centroid_stride=59, nprobe=3)
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup-shape semantic dedup: IVF-cluster the embedding space
-    (map-side assignment to stride-sampled centroids), then drop any
-    vector with a lower-id cluster peer at cosine >= 0.30 — pairwise
-    work bounded by the cluster, never all-pairs. Fully deterministic;
-    the DuckDB oracle replicates clusters, pairs, and keeper choice."""
-    from orc_format_spark.functions.semantic import semantic_dedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return semantic_dedup(emb, threshold_e6=300000, centroid_stride=37)
 
 
 def _pii_augmented(docs):
@@ -2219,11 +2089,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     come first — the 30 entries below round 4's window (last driver row
     r03) lead, then this round's new queries (never driver-verified),
     then the r04-green queries whose UNDERLYING CODE CHANGED this round
-    (dedup sentinel, pq/brute-force top-k, compact planner, evolution
-    decode, the stats-prune fractional-bounds handling)
+    (dedup sentinel, compact planner, evolution decode, the stats-prune
+    fractional-bounds handling)
     plus the flagship — so no query's driver row is ever more than one
     round stale. The r04-green remainder sits below the window
-    (still covered every round by pytest + scripts/check_oracles.py)."""
+    (still covered every round by pytest + scripts/check_oracles.py).
+    When entries leave the registry, the first entries below the
+    boundary move up into the freed window rows, in order."""
     return {
         # -- last driver row r03 (below round 4's window) --
         "stream_encode_roundtrip": q_stream_encode_roundtrip,
@@ -2257,7 +2129,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "iceberg_equality_delete": q_iceberg_equality_delete,
         "iceberg_incremental_encode": q_iceberg_incremental_encode,
         # -- new this round (never driver-verified) --
-        "ivf_pq_ann": q_ivf_pq_ann,
         "orc_file_roundtrip": q_orc_file_roundtrip,
         "orc_dict_map_roundtrip": q_orc_dict_map_roundtrip,
         "orc_rle_v2_file_roundtrip": q_orc_rle_v2_file_roundtrip,
@@ -2266,49 +2137,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "orc_native_read": q_orc_native_read,
         "orc_bloom_prune": q_orc_bloom_prune,
         "orc_rowgroup_prune": q_orc_rowgroup_prune,
-        "sq8_roundtrip": q_sq8_roundtrip,
-        "sq8_ann": q_sq8_ann,
-        "ivf_pq_rerank": q_ivf_pq_rerank,
         "nested_projection_decode": q_nested_projection_decode,
         # -- r04-green whose code changed this round, plus flagship --
         "tokens_roundtrip": q_tokens_roundtrip,
-        # clustered_encode and curation_pipeline moved below the
-        # boundary to make room for the two sq8 queries (late round-5
-        # feature, never driver-verified): their changed paths stay
-        # covered in-window — container encode/decode by the r03-group
-        # roundtrips + tokens_roundtrip, the dedup sentinel by
-        # exact_dedup + dedup_ladder
-        "ann_topk": q_ann_topk,
-        "pq_ann": q_pq_ann,
         "exact_dedup": q_exact_dedup,
         "dedup_ladder": q_dedup_ladder,
         # compression_variants gained the lzo kind this round (new
-        # codecs/lzo.py) -> inside the window; curation_pipeline_v2
-        # moved below (its changed dedup-sentinel path is covered by the
-        # in-window exact_dedup/dedup_ladder rows)
+        # codecs/lzo.py) -> inside the window
         "compression_variants": q_compression_variants,
         "compact_roundtrip": q_compact_roundtrip,
-        # schema_evolution moved just below the boundary to make room
-        # for nested_projection_decode (never driver-verified); its r04
-        # driver row is exactly one round stale and its evolution path
-        # is exercised in-window by the datasource-backed queries +
-        # pytest + scripts/check_oracles.py
-        # ---- driver window boundary (50) — below: r04 driver-green ----
+        # -- r04 driver-green, inside the window --
         "schema_evolution": q_schema_evolution,
-        # sink_encode_roundtrip moved below the boundary earlier this
-        # round for ivf_pq_rerank; its r04-green datasource sink path
-        # stays covered by pytest + scripts/check_oracles.py
         "sink_encode_roundtrip": q_sink_encode_roundtrip,
-        # token_contains moved below the boundary to make room for
-        # orc_rowgroup_prune (late round-5 feature, never
-        # driver-verified); its changed stats-prune keep-condition
-        # branch stays covered in-window by the identical branch in
-        # the encode/decode queries plus pytest +
-        # scripts/check_oracles.py (93/93 green this round)
         "token_contains": q_token_contains,
         "clustered_encode": q_clustered_encode,
         "curation_pipeline": q_curation_pipeline,
         "predicate_decode": q_predicate_decode,
+        # ---- driver window boundary (50) — below: r04 driver-green ----
         "datasource_roundtrip": q_datasource_roundtrip,
         "bloom_filter_decode": q_bloom_filter_decode,
         "file_prune_scan": q_file_prune_scan,
@@ -2321,13 +2166,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_jaccard": q_ngram_jaccard,
         "minhash_lsh": q_minhash_lsh,
         "simhash": q_simhash,
-        "embedding_neardup": q_embedding_neardup,
-        "semantic_dedup": q_semantic_dedup,
         "pii_scrub": q_pii_scrub,
         "winnow_fingerprint": q_winnow_fingerprint,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "pq_encode": q_pq_encode,
         "multimodal_features": q_multimodal_features,
         "frame_sample": q_frame_sample,
         "resize_payload": q_resize_payload,
@@ -2359,21 +2199,7 @@ def oracle_sql() -> dict[str, str]:
         extract_features_sql,
         resize_payload_sql,
     )
-    from orc_format_spark.functions.pq import (
-        ivf_pq_rerank_topk_sql,
-        ivf_pq_topk_sql,
-        pq_encode_sql,
-        pq_topk_sql,
-    )
-    from orc_format_spark.functions.sq import sq8_encode_sql, sq8_topk_sql
     from orc_format_spark.functions.scrub import scrub_pii_sql
-    from orc_format_spark.functions.semantic import semantic_dedup_sql
-    from orc_format_spark.functions.similarity import (
-        brute_force_topk_sql,
-        ivf_topk_sql,
-        lsh_bucketed_topk_sql,
-        near_duplicate_pairs_sql,
-    )
     from orc_format_spark.functions.text import (
         quality_e6_sql,
         repetition_profile_sql,
@@ -2690,8 +2516,6 @@ def oracle_sql() -> dict[str, str]:
             n=4, num_perm=32, bands=8, max_doc_id=200
         ),
         "simhash": simhash_near_pairs_sql(n=4, max_hamming=10, max_doc_id=200),
-        "embedding_neardup": near_duplicate_pairs_sql(threshold_e6=300000, max_id=300),
-        "semantic_dedup": semantic_dedup_sql(threshold_e6=300000, centroid_stride=37),
         "pii_scrub": scrub_pii_sql(
             table="documents", text_expr=_PII_TEXT_EXPR
         ),
@@ -2699,24 +2523,9 @@ def oracle_sql() -> dict[str, str]:
         "winnow_fingerprint": winnow_fingerprints_sql(
             k=8, window=4, table="(SELECT * FROM documents WHERE doc_id < 200)"
         ),
-        "ann_topk": brute_force_topk_sql(k=5, n_queries=10),
-        "pq_encode": pq_encode_sql(m=8, k=16, stride=31),
-        "pq_ann": pq_topk_sql(k_nn=5, n_queries=10, m=8, k=16, stride=31),
-        "ivf_pq_ann": ivf_pq_topk_sql(
-            k_nn=5, n_queries=10, m=8, k=16, pq_stride=31,
-            centroid_stride=37, nprobe=4,
-        ),
-        "sq8_roundtrip": sq8_encode_sql(),
-        "sq8_ann": sq8_topk_sql(k_nn=5, n_queries=10),
-        "ivf_pq_rerank": ivf_pq_rerank_topk_sql(
-            k_nn=5, refine=4, n_queries=10, m=8, k=16, pq_stride=31,
-            centroid_stride=37, nprobe=4,
-        ),
         "nested_projection_decode": (
             "SELECT event_id, value AS inner_value FROM events"
         ),
-        "ann_lsh": lsh_bucketed_topk_sql(k=5, n_queries=10, sign_dims=8, n_tables=4),
-        "ann_ivf": ivf_topk_sql(k=5, n_queries=10, centroid_stride=59, nprobe=3),
         "multimodal_features": extract_features_sql(),
         "frame_sample": (
             "SELECT CAST(doc_id AS VARCHAR) AS doc_id, "

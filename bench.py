@@ -80,14 +80,6 @@ HEADLINE = [
     "exact_dedup",
     "dedup_ladder",
     "ngram_jaccard",
-    "ann_topk",
-    "ann_ivf",
-    "pq_encode",
-    "pq_ann",
-    "ivf_pq_ann",
-    "ivf_pq_rerank",
-    "sq8_roundtrip",
-    "sq8_ann",
     "orc_file_roundtrip",
     "orc_dict_map_roundtrip",
     "orc_rle_v2_file_roundtrip",
@@ -95,8 +87,6 @@ HEADLINE = [
     "orc_union_roundtrip",
     "orc_native_read",
     "orc_bloom_prune",
-    "embedding_neardup",
-    "semantic_dedup",
     "pii_scrub",
     "curation_pipeline_v2",
     "winnow_fingerprint",

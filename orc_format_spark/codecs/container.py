@@ -270,7 +270,7 @@ def encode_column(
         # reference pins floats to raw LE (float.rs:95-101); auto also
         # tries byte-stream split, dict-on-bit-patterns, and ALP
         # decimal-double (alp.py), compared POST-compression
-        # (selector.select_float_codec) since raw and split only
+        # (selector.select_and_encode_float) since raw and split only
         # diverge under the block codec
         dbl = pa.types.is_float64(t)
         raw_name = "raw_double" if dbl else "raw_float"

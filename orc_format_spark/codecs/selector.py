@@ -59,14 +59,6 @@ def _encode_str(codec: str, data: np.ndarray, offsets: np.ndarray,
     raise ValueError(codec)
 
 
-def select_int_codec(
-    v: np.ndarray, signed: bool = True, sample: int = SAMPLE_VALUES
-) -> tuple[str, dict[str, float]]:
-    """Returns (codec, {codec: est_bytes_per_value}) for an int column."""
-    best, est, _wire = select_and_encode_int(v, signed, sample)
-    return best, est
-
-
 def select_and_encode_int(
     v: np.ndarray, signed: bool = True, sample: int = SAMPLE_VALUES
 ) -> tuple[str, dict[str, float], bytes]:
@@ -97,13 +89,6 @@ def select_and_encode_int(
     if n <= sample:
         return best, est, enc[best]
     return best, est, _encode_int(best, v, signed)
-
-
-def select_str_codec(
-    data: np.ndarray, offsets: np.ndarray, sample: int = 2048
-) -> tuple[str, dict[str, float]]:
-    best, est, _wire = select_and_encode_str(data, offsets, sample)
-    return best, est
 
 
 def select_and_encode_str(
@@ -187,13 +172,19 @@ def _encode_float(codec: str, v: np.ndarray, double: bool) -> bytes:
     raise ValueError(codec)
 
 
-def select_float_codec(
+def select_and_encode_float(
     v: np.ndarray,
     double: bool = True,
     compression: str = "zstd",
     sample: int = SAMPLE_VALUES,
-) -> tuple[str, dict[str, float]]:
-    """Float codec selection must compare POST-compression sizes: raw
+) -> tuple[str, dict[str, float], bytes]:
+    """Selection + final encode fused: returns (codec, estimates, wire
+    bytes). When the sample covered the whole column, the winning
+    candidate's PRE-compression bytes are the final stream bytes — one
+    encode instead of two, bit-identical (the block codec is applied
+    downstream either way).
+
+    Float codec selection must compare POST-compression sizes: raw
     and byte-split are the same 8 B/value on the wire and only diverge
     under the block codec (split groups the slowly-varying
     exponent/high-mantissa bytes into runs), while dict-on-bit-patterns
@@ -202,21 +193,6 @@ def select_float_codec(
     split 177.0 KB / dict 26.1 KB; l_extendedprice 250 KB / 333 KB /
     382 KB — no single choice is ever right, so each candidate's sample
     is actually compressed (bounded: <= sample values per candidate)."""
-    best, est, _wire = select_and_encode_float(v, double, compression, sample)
-    return best, est
-
-
-def select_and_encode_float(
-    v: np.ndarray,
-    double: bool = True,
-    compression: str = "zstd",
-    sample: int = SAMPLE_VALUES,
-) -> tuple[str, dict[str, float], bytes]:
-    """Selection + final encode fused (see :func:`select_float_codec`
-    for the post-compression estimation rationale): when the sample
-    covered the whole column, the winning candidate's PRE-compression
-    bytes are the final stream bytes — one encode instead of two,
-    bit-identical (the block codec is applied downstream either way)."""
     from .blocks import compress_stream
 
     raw_name = "raw_double" if double else "raw_float"

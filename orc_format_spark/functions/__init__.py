@@ -1,5 +1,5 @@
 """Training-data pipeline functions: text analysis, deduplication,
-similarity search, multimodal plumbing.
+multimodal plumbing.
 
 These are the first-class additions beyond the reference's encoder
 surface (the reference is a file-format writer only — SURVEY.md §2.7);
@@ -17,18 +17,11 @@ from .dedup import (
     simhash64,
     simhash_near_pairs,
 )
-from .kmeans import train_kmeans_centroids
-from .pq import pq_encode, pq_topk, train_pq_codebooks
 from .multimodal import (
     decode_image,
     extract_features,
     frame_sample,
     with_payload,
-)
-from .similarity import (
-    brute_force_topk,
-    lsh_bucketed_topk,
-    near_duplicate_pairs,
 )
 from .text import (
     bpe_token_count,
@@ -41,7 +34,6 @@ from .text import (
 
 __all__ = [
     "bpe_token_count",
-    "brute_force_topk",
     "char_ngrams",
     "decode_image",
     "dedup_keep_first",
@@ -50,19 +42,13 @@ __all__ = [
     "fingerprint",
     "frame_sample",
     "lang_id",
-    "lsh_bucketed_topk",
     "lsh_candidate_pairs",
     "minhash_signatures",
-    "near_duplicate_pairs",
     "ngram_jaccard_pairs",
     "quality_score",
-    "pq_encode",
-    "pq_topk",
     "simhash64",
     "simhash_near_pairs",
     "text_profile",
-    "train_kmeans_centroids",
-    "train_pq_codebooks",
     "with_payload",
     "ws_token_count",
 ]

@@ -111,20 +111,23 @@ WINNOW_BASE = 257
 WINNOW_MOD = 2_147_483_647  # 2^31-1: keeps acc*base + c < 2^40, overflow-free
 
 
-def _gram_hashes(text: Column, k: int) -> Column:
-    """Polynomial rolling-hash of every k-char gram:
-    h(i) = fold_{j=i..i+k-1} (acc*B + codepoint_j) mod M — exact integer
-    arithmetic, identical on both engines (the first fold step from 0 is
-    the codepoint itself, matching DuckDB's list_reduce seeding)."""
-    return F.transform(
-        F.sequence(F.lit(1), F.length(text) - F.lit(k - 1)),
-        lambda i: F.aggregate(
-            F.sequence(i, i + F.lit(k - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, j: (
-                acc * F.lit(WINNOW_BASE) + F.ascii(text.substr(j, F.lit(1)))
-            )
-            % F.lit(WINNOW_MOD),
+def _gram_hashes(cps: Column, n_grams: Column, k: int) -> Column:
+    """Polynomial rolling-hash of every k-char gram over the code-point
+    array ``cps``: h(i) = fold_{j=i..i+k-1} (acc*B + codepoint_j) mod M —
+    exact integer arithmetic, identical on both engines (the first fold
+    step from 0 is the codepoint itself, matching DuckDB's list_reduce
+    seeding). Null when there is no gram (``sequence(1, n)`` would count
+    down and ``slice`` reject start 0)."""
+    return F.when(
+        n_grams >= 1,
+        F.transform(
+            F.sequence(F.lit(1), n_grams),
+            lambda i: F.aggregate(
+                F.slice(cps, i, k),
+                F.lit(0).cast("long"),
+                lambda acc, c: (acc * F.lit(WINNOW_BASE) + F.ascii(c))
+                % F.lit(WINNOW_MOD),
+            ),
         ),
     )
 
@@ -142,20 +145,33 @@ def winnow_fingerprints(
     -> the single global min; no grams (text shorter than k) -> empty.
     Pure higher-order Catalyst array expressions — map-side, zero
     shuffle, no Python; the DuckDB oracle reproduces every hash exactly
-    (integer arithmetic mod 2^31-1 throughout)."""
-    t = F.col("text")
-    grams = _gram_hashes(t, k)
-    n_grams = F.length(t) - F.lit(k - 1)
-    mins = F.transform(
-        F.sequence(F.lit(1), n_grams - F.lit(window - 1)),
-        lambda p: F.array_min(F.slice(grams, p, window)),
+    (integer arithmetic mod 2^31-1 throughout).
+
+    Linear in the text: each document is split once into its code points
+    (Java's ``.`` matches a whole code point, as ``substr`` counts them),
+    and the grams are a column of their own select, so the per-window
+    lambda reads an array instead of re-hashing every gram."""
+    cps = F.regexp_extract_all(F.col("text"), F.lit("(?s)(.)"), 1)
+    n_grams = F.length("text") - F.lit(k - 1)
+    g = docs.select(
+        "doc_id",
+        _gram_hashes(cps, n_grams, k).alias("grams"),
+        n_grams.alias("n_grams"),
+    )
+    grams, n_grams = F.col("grams"), F.col("n_grams")
+    mins = F.when(
+        n_grams >= window,
+        F.transform(
+            F.sequence(F.lit(1), n_grams - F.lit(window - 1)),
+            lambda p: F.array_min(F.slice(grams, p, window)),
+        ),
     )
     selected = (
         F.when(n_grams >= window, F.array_sort(F.array_distinct(mins)))
         .when(n_grams >= 1, F.array(F.array_min(grams)))
         .otherwise(F.array().cast("array<long>"))
     )
-    return docs.select(
+    return g.select(
         "doc_id",
         F.size(selected).alias("n_fingerprints"),
         F.concat_ws(

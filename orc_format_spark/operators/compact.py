@@ -117,7 +117,7 @@ def compact_blobs(
 
     def fn(tbl: pa.Table) -> pa.Table:
         # explicit import: bare `pyarrow` does not expose .compute in a
-        # fresh process (same hazard ADVICE flagged in kmeans.py)
+        # fresh worker process
         import pyarrow.compute as pc
 
         limit_worker_threads()

@@ -72,21 +72,21 @@ _ROW_INDEX = 6
 _BLOOM_FILTER_UTF8 = 8
 
 
-def _bloom_index_msg(col: "pa.ChunkedArray", fpp: float) -> bytes:
+def _bloom_index_msg(col: "pa.ChunkedArray") -> bytes:
     """One row group's BloomFilterIndex proto message for a column
     slice: numHashFunctions + the little-endian utf8bitset, hashed
     exactly as Apache's readers expect (codecs/orc_bloom.py). Sized to
     the DISTINCT count — bitsets are set-semantics, so sizing to
     distinct values keeps repeated-value columns' filters small while
     the reader (which only uses the stored k and bitset length) is
-    unaffected."""
+    unaffected. False-positive rate: Apache ORC's 0.05 default."""
     import pyarrow.compute as pc
 
     from ..codecs.orc_bloom import OrcBloomFilter
 
     arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
     u = pc.unique(arr.drop_null())
-    bf = OrcBloomFilter(max(1, len(u)), fpp)
+    bf = OrcBloomFilter(max(1, len(u)))
     t = arr.type
     if pa.types.is_integer(t):
         bf.add_longs(u.to_numpy(zero_copy_only=False).astype("int64"))
@@ -145,26 +145,26 @@ def _pb(field: int, data: bytes) -> bytes:
 # -------------------------------------------------------- ORC block comp
 
 
-def _orc_compress(
-    data: bytes, kind: str, block_size: int, level: int
-) -> bytes:
+def _orc_compress(data: bytes, kind: str) -> bytes:
     """Pure ORC block framing (3-byte LE ``len*2 + is_original`` headers,
     store-original fallback) — the blob container's framing minus its
-    varint total-length prefix, which real ORC has no room for."""
+    varint total-length prefix, which real ORC has no room for. Blocks
+    are the reference's DEFAULT_BLOCK_SIZE; zstd/zlib use its
+    DEFAULT_ZSTD_LEVEL."""
     if kind == "none":
         return data
     if kind == "zlib":
         import zlib
 
         def comp(b):  # ORC ZLIB is raw DEFLATE (no zlib wrapper)
-            c = zlib.compressobj(level if level <= 9 else 6, zlib.DEFLATED, -15)
+            c = zlib.compressobj(DEFAULT_ZSTD_LEVEL, zlib.DEFLATED, -15)
             return c.compress(b) + c.flush()
 
     elif kind in ("snappy", "zstd", "lz4"):
         codec = pa.Codec(
             "zstd" if kind == "zstd" else
             "lz4_raw" if kind == "lz4" else "snappy",
-            compression_level=level if kind == "zstd" else None,
+            compression_level=DEFAULT_ZSTD_LEVEL if kind == "zstd" else None,
         )
 
         def comp(b):
@@ -178,8 +178,8 @@ def _orc_compress(
     else:
         raise ValueError(f"orc_file: unsupported compression {kind!r}")
     parts = []
-    for start in range(0, len(data), block_size):
-        block = data[start : start + block_size]
+    for start in range(0, len(data), DEFAULT_BLOCK_SIZE):
+        block = data[start : start + DEFAULT_BLOCK_SIZE]
         c = comp(block)
         if len(c) >= len(block):  # store original
             parts.append((len(block) * 2 + 1).to_bytes(3, "little"))
@@ -466,13 +466,13 @@ def _validity(arr: pa.Array) -> np.ndarray:
 
 def _dict_streams(
     dense: pa.Array, col_id: int, streams: list, encodings: dict,
-    threshold: float, enc_int, v2: bool,
+    enc_int, v2: bool,
 ) -> bool:
     """Try ORC DICTIONARY encoding (ColumnEncoding kind 1, or
     DICTIONARY_V2 = 3 when the file is RLEv2-mode) for a string column:
     DATA = unsigned-RLE indices into the SORTED dictionary,
     DICTIONARY_DATA = concatenated utf8 entries, LENGTH = per-entry byte
-    lengths. Used when distinct/total <= ``threshold`` (Apache ORC's
+    lengths. Used when distinct/total <= DICT_THRESHOLD (Apache ORC's
     0.8 default); returns False to fall back to DIRECT."""
     import pyarrow.compute as pc
 
@@ -481,7 +481,7 @@ def _dict_streams(
         return False
     enc = dense.dictionary_encode()
     dct = enc.dictionary
-    if len(dct) > threshold * n:
+    if len(dct) > DICT_THRESHOLD * n:
         return False
     order = pc.sort_indices(dct)
     onp = order.to_numpy(zero_copy_only=False).astype(np.int64)
@@ -508,7 +508,6 @@ def _column_streams(
     streams: list,
     encodings: dict,
     dict_strings: bool = True,
-    dict_threshold: float = DICT_THRESHOLD,
     rle: str = "v1",
     stats: dict | None = None,
     force_present: frozenset | None = None,
@@ -557,8 +556,8 @@ def _column_streams(
 
     def recurse(child: pa.Array, cid: int) -> int:
         return _column_streams(
-            child, cid, streams, encodings, dict_strings, dict_threshold,
-            rle, stats, force_present, capture,
+            child, cid, streams, encodings, dict_strings, rle, stats,
+            force_present, capture,
         )
 
     if pa.types.is_struct(t):
@@ -632,10 +631,7 @@ def _column_streams(
         if (
             dict_strings
             and (pa.types.is_string(t) or pa.types.is_large_string(t))
-            and _dict_streams(
-                dense, col_id, streams, encodings, dict_threshold,
-                enc_int, v2,
-            )
+            and _dict_streams(dense, col_id, streams, encodings, enc_int, v2)
         ):
             return col_id + 1
         if pa.types.is_string(t) or pa.types.is_binary(t):
@@ -848,7 +844,7 @@ def _grouped_column_streams(
         stats_g: dict = {}
         cap_g: dict = {}
         _column_streams(root.slice(g * stride, stride), 0, streams_g,
-                        enc_g, False, 0.0, rle, stats_g,
+                        enc_g, False, rle, stats_g,
                         force_present=force, capture=cap_g)
         return streams_g, enc_g, stats_g, cap_g
 
@@ -928,15 +924,11 @@ def write_orc(
     out: "str | BinaryIO",
     compression: str = "none",
     stripe_rows: int = 65_536,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    level: int = DEFAULT_ZSTD_LEVEL,
     dict_strings: bool = True,
-    dict_threshold: float = DICT_THRESHOLD,
     rle: str = "v1",
     row_index: bool = True,
     row_index_stride: int | None = None,
     bloom_columns: list[str] | None = None,
-    bloom_fpp: float = 0.05,
 ) -> int:
     """Write ``table`` as a genuine ORC file; returns bytes written.
 
@@ -946,7 +938,7 @@ def write_orc(
     pyarrow.orc / Apache ORC C++.
 
     String columns are DICTIONARY-encoded per stripe when distinct/total
-    <= ``dict_threshold`` (Apache ORC's 0.8 default; sorted dictionary),
+    <= DICT_THRESHOLD (Apache ORC's 0.8 default; sorted dictionary),
     else DIRECT; set ``dict_strings=False`` to force DIRECT everywhere.
 
     ``rle="v2"`` writes every integer-RLE stream with the repo's ORC
@@ -1069,8 +1061,7 @@ def write_orc(
                 encodings = {}
                 sstats = {}
                 _column_streams(
-                    root, 0, streams, encodings, dict_strings,
-                    dict_threshold, rle, sstats,
+                    root, 0, streams, encodings, dict_strings, rle, sstats,
                 )
             assert len(sstats) == len(nodes)  # walks agree on column ids
             stripe_stats.append(sstats)
@@ -1081,8 +1072,7 @@ def write_orc(
             index_len = 0
             payloads = []
             comp_streams = [
-                (kind, col, _orc_compress(raw, compression, block_size,
-                                          level))
+                (kind, col, _orc_compress(raw, compression))
                 for kind, col, raw in streams
             ]
             if row_index and gstats is not None:
@@ -1121,12 +1111,12 @@ def write_orc(
                                         comp_map[key]
                                     )
                                 boffs = boffs_cache[key]
-                                bi = u_off // block_size
+                                bi = u_off // DEFAULT_BLOCK_SIZE
                                 pos_vals.append(
                                     boffs[bi] if bi < len(boffs)
                                     else len(comp_map[key])
                                 )
-                                pos_vals.append(u_off % block_size)
+                                pos_vals.append(u_off % DEFAULT_BLOCK_SIZE)
                             if rtype in ("rle", "bool"):
                                 pos_vals.append(run_v)
                             if rtype == "bool":
@@ -1134,9 +1124,7 @@ def write_orc(
                         entry = b"".join(_pv(1, p) for p in pos_vals)
                         entry += _pb(2, _stats_msg(gstats[g][cid]))
                         entries += _pb(1, entry)
-                    comp = _orc_compress(
-                        entries, compression, block_size, level
-                    )
+                    comp = _orc_compress(entries, compression)
                     payloads.append(comp)
                     sf += _pb(
                         1, _pv(1, _ROW_INDEX) + _pv(2, cid)
@@ -1147,13 +1135,11 @@ def write_orc(
                     col = batch_tbl.column(bloom_ids[cid])
                     raw = b"".join(
                         _bloom_index_msg(
-                            col.slice(g * row_index_stride,
-                                      row_index_stride), bloom_fpp,
+                            col.slice(g * row_index_stride, row_index_stride)
                         )
                         for g in range(n_groups)
                     )
-                    comp = _orc_compress(raw, compression, block_size,
-                                         level)
+                    comp = _orc_compress(raw, compression)
                     payloads.append(comp)
                     sf += _pb(
                         1, _pv(1, _BLOOM_FILTER_UTF8) + _pv(2, cid)
@@ -1172,9 +1158,7 @@ def write_orc(
                 # streams; StripeInformation.indexLength counts them.
                 for cid in range(len(nodes)):
                     entry = _pb(2, _stats_msg(sstats[cid]))
-                    comp = _orc_compress(
-                        _pb(1, entry), compression, block_size, level
-                    )
+                    comp = _orc_compress(_pb(1, entry), compression)
                     payloads.append(comp)
                     sf += _pb(
                         1, _pv(1, _ROW_INDEX) + _pv(2, cid)
@@ -1185,10 +1169,8 @@ def write_orc(
                     # BLOOM_FILTER_UTF8 (kind 8): one BloomFilterIndex
                     # message per column per stripe, one BloomFilter
                     # entry per row group (== one per stripe here)
-                    raw = _bloom_index_msg(
-                        batch_tbl.column(bloom_ids[cid]), bloom_fpp
-                    )
-                    comp = _orc_compress(raw, compression, block_size, level)
+                    raw = _bloom_index_msg(batch_tbl.column(bloom_ids[cid]))
+                    comp = _orc_compress(raw, compression)
                     payloads.append(comp)
                     sf += _pb(
                         1, _pv(1, _BLOOM_FILTER_UTF8) + _pv(2, cid)
@@ -1207,7 +1189,7 @@ def write_orc(
                     msg += _pv(2, size)  # dictionarySize
                 sf += _pb(2, msg)
             sf += _pb(3, b"UTC")
-            sf_bytes = _orc_compress(sf, compression, block_size, level)
+            sf_bytes = _orc_compress(sf, compression)
             for p in payloads:
                 f.write(p)
             f.write(sf_bytes)
@@ -1234,9 +1216,7 @@ def write_orc(
                 _pb(1, _stats_msg(sstats[i])) for i in range(len(nodes))
             )
             metadata += _pb(1, ss_msg)
-        metadata_bytes = _orc_compress(
-            metadata, compression, block_size, level
-        )
+        metadata_bytes = _orc_compress(metadata, compression)
         f.write(metadata_bytes)
         footer = _pv(1, 3) + _pv(2, content_len)
         for si in stripe_infos:
@@ -1255,12 +1235,12 @@ def write_orc(
         # UPPER bound on rows per group, so every stripe has exactly one)
         footer += _pv(8, (row_index_stride or stripe_rows)
                       if row_index else 0)
-        footer_bytes = _orc_compress(footer, compression, block_size, level)
+        footer_bytes = _orc_compress(footer, compression)
         f.write(footer_bytes)
         ps = _pv(1, len(footer_bytes))
         ps += _pv(2, _COMPRESSION[compression])
         if compression != "none":
-            ps += _pv(3, block_size)
+            ps += _pv(3, DEFAULT_BLOCK_SIZE)
         ps += _pv(4, 0) + _pv(4, 12)  # file version 0.12
         ps += _pv(5, len(metadata_bytes))  # metadataLength
         ps += _pv(6, 1)  # writerVersion

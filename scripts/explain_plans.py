@@ -208,18 +208,7 @@ def main() -> None:
         read_tokens_table(spark, tdir),
     )
     from orc_format_spark.functions.scrub import scrub_pii
-    from orc_format_spark.functions.semantic import semantic_dedup
 
-    show(
-        "semantic dedup (expect: MapInArrow assignment with NO Exchange "
-        "before it — centroids are driver metadata; the cluster-bounded "
-        "self-join keys on list_id — broadcast at this audit scale, "
-        "shuffled-hash via AQE stats at corpus scale; window on the "
-        "dominated side only)",
-        semantic_dedup(
-            spark.read.parquet(f"{sf}/embeddings.parquet"), centroid_stride=37
-        ),
-    )
     show(
         "pii scrub (expect: a single WholeStageCodegen Project over the "
         "scan — regexp_count/regexp_replace are Catalyst expressions; "
@@ -269,42 +258,6 @@ def main() -> None:
         .drop("z"),
     )
     qs = entrymod.queries()
-    show(
-        "PQ ADC top-k (expect: ONE MapInArrow over the embeddings scan — "
-        "codebooks + per-query distance tables are broadcast closure "
-        "constants — with the partial top-k cut INSIDE the kernel "
-        "(np.partition per query per batch), so the Window's "
-        "hashpartitioning Exchange carries <= Q*k rows per input "
-        "partition, never the Q*N candidate matrix; the final "
-        "row_number ranks a metadata-sized frame)",
-        qs["pq_ann"](spark, sf),
-    )
-    show(
-        "IVF x PQ composed index (expect: the same bounded shape as "
-        "pq_ann — centroid assignment AND nprobe-list membership AND "
-        "ADC scoring all happen in ONE map-side kernel per batch "
-        "(broadcast centroids + codebooks + query tables), partial "
-        "top-k cut before the yield; only probed-list members are "
-        "scored, only <= Q*k survivors per partition reach the single "
-        "Window Exchange)",
-        qs["ivf_pq_ann"](spark, sf),
-    )
-    show(
-        "brute-force cosine top-k, exact baseline (expect: map-side "
-        "partial top-k in the kernel like pq_ann — the Exchange input "
-        "is bounded even on the documented-exact path)",
-        qs["ann_topk"](spark, sf),
-    )
-    show(
-        "SQ8 asymmetric top-k (expect: the per-dimension bounds ran as "
-        "ONE map-side Arrow partial-bounds kernel before planning — "
-        "2*D longs of driver metadata, not in this plan — then the "
-        "same bounded shape as pq_ann: ONE MapInArrow scoring integer "
-        "reconstructions against exact query vectors with the partial "
-        "top-k cut inside the kernel; the Window Exchange carries <= "
-        "Q*k rows per partition)",
-        qs["sq8_ann"](spark, sf),
-    )
     show(
         "ORC bloom point lookup (expect: Scan orc with PushedFilters "
         "[IsNotNull, EqualTo(l_orderkey,...)] — the equality reaches "

@@ -24,7 +24,11 @@ from orc_format_spark.codecs.dictionary import (
 )
 from orc_format_spark.codecs.fsst import fsst_decode, fsst_encode
 from orc_format_spark.codecs.rle_v2 import decode_int_rle_v2, encode_int_rle_v2
-from orc_format_spark.codecs.selector import select_int_codec, select_str_codec
+from orc_format_spark.codecs.selector import (
+    select_and_encode_float,
+    select_and_encode_int,
+    select_and_encode_str,
+)
 from orc_format_spark.codecs.timestamp import (
     compact_nanos,
     decode_timestamp_us,
@@ -165,14 +169,14 @@ def test_timestamp_roundtrip():
 
 def test_selector_picks_sensible_codecs():
     run_heavy = np.repeat(np.arange(50, dtype=np.int64), 200)
-    c, est = select_int_codec(run_heavy)
+    c, est, _ = select_and_encode_int(run_heavy)
     assert c in ("rle_v1", "rle_v2", "dict_int")
     small_range = RNG.integers(1000, 1032, 10000).astype(np.int64)
-    c2, est2 = select_int_codec(small_range)
+    c2, est2, _ = select_and_encode_int(small_range)
     assert est2[c2] <= min(est2.values())
     strings = [b"GET", b"PUT", b"POST"] * 2000
     data, off = _flat(strings)
-    c3, _ = select_str_codec(data, off)
+    c3, _, _ = select_and_encode_str(data, off)
     assert c3 == "dict_str"
 
 
@@ -635,17 +639,15 @@ def test_float_split_golden_bytes():
 def test_float_codec_selection_measures_compressed():
     import numpy as np
 
-    from orc_format_spark.codecs.selector import select_float_codec
-
     rng = np.random.default_rng(7)
     low_card = rng.choice([0.0, 0.05, 0.08, 0.1], 50_000)
-    best, est = select_float_codec(low_card, double=True)
+    best, est, _ = select_and_encode_float(low_card, double=True)
     assert best == "dict_float" and est["dict_float"] < est["raw"]
     high_entropy = rng.random(50_000) * 1e5
-    best2, est2 = select_float_codec(high_entropy, double=True)
+    best2, est2, _ = select_and_encode_float(high_entropy, double=True)
     assert best2 in ("raw_double", "float_split")
     smooth = np.cumsum(rng.normal(0, 0.01, 50_000)) + 100.0
-    best3, est3 = select_float_codec(smooth, double=True)
+    best3, est3, _ = select_and_encode_float(smooth, double=True)
     assert best3 == "float_split"  # exponent/high-mantissa runs win
 
 
@@ -686,23 +688,22 @@ def test_alp_roundtrip_and_selection():
     import numpy as np
 
     from orc_format_spark.codecs.alp import decode_alp, encode_alp
-    from orc_format_spark.codecs.selector import select_float_codec
 
     rng = np.random.default_rng(7)
     price = np.round(rng.uniform(900, 105000, 50_000) / 100, 2)
     back = decode_alp(encode_alp(price))
     assert back.tobytes() == price.tobytes()
-    best, est = select_float_codec(price, double=True)
+    best, est, _ = select_and_encode_float(price, double=True)
     assert best == "alp" and est["alp"] < est["raw"]
     # ~1% irrational exceptions still roundtrip and still win
     mixed = price.copy()
     mixed[::97] *= np.pi
     assert decode_alp(encode_alp(mixed)).tobytes() == mixed.tobytes()
-    assert select_float_codec(mixed, double=True)[0] == "alp"
+    assert select_and_encode_float(mixed, double=True)[0] == "alp"
     # pure gaussians: every value is an exception-or-wide-digit; the
     # selector must NOT pick alp (measured bytes, not vibes)
     gauss = rng.standard_normal(50_000)
-    assert select_float_codec(gauss, double=True)[0] != "alp"
+    assert select_and_encode_float(gauss, double=True)[0] != "alp"
     assert decode_alp(encode_alp(gauss)).tobytes() == gauss.tobytes()
 
 
@@ -729,6 +730,45 @@ def test_alp_through_container_bit_exact():
         back32.column("y").to_numpy().astype("<f4").tobytes()
         == t32.column("y").to_numpy().tobytes()
     )
+
+
+def test_sq8_codes_ride_blob_encoder():
+    """Byte-range codes (an 8-bit affine quantization of float32
+    embeddings) stored as a plain list<int16> column ride the normal
+    blob encoder, decode bit-exact, and land well under half the blob
+    of the raw float32 embeddings through the same path (near-uniform
+    random embeddings are incompressible, so the win is the
+    one-byte-per-dimension representation itself)."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_DIR
+
+    src = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    ids = pa.array(src.column("vec_id").to_numpy(zero_copy_only=False), pa.int64())
+    emb = np.stack([np.asarray(v, np.float32)
+                    for v in src.column("embedding").to_pylist()])
+    raw_tbl = pa.table({
+        "vec_id": ids,
+        "embedding": pa.array(list(emb), pa.list_(pa.float32())),
+    })
+    blob_raw, _ = encode_table(raw_tbl, codec="auto", compression="zstd")
+
+    qv = np.floor(emb.astype(np.float64) * 1000.0).astype(np.int64)
+    mn = qv.min(axis=0)
+    span = np.maximum(qv.max(axis=0) - mn, 1)
+    codes = (((qv - mn) * 255) // span).astype(np.int16)
+    assert codes.min() >= 0 and codes.max() <= 255
+    sq8_tbl = pa.table({
+        "vec_id": ids,
+        "codes": pa.array(list(codes), pa.list_(pa.int16())),
+    })
+    blob_sq8, _ = encode_table(sq8_tbl, codec="auto", compression="zstd")
+
+    back = decode_table(blob_sq8)
+    assert [list(map(int, r)) for r in back.column("codes").to_pylist()] \
+        == codes.tolist()
+    ratio = len(blob_sq8) / len(blob_raw)
+    assert ratio < 0.45, (len(blob_sq8), len(blob_raw), ratio)
 
 
 def test_sparse_union_encodes_as_dense():

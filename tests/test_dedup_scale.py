@@ -1,4 +1,4 @@
-"""Scale-safety properties of the dedup/ANN operators: join keys stay
+"""Scale-safety properties of the dedup operators: join keys stay
 bounded on adversarially skewed fixtures (the 100 TB failure modes from
 stop-grams and hot LSH buckets)."""
 
@@ -10,7 +10,6 @@ from orc_format_spark.functions.dedup import (
     lsh_candidate_pairs,
     ngram_jaccard_pairs,
 )
-from orc_format_spark.functions.similarity import lsh_bucketed_topk
 
 
 @pytest.fixture(scope="module")
@@ -69,262 +68,6 @@ def test_minhash_skips_short_docs(spark):
     assert got == {(2, 4)}
 
 
-def test_ann_multi_table_bucket_bound(spark):
-    """Multi-table LSH: every (table, bucket) group stays << corpus even
-    when one sign pattern is hot in some table's slice."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    n, dim = 400, 32
-    vecs = rng.normal(size=(n, dim)).astype("float32")
-    vecs[:, :8] = np.abs(vecs[:, :8])  # table 0's slice is all-positive: hot
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(n)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = lsh_bucketed_topk(emb, k=3, n_queries=5, sign_dims=8, n_tables=4)
-    res = out.collect()
-    assert len(res) > 0
-    # each query returns at most k ranked rows
-    per_q = {}
-    for r in res:
-        per_q.setdefault(r.query_id, []).append(r.rank)
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in per_q.values())
-    assert all(len(v) <= 3 for v in per_q.values())
-
-
-def test_auto_sign_dims_scaling():
-    """Bucket-width autoscale: expected bucket stays <= target across
-    corpus scales; clamped by vector-dim slice budget and the 24-bit cap."""
-    from orc_format_spark.functions.similarity import auto_sign_dims
-
-    # 1M vectors / 4k target -> 8 bits; 1B -> 18; 1T -> capped at 24
-    assert auto_sign_dims(1_000_000, 256, n_tables=4) == 8
-    assert auto_sign_dims(10**9, 256, n_tables=4) == 18
-    assert auto_sign_dims(10**12, 256, n_tables=4) == 24
-    # slice budget: 4 tables over a 32-dim vector -> at most 8 bits each
-    assert auto_sign_dims(10**9, 32, n_tables=4) == 8
-    # floors: tiny corpora and tiny vectors never go below 4 bits
-    assert auto_sign_dims(10, 256, n_tables=4) == 4
-    assert auto_sign_dims(10**9, 8, n_tables=4) == 4
-
-
-def test_ivf_full_probe_equals_brute_force(spark):
-    """IVF with nprobe >= n_lists degenerates to exact search: probing
-    every list makes the candidate set the whole corpus, so the top-k
-    must equal brute force bit-for-bit. (The approximate regime only
-    drops candidates, never re-scores them.)"""
-    from orc_format_spark.functions.similarity import brute_force_topk, ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    # stride 97 over 500 ids -> 6 centroids; nprobe=6 probes all lists
-    exact = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cos_e6)
-        for r in brute_force_topk(emb, k=5, n_queries=8).collect()
-    }
-    ivf = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cos_e6)
-        for r in ivf_topk(
-            emb, k=5, n_queries=8, centroid_stride=97, nprobe=6
-        ).collect()
-    }
-    assert ivf == exact
-
-
-def test_ivf_probe_bounds_candidates(spark):
-    """With nprobe=1 each query scores only its single probed list —
-    the candidate count per query must be bounded by the largest list,
-    not the corpus."""
-    from orc_format_spark.functions.similarity import ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = ivf_topk(emb, k=1000, n_queries=4, centroid_stride=97, nprobe=1)
-    per_q = {r.query_id: r["cnt"] for r in out.groupBy("query_id").agg(
-        F.count("*").alias("cnt")).collect()}
-    n = emb.count()
-    assert per_q and all(c < n for c in per_q.values())
-
-
-def test_ivf_injected_centroids_match_stride_default(spark):
-    """centroids= (the offline-training injection point): passing the
-    stride rows themselves as a centroid DataFrame must reproduce the
-    stride default exactly — same quantization, same assignment, same
-    ranks."""
-    from orc_format_spark.functions.similarity import ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    default = sorted(
-        map(tuple, ivf_topk(
-            emb, k=5, n_queries=6, centroid_stride=97, nprobe=2
-        ).collect())
-    )
-    injected = sorted(
-        map(tuple, ivf_topk(
-            emb, k=5, n_queries=6, centroid_stride=97, nprobe=2,
-            centroids=emb.filter(F.col("vec_id") % 97 == 0),
-        ).collect())
-    )
-    assert injected == default
-
-
-def test_semantic_dedup_injected_centroids_and_ndarray(spark):
-    """semantic_dedup accepts offline centroids as a DataFrame (matches
-    the stride default) and as a raw (C, D) ndarray (runs through the
-    same quantization; ids become row positions)."""
-    import numpy as np
-
-    from orc_format_spark.functions.semantic import semantic_dedup
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    default = sorted(
-        map(tuple, semantic_dedup(emb, centroid_stride=97).collect())
-    )
-    via_df = sorted(
-        map(tuple, semantic_dedup(
-            emb, centroid_stride=97,
-            centroids=emb.filter(F.col("vec_id") % 97 == 0),
-        ).collect())
-    )
-    assert via_df == default
-    cent_rows = sorted(
-        (r.vec_id, list(r.embedding))
-        for r in emb.filter(F.col("vec_id") % 97 == 0).collect()
-    )
-    arr = np.array([v for _, v in cent_rows], dtype=np.float64)
-    via_nd = semantic_dedup(emb, centroid_stride=97, centroids=arr)
-    # ndarray ids are row positions 0..C-1 of the (id-sorted) sample, so
-    # list ids differ from the DataFrame path but the DROP SET (which
-    # vectors are near-duplicates of a lower-id cluster peer) must agree
-    assert sorted(r.vec_id for r in via_nd.collect()) == sorted(
-        t[0] for t in default
-    )
-
-
-def test_centroid_cap_raises_instead_of_collecting(spark, monkeypatch):
-    """The driver-side centroid materialization is hard-capped: a
-    stride sample (or injected table) past MAX_CENTROIDS raises instead
-    of silently scaling driver memory with the corpus."""
-    from orc_format_spark.functions import similarity
-    from orc_format_spark.functions.semantic import semantic_dedup
-    from orc_format_spark.functions.similarity import ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    monkeypatch.setattr(similarity, "MAX_CENTROIDS", 3)
-    with pytest.raises(ValueError, match="stride sample exceeds"):
-        ivf_topk(emb, centroid_stride=7)
-    with pytest.raises(ValueError, match="stride sample exceeds"):
-        semantic_dedup(emb, centroid_stride=7)
-    with pytest.raises(ValueError, match="centroid table exceeds"):
-        ivf_topk(emb, centroids=emb)
-
-
-def test_train_kmeans_centroids_and_feed_injection(spark):
-    """Distributed spherical k-means (one map pass + one k*P-row shuffle
-    per Lloyd iteration; payload never shuffles): unit-norm output of
-    the right shape, objective no worse than the init, reproducible on a
-    fixed partitioning, and directly consumable by the centroids=
-    injection point."""
-    import numpy as np
-
-    from orc_format_spark.functions.kmeans import train_kmeans_centroids
-    from orc_format_spark.functions.semantic import semantic_dedup
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).repartition(4, "vec_id")
-    cents = train_kmeans_centroids(emb, k=8, iters=3)
-    assert cents.ndim == 2 and 1 <= cents.shape[0] <= 8
-    assert np.allclose(np.linalg.norm(cents, axis=1), 1.0)
-
-    rows = emb.collect()
-    x = np.array([r.embedding for r in rows], np.float64)
-    x = x[np.linalg.norm(x, axis=1) > 0]
-    xn = x / np.linalg.norm(x, axis=1, keepdims=True)
-    init = train_kmeans_centroids(emb, k=8, iters=0)
-
-    def objective(c):
-        return float(np.mean(np.max(xn @ c.T, axis=1)))
-
-    assert objective(cents) >= objective(init) - 1e-12
-    # deterministic given a fixed partitioning (partials summed in
-    # partition-id order)
-    again = train_kmeans_centroids(emb, k=8, iters=3)
-    assert np.array_equal(cents, again)
-    # the trained matrix is exactly what centroids= consumes
-    dropped = semantic_dedup(emb, centroids=cents)
-    assert dropped.count() >= 0
-
-
-def test_pq_trained_codebooks_and_adc_quality(spark):
-    """PQ production path: float k-means codebooks train on a capped
-    sample, inject into encode/search, and ADC ranking with trained
-    codebooks finds true nearest neighbors far better than chance
-    (recall@5 of the exact top-1 on this 500-vector corpus)."""
-    import numpy as np
-
-    from orc_format_spark.functions.pq import (
-        pq_encode,
-        pq_topk,
-        train_pq_codebooks,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cb = train_pq_codebooks(emb, m=8, k=16, iters=5)
-    assert cb.shape == (8, 16, 8)
-    codes = pq_encode(emb, m=8, k=16, codebooks=cb)
-    rows = codes.collect()
-    assert len(rows) == emb.count()
-    assert all(
-        0 <= int(c) < 16 for r in rows for c in r.codes_csv.split(",")
-    )
-    # deterministic: same codebooks -> same codes
-    again = pq_encode(emb, m=8, k=16, codebooks=cb).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-
-    # exact ground truth in the SAME metric ADC approximates: L2 over
-    # the quantized (floor(x*1000)) vectors
-    vecs = {r.vec_id: np.floor(np.array(r.embedding, np.float64) * 1000.0)
-            for r in emb.collect()}
-    ids = np.array(sorted(vecs), np.int64)
-    mat = np.stack([vecs[i] for i in ids])
-    exact_top1 = {}
-    for qi in range(20):
-        qpos = int(np.searchsorted(ids, qi))
-        d2 = ((mat - mat[qpos]) ** 2).sum(axis=1)
-        d2[qpos] = np.iinfo(np.int64).max
-        order = np.lexsort((ids, d2))
-        exact_top1[qi] = int(ids[order[0]])
-    # search at higher resolution (m=16, k=64 -> 96 bits/vector, still
-    # ~10x smaller than raw): these synthetic embeddings are near-
-    # uniform random — the hardest case for PQ, whose distance gaps
-    # concentrate — so recall needs more bits than real clustered
-    # embeddings would (measured here: 45% at 32 bits, 85% at 96)
-    cb16 = train_pq_codebooks(emb, m=16, k=64, iters=5)
-    pq5 = {}
-    for r in pq_topk(
-        emb, k_nn=5, n_queries=20, m=16, k=64, codebooks=cb16
-    ).collect():
-        pq5.setdefault(r.query_id, set()).add(r.neighbor_id)
-    hits = sum(
-        1 for q, nb in exact_top1.items() if nb in pq5.get(q, set())
-    )
-    # chance of the exact top-1 landing in 5 of ~500 is ~1%
-    assert hits >= len(exact_top1) * 0.6, (hits, len(exact_top1))
-
-
-def test_pq_validation_errors(spark):
-    import numpy as np
-    import pytest as _pytest
-
-    from orc_format_spark.functions.pq import pq_encode, train_pq_codebooks
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    with _pytest.raises(ValueError, match="not divisible"):
-        pq_encode(emb, m=7)
-    with _pytest.raises(ValueError, match="< k="):
-        pq_encode(emb, k=64, stride=97)  # sample smaller than k
-    with _pytest.raises(ValueError, match="must be \\(m="):
-        pq_encode(emb, m=8, codebooks=np.zeros((4, 16, 8)))
-
-
 def test_null_text_sentinel_matches_oracle(spark):
     """NULL text is not equal content: each NULL-text doc survives
     dedup as its own group, and the DuckDB oracles reproduce the same
@@ -365,196 +108,3 @@ def test_null_text_sentinel_matches_oracle(spark):
     oracle_set = {(r[0], r[1], r[2]) for r in oracle}
     assert spark_set == oracle_set
     assert len(spark_set) == 4  # 'null:3' and 'null:4' are distinct groups
-
-
-def test_ivf_pq_full_probe_equals_pq_topk(spark):
-    """With nprobe >= number of lists, IVF pruning admits every vector,
-    so IVF-ADC must return exactly pq_topk's ranking (same codebooks,
-    same ADC tables) — the composition adds pruning, never different
-    scoring. (Corpus has no zero-norm vectors, so the norm2>0 filter
-    and the filtered codebook sample are no-ops here.)"""
-    from orc_format_spark.functions.pq import ivf_pq_topk, pq_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = {
-        (r.query_id, r.rank): (r.neighbor_id, r.adc_dist)
-        for r in pq_topk(emb, k_nn=5, n_queries=8, m=8, k=16, stride=31).collect()
-    }
-    # centroid_stride=37 over 500 vectors -> 14 lists; nprobe=14 = all
-    full = {
-        (r.query_id, r.rank): (r.neighbor_id, r.adc_dist)
-        for r in ivf_pq_topk(
-            emb, k_nn=5, n_queries=8, m=8, k=16, pq_stride=31,
-            centroid_stride=37, nprobe=14,
-        ).collect()
-    }
-    assert full == base
-
-    # pruned probe: results are a (possibly different-ranked) subset of
-    # scored candidates, but ranks stay dense 1..k per query
-    pruned = ivf_pq_topk(
-        emb, k_nn=5, n_queries=8, m=8, k=16, pq_stride=31,
-        centroid_stride=37, nprobe=2,
-    ).collect()
-    per_q = {}
-    for r in pruned:
-        per_q.setdefault(r.query_id, []).append(r.rank)
-    for q, ranks in per_q.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), (q, ranks)
-
-
-def test_sq8_codes_bounds_and_recall(spark):
-    """SQ8 scalar quantization: codes are uint8-range and deterministic;
-    8-bit-per-dimension reconstruction is fine enough that asymmetric
-    search recovers the exact top-1 for nearly every query (far finer
-    than PQ's m-code compression on the same corpus)."""
-    import numpy as np
-
-    from orc_format_spark.functions.sq import sq8_encode, sq8_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    rows = sq8_encode(emb).collect()
-    assert len(rows) == emb.count()
-    assert all(
-        0 <= int(c) <= 255 for r in rows for c in r.codes_csv.split(",")
-    )
-    again = sq8_encode(emb).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-
-    # exact ground truth in the metric ADC approximates: L2 over the
-    # quantized (floor(x*1000)) vectors
-    vecs = {
-        r.vec_id: np.floor(np.array(r.embedding, np.float64) * 1000.0)
-        for r in emb.collect()
-    }
-    ids = np.array(sorted(vecs), np.int64)
-    mat = np.stack([vecs[i] for i in ids])
-    exact_top1 = {}
-    for qi in range(20):
-        qpos = int(np.searchsorted(ids, qi))
-        d2 = ((mat - mat[qpos]) ** 2).sum(axis=1)
-        d2[qpos] = np.iinfo(np.int64).max
-        order = np.lexsort((ids, d2))
-        exact_top1[qi] = int(ids[order[0]])
-    top5 = {}
-    for r in sq8_topk(emb, k_nn=5, n_queries=20).collect():
-        top5.setdefault(r.query_id, set()).add(r.neighbor_id)
-    hits = sum(1 for q, nb in exact_top1.items() if nb in top5.get(q, set()))
-    # 8 bits/dim: near-exact — PQ at 32 bits/vector managed ~45% here
-    assert hits >= len(exact_top1) * 0.9, (hits, len(exact_top1))
-
-
-def test_sq8_constant_dimension_and_empty(spark):
-    """A constant dimension (span 0 -> floored to 1) encodes as code 0
-    and reconstructs exactly; an empty corpus is a loud error."""
-    import pytest as _pytest
-
-    from orc_format_spark.functions.sq import sq8_encode, sq8_topk
-
-    df = spark.createDataFrame(
-        [(0, [1.5, -2.0, 3.25]), (1, [1.5, 4.0, -1.0]), (2, [1.5, 0.5, 7.0])],
-        "vec_id long, embedding array<float>",
-    )
-    rows = {r.vec_id: r.codes_csv for r in sq8_encode(df).collect()}
-    # dim 0 constant -> every vector's first code is 0
-    assert all(v.split(",")[0] == "0" for v in rows.values())
-    # search still ranks by the varying dimensions
-    got = sq8_topk(df, k_nn=2, n_queries=3).collect()
-    per_q = {}
-    for r in got:
-        per_q.setdefault(r.query_id, []).append(r.rank)
-    assert all(sorted(v) == [1, 2] for v in per_q.values())
-
-    empty = df.filter("vec_id < 0")
-    with _pytest.raises(ValueError, match="empty corpus"):
-        sq8_encode(empty).collect()
-
-
-def test_ivf_pq_rerank_orders_by_exact_distance(spark):
-    """The refine stage re-scores the ADC shortlist with exact
-    quantized-integer L2: every returned pair is in the k*refine
-    shortlist, ranks are dense and ordered by exact distance, and
-    recall@5 of the exact top-1 is at least the unrefined index's."""
-    import numpy as np
-
-    from orc_format_spark.functions.pq import ivf_pq_rerank_topk, ivf_pq_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    kwargs = dict(n_queries=12, m=8, k=16, pq_stride=31,
-                  centroid_stride=37, nprobe=6)
-    short = ivf_pq_topk(emb, k_nn=20, **kwargs).collect()
-    shortlist = {}
-    for r in short:
-        shortlist.setdefault(r.query_id, set()).add(r.neighbor_id)
-    rer = ivf_pq_rerank_topk(emb, k_nn=5, refine=4, **kwargs).collect()
-    per_q = {}
-    for r in rer:
-        assert r.neighbor_id in shortlist[r.query_id]
-        per_q.setdefault(r.query_id, []).append((r.rank, r.exact_dist, r.neighbor_id))
-    vecs = {r.vec_id: np.floor(np.array(r.embedding, np.float64) * 1000.0)
-            for r in emb.collect()}
-    for q, rows in per_q.items():
-        rows.sort()
-        assert [r[0] for r in rows] == list(range(1, len(rows) + 1))
-        dists = [r[1] for r in rows]
-        assert dists == sorted(dists)
-        for _rank, d, nb in rows:
-            assert d == int(((vecs[q] - vecs[nb]) ** 2).sum())
-
-    # exact ground truth: rerank recall >= plain ADC recall
-    ids = np.array(sorted(vecs), np.int64)
-    mat = np.stack([vecs[i] for i in ids])
-    top1 = {}
-    for qi in range(12):
-        qpos = int(np.searchsorted(ids, qi))
-        d2 = ((mat - mat[qpos]) ** 2).sum(axis=1)
-        d2[qpos] = np.iinfo(np.int64).max
-        top1[qi] = int(ids[np.lexsort((ids, d2))[0]])
-    adc5 = {}
-    for r in ivf_pq_topk(emb, k_nn=5, **kwargs).collect():
-        adc5.setdefault(r.query_id, set()).add(r.neighbor_id)
-    rer5 = {q: {nb for _rk, _d, nb in rows} for q, rows in per_q.items()}
-    hits_adc = sum(1 for q, nb in top1.items() if nb in adc5.get(q, set()))
-    hits_rer = sum(1 for q, nb in top1.items() if nb in rer5.get(q, set()))
-    assert hits_rer >= hits_adc, (hits_rer, hits_adc)
-
-
-def test_sq8_codes_ride_blob_encoder():
-    """The columnar-encode tie-in: SQ8 codes stored as a plain int list
-    column ride the normal blob encoder and land ~4x smaller than the
-    raw float32 embeddings through the same path (near-uniform random
-    embeddings are incompressible, so the win is the 1-byte-per-dim
-    representation itself), and decode bit-exact."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from orc_format_spark.codecs.container import decode_table, encode_table
-    from orc_format_spark.functions.sq import _encode_codes
-
-    src = pq.read_table("/root/testdata/sf0.001/embeddings.parquet")
-    ids = src.column("vec_id").to_numpy(zero_copy_only=False)
-    emb = np.stack([np.asarray(v, np.float32)
-                    for v in src.column("embedding").to_pylist()])
-
-    raw_tbl = pa.table({
-        "vec_id": pa.array(ids, pa.int64()),
-        "embedding": pa.array(list(emb), pa.list_(pa.float32())),
-    })
-    blob_raw, _ = encode_table(raw_tbl, codec="auto", compression="zstd")
-
-    qv = np.floor(emb.astype(np.float64) * 1000.0).astype(np.int64)
-    mn = qv.min(axis=0)
-    span = np.maximum(qv.max(axis=0) - mn, 1)
-    codes = _encode_codes(qv, mn, span).astype(np.int16)
-    sq8_tbl = pa.table({
-        "vec_id": pa.array(ids, pa.int64()),
-        "codes": pa.array(list(codes), pa.list_(pa.int16())),
-    })
-    blob_sq8, lineage = encode_table(sq8_tbl, codec="auto", compression="zstd")
-
-    back = decode_table(blob_sq8)
-    assert [list(map(int, r)) for r in back.column("codes").to_pylist()] \
-        == codes.tolist()
-    ratio = len(blob_sq8) / len(blob_raw)
-    assert ratio < 0.45, (len(blob_sq8), len(blob_raw), ratio)

@@ -1,85 +1,4 @@
-"""Tests for semantic dedup (SemDeDup shape) and PII scrubbing."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from tests.conftest import SF01_DIR
-
-
-def _emb(spark):
-    return spark.read.parquet(f"{SF01_DIR}/embeddings.parquet")
-
-
-def test_semantic_dedup_drop_rule(spark):
-    """Every dropped row's keeper is a lower-id same-cluster vector at
-    cosine >= threshold, and each vec_id appears at most once."""
-    from orc_format_spark.functions.semantic import (
-        assign_ivf_lists,
-        semantic_dedup,
-    )
-
-    thr = 300000
-    dropped = semantic_dedup(_emb(spark), threshold_e6=thr, centroid_stride=37)
-    rows = dropped.collect()
-    assert rows, "threshold chosen to produce drops at sf0.01"
-    ids = [r.vec_id for r in rows]
-    assert len(ids) == len(set(ids))
-    assigned = {
-        r.vec_id: r.list_id
-        for r in assign_ivf_lists(_emb(spark), centroid_stride=37).collect()
-    }
-    for r in rows:
-        assert r.keeper_id < r.vec_id
-        assert r.cos_e6 >= thr
-        assert assigned[r.keeper_id] == r.list_id == assigned[r.vec_id]
-
-
-def test_semantic_dedup_keeper_is_max_cosine(spark):
-    """The keeper is the max-cosine dominating peer (tie -> lowest id):
-    recompute pairwise cosines within the dropped vector's cluster and
-    compare."""
-    from orc_format_spark.functions.semantic import assign_ivf_lists, semantic_dedup
-    from orc_format_spark.functions.similarity import cosine_e6
-
-    thr = 300000
-    a = assign_ivf_lists(_emb(spark), centroid_stride=37)
-    pairs = (
-        a.alias("x")
-        .join(
-            a.alias("y"),
-            (F.col("x.list_id") == F.col("y.list_id"))
-            & (F.col("y.vec_id") < F.col("x.vec_id")),
-        )
-        .select(
-            F.col("x.vec_id").alias("vec_id"),
-            F.col("y.vec_id").alias("peer"),
-            cosine_e6(
-                F.col("x.q"), F.col("y.q"), F.col("x.norm2"), F.col("y.norm2")
-            ).alias("cos_e6"),
-        )
-        .filter(F.col("cos_e6") >= thr)
-        .collect()
-    )
-    best = {}
-    for r in pairs:
-        cur = best.get(r.vec_id)
-        if cur is None or (-r.cos_e6, r.peer) < (-cur[1], cur[0]):
-            best[r.vec_id] = (r.peer, r.cos_e6)
-    got = {
-        r.vec_id: (r.keeper_id, r.cos_e6)
-        for r in semantic_dedup(
-            _emb(spark), threshold_e6=thr, centroid_stride=37
-        ).collect()
-    }
-    assert got == best
-
-
-def test_semantic_dedup_no_centroids_raises(spark):
-    from orc_format_spark.functions.semantic import semantic_dedup
-
-    only_odd = _emb(spark).filter(F.col("vec_id") % 2 == 1)
-    with pytest.raises(ValueError, match="no centroids"):
-        semantic_dedup(only_odd, centroid_stride=2)
+"""Tests for PII scrubbing, winnowing and payload resizing."""
 
 
 def test_scrub_pii_counts_and_replacements(spark):
@@ -116,8 +35,9 @@ def test_scrub_pii_is_jvm_only(spark):
 
 def test_winnow_degenerate_rules(spark):
     """Winnowing edge cases: text shorter than k -> empty set; grams
-    fewer than a window -> single global min; position-shift robustness
-    (a shared long substring yields shared fingerprints)."""
+    fewer than a window -> single global min; characters outside the
+    BMP count as one code point each; position-shift robustness (a
+    shared long substring yields shared fingerprints)."""
     from orc_format_spark.functions.text import winnow_fingerprints
 
     base = "the quick brown fox jumps over the lazy dog again and again"
@@ -128,6 +48,8 @@ def test_winnow_degenerate_rules(spark):
             (2, "ninechars"),        # 2 grams < window=4 -> global min
             (3, base),
             (4, "PREFIX " + base),   # shifted copy
+            # 9 code points, 11 UTF-16 units: grams are over code points
+            (5, "ab\U0001F600cdefg\U0001F4A9"),
         ],
         "doc_id long, text string",
     )
@@ -135,6 +57,8 @@ def test_winnow_degenerate_rules(spark):
     assert out[0].n_fingerprints == 0 and out[0].fingerprints_csv == ""
     assert out[1].n_fingerprints == 1
     assert out[2].n_fingerprints == 1
+    assert out[5].n_fingerprints == 1  # 2 grams < window -> global min
+    assert out[5].fingerprints_csv == "198547537"
     a = set(out[3].fingerprints_csv.split(","))
     b = set(out[4].fingerprints_csv.split(","))
     # winnowing guarantee: long shared substrings share fingerprints
