@@ -16,15 +16,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# NULL-text sentinel fingerprint (DuckDB side) — the single source of
-# truth lives next to the Spark sentinel it must mirror byte-for-byte
-# (dedup_keep_first / exact_duplicate_groups).
-from orc_format_spark.functions.dedup import (  # noqa: E402
-    fingerprint_sentinel_sql as _fingerprint_sentinel_sql,
-)
-
-_fp_sentinel_sql = _fingerprint_sentinel_sql()
-
 
 def _roundtrip(
     df: DataFrame,
@@ -560,7 +551,7 @@ def q_rowslice_decode(spark, sf_dir):
     itself parallelizes across the 8 groups (round-2 verdict: a
     num_groups=1 shape charged a serial full encode to a point-read)."""
     from orc_format_spark import decode_blobs, encode_groups
-    from orc_format_spark.functions.dedup import md5_hash60
+    from orc_format_spark.operators.partitioning import md5_hash60
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("rid"),
@@ -854,86 +845,6 @@ def q_repetition_profile(spark, sf_dir):
     return repetition_profile(docs)
 
 
-def _docs_with_dups(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    dups = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1000000)
-    )
-    return docs.union(dups)
-
-
-def q_exact_dedup(spark, sf_dir):
-    """Exact dedup groups over docs + synthetic duplicates."""
-    from orc_format_spark.functions.dedup import exact_duplicate_groups
-
-    return exact_duplicate_groups(_docs_with_dups(spark, sf_dir))
-
-
-def q_dedup_ladder(spark, sf_dir):
-    """The dedup ladder END-TO-END as one composed pipeline — exact
-    dedup (keep-first) -> MinHash/LSH candidate generation -> exact
-    n-gram Jaccard verification of candidate pairs only — over the first
-    200 docs plus injected exact duplicates (which stage 1 must remove
-    before stage 2 ever hashes them). md5 hasher for full DuckDB oracle
-    parity; the xxhash64 production path shares every plan shape
-    (tests/test_dedup_scale.py). Plan: PLANS.md §dedup-ladder."""
-    from orc_format_spark.functions.dedup import dedup_ladder
-
-    base = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .filter(F.col("doc_id") < 200)
-    )
-    dups = base.filter(F.col("doc_id") % 7 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(1000000)
-    )
-    return dedup_ladder(
-        base.union(dups), n=4, num_perm=32, bands=8, threshold=0.35,
-        hasher="md5",
-    )
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    """Char-4-gram Jaccard near-dup pairs (first 80 docs) with the
-    document-frequency ceiling active (the stop-gram safety valve the
-    100 TB join requires); the oracle applies the identical cap."""
-    from orc_format_spark.functions.dedup import ngram_jaccard_pairs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return ngram_jaccard_pairs(docs, n=4, threshold=0.35, max_doc_id=80, max_df=65)
-
-
-def q_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH near-dup candidates, run with the DuckDB-reproducible
-    md5 hash so the full signature->band->bucket-join pipeline is checked
-    against a SQL oracle (production default stays xxhash64)."""
-    from orc_format_spark.functions.dedup import lsh_candidate_pairs
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .filter(F.col("doc_id") < 200)
-        # the filter collapses the scan to ~1 partition; spread the
-        # expression-heavy signature stage across cores (at production
-        # scale the unfiltered corpus arrives already partitioned)
-        .repartition(32, "doc_id")
-    )
-    return lsh_candidate_pairs(docs, n=4, num_perm=32, bands=8, hasher="md5")
-
-
-def q_simhash(spark, sf_dir):
-    """SimHash near-dup pairs with the DuckDB-reproducible md5 hash
-    (60-bit fingerprint, 4x15-bit bands) so the bit-vote aggregation and
-    band join are oracle-checked."""
-    from orc_format_spark.functions.dedup import simhash_near_pairs
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .filter(F.col("doc_id") < 200)
-        .repartition(32, "doc_id")  # see q_minhash_lsh
-    )
-    return simhash_near_pairs(docs, n=4, max_hamming=10, hasher="md5")
-
-
 def _pii_augmented(docs):
     """Deterministically inject synthetic PII (email + URL + IPv4) into
     every third document so the scrub counts are non-trivial; the SQL
@@ -988,79 +899,6 @@ def q_winnow_fingerprint(spark, sf_dir):
         F.col("doc_id") < 200
     )
     return winnow_fingerprints(docs, k=8, window=4)
-
-
-def q_curation_pipeline_v2(spark, sf_dir):
-    """End-to-end curation composing the round-3 operators: inject
-    synthetic PII -> quality-score the original text + scrub
-    (placeholders + counts) in ONE map-side pass -> threshold filter ->
-    exact dedup keeping the lowest doc_id (one min_by shuffle). The
-    oracle reproduces the whole ladder in SQL (same IEEE operand order
-    for quality, same md5 fingerprint)."""
-    from orc_format_spark.functions.dedup import dedup_keep_first
-    from orc_format_spark.functions.scrub import EMAIL_RE, IPV4_RE, URL_RE
-    from orc_format_spark.functions.text import quality_score
-
-    # single-file parquet = one input partition; spread it so the regex
-    # chain parallelizes (same rationale as q_minhash_lsh)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        32, "doc_id"
-    )
-
-    # quality is scored on the ORIGINAL text (the usual curation
-    # semantics). One flat select: every regex chain (scrub counts,
-    # clean_text replaces, quality terms) appears exactly once over the
-    # input column — scoring the scrubbed EXPRESSION instead was
-    # measured to re-run the 3-regex scrub chain ~10x, once per quality
-    # sub-term, via Catalyst project-collapsing.
-    from orc_format_spark.functions.scrub import scrub_text
-
-    aug = _pii_augmented(docs)
-    tcol = F.col("text")
-    t = aug.select(
-        "doc_id",
-        (
-            F.regexp_count(tcol, F.lit(URL_RE))
-            + F.regexp_count(tcol, F.lit(EMAIL_RE))
-            + F.regexp_count(tcol, F.lit(IPV4_RE))
-        ).alias("n_pii"),
-        F.floor(quality_score(tcol) * F.lit(1000000.0))
-        .cast("long")
-        .alias("quality_e6"),
-        scrub_text(tcol).alias("text"),
-    )
-    kept = dedup_keep_first(t.filter(F.col("quality_e6") >= 500000))
-    return kept.select(
-        "doc_id", "n_pii", "quality_e6", F.col("text").alias("clean_text")
-    )
-
-
-def _curation_v2_sql() -> str:
-    from orc_format_spark.functions.scrub import _ORDER
-    from orc_format_spark.functions.text import quality_e6_sql
-
-    n_pii = " + ".join(
-        f"len(regexp_extract_all(text, '{pat}'))" for pat, _, _ in _ORDER
-    )
-    clean = "text"
-    for pat, repl, _ in _ORDER:
-        clean = f"regexp_replace({clean}, '{pat}', '{repl}', 'g')"
-    from orc_format_spark.functions.dedup import fingerprint_sentinel_sql
-
-    fp = fingerprint_sentinel_sql()
-    fp_f = fingerprint_sentinel_sql(doc_id="f.doc_id", text="f.text")
-    return f"""
-WITH a AS (SELECT doc_id, {_PII_TEXT_EXPR} AS text FROM documents),
-s AS (
-  SELECT doc_id, CAST({n_pii} AS INT) AS n_pii,
-         {quality_e6_sql()} AS quality_e6, {clean} AS text
-  FROM a
-),
-f AS (SELECT * FROM s WHERE quality_e6 >= 500000),
-keep AS (SELECT {fp} AS fp, MIN(doc_id) AS doc_id FROM f GROUP BY 1)
-SELECT f.doc_id, f.n_pii, f.quality_e6, f.text AS clean_text
-FROM f JOIN keep ON keep.doc_id = f.doc_id AND keep.fp = {fp_f}
-"""
 
 
 def q_multimodal_features(spark, sf_dir):
@@ -1127,64 +965,6 @@ def q_stream_encode_roundtrip(spark, sf_dir):
         out = out.cache()
         out.count()  # materialize before the scratch dir disappears
         return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def q_stream_dedup(spark, sf_dir):
-    """Streaming cross-batch dedup ledger: docs (plus synthetic
-    duplicates) arrive in 3 deterministic micro-batches (one file per
-    trigger, mtime-ordered); each fingerprint is admitted exactly once
-    — first batch wins, min doc_id inside that batch. The oracle
-    replays the same rule as a window over (batch, doc_id)."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    from orc_format_spark.functions.text import fingerprint
-    from orc_format_spark.streaming import stream_dedup
-
-    work = tempfile.mkdtemp(prefix="ofs_sdedup_")
-    try:
-        base = _docs_with_dups(spark, sf_dir).select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            fingerprint(F.col("text")).alias("fp"),
-            (F.col("doc_id") % 3).cast("int").alias("batch"),
-        )
-        src = f"{work}/src"
-        os.makedirs(src)
-        t0 = time.time() - 600
-        seen_files: set[str] = set()
-        for b in range(3):
-            base.filter(F.col("batch") == b).drop("batch").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            # strictly increasing mtimes fix the FileStreamSource order
-            for name in sorted(os.listdir(src)):
-                if name.startswith("part-") and name not in seen_files:
-                    os.utime(f"{src}/{name}", (t0 + b * 60, t0 + b * 60))
-                    seen_files.add(name)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = stream_dedup(stream, fingerprint_col="fp", key_col="doc_id")
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", f"{work}/out")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        res = spark.read.parquet(f"{work}/out").select("doc_id", "fp")
-        res = res.cache()
-        res.count()  # materialize before the scratch dir disappears
-        return res
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1867,7 +1647,7 @@ def q_stream_window_stats(spark, sf_dir):
     import uuid
 
     from orc_format_spark import tokenize_documents
-    from orc_format_spark.functions.dedup import md5_hash60
+    from orc_format_spark.operators.partitioning import md5_hash60
     from orc_format_spark.streaming import token_window_stats
 
     qname = f"ofs_winstats_{uuid.uuid4().hex[:8]}"  # re-runnable in-session
@@ -1902,32 +1682,6 @@ def q_stream_window_stats(spark, sf_dir):
         return res
     finally:
         shutil.rmtree(work, ignore_errors=True)
-
-
-def q_curation_pipeline(spark, sf_dir):
-    """End-to-end training-data curation: quality-filter -> exact dedup
-    (keep lowest doc_id) -> tokenize -> auto-codec encode -> decode ->
-    detokenize. The oracle replays the same filter+dedup in SQL; the
-    encode/decode leg is lossless so the results must match exactly."""
-    from orc_format_spark import (
-        TOKENS_SCHEMA,
-        decode_blobs,
-        detokenize,
-        encode_groups,
-        tokenize_documents,
-    )
-    from orc_format_spark.functions.dedup import dedup_keep_first
-    from orc_format_spark.functions.text import quality_score
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kept = docs.filter(
-        F.floor(quality_score(F.col("text")) * F.lit(1000000.0)).cast("long")
-        >= F.lit(400000)
-    )
-    deduped = dedup_keep_first(kept.select("doc_id", "text", "source"))
-    toks = tokenize_documents(deduped)
-    blobs = encode_groups(toks, num_groups=4, key_col="doc_id", size_col="n_tok")
-    return detokenize(decode_blobs(blobs, TOKENS_SCHEMA)).select("doc_id", "text")
 
 
 def q_seq_pack(spark, sf_dir):
@@ -2048,31 +1802,13 @@ def q_token_remap(spark, sf_dir):
     return detokenize(remapped).select("doc_id", "text")
 
 
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: corpus docs (doc_id >= 40) sharing >= 3
-    distinct 24-grams with any 'benchmark' doc (doc_id < 40 stands in
-    for the eval set). Benchmark gram postings broadcast; corpus probed
-    map-side — the contamination sweep a 100 TB pipeline runs pre-ship."""
-    from orc_format_spark.functions.dedup import benchmark_contamination
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return benchmark_contamination(
-        docs.filter(F.col("doc_id") >= 40),
-        docs.filter(F.col("doc_id") < 40),
-        n=24,
-        min_common=3,
-    )
-
-
 def q_codec_lineage(spark, sf_dir):
     """Codec lineage rows: deterministic md5-based grouping so group
     membership, row counts, and value counts (3 scalar leaves + the
     tokens.item leaf) are SQL-reproducible. Compressed sizes / codec
     choices are exercised by entry() and the bench (not SQL-expressible)."""
     from orc_format_spark import encode_groups, tokenize_documents
-    from orc_format_spark.functions.dedup import md5_hash60
+    from orc_format_spark.operators.partitioning import md5_hash60
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = tokenize_documents(docs).withColumn(
@@ -2089,8 +1825,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     come first — the 30 entries below round 4's window (last driver row
     r03) lead, then this round's new queries (never driver-verified),
     then the r04-green queries whose UNDERLYING CODE CHANGED this round
-    (dedup sentinel, compact planner, evolution decode, the stats-prune
-    fractional-bounds handling)
+    (compact planner, evolution decode, the stats-prune fractional-bounds
+    handling)
     plus the flagship — so no query's driver row is ever more than one
     round stale. The r04-green remainder sits below the window
     (still covered every round by pytest + scripts/check_oracles.py).
@@ -2099,7 +1835,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # -- last driver row r03 (below round 4's window) --
         "stream_encode_roundtrip": q_stream_encode_roundtrip,
-        "stream_dedup": q_stream_dedup,
         "encode_job_roundtrip": q_encode_job_roundtrip,
         "iceberg_manifest_scan": q_iceberg_manifest_scan,
         "rle_v1_roundtrip": q_rle_v1_roundtrip,
@@ -2140,8 +1875,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "nested_projection_decode": q_nested_projection_decode,
         # -- r04-green whose code changed this round, plus flagship --
         "tokens_roundtrip": q_tokens_roundtrip,
-        "exact_dedup": q_exact_dedup,
-        "dedup_ladder": q_dedup_ladder,
         # compression_variants gained the lzo kind this round (new
         # codecs/lzo.py) -> inside the window
         "compression_variants": q_compression_variants,
@@ -2151,21 +1884,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sink_encode_roundtrip": q_sink_encode_roundtrip,
         "token_contains": q_token_contains,
         "clustered_encode": q_clustered_encode,
-        "curation_pipeline": q_curation_pipeline,
         "predicate_decode": q_predicate_decode,
-        # ---- driver window boundary (50) — below: r04 driver-green ----
         "datasource_roundtrip": q_datasource_roundtrip,
         "bloom_filter_decode": q_bloom_filter_decode,
         "file_prune_scan": q_file_prune_scan,
         "zorder_prune_scan": q_zorder_prune_scan,
+        # ---- driver window boundary (50) — below: r04 driver-green ----
         "codec_lineage": q_codec_lineage,
-        "curation_pipeline_v2": q_curation_pipeline_v2,
         "struct_map_roundtrip": q_struct_map_roundtrip,
         "text_profile": q_text_profile,
         "repetition_profile": q_repetition_profile,
-        "ngram_jaccard": q_ngram_jaccard,
-        "minhash_lsh": q_minhash_lsh,
-        "simhash": q_simhash,
         "pii_scrub": q_pii_scrub,
         "winnow_fingerprint": q_winnow_fingerprint,
         "multimodal_features": q_multimodal_features,
@@ -2178,7 +1906,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "train_val_split": q_train_val_split,
         "epoch_shuffle": q_epoch_shuffle,
         "token_remap": q_token_remap,
-        "decontaminate": q_decontaminate,
         "rle_v2_roundtrip": q_rle_v2_roundtrip,
         "alp_roundtrip": q_alp_roundtrip,
         "fsst_roundtrip": q_fsst_roundtrip,
@@ -2190,25 +1917,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from orc_format_spark.functions.dedup import (
-        lsh_candidate_pairs_sql,
-        ngram_jaccard_pairs_sql,
-        simhash_near_pairs_sql,
-    )
     from orc_format_spark.functions.multimodal import (
         extract_features_sql,
         resize_payload_sql,
     )
     from orc_format_spark.functions.scrub import scrub_pii_sql
     from orc_format_spark.functions.text import (
-        quality_e6_sql,
         repetition_profile_sql,
         text_profile_sql,
         winnow_fingerprints_sql,
-    )
-    from orc_format_spark.functions.dedup import (
-        benchmark_contamination_sql,
-        dedup_ladder_sql,
     )
     from orc_format_spark.functions.token_pipeline import (
         epoch_shuffle_sql,
@@ -2473,53 +2190,15 @@ def oracle_sql() -> dict[str, str]:
             "SELECT CAST(ws AS VARCHAR) AS window_start, source, n_docs, n_tokens "
             "FROM agg WHERE ws + INTERVAL 1 MINUTE <= (SELECT MAX(ev) FROM base)"
         ),
-        "curation_pipeline": (
-            "WITH kept AS ("
-            f"SELECT doc_id, text FROM documents WHERE {quality_e6_sql()} >= 400000"
-            "), dd AS ("
-            "SELECT doc_id, text, row_number() OVER ("
-            f"PARTITION BY {_fp_sentinel_sql} "
-            "ORDER BY doc_id) AS rn FROM kept) "
-            "SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM dd WHERE rn = 1"
-        ),
         "text_profile": text_profile_sql(),
         "repetition_profile": repetition_profile_sql(),
-        "exact_dedup": (
-            "WITH alldocs AS ("
-            "SELECT doc_id, text FROM documents "
-            "UNION ALL "
-            "SELECT doc_id + 1000000 AS doc_id, text FROM documents "
-            "WHERE doc_id % 7 = 0) "
-            f"SELECT {_fp_sentinel_sql} AS fingerprint, "
-            "COUNT(*) AS n_copies, MIN(doc_id) AS keep_doc_id "
-            "FROM alldocs GROUP BY 1"
-        ),
         "struct_map_roundtrip": (
             "SELECT event_id, event_type AS s_event_type, value AS s_value, "
             "event_type AS m_type FROM events"
         ),
-        "dedup_ladder": dedup_ladder_sql(
-            n=4,
-            num_perm=32,
-            bands=8,
-            threshold=0.35,
-            table=(
-                "(SELECT doc_id, text FROM documents WHERE doc_id < 200 "
-                "UNION ALL SELECT doc_id + 1000000 AS doc_id, text "
-                "FROM documents WHERE doc_id < 200 AND doc_id % 7 = 0)"
-            ),
-        ),
-        "ngram_jaccard": ngram_jaccard_pairs_sql(
-            n=4, threshold=0.35, max_doc_id=80, max_df=65
-        ),
-        "minhash_lsh": lsh_candidate_pairs_sql(
-            n=4, num_perm=32, bands=8, max_doc_id=200
-        ),
-        "simhash": simhash_near_pairs_sql(n=4, max_hamming=10, max_doc_id=200),
         "pii_scrub": scrub_pii_sql(
             table="documents", text_expr=_PII_TEXT_EXPR
         ),
-        "curation_pipeline_v2": _curation_v2_sql(),
         "winnow_fingerprint": winnow_fingerprints_sql(
             k=8, window=4, table="(SELECT * FROM documents WHERE doc_id < 200)"
         ),
@@ -2541,22 +2220,6 @@ def oracle_sql() -> dict[str, str]:
             "CAST(3 * COUNT(*) + SUM(octet_length(CAST(text AS BLOB))) AS BIGINT) "
             "AS n_values FROM documents GROUP BY 1"
         ),
-        "stream_dedup": (
-            "WITH u AS ("
-            "SELECT doc_id, text FROM documents "
-            "UNION ALL "
-            "SELECT doc_id + 1000000 AS doc_id, text FROM documents "
-            "WHERE doc_id % 7 = 0"
-            "), f AS ("
-            "SELECT CAST(doc_id AS VARCHAR) AS doc_id, "
-            "md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp, "
-            "doc_id % 3 AS batch FROM u"
-            "), r AS ("
-            "SELECT doc_id, fp, "
-            "row_number() OVER (PARTITION BY fp ORDER BY batch, doc_id) AS rn "
-            "FROM f) "
-            "SELECT doc_id, fp FROM r WHERE rn = 1"
-        ),
         "seq_pack": pack_sequences_sql(seq_len=2048, num_groups=8),
         "pack_encode_roundtrip": pack_sequences_sql(seq_len=2048, num_groups=8),
         "token_histogram": token_histogram_sql(top_k=50),
@@ -2569,5 +2232,4 @@ def oracle_sql() -> dict[str, str]:
             "SELECT CAST(doc_id AS VARCHAR) AS doc_id, "
             "replace(text, 'q', 'k') AS text FROM documents"
         ),
-        "decontaminate": benchmark_contamination_sql(n=24, min_common=3),
     }

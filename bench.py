@@ -20,8 +20,6 @@ N vs 4N executors):
     python bench.py --encode-only   # one JSON line, encode job only
     python bench.py --ceiling       # Spark-free same-kernel mp ceiling
                                     # at 8/32 procs (what the box allows)
-    python bench.py --ladder        # dedup ladder (exact->LSH->verify)
-                                    # at bench scale, per-stage metrics
 """
 
 from __future__ import annotations
@@ -73,13 +71,8 @@ HEADLINE = [
     "zorder_prune_scan",
     "compact_roundtrip",
     "clustered_encode",
-    "minhash_lsh",
-    "simhash",
     "text_profile",
     "repetition_profile",
-    "exact_dedup",
-    "dedup_ladder",
-    "ngram_jaccard",
     "orc_file_roundtrip",
     "orc_dict_map_roundtrip",
     "orc_rle_v2_file_roundtrip",
@@ -88,7 +81,6 @@ HEADLINE = [
     "orc_native_read",
     "orc_bloom_prune",
     "pii_scrub",
-    "curation_pipeline_v2",
     "winnow_fingerprint",
     "multimodal_features",
     "resize_payload",
@@ -100,7 +92,6 @@ HEADLINE = [
     "train_val_split",
     "epoch_shuffle",
     "token_remap",
-    "decontaminate",
 ]
 
 
@@ -641,91 +632,6 @@ def main_ceiling():
     )
 
 
-def main_ladder():
-    """LLM-pipeline flagship at bench scale: the full dedup ladder
-    (exact keep-first -> MinHash/LSH candidates -> n-gram Jaccard
-    verify, production xxhash64 path) over the sf documents table
-    replicated x``SPARK_GRAFT_LADDER_REPL`` (default 4) with a
-    controlled duplicate structure — per base doc: the original, one
-    byte-identical copy (stage 1 must drop it), and near-duplicate
-    variants (a short suffix; stage 2 must surface them, stage 3 must
-    verify them). Reports per-stage wall + row counts as ONE JSON line.
-    Not part of the default driver bench: at sf0.1 x4 this is a ~2.5
-    minute job (20k docs -> ~1M verified pairs on this synthetic
-    corpus, which is unusually self-similar); the oracle-checked
-    `dedup_ladder` driver query covers correctness every round, this
-    mode records the scale evidence."""
-    from pyspark.sql import functions as F
-
-    from orc_format_spark.functions.dedup import (
-        dedup_keep_first,
-        lsh_candidate_pairs,
-        verify_candidate_pairs,
-    )
-    from pyspark.storagelevel import StorageLevel
-
-    repl = int(os.environ.get("SPARK_GRAFT_LADDER_REPL", "4"))
-    spark = make_session(CPUS)
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    reps = spark.range(repl).select(F.col("id").alias("rep"))
-    corpus = (
-        docs.crossJoin(F.broadcast(reps))
-        .select(
-            F.concat_ws("_", "doc_id", "rep").alias("doc_id"),
-            F.when(
-                F.col("rep") >= 2,
-                F.concat(
-                    F.col("text"), F.lit(" rep"), F.col("rep").cast("string")
-                ),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .repartition(2 * CPUS)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_docs = corpus.count()
-    t0 = time.monotonic()
-    uniq = dedup_keep_first(corpus).persist(StorageLevel.MEMORY_AND_DISK)
-    n_uniq = uniq.count()
-    t_exact = time.monotonic() - t0
-    t1 = time.monotonic()
-    cand = lsh_candidate_pairs(
-        uniq, n=4, num_perm=32, bands=8, hasher="xxh"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_cand = cand.count()
-    t_lsh = time.monotonic() - t1
-    t2 = time.monotonic()
-    n_verified = verify_candidate_pairs(
-        uniq.select("doc_id", "text"), cand, n=4, threshold=0.35
-    ).count()
-    t_verify = time.monotonic() - t2
-    total = time.monotonic() - t0
-    spark.stop()
-    print(
-        json.dumps(
-            {
-                "metric": "dedup ladder wall (exact -> LSH -> verify)",
-                "value": round(total, 3),
-                "unit": "sec",
-                "sf": 0.1 if "sf0.1" in SF_DIR else SF_DIR,
-                "cpus": CPUS,
-                "ladder_repl": repl,
-                "n_docs": n_docs,
-                "n_unique": n_uniq,
-                "n_candidate_pairs": n_cand,
-                "n_verified_pairs": n_verified,
-                "exact_sec": round(t_exact, 3),
-                "lsh_sec": round(t_lsh, 3),
-                "verify_sec": round(t_verify, 3),
-                "docs_per_sec": round(n_docs / total),
-            }
-        )
-    )
-
-
 def main_scaling():
     """N vs 4N cores on identical input: local[2]->local[8] and
     local[8]->local[32].
@@ -855,8 +761,6 @@ def main_scaling():
 if __name__ == "__main__":
     if "--scaling" in sys.argv:
         main_scaling()
-    elif "--ladder" in sys.argv:
-        main_ladder()
     elif "--ceiling" in sys.argv:
         main_ceiling()
     elif "--encode-only" in sys.argv:

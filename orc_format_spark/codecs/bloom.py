@@ -76,8 +76,6 @@ def bloom_build(
 def bloom_may_contain(bitset: bytes, value: int, k: int = K_PROBES) -> bool:
     """Probe: False is definite absence; True may be a false positive."""
     m = len(bitset) * 8
-    if m == 0:
-        return False
     ph = _hash_pair(np.array([value], dtype=np.int64))
     h1, h2 = int(ph[0][0]), int(ph[1][0])  # python ints: wraparound below
     mask = m - 1
@@ -98,5 +96,12 @@ def bloom_from_b64(s: str) -> bytes:
     re-tests the SAME per-chunk bitset for every ``==`` conjunct and
     every ``in`` member (k probes x m chunks would otherwise re-decode
     k x m times). Bitsets are immutable bytes, ~bits_per_key*rows/8
-    per 10k-row chunk, so the 512-entry cache stays a few MB."""
-    return base64.b64decode(s.encode("ascii"))
+    per 10k-row chunk, so the 512-entry cache stays a few MB.
+
+    Every bitset :func:`bloom_build` writes is a power of two of at least
+    8 bytes; any other length would probe with a mask the builder never
+    used and report matching rows absent, so it raises ValueError."""
+    bits = base64.b64decode(s.encode("ascii"))
+    if len(bits) < 8 or len(bits) & (len(bits) - 1):
+        raise ValueError(f"malformed Bloom bitset: {len(bits)} bytes")
+    return bits

@@ -103,7 +103,7 @@ def quality_score(text: Column) -> Column:
 
 
 def fingerprint(text: Column) -> Column:
-    """Whitespace-normalized content hash (md5 hex) for exact dedup."""
+    """Whitespace-normalized content hash (md5 hex) of a document."""
     return F.md5(F.regexp_replace(F.lower(text), r"\s+", " ").cast("binary"))
 
 
@@ -254,26 +254,6 @@ def lang_id_sql(col: str = "text") -> str:
         conds.append(f"{scores[lang]} > 0")
         whens.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
     return "CASE " + " ".join(whens) + " ELSE 'und' END"
-
-
-def quality_e6_sql() -> str:
-    """DuckDB expression mirroring floor(quality_score(text)*1e6) with the
-    exact same IEEE evaluation order as the Column version."""
-    ws = (
-        "CASE WHEN length(trim(text)) = 0 THEN 0 "
-        "ELSE array_length(regexp_split_to_array(trim(text), '\\s+')) END"
-    )
-    punct = "(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')))"
-    stops = occurrences_sql("(' ' || text || ' ')", " the ")
-    nonspace = "length(regexp_replace(text, '\\s', '', 'g'))"
-    safe_toks = f"greatest(({ws}), 1)"
-    quality = (
-        f"0.25 * least(length(text) / 500.0, 1.0) "
-        f"+ 0.25 * (1.0 - least({punct} / greatest(length(text), 1) * 10.0, 1.0)) "
-        f"+ 0.25 * least({stops} / {safe_toks} * 8.0, 1.0) "
-        f"+ 0.25 * least({nonspace} / {safe_toks} / 8.0, 1.0)"
-    )
-    return f"CAST(floor(({quality}) * 1000000.0) AS BIGINT)"
 
 
 def text_profile_sql(table: str = "documents") -> str:

@@ -29,7 +29,7 @@ Spark-first from scratch:
   identical subset.
 
 Every operator has a DuckDB-exact oracle twin (``*_sql``) built on the
-engine-shared md5 hash (functions/dedup.py:34).
+engine-shared md5 hash (``operators.partitioning.md5_hash60``).
 """
 
 from __future__ import annotations
@@ -42,8 +42,8 @@ import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..operators.partitioning import md5_hash60, md5_hash60_sql
 from ..worker_env import limit_worker_threads
-from .dedup import md5_hash60, _md5_hash60_sql
 
 PACKED_SCHEMA = "group_id int, chunk_id int, tokens array<int>, doc_starts array<int>"
 
@@ -165,7 +165,7 @@ def pack_sequences_sql(
     projected to (group_id, chunk_id, chunk_hex): per md5-group, texts
     concatenated in doc_id string order, UTF-8 byte stream hex-encoded
     and cut into seq_len-byte windows (2 hex chars per byte-token)."""
-    h = _md5_hash60_sql("CAST(doc_id AS VARCHAR)", seed=0)
+    h = md5_hash60_sql("CAST(doc_id AS VARCHAR)", seed=0)
     return f"""
 WITH g AS (
   SELECT {h} % {num_groups} AS group_id, CAST(doc_id AS VARCHAR) AS doc_id, text
@@ -293,7 +293,7 @@ def mixture_sample_sql(
         for s, ppm in sorted(rates_ppm.items())
     )
     case = f"CASE {whens} ELSE {int(default_ppm)} END" if whens else str(int(default_ppm))
-    h = _md5_hash60_sql(key_expr, seed=seed)
+    h = md5_hash60_sql(key_expr, seed=seed)
     return f"SELECT {select} FROM {table} WHERE {h} % 1000000 < {case}"
 
 
@@ -340,7 +340,7 @@ def train_val_split_sql(
     select: str = "CAST(doc_id AS VARCHAR) AS doc_id, source",
 ) -> str:
     """DuckDB oracle for ``train_val_split(..., hasher='md5')``."""
-    h = f"({_md5_hash60_sql(key_expr, seed=seed)} % 1000000)"
+    h = f"({md5_hash60_sql(key_expr, seed=seed)} % 1000000)"
     return (
         f"SELECT {select}, CASE WHEN {h} < {int(val_ppm)} THEN 'val' "
         f"WHEN {h} < {int(val_ppm + test_ppm)} THEN 'test' "
@@ -393,7 +393,7 @@ def epoch_shuffle_sql(
     driver's compare is order-insensitive, so the oracle checks the
     bucket/order_key VALUES; in-bucket ordering is asserted in
     pytest)."""
-    h = _md5_hash60_sql(key_expr, seed=epoch)
+    h = md5_hash60_sql(key_expr, seed=epoch)
     return (
         f"SELECT {select}, {h} AS order_key, "
         f"CAST({h} % {int(num_buckets)} AS INT) AS bucket FROM {table}"

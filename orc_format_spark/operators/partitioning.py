@@ -21,9 +21,23 @@ residual imbalance.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 DEFAULT_TOKENS_PER_GROUP = 4_000_000  # ~16 MiB of int32 tokens per group
+
+
+def md5_hash60(col: Column, seed: int | None = None) -> Column:
+    """60-bit non-negative integer hash that DuckDB reproduces exactly:
+    the first 15 hex chars of md5(value [|| '#' || seed]) read base-16.
+    DuckDB twin: CAST('0x' || substr(md5(x [|| '#seed']), 1, 15) AS BIGINT).
+    """
+    x = F.concat(col, F.lit(f"#{seed}")) if seed is not None else col
+    return F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
+
+
+def md5_hash60_sql(expr: str, seed: int | None = None) -> str:
+    x = f"{expr} || '#{seed}'" if seed is not None else expr
+    return f"CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
 
 
 def plan_num_groups(total_size: int, per_group: int = DEFAULT_TOKENS_PER_GROUP) -> int:

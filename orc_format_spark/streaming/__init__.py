@@ -1,10 +1,8 @@
-from .dedup_stream import stream_dedup
 from .encode_stream import encode_stream
 from .stats_stream import token_running_totals, token_window_stats
 
 __all__ = [
     "encode_stream",
-    "stream_dedup",
     "token_running_totals",
     "token_window_stats",
 ]

@@ -11,8 +11,7 @@ operators:
 - ``token_running_totals``: custom stateful operator via
   ``applyInPandasWithState`` — cumulative per-source totals maintained
   in keyed state and re-emitted every micro-batch (the shape used for
-  dedup-ledger / quota-enforcement operators that windowing cannot
-  express).
+  quota-enforcement operators that windowing cannot express).
 
 Both are pure plan builders: feed any streaming DataFrame with
 (source string, n_tok int/long, event_time timestamp).

@@ -77,37 +77,31 @@ def main() -> int:
         try:
             sdf = fn(spark, SF_DIR).toPandas()
             row["spark_rows"] = len(sdf)
-            sql = oracles.get(name)
-            if sql is None:
-                row["err"] = "no_oracle"
-            else:
-                odf = con.sql(sql).df()
-                row["oracle_rows"] = len(odf)
-                sc, oc = _canon(sdf), _canon(odf)
-                row["rows_match"] = len(sc) == len(oc)
-                row["schema_match"] = list(sc.columns) == list(oc.columns)
-                # driver-style: stringify + hash
-                row["hash_match"] = (
-                    row["rows_match"]
-                    and row["schema_match"]
-                    and _hash(sc.astype(str)) == _hash(oc.astype(str))
-                )
-                if not row["hash_match"]:
-                    failed.append(name)
-                    if row["rows_match"] and row["schema_match"]:
-                        a, b = sc.astype(str), oc.astype(str)
-                        neq = (a != b).any(axis=1)
-                        row["first_diff"] = {
-                            "spark": a[neq].head(2).to_dict("records"),
-                            "oracle": b[neq].head(2).to_dict("records"),
-                        }
+            odf = con.sql(oracles[name]).df()
+            row["oracle_rows"] = len(odf)
+            sc, oc = _canon(sdf), _canon(odf)
+            row["rows_match"] = len(sc) == len(oc)
+            row["schema_match"] = list(sc.columns) == list(oc.columns)
+            # driver-style: stringify + hash
+            row["hash_match"] = (
+                row["rows_match"]
+                and row["schema_match"]
+                and _hash(sc.astype(str)) == _hash(oc.astype(str))
+            )
+            if not row["hash_match"]:
+                failed.append(name)
+                if row["rows_match"] and row["schema_match"]:
+                    a, b = sc.astype(str), oc.astype(str)
+                    neq = (a != b).any(axis=1)
+                    row["first_diff"] = {
+                        "spark": a[neq].head(2).to_dict("records"),
+                        "oracle": b[neq].head(2).to_dict("records"),
+                    }
         except Exception as ex:  # noqa: BLE001
             row["err"] = f"{type(ex).__name__}: {ex}"[:500]
             failed.append(name)
         results[name] = row
         status = "OK " if name not in failed else "FAIL"
-        if row.get("err") == "no_oracle":
-            status = "rows"
         print(f"{status} {name}: {json.dumps(row)[:300]}", flush=True)
     spark.stop()
     print(f"\n{len(failed)} failing: {failed}")

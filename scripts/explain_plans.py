@@ -158,23 +158,12 @@ def main() -> None:
             spark.read.parquet(f"{work}/tokens"), {"src0": 500_000}, hasher="md5"
         ),
     )
-    from orc_format_spark.functions.dedup import benchmark_contamination
     from orc_format_spark.functions.token_pipeline import train_val_split
 
     show(
         "train/val split (expect: WholeStageCodegen Project on the scan — "
         "zero shuffle, no UDF)",
         train_val_split(spark.read.parquet(f"{work}/tokens")),
-    )
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
-    show(
-        "benchmark decontamination (expect: BroadcastHashJoin probing the "
-        "corpus grams map-side; only (doc_id, bench_id) partials shuffle)",
-        benchmark_contamination(
-            docs.filter(F.col("doc_id") >= 40),
-            docs.filter(F.col("doc_id") < 40),
-            n=24,
-        ),
     )
     show(
         "clustered grouped encode (expect: the SAME single Exchange as "
@@ -216,30 +205,6 @@ def main() -> None:
         scrub_pii(spark.read.parquet(f"{sf}/documents.parquet")),
     )
     import __spark_entry__ as entrymod
-
-    show(
-        "curation pipeline v2 (expect: ONE map-side Project computing "
-        "counts+quality+clean_text — each regex chain appears once — "
-        "then exactly ONE Exchange for the min_by dedup agg; no second "
-        "scan, no join, no sort of the payload. The first Exchange is "
-        "the query's deliberate repartition(32) spreading the "
-        "single-file test parquet; a multi-split production input "
-        "drops it and the dedup agg's exchange is the only shuffle)",
-        entrymod.q_curation_pipeline_v2(spark, sf),
-    )
-    show(
-        "dedup ladder (expect: the exact-dedup survivors (stage 1, one "
-        "min_by Exchange) and the LSH candidate pairs (stage 2, "
-        "band-bucket self-join — never a cross join) are PERSISTED "
-        "stage boundaries, so every later reference is an "
-        "InMemoryTableScan instead of a corpus re-scan — composed "
-        "lazily this plan re-ran the dedup agg once per reference, 24 "
-        "parquet scans; stage 3 = BroadcastHashJoins only — the "
-        "candidate doc-id set broadcasts, gram arrays are built "
-        "map-side for candidate docs alone, and the verify join "
-        "carries candidate volume, not corpus volume)",
-        entrymod.q_dedup_ladder(spark, sf),
-    )
     from orc_format_spark.operators.zorder import with_zorder_key
 
     li2 = spark.read.parquet(f"{sf}/lineitem.parquet").select(

@@ -40,6 +40,16 @@ def _canon(rows, colnames):
     return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
+def test_every_query_has_an_oracle():
+    assert set(entry_mod.queries()) == set(entry_mod.oracle_sql())
+
+
+def test_bench_headline_names_resolve():
+    import bench
+
+    assert set(bench.HEADLINE) <= set(entry_mod.queries())
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()
@@ -52,11 +62,7 @@ def test_query_matches_oracle(spark, ddb, name):
     q = entry_mod.queries()[name]
     df = q(spark, SF_DIR)
     spark_rows = [tuple(r) for r in df.collect()]
-    oracle = entry_mod.oracle_sql().get(name)
-    if oracle is None:
-        assert len(spark_rows) > 0  # rows-only check
-        return
-    res = ddb.execute(oracle)
+    res = ddb.execute(entry_mod.oracle_sql()[name])
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
     assert sorted(c.lower() for c in df.columns) == sorted(

@@ -117,3 +117,34 @@ def test_alp_digit_count_must_match_header():
     enc[2] = 50
     with pytest.raises(ValueError):
         decode_alp(bytes(enc))
+
+
+@pytest.mark.parametrize("bloom_b64", ["", "AAAA"], ids=["empty", "3-byte"])
+def test_malformed_bloom_bitset_raises(bloom_b64):
+    """A chunk's ``k@bloom`` bitset of a length the builder never writes
+    (not a power of two >= 8 bytes) must raise, not prune the chunk that
+    holds the probed key."""
+    import json
+
+    from orc_format_spark.codecs.varint import decode_varint_one, encode_varint_one
+
+    keys = np.random.default_rng(3).permutation(1000).astype(np.int64)
+    t = pa.table({"k": keys})
+    blob, _ = encode_table(t, stride=100, bloom_columns=["k"])
+    probe = ("k", "==", int(keys[5]))
+    assert decode_table(blob, predicate=probe).num_rows == 1
+
+    pos = 5
+    _, pos = decode_varint_one(blob, pos)
+    n_chunks, pos = decode_varint_one(blob, pos)
+    for _ in range(2 * n_chunks):
+        _, pos = decode_varint_one(blob, pos)
+    head = blob[:pos]
+    slen, pos = decode_varint_one(blob, pos)
+    stats = json.loads(blob[pos : pos + slen])
+    for s in stats:
+        s["k@bloom"] = bloom_b64
+    forged = json.dumps(stats, sort_keys=True, separators=(",", ":")).encode()
+    bad = head + encode_varint_one(len(forged)) + forged + blob[pos + slen :]
+    with pytest.raises(ValueError, match="Bloom"):
+        decode_table(bad, predicate=probe)

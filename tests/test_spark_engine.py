@@ -195,23 +195,30 @@ def test_heavy_threshold_widens_sample_instead_of_full_scan(spark):
         heavy_threshold_estimate(empty, "n_tok", "doc_id")
 
 
-def test_dedup_keep_first_no_payload_window_sort(spark, docs):
-    """dedup_keep_first: correct results AND the cheap 100 TB plan — a
-    narrow min-aggregate + semi-join, no row_number Window sorting the
-    document payload through shuffle buffers."""
-    from orc_format_spark.functions.dedup import dedup_keep_first
+def test_md5_hash60_spark_duckdb_python_agree(spark):
+    """The group-id hash contract every md5-grouped oracle relies on:
+    Spark's md5_hash60, DuckDB evaluating md5_hash60_sql, and the first
+    15 hex digits of Python's md5 give the same integer, seeded or not,
+    on empty and non-ASCII keys."""
+    import hashlib
 
-    dupes = docs.select("doc_id", "text").union(
-        docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text").filter(
-            "doc_id % 5 = 0"
-        )
-    )
-    out = dedup_keep_first(dupes)
-    assert out.count() == docs.count()
-    # every kept row is the minimum doc_id of its content group
-    assert out.filter(F.col("doc_id") >= 1_000_000).count() == 0
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, "payload must not pass through a window sort"
+    import duckdb
+
+    from orc_format_spark.operators.partitioning import md5_hash60, md5_hash60_sql
+
+    keys = ["", "a", "doc_42", "é✓"]
+    seeds = [None, 0, 7]
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    got = df.select(
+        "k", *[md5_hash60(F.col("k"), seed=s).alias(f"h{i}") for i, s in enumerate(seeds)]
+    ).collect()
+    con = duckdb.connect()
+    for row in got:
+        for i, seed in enumerate(seeds):
+            salted = row.k if seed is None else f"{row.k}#{seed}"
+            want = int(hashlib.md5(salted.encode()).hexdigest()[:15], 16)
+            duck = con.execute(f"SELECT {md5_hash60_sql('?', seed)}", [row.k]).fetchone()[0]
+            assert row[f"h{i}"] == duck == want, (row.k, seed)
 
 
 def test_char_varchar_roundtrip(spark):
@@ -634,20 +641,6 @@ def test_char_varchar_roundtrip(spark):
     # warning; no pad) — whatever bytes Spark produces, the container
     # must return them unchanged, which `got == want` above pins.
     assert dict(back.dtypes)["c_fixed"] == "string"
-
-
-def test_dedup_keep_first_null_text_not_merged(spark):
-    """md5(NULL) is NULL and groupBy merges NULLs: without the sentinel
-    key, every NULL-text doc except one would be silently dropped as a
-    'duplicate'. NULL content is not equal content — all survive."""
-    from orc_format_spark.functions.dedup import dedup_keep_first
-
-    df = spark.createDataFrame(
-        [(1, None), (2, None), (3, "same"), (4, "same"), (5, None)],
-        "doc_id long, text string",
-    )
-    out = dedup_keep_first(df)
-    assert sorted(r.doc_id for r in out.collect()) == [1, 2, 3, 5]
 
 
 def test_decode_blobs_nested_projection(spark):

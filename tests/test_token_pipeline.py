@@ -147,7 +147,7 @@ def test_pack_matches_numpy_reference(spark):
     packed = pack_sequences(
         _toks(spark, rows), seq_len=seq_len, num_groups=groups, hasher="md5"
     ).collect()
-    from orc_format_spark.functions.dedup import md5_hash60  # noqa: F401
+    from orc_format_spark.operators.partitioning import md5_hash60
 
     # reference: group by the same md5 hash computed via Spark once
     gids = {
@@ -214,49 +214,6 @@ def test_train_val_split_xxh_is_map_side(spark):
     out = train_val_split(_docs(spark, range(10)), hasher="xxh")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # one map-side expression, no shuffle
-
-
-# ------------------------------------------------------- decontamination
-
-
-def test_benchmark_contamination_flags_exact_substring(spark):
-    from orc_format_spark.functions.dedup import benchmark_contamination
-
-    leak = "the quick brown fox jumps over the lazy dog again and again"
-    corpus = spark.createDataFrame(
-        [
-            Row(doc_id=10, text=f"prefix {leak} suffix"),   # contains bench text
-            Row(doc_id=11, text="z" * 100),                 # unrelated
-            Row(doc_id=12, text=leak[:30]),                 # 30-char overlap
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [Row(doc_id=1, text=leak)], "doc_id long, text string"
-    )
-    got = {
-        (r.doc_id, r.bench_id)
-        for r in benchmark_contamination(corpus, bench, n=24, min_common=3).collect()
-    }
-    # doc 10 shares every 24-gram of leak; doc 12 shares 30-24+1=7 >= 3;
-    # doc 11 shares none
-    assert got == {(10, 1), (12, 1)}
-    strict = benchmark_contamination(corpus, bench, n=24, min_common=10)
-    assert {r.doc_id for r in strict.collect()} == {10}
-
-
-def test_benchmark_contamination_broadcasts_bench_side(spark):
-    from orc_format_spark.functions.dedup import benchmark_contamination
-
-    corpus = spark.createDataFrame(
-        [Row(doc_id=10, text="x" * 50)], "doc_id long, text string"
-    )
-    bench = spark.createDataFrame(
-        [Row(doc_id=1, text="y" * 50)], "doc_id long, text string"
-    )
-    out = benchmark_contamination(corpus, bench, n=24)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # eval set never shuffles the corpus
 
 
 # ------------------------------------------------------ repetition profile
