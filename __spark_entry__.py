@@ -901,42 +901,6 @@ def q_winnow_fingerprint(spark, sf_dir):
     return winnow_fingerprints(docs, k=8, window=4)
 
 
-def q_multimodal_features(spark, sf_dir):
-    """Binary payload -> feature vectors via Arrow-batched mapInArrow;
-    the feature array is serialized to a CSV string so the driver's
-    canonicalizer can sort/hash the frame."""
-    from orc_format_spark.functions.multimodal import extract_features, with_payload
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    feats = extract_features(with_payload(docs))
-    return feats.select(
-        "doc_id",
-        F.concat_ws(
-            ",", F.transform("features", lambda x: x.cast("string"))
-        ).alias("features_csv"),
-    )
-
-
-def q_resize_payload(spark, sf_dir):
-    """Nearest-neighbor byte resize to a fixed size (the multimodal
-    resize shape); hex-projected for the byte-level SQL oracle."""
-    from orc_format_spark.functions.multimodal import resize_payload, with_payload
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rs = resize_payload(with_payload(docs), target=32)
-    return rs.select("doc_id", F.lower(F.hex("resized")).alias("resized_hex"))
-
-
-def q_frame_sample(spark, sf_dir):
-    """Every-16th-byte payload sampling (video frame-sample shape);
-    hex-projected output so a byte-level SQL oracle can reproduce it."""
-    from orc_format_spark.functions.multimodal import frame_sample, with_payload
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    fs = frame_sample(with_payload(docs), stride=16)
-    return fs.select("doc_id", F.lower(F.hex("frames")).alias("frames_hex"))
-
-
 def q_stream_encode_roundtrip(spark, sf_dir):
     """Structured Streaming encode (availableNow) -> decode -> detokenize;
     oracle: the original documents table."""
@@ -1896,9 +1860,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "repetition_profile": q_repetition_profile,
         "pii_scrub": q_pii_scrub,
         "winnow_fingerprint": q_winnow_fingerprint,
-        "multimodal_features": q_multimodal_features,
-        "frame_sample": q_frame_sample,
-        "resize_payload": q_resize_payload,
         "seq_pack": q_seq_pack,
         "pack_encode_roundtrip": q_pack_encode_roundtrip,
         "token_histogram": q_token_histogram,
@@ -1917,10 +1878,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from orc_format_spark.functions.multimodal import (
-        extract_features_sql,
-        resize_payload_sql,
-    )
     from orc_format_spark.functions.scrub import scrub_pii_sql
     from orc_format_spark.functions.text import (
         repetition_profile_sql,
@@ -2205,15 +2162,6 @@ def oracle_sql() -> dict[str, str]:
         "nested_projection_decode": (
             "SELECT event_id, value AS inner_value FROM events"
         ),
-        "multimodal_features": extract_features_sql(),
-        "frame_sample": (
-            "SELECT CAST(doc_id AS VARCHAR) AS doc_id, "
-            "lower(array_to_string(list_transform("
-            "range(0, (octet_length(CAST(text AS BLOB)) + 15) // 16), "
-            "k -> substr(hex(CAST(text AS BLOB)), CAST(32*k+1 AS INT), 2)), '')) "
-            "AS frames_hex FROM documents"
-        ),
-        "resize_payload": resize_payload_sql(target=32),
         "codec_lineage": (
             "SELECT CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#0'), 1, 15) "
             "AS BIGINT) % 4 AS group_id, COUNT(*) AS n_rows, "

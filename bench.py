@@ -82,8 +82,6 @@ HEADLINE = [
     "orc_bloom_prune",
     "pii_scrub",
     "winnow_fingerprint",
-    "multimodal_features",
-    "resize_payload",
     "compression_variants",
     "cshuffle_encode_roundtrip",
     "seq_pack",

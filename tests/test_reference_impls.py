@@ -30,12 +30,6 @@ def _winnow_ref(text: str) -> list[int]:
     return sel
 
 
-def _resize_ref(b: bytes, target: int = 32) -> bytes:
-    if not b:
-        return b""
-    return bytes(b[(i * len(b)) // target] for i in range(target))
-
-
 _SCRUB = [
     (re.compile(r"https?://[^ \t\n]+"), "<URL>"),
     (re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"), "<EMAIL>"),
@@ -104,12 +98,3 @@ def test_scrub_matches_reference_and_is_idempotent(corpus_df):
         assert r.twice == r.once  # placeholders never re-match
 
 
-def test_resize_matches_reference(corpus_df):
-    from pyspark.sql import functions as F
-
-    from orc_format_spark.functions.multimodal import resize_payload
-
-    df = corpus_df.select("doc_id", F.col("text").cast("binary").alias("payload"))
-    got = {int(r.doc_id): bytes(r.resized) for r in resize_payload(df, target=32).collect()}
-    for i, t in enumerate(_corpus()):
-        assert got[i] == _resize_ref(t.encode(), 32), f"doc {i}"

@@ -1,4 +1,4 @@
-"""Tests for PII scrubbing, winnowing and payload resizing."""
+"""Tests for PII scrubbing and winnowing."""
 
 
 def test_scrub_pii_counts_and_replacements(spark):
@@ -65,17 +65,3 @@ def test_winnow_degenerate_rules(spark):
     assert len(a & b) >= len(a) // 2
 
 
-def test_resize_payload_edges(spark):
-    """Resize edge cases: empty payload -> empty output; payload shorter
-    than target upsamples by nearest-neighbor repeats; long payload
-    downsamples at floor(i*L/target)."""
-    from orc_format_spark.functions.multimodal import resize_payload
-
-    df = spark.createDataFrame(
-        [(0, bytearray(b"")), (1, bytearray(b"ab")), (2, bytes(range(64)))],
-        "doc_id long, payload binary",
-    )
-    out = {int(r.doc_id): bytes(r.resized) for r in resize_payload(df, target=4).collect()}
-    assert out[0] == b""
-    assert out[1] == b"aabb"  # floor(i*2/4) = 0,0,1,1
-    assert out[2] == bytes([0, 16, 32, 48])
