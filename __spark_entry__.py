@@ -827,80 +827,6 @@ def q_nested_projection_decode(spark, sf_dir):
     )
 
 
-def q_text_profile(spark, sf_dir):
-    """Text analysis: token counts, lang-ID, quality score, fingerprint."""
-    from orc_format_spark.functions.text import text_profile
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return text_profile(docs)
-
-
-def q_repetition_profile(spark, sf_dir):
-    """Gopher-style intra-document repetition metrics (duplicate-word
-    mass, top word/bigram share) — the curation filters that drop
-    boilerplate and degenerate docs before training."""
-    from orc_format_spark.functions.text import repetition_profile
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return repetition_profile(docs)
-
-
-def _pii_augmented(docs):
-    """Deterministically inject synthetic PII (email + URL + IPv4) into
-    every third document so the scrub counts are non-trivial; the SQL
-    oracle performs the identical injection."""
-    did = F.col("doc_id").cast("string")
-    return docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact doc"),
-                did,
-                F.lit("@mail.example.com via http://ex.example/p/"),
-                did,
-                F.lit(" at 10.1."),
-                (F.col("doc_id") % 256).cast("string"),
-                F.lit(".7"),
-            ),
-        ).otherwise(F.col("text")),
-    )
-
-
-_PII_TEXT_EXPR = (
-    "CASE WHEN doc_id % 3 = 0 THEN text || ' contact doc' || "
-    "CAST(doc_id AS VARCHAR) || '@mail.example.com via http://ex.example/p/' || "
-    "CAST(doc_id AS VARCHAR) || ' at 10.1.' || CAST(doc_id % 256 AS VARCHAR) || "
-    "'.7' ELSE text END"
-)
-
-
-def q_pii_scrub(spark, sf_dir):
-    """PII redaction: emails/URLs/IPv4s replaced by typed placeholders
-    with per-document match counts — pure Catalyst regexp expressions
-    (map-side, codegen'd, zero shuffle). Patterns live in the common
-    Java-regex/RE2 subset so DuckDB reproduces the output exactly."""
-    from orc_format_spark.functions.scrub import scrub_pii
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return scrub_pii(_pii_augmented(docs))
-
-
-def q_winnow_fingerprint(spark, sf_dir):
-    """MOSS-style winnowing (rolling-hash k-grams -> window minima):
-    the brief's 'document fingerprinting (rolling hash)' item as pure
-    higher-order Catalyst array expressions — map-side, zero shuffle,
-    zero Python. DuckDB reproduces every hash exactly (integer
-    arithmetic mod 2^31-1)."""
-    from orc_format_spark.functions.text import winnow_fingerprints
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-        F.col("doc_id") < 200
-    )
-    return winnow_fingerprints(docs, k=8, window=4)
-
-
 def q_stream_encode_roundtrip(spark, sf_dir):
     """Structured Streaming encode (availableNow) -> decode -> detokenize;
     oracle: the original documents table."""
@@ -1856,10 +1782,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ---- driver window boundary (50) — below: r04 driver-green ----
         "codec_lineage": q_codec_lineage,
         "struct_map_roundtrip": q_struct_map_roundtrip,
-        "text_profile": q_text_profile,
-        "repetition_profile": q_repetition_profile,
-        "pii_scrub": q_pii_scrub,
-        "winnow_fingerprint": q_winnow_fingerprint,
         "seq_pack": q_seq_pack,
         "pack_encode_roundtrip": q_pack_encode_roundtrip,
         "token_histogram": q_token_histogram,
@@ -1878,12 +1800,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from orc_format_spark.functions.scrub import scrub_pii_sql
-    from orc_format_spark.functions.text import (
-        repetition_profile_sql,
-        text_profile_sql,
-        winnow_fingerprints_sql,
-    )
     from orc_format_spark.functions.token_pipeline import (
         epoch_shuffle_sql,
         mixture_sample_sql,
@@ -2147,17 +2063,9 @@ def oracle_sql() -> dict[str, str]:
             "SELECT CAST(ws AS VARCHAR) AS window_start, source, n_docs, n_tokens "
             "FROM agg WHERE ws + INTERVAL 1 MINUTE <= (SELECT MAX(ev) FROM base)"
         ),
-        "text_profile": text_profile_sql(),
-        "repetition_profile": repetition_profile_sql(),
         "struct_map_roundtrip": (
             "SELECT event_id, event_type AS s_event_type, value AS s_value, "
             "event_type AS m_type FROM events"
-        ),
-        "pii_scrub": scrub_pii_sql(
-            table="documents", text_expr=_PII_TEXT_EXPR
-        ),
-        "winnow_fingerprint": winnow_fingerprints_sql(
-            k=8, window=4, table="(SELECT * FROM documents WHERE doc_id < 200)"
         ),
         "nested_projection_decode": (
             "SELECT event_id, value AS inner_value FROM events"

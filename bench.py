@@ -71,8 +71,6 @@ HEADLINE = [
     "zorder_prune_scan",
     "compact_roundtrip",
     "clustered_encode",
-    "text_profile",
-    "repetition_profile",
     "orc_file_roundtrip",
     "orc_dict_map_roundtrip",
     "orc_rle_v2_file_roundtrip",
@@ -80,8 +78,6 @@ HEADLINE = [
     "orc_union_roundtrip",
     "orc_native_read",
     "orc_bloom_prune",
-    "pii_scrub",
-    "winnow_fingerprint",
     "compression_variants",
     "cshuffle_encode_roundtrip",
     "seq_pack",

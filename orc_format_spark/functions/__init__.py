@@ -1,25 +1,7 @@
-"""Training-data pipeline functions: text analysis.
+"""Training-data pipeline functions: the token pipeline operators.
 
-These are the first-class additions beyond the reference's encoder
-surface (the reference is a file-format writer only — SURVEY.md §2.7);
-every operator here is either pure `pyspark.sql.functions` (JVM-side,
+These are additions beyond the reference's encoder surface (the
+reference is a file-format writer only — SURVEY.md §2.7); every
+operator here is either pure `pyspark.sql.functions` (JVM-side,
 codegen'd) or Arrow-batched `mapInArrow` with vectorized numpy.
 """
-
-from .text import (
-    bpe_token_count,
-    fingerprint,
-    lang_id,
-    quality_score,
-    text_profile,
-    ws_token_count,
-)
-
-__all__ = [
-    "bpe_token_count",
-    "fingerprint",
-    "lang_id",
-    "quality_score",
-    "text_profile",
-    "ws_token_count",
-]

@@ -196,14 +196,6 @@ def main() -> None:
         "seq rule; the data side never shuffles)",
         read_tokens_table(spark, tdir),
     )
-    from orc_format_spark.functions.scrub import scrub_pii
-
-    show(
-        "pii scrub (expect: a single WholeStageCodegen Project over the "
-        "scan — regexp_count/regexp_replace are Catalyst expressions; "
-        "zero Exchange, zero Python)",
-        scrub_pii(spark.read.parquet(f"{sf}/documents.parquet")),
-    )
     import __spark_entry__ as entrymod
     from orc_format_spark.operators.zorder import with_zorder_key
 

@@ -219,35 +219,6 @@ def test_train_val_split_xxh_is_map_side(spark):
 # ------------------------------------------------------ repetition profile
 
 
-def test_repetition_profile_hand_computed(spark):
-    from orc_format_spark.functions.text import repetition_profile
-
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="a b a c a b"),
-            Row(doc_id=2, text="solo"),
-            Row(doc_id=3, text=""),          # wordless: absent from output
-            Row(doc_id=4, text="xy xy xy"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r.asDict() for r in repetition_profile(docs).collect()}
-    assert set(got) == {1, 2, 4}
-    d1 = got[1]
-    # words: a x3, b x2, c x1; bigrams: "a b" x2, "b a", "a c", "c a"
-    assert d1["n_words"] == 6 and d1["n_distinct_words"] == 3
-    assert d1["n_dup_words"] == 3
-    assert d1["dup_word_chars"] == 1 * 3 + 1 * 2
-    assert d1["top_word_n"] == 3 and d1["top_bigram_n"] == 2
-    assert got[2]["top_bigram_n"] == 0 and got[2]["n_words"] == 1
-    d4 = got[4]
-    assert d4["n_dup_words"] == 2 and d4["dup_word_chars"] == 6
-    assert d4["top_bigram_n"] == 2  # "xy xy" twice
-
-
-# ------------------------------------------------- epoch shuffle
-
-
 def test_epoch_shuffle_order_and_determinism(spark):
     from orc_format_spark.functions.token_pipeline import epoch_shuffle
 
