@@ -1574,124 +1574,6 @@ def q_stream_window_stats(spark, sf_dir):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def q_seq_pack(spark, sf_dir):
-    """Sequence packing: concat each md5-group's token stream in doc_id
-    order, cut into 2048-token training windows (drop remainder). One
-    shuffle on group_id, vectorized concat+reshape map-side — never a
-    token-level explode. Chunks compared to the oracle as hex of the
-    packed byte-token payload."""
-    from orc_format_spark import tokenize_documents
-    from orc_format_spark.functions.token_pipeline import chunk_hex, pack_sequences
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    packed = pack_sequences(
-        tokenize_documents(docs), seq_len=2048, num_groups=8, hasher="md5"
-    )
-    return packed.select(
-        "group_id", "chunk_id", chunk_hex(F.col("tokens")).alias("chunk_hex")
-    )
-
-
-def q_pack_encode_roundtrip(spark, sf_dir):
-    """Pack -> columnar-encode -> decode: the north-star composition
-    (fixed-length pre-tokenized training sequences through the codec
-    engine). pack_sequences' group_id is reused by encode_groups (no
-    re-grouping pass), chunk_id is the in-group sort key, and the
-    decoded chunks must hex-match the packing oracle exactly — the
-    encode/decode leg is lossless on array<int32> payloads."""
-    from orc_format_spark import decode_blobs, encode_groups, tokenize_documents
-    from orc_format_spark.functions.token_pipeline import chunk_hex, pack_sequences
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    packed = pack_sequences(
-        tokenize_documents(docs), seq_len=2048, num_groups=8, hasher="md5"
-    )
-    # encode_groups consumes the group_id column as the (dropped)
-    # grouping key, so carry the group id as an explicit payload column
-    packed = packed.withColumn("grp", F.col("group_id"))
-    blobs = encode_groups(packed, key_col="chunk_id")
-    out = decode_blobs(
-        blobs, "chunk_id int, tokens array<int>, doc_starts array<int>, grp int"
-    )
-    return out.select(
-        F.col("grp").alias("group_id"),
-        "chunk_id",
-        chunk_hex(F.col("tokens")).alias("chunk_hex"),
-    )
-
-
-def q_token_histogram(spark, sf_dir):
-    """Vocabulary histogram over the token stream: per-batch np.unique
-    partials inside mapInArrow, then one |vocab|-bounded groupBy — the
-    shuffle never carries one row per token occurrence. Top-50 with
-    deterministic tie-break on token id."""
-    from orc_format_spark import tokenize_documents
-    from orc_format_spark.functions.token_pipeline import token_histogram
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return token_histogram(tokenize_documents(docs), top_k=50)
-
-
-def q_mixture_sample(spark, sf_dir):
-    """Deterministic per-source mixture sampling (domain re-weighting):
-    keep iff md5_hash60(doc_id) % 1e6 < rate_ppm[source] — a pure
-    map-side filter, zero shuffle, identical subset on resume."""
-    from orc_format_spark.functions.token_pipeline import mixture_sample
-
-    rates = {f"src{i}": (750000 if i % 2 == 0 else 250000) for i in range(20)}
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return mixture_sample(
-        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "source"), rates
-    )
-
-
-def q_train_val_split(spark, sf_dir):
-    """Deterministic hash-based train/val/test assignment: a pure
-    map-side expression of md5_hash60(doc_id), so a doc never migrates
-    between splits on resume or corpus growth."""
-    from orc_format_spark.functions.token_pipeline import train_val_split
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return train_val_split(
-        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "source"),
-        val_ppm=100_000,
-        test_ppm=50_000,
-    )
-
-
-def q_epoch_shuffle(spark, sf_dir):
-    """Deterministic per-epoch training-order shuffle without a global
-    sort: order_key = md5_hash60(doc_id, epoch) is a pseudorandom total
-    order, bucket = order_key % 64 partitions it; one hash shuffle +
-    in-partition sort. The order is a pure function of (key, epoch) —
-    retries/resume/cluster resizes reproduce it. Oracle recomputes the
-    same hash in DuckDB (driver compare is order-insensitive; the
-    in-bucket ordering itself is asserted in pytest)."""
-    from orc_format_spark.functions.token_pipeline import epoch_shuffle
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return epoch_shuffle(
-        docs.select(F.col("doc_id").cast("string").alias("doc_id")),
-        epoch=1,
-        num_buckets=64,
-        hasher="md5",
-    )
-
-
-def q_token_remap(spark, sf_dir):
-    """Tokenizer migration: rewrite token ids through a vectorized
-    numpy lookup table (one np.take per Arrow batch, zero shuffle).
-    Demo mapping 113->107 ('q'->'k' in the byte tokenizer) so the
-    detokenized oracle is a plain SQL replace()."""
-    from orc_format_spark import detokenize, tokenize_documents
-    from orc_format_spark.functions.token_pipeline import remap_tokens
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = tokenize_documents(docs)
-    remapped = remap_tokens(toks, {113: 107}, vocab_size=256)
-    return detokenize(remapped).select("doc_id", "text")
-
-
 def q_codec_lineage(spark, sf_dir):
     """Codec lineage rows: deterministic md5-based grouping so group
     membership, row counts, and value counts (3 scalar leaves + the
@@ -1782,13 +1664,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ---- driver window boundary (50) — below: r04 driver-green ----
         "codec_lineage": q_codec_lineage,
         "struct_map_roundtrip": q_struct_map_roundtrip,
-        "seq_pack": q_seq_pack,
-        "pack_encode_roundtrip": q_pack_encode_roundtrip,
-        "token_histogram": q_token_histogram,
-        "mixture_sample": q_mixture_sample,
-        "train_val_split": q_train_val_split,
-        "epoch_shuffle": q_epoch_shuffle,
-        "token_remap": q_token_remap,
         "rle_v2_roundtrip": q_rle_v2_roundtrip,
         "alp_roundtrip": q_alp_roundtrip,
         "fsst_roundtrip": q_fsst_roundtrip,
@@ -1800,14 +1675,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from orc_format_spark.functions.token_pipeline import (
-        epoch_shuffle_sql,
-        mixture_sample_sql,
-        pack_sequences_sql,
-        token_histogram_sql,
-        train_val_split_sql,
-    )
-
     stats_longs = " UNION ALL ".join(
         f"SELECT '{c}' AS column, COUNT(*) AS n_values, COUNT({c}) AS n_present, "
         f"CAST(MIN({c}) AS BIGINT) AS min_long, CAST(MAX({c}) AS BIGINT) AS max_long, "
@@ -2075,17 +1942,5 @@ def oracle_sql() -> dict[str, str]:
             "AS BIGINT) % 4 AS group_id, COUNT(*) AS n_rows, "
             "CAST(3 * COUNT(*) + SUM(octet_length(CAST(text AS BLOB))) AS BIGINT) "
             "AS n_values FROM documents GROUP BY 1"
-        ),
-        "seq_pack": pack_sequences_sql(seq_len=2048, num_groups=8),
-        "pack_encode_roundtrip": pack_sequences_sql(seq_len=2048, num_groups=8),
-        "token_histogram": token_histogram_sql(top_k=50),
-        "mixture_sample": mixture_sample_sql(
-            {f"src{i}": (750000 if i % 2 == 0 else 250000) for i in range(20)}
-        ),
-        "train_val_split": train_val_split_sql(val_ppm=100_000, test_ppm=50_000),
-        "epoch_shuffle": epoch_shuffle_sql(epoch=1, num_buckets=64),
-        "token_remap": (
-            "SELECT CAST(doc_id AS VARCHAR) AS doc_id, "
-            "replace(text, 'q', 'k') AS text FROM documents"
         ),
     }

@@ -80,12 +80,6 @@ HEADLINE = [
     "orc_bloom_prune",
     "compression_variants",
     "cshuffle_encode_roundtrip",
-    "seq_pack",
-    "token_histogram",
-    "mixture_sample",
-    "train_val_split",
-    "epoch_shuffle",
-    "token_remap",
 ]
 
 

@@ -135,36 +135,6 @@ def main() -> None:
             predicate=("l_orderkey", ">=", 9000),
         ),
     )
-    from orc_format_spark.functions.token_pipeline import (
-        mixture_sample,
-        pack_sequences,
-        token_histogram,
-    )
-
-    show(
-        "sequence packing (expect: ONE Exchange on group_id -> "
-        "FlatMapGroupsInArrow; no token-level explode anywhere)",
-        pack_sequences(spark.read.parquet(f"{work}/tokens"), seq_len=2048),
-    )
-    show(
-        "token histogram (expect: MapInArrow partials -> partial/final "
-        "HashAggregate pair; the Exchange carries (token, cnt) rows only)",
-        token_histogram(spark.read.parquet(f"{work}/tokens"), top_k=50),
-    )
-    show(
-        "mixture sample (expect: WholeStageCodegen Filter directly on the "
-        "scan — zero shuffle, no UDF in the plan)",
-        mixture_sample(
-            spark.read.parquet(f"{work}/tokens"), {"src0": 500_000}, hasher="md5"
-        ),
-    )
-    from orc_format_spark.functions.token_pipeline import train_val_split
-
-    show(
-        "train/val split (expect: WholeStageCodegen Project on the scan — "
-        "zero shuffle, no UDF)",
-        train_val_split(spark.read.parquet(f"{work}/tokens")),
-    )
     show(
         "clustered grouped encode (expect: the SAME single Exchange as "
         "grouped — cluster_by sorts inside the Arrow kernel, not the plan)",
