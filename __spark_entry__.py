@@ -1527,53 +1527,6 @@ def q_iceberg_equality_delete(spark, sf_dir):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def q_stream_window_stats(spark, sf_dir):
-    """Structured Streaming watermarked window aggregation (availableNow)
-    over the tokens stream with md5-derived event times; append-mode
-    output = exactly the watermark-closed windows, which the SQL oracle
-    reproduces (groups whose window end <= max event time)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from orc_format_spark import tokenize_documents
-    from orc_format_spark.operators.partitioning import md5_hash60
-    from orc_format_spark.streaming import token_window_stats
-
-    qname = f"ofs_winstats_{uuid.uuid4().hex[:8]}"  # re-runnable in-session
-    work = tempfile.mkdtemp(prefix="ofs_ws_")
-    try:
-        src = f"{work}/timed"
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        toks = tokenize_documents(docs).withColumn(
-            "event_time",
-            F.to_timestamp(F.lit("2026-01-01 00:00:00"))
-            + F.make_interval(secs=md5_hash60(F.col("doc_id")) % 300),
-        )
-        toks.write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(src)
-        out = token_window_stats(stream, window="1 minute", watermark="0 seconds")
-        q = (
-            out.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .start()
-        )
-        q.awaitTermination(300)
-        res = spark.sql(
-            "SELECT CAST(window_start AS STRING) AS window_start, source, "
-            f"n_docs, n_tokens FROM {qname}"
-        )
-        res = res.cache()
-        res.count()  # materialize before the scratch dir disappears
-        return res
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
 def q_codec_lineage(spark, sf_dir):
     """Codec lineage rows: deterministic md5-based grouping so group
     membership, row counts, and value counts (3 scalar leaves + the
@@ -1631,7 +1584,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stats_timestamps": q_stats_timestamps,
         "stats_decimals": q_stats_decimals,
         "stats_binary": q_stats_binary,
-        "stream_window_stats": q_stream_window_stats,
         "iceberg_partition_scan": q_iceberg_partition_scan,
         "iceberg_equality_delete": q_iceberg_equality_delete,
         "iceberg_incremental_encode": q_iceberg_incremental_encode,
@@ -1916,19 +1868,6 @@ def oracle_sql() -> dict[str, str]:
         ),
         "encode_job_roundtrip": (
             "SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents"
-        ),
-        "stream_window_stats": (
-            "WITH base AS ("
-            "SELECT source, octet_length(CAST(text AS BLOB)) AS n_tok, "
-            "TIMESTAMP '2026-01-01 00:00:00' + to_seconds("
-            "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) "
-            "% 300) AS ev FROM documents"
-            "), agg AS ("
-            "SELECT date_trunc('minute', ev) AS ws, source, "
-            "COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS n_tokens "
-            "FROM base GROUP BY 1, 2) "
-            "SELECT CAST(ws AS VARCHAR) AS window_start, source, n_docs, n_tokens "
-            "FROM agg WHERE ws + INTERVAL 1 MINUTE <= (SELECT MAX(ev) FROM base)"
         ),
         "struct_map_roundtrip": (
             "SELECT event_id, event_type AS s_event_type, value AS s_value, "

@@ -1,8 +1,9 @@
 """Once-per-worker runtime setup for the library's Python UDFs.
 
 Every UDF body in this package (``mapInArrow``, ``applyInArrow``, the
-pandas UDF of ``prune_blobs`` and the ``applyInPandasWithState``
-operators in ``streaming/``) calls ``limit_worker_threads()`` first.
+pandas UDF of ``prune_blobs`` and the ``read``/``write`` methods of the
+Python data sources in ``sources/datasource.py``) calls
+``limit_worker_threads()`` first.
 The first call in a Python worker sets up two things for the rest of
 that worker's life:
 
