@@ -458,16 +458,19 @@ def serialize_blob(entries: list[ColumnEntry]) -> bytes:
     return b"".join(parts)
 
 
-def deserialize_blob(blob: bytes) -> list[ColumnEntry]:
-    if len(blob) < 7:
+def _read_header(blob: bytes, pos: int = 0) -> tuple[str, list, int]:
+    """Parse the uncompressed entry headers of the body at ``pos`` ->
+    (engine tag, per-entry ``(fields, has_null, n_rows, n_present,
+    [(kind, len)])``, offset of the first stream payload)."""
+    if len(blob) - pos < 7:
         raise ValueError("truncated blob header")
-    if blob[:4] != MAGIC:
+    if blob[pos : pos + 4] != MAGIC:
         raise ValueError("bad blob magic")
-    version = blob[4]
+    version = blob[pos + 4]
     if version not in _READ_VERSIONS:
         raise ValueError(f"unsupported blob version {version}")
-    n_entries = int.from_bytes(blob[5:7], "little")
-    pos = 7
+    n_entries = int.from_bytes(blob[pos + 5 : pos + 7], "little")
+    pos += 7
     engine = _LEGACY_ENGINE
     try:
         if version >= 3:  # engine tag (see blob_engine_version)
@@ -506,6 +509,32 @@ def deserialize_blob(blob: bytes) -> list[ColumnEntry]:
         # way as every other truncation so callers catching ValueError
         # to reject corrupt blobs see a consistent type
         raise ValueError("truncated blob metadata") from None
+    return engine, metas, pos
+
+
+def _header_null_stats(blob: bytes, pos: int, end: int, n_rows: int) -> dict[str, Stats]:
+    """Top-level column -> exact ``Stats(has_null, n)`` read from the
+    entry headers of the ``n_rows``-row body at ``blob[pos:end]``; no
+    stream is decompressed. A header that disagrees with the body's
+    extent or row count raises rather than steer pruning."""
+    _engine, metas, p = _read_header(blob, pos)
+    if p + sum(slen for *_, skinds in metas for _, slen in skinds) != end:
+        raise ValueError("chunk body length mismatch")
+    entries = [ColumnEntry(f[0], f[1], f[2], f[3], h, nr, npres, None)
+               for f, h, nr, npres, _ in metas]
+    out = {}
+    i = 0
+    while i < len(entries):
+        e = entries[i]
+        if e.n_rows != n_rows or e.n_present > n_rows:
+            raise ValueError("chunk row count mismatch")
+        out[e.name] = Stats(has_null=e.has_null, n=e.n_present)
+        i = _skip_entries(entries, i)
+    return out
+
+
+def deserialize_blob(blob: bytes) -> list[ColumnEntry]:
+    engine, metas, pos = _read_header(blob)
     entries = []
     for (fields, has_null, n_rows, n_present, skinds) in metas:
         streams = []
@@ -1142,6 +1171,20 @@ def stats_view(stats: dict | None):
     return view
 
 
+def _with_nulls(view, nulls: dict[str, Stats]):
+    """``view`` with each column's has_null and non-null count taken
+    from ``nulls``; list-element stats describe elements, not rows, and
+    stay as they are."""
+
+    def merged(col):
+        s, h = view(col), nulls.get(col)
+        if h is None or (s is not None and s.elem):
+            return s
+        return h if s is None else s._replace(has_null=h.has_null, n=h.n)
+
+    return merged
+
+
 def decode_table(
     blob: bytes,
     columns: list[str] | None = None,
@@ -1208,13 +1251,19 @@ def decode_table(
         a, b = (0, total) if rows is None else rows
         a = max(0, min(a, total))
         b = max(a, min(b, total))
+        # a chunk's null count is in its body's uncompressed entry
+        # headers, not in the stats JSON; read them only for isnull
+        null_test = tree is not None and any(l.op == "isnull" for l in leaves(tree))
         tables = []
         off = 0
         body_pos = pos
         for k, (nr, blen) in enumerate(metas):
             wanted = off + nr > a and off < b
             if wanted and tree is not None:
-                wanted = may_match(tree, stats_view(stats[k] if stats else None))
+                view = stats_view(stats[k] if stats else None)
+                if null_test:
+                    view = _with_nulls(view, _header_null_stats(blob, body_pos, body_pos + blen, nr))
+                wanted = may_match(tree, view)
             if wanted:
                 t = _decode_body(blob[body_pos : body_pos + blen], columns)
                 if tree is not None:

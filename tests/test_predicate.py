@@ -621,6 +621,41 @@ def test_or_not_trees_prune_and_decode_blobs(spark):
         assert sorted(r.k for r in got.collect()) == want, tree
 
 
+def test_isnull_prunes_chunks_from_body_headers(monkeypatch):
+    """``isnull`` skips a chunk whose body header says the column has no
+    nulls (the stats JSON holds no null count); the result stays exact."""
+    calls = []
+    orig = container._decode_body
+    monkeypatch.setattr(
+        container, "_decode_body",
+        lambda b, c=None: calls.append(1) or orig(b, c),
+    )
+    dense = pa.table({"k": pa.array(range(1000), pa.int64())})
+    blob = encode_table(dense, stride=100)[0]
+    out = decode_table(blob, predicate=("k", "isnull", None))
+    assert out.num_rows == 0 and out.schema == dense.schema
+    assert len(calls) == 1  # the zero-row schema decode of chunk 0
+
+    # nulls only in rows [300, 310) and an all-null-free string column
+    k = [None if 300 <= i < 310 else i for i in range(1000)]
+    tbl = pa.table({"k": pa.array(k, pa.int64()),
+                    "s": pa.array([f"v{i}" for i in range(1000)])})
+    blob = encode_table(tbl, stride=100)[0]
+    for pred, want, n_chunks in [
+        (("k", "isnull", None), list(range(300, 310)), 1),
+        (("not", ("k", "notnull", None)), list(range(300, 310)), 1),
+        (("or", [("k", "isnull", None), ("k", "==", 905)]),
+         list(range(300, 310)) + [905], 2),
+        ([("k", "isnull", None), ("s", ">=", "v5")], [], 1),
+        (("s", "isnull", None), [], 1),
+    ]:
+        calls.clear()
+        got = decode_table(blob, predicate=pred)
+        rows = [i for i in range(1000) if i in set(want)]
+        assert got.column("s").to_pylist() == [f"v{i}" for i in rows], pred
+        assert len(calls) == n_chunks, pred
+
+
 def test_pruning_power_pinned(monkeypatch):
     """The lookup shapes of the lineitem benchmark (``==``, ``in``, a
     ``>=``/``<`` range, plus Bloom-served ``==``/``in`` on an unclustered
