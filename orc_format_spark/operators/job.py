@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..codecs.container import ENCODER_VERSION, _LEGACY_ENGINE
 from .encode import encode_groups
+from ..sources.iceberg_meta import local_path
 from .partitioning import plan_num_groups, with_group_id
 
 
@@ -59,10 +60,6 @@ def _read_state(
     return waves, engines, params
 
 
-def _strip_file(path: str) -> str:
-    return path[len("file:") :] if path.startswith("file:") else path
-
-
 def commit_lineage_metrics(
     metrics_dir: str, part_dir: str, name: str, commit_key: str
 ) -> None:
@@ -78,10 +75,8 @@ def commit_lineage_metrics(
 
     from ..sources.iceberg_meta import append_snapshot, create_table, is_iceberg_table
 
-    local = part_dir[len("file:") :] if part_dir.startswith("file:") else part_dir
-    mlocal = (
-        metrics_dir[len("file:") :] if metrics_dir.startswith("file:") else metrics_dir
-    )
+    local = local_path(part_dir)
+    mlocal = local_path(metrics_dir)
     tbl = ds.dataset(local, format="parquet").to_table()
     # drop the payload (absent in sink-mode waves, which carry only
     # blob_path) AND the Spark row-metadata KV pair the wave files
@@ -207,7 +202,7 @@ def run_encode_job(
                 codec=codec,
                 compression=compression,
                 key_col=key_col,
-                blob_sink=_strip_file(f"{out_dir}/blobstore") if blob_sink else None,
+                blob_sink=local_path(f"{out_dir}/blobstore") if blob_sink else None,
                 cluster_by=cluster_by,
                 stats=stats,
             )
@@ -262,8 +257,7 @@ def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     list); pre-Iceberg layouts fall back to a plain parquet dir read."""
     from ..sources.iceberg_meta import is_iceberg_table, list_data_files
 
-    mdir = out_dir[len("file:") :] if out_dir.startswith("file:") else out_dir
-    mdir = f"{mdir}/metrics"
+    mdir = f"{local_path(out_dir)}/metrics"
     if is_iceberg_table(mdir):
         files = sorted(p for p, _ in list_data_files(mdir))
         return spark.read.parquet(*files)

@@ -89,6 +89,7 @@ from pyspark.sql.types import DoubleType, FloatType, StructType
 
 from ..codecs.container import stats_view
 from ..predicate import may_match, normalize
+from .iceberg_meta import local_path
 
 _OPS = {
     EqualTo: "==",
@@ -150,16 +151,6 @@ def _filter_to_pred(f: Filter):
             return None
         leaf = (col, op, f.value)
     return ("not", leaf) if neg else leaf
-
-
-def _local_path(path: str) -> str:
-    """SQL (`USING orc_format OPTIONS (path ...)`) hands the path as a
-    file: URI; the DataFrame API hands it bare. Normalize both."""
-    if path.startswith("file://"):
-        return path[len("file://") :]
-    if path.startswith("file:"):
-        return path[len("file:") :]
-    return path
 
 
 def _manifest_file_names(path: str) -> list[str] | None:
@@ -312,7 +303,7 @@ def _merged_blob_schema(files: list[str]):
 
 class OrcFormatReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType):
-        self.path = _local_path(options.get("path") or "")
+        self.path = local_path(options.get("path") or "")
         if not self.path:
             raise ValueError("orc_format: .load(path) is required")
         self.spark_schema = schema
@@ -408,7 +399,7 @@ class BlobWriteMessage(WriterCommitMessage):
 
 class OrcFormatWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, overwrite: bool):
-        self.path = _local_path(options.get("path") or "")
+        self.path = local_path(options.get("path") or "")
         if not self.path:
             raise ValueError("orc_format: .save(path) is required")
         self.codec = options.get("codec", "auto")
@@ -529,7 +520,7 @@ class OrcFormatDataSource(DataSource):
 
         from ..codecs.container import blob_schema
 
-        path = _local_path(self.options.get("path") or "")
+        path = local_path(self.options.get("path") or "")
         if not path:
             raise ValueError("orc_format: .load(path) is required")
         files = _list_blob_files(path)
@@ -599,7 +590,7 @@ class OrcFormatStreamReader(DataSourceStreamReader):
     transparent and the semantics exact."""
 
     def __init__(self, options: dict):
-        self.path = _local_path(options.get("path") or "")
+        self.path = local_path(options.get("path") or "")
         if not self.path:
             raise ValueError("orc_format: .load(path) is required")
         self.columns = _columns_option(options)
@@ -649,7 +640,7 @@ class OrcFormatStreamWriter(DataSourceStreamArrowWriter):
     like the wave ledger in operators/job.py."""
 
     def __init__(self, options: dict):
-        self.path = _local_path(options.get("path") or "")
+        self.path = local_path(options.get("path") or "")
         if not self.path:
             raise ValueError("orc_format: .save path option is required")
         self.codec = options.get("codec", "auto")

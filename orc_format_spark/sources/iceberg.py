@@ -25,7 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .iceberg_meta import is_iceberg_table, list_iceberg_splits_meta
+from .iceberg_meta import is_iceberg_table, list_iceberg_splits_meta, local_path
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -119,7 +119,7 @@ def read_tokens_table(
                 # File seq rides in on a broadcast map keyed by file path;
                 # one null-safe anti-join per delete file's column set.
                 seq_rows = [
-                    (os.path.abspath(p.removeprefix("file:")), int(s))
+                    (os.path.abspath(local_path(p)), int(s))
                     for p, s in list_data_file_seqs(name).items()
                 ]
                 seq_df = spark.createDataFrame(
@@ -207,7 +207,7 @@ def list_iceberg_splits(
     out: list[tuple[int, str, int]] = []
     sid = 0
     for f in files:
-        local = f[len("file:") :] if f.startswith("file:") else f
+        local = local_path(f)
         n_rg = pq.ParquetFile(local).metadata.num_row_groups
         for rg in range(n_rg):
             out.append((sid, local, rg))

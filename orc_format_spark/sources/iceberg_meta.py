@@ -49,6 +49,16 @@ from .avro_ocf import read_ocf, write_ocf
 
 FORMAT_VERSION = 2
 
+
+def local_path(path: str) -> str:
+    """A ``file:`` URI (``file:/x`` or ``file:///x``) or a bare path ->
+    the bare local path. Spark and SQL options hand paths either way."""
+    if path.startswith("file://"):
+        return path[len("file://") :]
+    if path.startswith("file:"):
+        return path[len("file:") :]
+    return path
+
 # ---------------------------------------------------------- avro schemas
 # Field names/ids follow the Iceberg spec's manifest-list ("manifest_file")
 # and manifest ("manifest_entry") schemas, v2 required subset; optional
@@ -1787,7 +1797,7 @@ def list_iceberg_splits_meta(
     out: list[tuple[int, str, int]] = []
     sid = 0
     for f in files:
-        local = f[len("file:") :] if f.startswith("file:") else f
+        local = local_path(f)
         for rg in range(pq.ParquetFile(local).metadata.num_row_groups):
             out.append((sid, local, rg))
             sid += 1

@@ -126,6 +126,11 @@ def test_avro_errors():
 # --------------------------------------------------------------- iceberg
 
 
+@pytest.mark.parametrize("uri", ["file:/tmp/x", "file:///tmp/x", "/tmp/x"])
+def test_local_path_strips_either_file_scheme(uri):
+    assert im.local_path(uri) == "/tmp/x"
+
+
 def test_create_append_read(tmp_path):
     f1 = _tokens_file(str(tmp_path / "a.parquet"), 0, 100)
     f2 = _tokens_file(str(tmp_path / "b.parquet"), 100, 60)
