@@ -1,16 +1,20 @@
 """PySpark-native per-column lightweight-compression engine.
 
 A from-scratch Spark-first reimplementation of the capabilities of the
-reference ORC writer (blkerby/orc-format, studied at /root/reference),
+reference ORC writer (blkerby/orc-format),
 extended with the codec menu and scale machinery the reference lacks:
 dictionary, RLEv2 (short-repeat/direct/patched-base/delta), zigzag+varint,
 frame-of-reference bit-packing, FSST, per-partition codec auto-selection,
 salted skew-aware grouping, checkpointed resume, lineage + metrics.
 
 Layers:
-  codecs/     pure numpy/pyarrow kernels (no Spark imports, unit-testable)
-  operators/  Spark operators (applyInArrow / mapInArrow, one shuffle)
-  sources/    tokens-table source + synthetic generators
+  codecs/       pure numpy/pyarrow kernels (no Spark imports, unit-testable)
+  operators/    Spark operators (applyInArrow / mapInArrow, one shuffle)
+  sources/      tokens table, parquet/Iceberg splits, ORC files, the
+                Python data source
+  streaming/    Structured Streaming encode (checkpointed, exactly-once)
+  predicate.py  the one predicate form and its three-valued stats test
+  worker_env.py once-per-worker thread caps and zip-import guard
 """
 
 from .operators.encode import (

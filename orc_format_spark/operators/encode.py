@@ -175,9 +175,10 @@ def encode_groups(
 
     ``shuffle`` picks how the re-clustering exchange moves the payload:
 
-    - ``"rows"``: the groupBy shuffles raw rows (UnsafeRow) — one
-      exchange, encode after. Simple, but token arrays cost ~8 B/token
-      on the wire.
+    - ``"rows"`` (the default, and what ``run_encode_job`` and
+      ``encode_stream`` use): the groupBy shuffles raw rows (UnsafeRow)
+      — one exchange, encode after. Simple, but token arrays cost
+      ~8 B/token on the wire.
     - ``"compressed"``: two-phase. Each input partition first encodes
       its rows per group into transient chunklet blobs map-side (no
       exchange yet), the exchange then moves only COMPRESSED bytes
@@ -186,9 +187,9 @@ def encode_groups(
       blob with full codec auto-selection. Output blobs, checksums,
       and lineage are byte-identical to ``"rows"`` (asserted in
       tests/test_spark_engine.py). CPU pays one extra cheap
-      encode+decode; the network pays ~1/30th — at 100 TB the shuffle
-      wire/spill cost dominates any re-clustering job, so this is the
-      cluster-default path.
+      encode+decode; the network pays ~1/30th, which pays off when the
+      shuffle's wire and spill cost dominate a re-clustering job. No
+      library caller selects it; a caller opts in.
     """
     if shuffle not in ("rows", "compressed"):
         raise ValueError(f"unknown shuffle strategy: {shuffle!r}")
