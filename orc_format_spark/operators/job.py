@@ -27,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..codecs.container import ENCODER_VERSION, _LEGACY_ENGINE
-from .encode import encode_groups
 from ..sources.iceberg_meta import local_path
+from .encode import encode_groups
 from .partitioning import plan_num_groups, with_group_id
 
 

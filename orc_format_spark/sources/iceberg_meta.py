@@ -59,6 +59,7 @@ def local_path(path: str) -> str:
         return path[len("file:") :]
     return path
 
+
 # ---------------------------------------------------------- avro schemas
 # Field names/ids follow the Iceberg spec's manifest-list ("manifest_file")
 # and manifest ("manifest_entry") schemas, v2 required subset; optional
