@@ -17,9 +17,11 @@ stored as positional exceptions with their raw IEEE bit pattern, so the
 codec is lossless on EVERY input — the auto-selector simply won't pick
 it when the exception rate makes it lose on measured bytes.
 
-(e, f) is chosen per call by actually scoring candidate pairs on a
-bounded sample (exactness count + bit width), mirroring the paper's
-sampling scheme and this repo's honesty-over-modeling selector policy.
+(e, f) is chosen per call by scoring candidate pairs on a bounded
+sample (exactness count + bit width), mirroring the paper's sampling
+scheme; a branch and bound skips pairs whose score can no longer win
+(``_choose_exponents``). Whether ALP itself is used is decided by the
+codec selector on measured post-compression sizes (selector.py).
 
 Wire format (all little-endian):
   [0]  e (uint8)            [1] f (uint8)

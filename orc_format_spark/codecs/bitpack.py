@@ -10,8 +10,8 @@ The frame-of-reference (FoR) codec subtracts the minimum and bit-packs the
 residuals:  header = zigzag-varint(min) | width u8 | varint(count) | packed.
 Width 0 encodes a constant column in a handful of bytes.
 
-All kernels are numpy-vectorized; memory is bounded by chunking the bit
-matrix at 1M values.
+All kernels are numpy-vectorized; the per-bit (packbits) path only takes
+inputs of at most 512 values per bit of width.
 """
 
 from __future__ import annotations
@@ -24,8 +24,6 @@ from .varint import (
     zigzag_decode,
     zigzag_encode,
 )
-
-_CHUNK = 1 << 20
 
 # ORC RLEv2 closed set of bit widths (public spec, "Direct" encoding)
 WIDTH_TABLE = tuple(range(1, 25)) + (26, 28, 30, 32, 40, 48, 56, 64)
@@ -77,6 +75,14 @@ def bitpack(u: np.ndarray, width: int) -> bytes:
     n = u.size
     if n == 0 or width == 0:
         return b""
+    if width % 8 and n <= 512 * width:
+        # few values relative to the width (e.g. a 50-entry dictionary
+        # at 63 bits): the block loop below runs ``width`` rounds of
+        # numpy calls whatever n is, while unpacking every value's bits
+        # costs O(n * itemsize) in three calls
+        k = u.dtype.itemsize
+        be = u.astype(f">u{k}").view(np.uint8).reshape(n, k)
+        return np.packbits(np.unpackbits(be, axis=1)[:, 8 * k - width :]).tobytes()
     if width % 8 == 0:
         # byte-aligned: each value is the low width/8 bytes of its
         # big-endian representation; lane = smallest power-of-2 cover

@@ -63,14 +63,12 @@ def bloom_build(
     v = np.asarray(values, dtype=np.int64)
     m = _n_bits(v.size, bits_per_key)
     mask = np.uint64(m - 1)
-    bits = np.zeros(m // 8, dtype=np.uint8)
+    bits = np.zeros(m, dtype=bool)  # bit i is bit (i & 7) of byte i >> 3
     if v.size:
         h1, h2 = _hash_pair(v)
         for i in range(k):
-            idx = (h1 + np.uint64(i) * h2) & mask
-            np.bitwise_or.at(bits, (idx >> np.uint64(3)).astype(np.int64),
-                             np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
-    return bits.tobytes()
+            bits[(h1 + np.uint64(i) * h2) & mask] = True
+    return np.packbits(bits, bitorder="little").tobytes()
 
 
 def bloom_may_contain(bitset: bytes, value: int, k: int = K_PROBES) -> bool:

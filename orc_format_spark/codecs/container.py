@@ -237,6 +237,7 @@ def encode_column(
     if has_null:
         streams.append((PRESENT, present_stream))
     est: dict[str, float] = {}
+    bounds: dict[str, float] = {}  # pruned candidates' lower bounds
     # "reference" mode pins every column to the reference writer's fixed
     # encodings (SignedIntRLEv1 DATA for ints — long.rs:24-27; raw DATA +
     # LENGTH for strings — string.rs:24-28); used as the compressed-size
@@ -258,7 +259,7 @@ def encode_column(
             v = v.astype(np.int64)  # date32 -> days
         use = _pick(("rle_v1", "rle_v2", "for_bitpack", "dict_int"), "rle_v1")
         if not use:
-            use, est, wire = select_and_encode_int(v, signed=True)
+            use, est, wire = select_and_encode_int(v, signed=True, _bounds=bounds)
             streams.append((DATA, wire))
         else:
             streams.append((DATA, _encode_int_values(use, v, True)))
@@ -301,7 +302,7 @@ def encode_column(
             v = _decimal_unscaled_i64(vals.combine_chunks() if isinstance(vals, pa.ChunkedArray) else vals)
             use = _pick(("rle_v1", "rle_v2", "for_bitpack", "dict_int"), "rle_v1")
             if not use:
-                use, est, wire = select_and_encode_int(v, signed=True)
+                use, est, wire = select_and_encode_int(v, signed=True, _bounds=bounds)
                 streams.append((DATA, wire))
             else:
                 streams.append((DATA, _encode_int_values(use, v, True)))
@@ -312,7 +313,7 @@ def encode_column(
             # fused select+encode: skips fsst training on clearly-dict
             # samples, reuses the selection-trained symbol table (and,
             # for sample-covered columns, the candidate bytes outright)
-            use, est, wire = select_and_encode_str(data, off)
+            use, est, wire = select_and_encode_str(data, off, _bounds=bounds)
             streams.append((DATA, wire))
         else:
             streams.append((DATA, _encode_str_values(use, data, off)))
@@ -325,7 +326,7 @@ def encode_column(
         child = lv.flatten()
         entry = _finish_entry(name, str(t), use, compression, has_null, n_rows, n_present, streams)
         entries.append(entry)
-        lineage.append(_lineage_row(name, entry, arr, est))
+        lineage.append(_lineage_row(name, entry, arr, est, bounds))
         encode_column(name + ".item", child, child_codec, compression, entries, lineage)
         return entries
     elif pa.types.is_struct(t):
@@ -337,7 +338,7 @@ def encode_column(
         sv = _combine(vals)
         entry = _finish_entry(name, str(t), use, compression, has_null, n_rows, n_present, streams)
         entries.append(entry)
-        lineage.append(_lineage_row(name, entry, arr, est))
+        lineage.append(_lineage_row(name, entry, arr, est, bounds))
         for i in range(t.num_fields):
             encode_column(
                 f"{name}.{t.field(i).name}", sv.field(i), child_codec, compression,
@@ -372,7 +373,7 @@ def encode_column(
         streams.append((DATA, rle_v1.encode_byte_rle(type_codes.view(np.uint8))))
         entry = _finish_entry(name, str(t), "union", compression, has_null, n_rows, n_present, streams)
         entries.append(entry)
-        lineage.append(_lineage_row(name, entry, arr, est))
+        lineage.append(_lineage_row(name, entry, arr, est, bounds))
         for i in range(t.num_fields):
             positions = np.flatnonzero(type_codes == codes[i])
             child_vals = uv.field(i).take(
@@ -399,7 +400,7 @@ def encode_column(
         items = mv.items.slice(start, end - start)
         entry = _finish_entry(name, str(t), use, compression, has_null, n_rows, n_present, streams)
         entries.append(entry)
-        lineage.append(_lineage_row(name, entry, arr, est))
+        lineage.append(_lineage_row(name, entry, arr, est, bounds))
         encode_column(f"{name}.key", keys, child_codec, compression, entries, lineage)
         encode_column(f"{name}.value", items, child_codec, compression, entries, lineage)
         return entries
@@ -408,7 +409,7 @@ def encode_column(
 
     entry = _finish_entry(name, str(t), use, compression, has_null, n_rows, n_present, streams)
     entries.append(entry)
-    lineage.append(_lineage_row(name, entry, arr, est))
+    lineage.append(_lineage_row(name, entry, arr, est, bounds))
     return entries
 
 
@@ -417,7 +418,10 @@ def _finish_entry(name, type_str, codec, compression, has_null, n_rows, n_presen
     return ColumnEntry(name, type_str, codec, compression, has_null, n_rows, n_present, comp_streams)
 
 
-def _lineage_row(name, entry: ColumnEntry, arr: pa.Array, est: dict) -> dict:
+def _lineage_row(name, entry: ColumnEntry, arr: pa.Array, est: dict, bounds: dict) -> dict:
+    """``candidates``: measured bytes per sampled unit of each candidate
+    the selector encoded; ``candidate_bounds``: the lower bounds, in the
+    same unit, of the candidates it pruned without encoding them."""
     return {
         "column": name,
         "codec": entry.codec,
@@ -426,6 +430,7 @@ def _lineage_row(name, entry: ColumnEntry, arr: pa.Array, est: dict) -> dict:
         "input_bytes": arr.nbytes,
         "output_bytes": sum(len(s) for _, s in entry.streams),
         "candidates": est,
+        "candidate_bounds": bounds,
     }
 
 
@@ -1173,14 +1178,16 @@ def stats_view(stats: dict | None):
 
 def _with_nulls(view, nulls: dict[str, Stats]):
     """``view`` with each column's has_null and non-null count taken
-    from ``nulls``; list-element stats describe elements, not rows, and
-    stay as they are."""
+    from ``nulls``; list-element stats take only has_null (a row-level
+    fact) and keep their element count."""
 
     def merged(col):
         s, h = view(col), nulls.get(col)
-        if h is None or (s is not None and s.elem):
-            return s
-        return h if s is None else s._replace(has_null=h.has_null, n=h.n)
+        if h is None or s is None:
+            return h if s is None else s
+        if s.elem:
+            return s._replace(has_null=h.has_null)
+        return s._replace(has_null=h.has_null, n=h.n)
 
     return merged
 

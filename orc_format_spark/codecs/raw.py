@@ -53,12 +53,16 @@ def encode_float_split(values: np.ndarray, double: bool = False) -> bytes:
     """Byte-stream split (the idea behind Parquet's BYTE_STREAM_SPLIT
     encoding, public format spec): byte j of every value is gathered
     into stream j, so the slowly-varying exponent/high-mantissa bytes
-    become long compressible runs for the block codec. Pure
-    reshape/transpose — fully vectorized, no per-value work."""
-    dt = "<f8" if double else "<f4"
-    w = 8 if double else 4
-    v = np.ascontiguousarray(values, dtype=dt)
-    return v.view(np.uint8).reshape(-1, w).T.tobytes()
+    become long compressible runs for the block codec. Stream j is
+    the low byte of each value's bit pattern shifted right by 8j:
+    ``w`` contiguous passes, several times faster than the strided
+    copy of a byte-matrix transpose."""
+    dt, ut = ("<f8", "<u8") if double else ("<f4", "<u4")
+    x = np.ascontiguousarray(values, dtype=dt).view(ut)
+    out = np.empty((x.dtype.itemsize, x.size), np.uint8)
+    for j in range(x.dtype.itemsize):
+        np.copyto(out[j], x >> x.dtype.type(8 * j), casting="unsafe")
+    return out.tobytes()
 
 
 def decode_float_split(buf, double: bool = False) -> np.ndarray:

@@ -32,7 +32,9 @@ import numpy as np
 
 from .varint import (
     decode_varints,
+    encode_varint_one,
     encode_varints,
+    varint_lengths,
     zigzag_decode,
     zigzag_encode,
 )
@@ -265,12 +267,33 @@ def _prep_u64(values: np.ndarray, signed: bool) -> np.ndarray:
     return np.ascontiguousarray(v, dtype=np.uint64)
 
 
+def _encode_constant_rle_v1(first: np.ndarray, n: int, signed: bool) -> bytes:
+    """The greedy machine's output for ``n`` copies of ``first[0]``:
+    delta-0 runs of 130 from the start, then a run of the remaining
+    3..129 values, or 1-2 leftover values as one literal group."""
+    z = zigzag_encode(first.view(np.int64)) if signed else first
+    vb = encode_varint_one(int(z[0]))
+    full, tail = divmod(n, _RUN_CAP)
+    out = bytes((_RUN_CAP - 3, 0)) + vb
+    if tail >= 3:
+        return out * full + bytes((tail - 3, 0)) + vb
+    return out * full + (bytes((256 - tail,)) + vb * tail if tail else b"")
+
+
 def encode_int_rle_v1(values: np.ndarray, signed: bool = True) -> bytes:
     """IntRLEv1, bit-identical to int_rle_v1.rs:49-97 (greedy delta runs)."""
     u = _prep_u64(values, signed)
     n = u.size
     if n == 0:
         return b""
+    if u[0] == u[-1] and (u == u[0]).all():
+        return _encode_constant_rle_v1(u[:1], n, signed)
+    return _encode_greedy_rle_v1(u, signed)
+
+
+def _encode_greedy_rle_v1(u: np.ndarray, signed: bool) -> bytes:
+    """IntRLEv1 of a non-empty ``_prep_u64`` array, any shape of input."""
+    n = u.size
     d = np.zeros(n, np.uint64)
     d[1:] = u[1:] - u[:-1]  # wrapping subtraction
     di = d.view(np.int64)
@@ -298,6 +321,48 @@ def encode_int_rle_v1(values: np.ndarray, signed: bool = True) -> bytes:
         )
     out[np.arange(vbytes.size, dtype=np.int64) + np.repeat(cum_h, plen)] = vbytes
     return out.tobytes()
+
+
+def size_lower_bound(values: np.ndarray, signed: bool = True) -> int:
+    """A size ``encode_int_rle_v1(values, signed)`` never undercuts.
+
+    Only a "triple" (three consecutive values with one constant delta in
+    [-128, 128)) can sit in a run group, and a run group's triples all
+    lie in one maximal run of triples (a *region*). So:
+
+    - a value in no triple is literal: its varint, plus one literal
+      header per 128 such values;
+    - a region whose values are ``m`` varint bytes or more costs at
+      least ``2 + m`` (a run group: header, delta, base) or, if it holds
+      no run group, ``m`` per value it owns. Adjacent regions share at
+      most one value; a shared value is owned by the earlier region, and
+      a region's last value may sit in the next region's run group, so
+      ``L - shared`` of its ``L`` values are surely literal and its own.
+    """
+    u = _prep_u64(values, signed)
+    n = u.size
+    if n == 0:
+        return 0
+    vlen = varint_lengths(zigzag_encode(u.view(np.int64)) if signed else u)
+    d = np.diff(u)  # wrapping
+    tri = (d[1:] == d[:-1]) & (d[1:] + np.uint64(128) < np.uint64(256))
+    cov = np.zeros(n, bool)
+    cov[: n - 2] = tri
+    cov[1 : n - 1] |= tri
+    cov[2:] |= tri
+    lit_vlen = vlen[~cov]
+    bound = int(lit_vlen.sum()) + -(-lit_vlen.size // _LIT_CAP)
+    if lit_vlen.size < n:
+        edge = np.flatnonzero(np.diff(tri, prepend=False, append=False))
+        a = edge[::2]  # first triple of each region
+        e = edge[1::2] + 2  # one past its last value
+        shared = a[1:] == e[:-1] - 1
+        lit = e - a  # values per region, less the shared ones
+        lit[1:] -= shared
+        lit[:-1] -= shared
+        m = np.minimum.reduceat(np.append(vlen, 0), np.stack([a, e], 1).ravel())[::2]
+        bound += int(np.minimum(2 + m, lit * m).sum())
+    return bound
 
 
 def decode_int_rle_v1(buf, signed: bool = True,

@@ -61,7 +61,7 @@ from .bitpack import (
     round_width,
     width_code,
 )
-from .rle_v1 import _range_gather_indices
+from .rle_v1 import _prep_u64, _range_gather_indices
 from .varint import (
     decode_varint_one,
     encode_varint_one,
@@ -410,20 +410,14 @@ def _full_chunk_entries(u: np.ndarray, zz: np.ndarray, cs: np.ndarray,
     return entries
 
 
-def encode_int_rle_v2(values: np.ndarray, signed: bool = True) -> bytes:
-    v = np.asarray(values)
-    if signed:
-        u = np.ascontiguousarray(v, dtype=np.int64).view(np.uint64)
-    else:
-        u = np.ascontiguousarray(v, dtype=np.uint64)
+def _segments(u: np.ndarray):
+    """(run starts, run lengths, stretch starts, stretch ends) of a
+    non-empty array. Only long equal-value runs (>= 32) are split out:
+    short runs inside a monotonic stretch are cheaper in a 1-bit-delta
+    512-chunk than as standalone groups. The literal stretches are the
+    gaps before, between and after the long runs; stretch j precedes
+    run j, and each is cut into 512-value chunks from its start."""
     n = u.size
-    if n == 0:
-        return b""
-    zz_full = zigzag_encode(u.view(np.int64)) if signed else u
-    # Only long equal-value runs (>= 32) are split out: short runs inside
-    # a monotonic stretch are cheaper in a 1-bit-delta 512-chunk than as
-    # standalone groups. The literal stretches are the gaps before,
-    # between and after the long runs; stretch j precedes run j.
     change = np.empty(n, bool)
     change[0] = True
     change[1:] = u[1:] != u[:-1]
@@ -434,6 +428,68 @@ def encode_int_rle_v2(values: np.ndarray, signed: bool = True) -> bytes:
     run_len = lengths[long_runs]
     lit_s = np.concatenate(([0], run_s + run_len))
     lit_e = np.append(run_s, n)
+    return run_s, run_len, lit_s, lit_e
+
+
+def size_lower_bound(values: np.ndarray, signed: bool = True,
+                     above: int | None = None) -> int:
+    """A size ``encode_int_rle_v2(values, signed)`` never undercuts.
+
+    Long runs count 0. Each literal chunk (``_segments``) costs at least
+    2 bytes if it is monotone (delta, short-repeat or one value), else
+    the least of its exact DIRECT size and a PATCHED_BASE floor: a
+    5-byte header and base, and every value packed at a spec width that
+    holds all but 31 of the chunk's residuals (a patch list has at most
+    31 entries), i.e. at least the bit length of its 32nd-largest.
+
+    With ``above`` set, the partitions behind the patched-base floor are
+    skipped when the bound cannot exceed ``above`` anyway; the value
+    returned is then a weaker bound (every patched value at 1 bit)."""
+    u = _prep_u64(values, signed)
+    if u.size == 0:
+        return 0
+    _, _, lit_s, lit_e = _segments(u)
+    nch = -(-(lit_e - lit_s) // _MAX_CHUNK)
+    first = np.cumsum(nch) - nch
+    c_s = np.repeat(lit_s, nch) + _MAX_CHUNK * (
+        np.arange(int(nch.sum())) - np.repeat(first, nch)
+    )
+    c_e = np.minimum(c_s + _MAX_CHUNK, np.repeat(lit_e, nch))
+    c = c_e - c_s
+    if c.size == 0:
+        return 0
+    val = u.view(np.int64) if signed else u
+    zz = zigzag_encode(val) if signed else u
+    spans = np.stack([c_s, c_e], 1).ravel()  # reduceat: even rows
+    direct = _direct_size(c, _ROUND_W[np.maximum(1, _bit_lengths(
+        np.maximum.reduceat(np.append(zz, zz[:1]), spans)[::2]))])
+    steps = np.stack([c_s, c_e - 1], 1).ravel()
+    up = np.append(val[1:] >= val[:-1], True)
+    down = np.append(val[1:] <= val[:-1], True)
+    mono = ((c == 1) | np.minimum.reduceat(up, steps)[::2]
+            | np.minimum.reduceat(down, steps)[::2])
+    patch_w = np.ones(c.size, np.int64)
+    if above is None or int(np.where(mono, 2, direct).sum()) > above:
+        lo = np.minimum.reduceat(np.append(val, val[:1]), spans)[::2].view(np.uint64)
+        rank = _MAX_CHUNK - 32
+        full = np.flatnonzero(~mono & (c == _MAX_CHUNK))
+        if full.size:
+            r = u[c_s[full, None] + np.arange(_MAX_CHUNK)] - lo[full, None]
+            patch_w[full] = _bit_lengths(np.partition(r, rank, axis=1)[:, rank])
+        for j in np.flatnonzero(~mono & (c >= 32) & (c < _MAX_CHUNK)).tolist():
+            rank = int(c[j]) - 32
+            patch_w[j] = int(np.partition(u[c_s[j] : c_e[j]] - lo[j], rank)[rank]).bit_length()
+    patched = 5 + (c * _ROUND_W[np.maximum(1, patch_w)] + 7) // 8
+    return int(np.where(mono, 2, np.minimum(direct, patched)).sum())
+
+
+def encode_int_rle_v2(values: np.ndarray, signed: bool = True) -> bytes:
+    u = _prep_u64(values, signed)
+    n = u.size
+    if n == 0:
+        return b""
+    zz_full = zigzag_encode(u.view(np.int64)) if signed else u
+    run_s, run_len, lit_s, lit_e = _segments(u)
     nfull = (lit_e - lit_s) // _MAX_CHUNK
     first = np.cumsum(nfull) - nfull
     cs = np.repeat(lit_s, nfull) + _MAX_CHUNK * (

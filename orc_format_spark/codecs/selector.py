@@ -5,15 +5,41 @@ encoding (string.rs:173-177; SURVEY.md section 4.2). This module is the
 Spark-era replacement mandated by BASELINE.json's north rule: sampled
 cardinality / run-length / value-range statistics drive the choice.
 
-Strategy: honesty over modeling — each candidate codec is actually run on
-a bounded contiguous sample (default 16Ki values) and the cheapest
-extrapolated size wins. Sampling cost is O(sample) per partition and the
-measured bytes/value feed the codec-lineage metrics row.
+Every choice is made on a bounded contiguous sample (16Ki values for
+numbers, 2,048 strings) and is exactly the codec that trial-encoding
+every candidate would pick (the first minimum in candidate order), so
+no output byte depends on how the choice was reached:
+
+1. Exact sizes first: the candidate with the cheap kernel is encoded
+   outright (``for_bitpack`` for ints, ``dict_str`` for clearly
+   low-cardinality strings).
+2. Then lower bounds: for each other candidate, one pass over the
+   sample gives a size its encoder provably never undercuts
+   (``rle_v2.size_lower_bound``: per-chunk direct and patched-base
+   floors; ``rle_v1.size_lower_bound``: literal varints and run
+   groups; the index width of the leading distinct count for
+   ``dict_int``; the payload length for ``raw_str``).
+3. A trial encode only where a bound can still win (``_can_win``):
+   below the best exact size so far, or equal to it when the candidate
+   comes first in order and so would win the tie.
+
+The estimates (``est``) hold the measured bytes per sampled value (per
+sampled payload byte for strings) of the candidates that were encoded;
+pruned candidates' bounds go to the optional ``_bounds`` dict, which
+the container records in the codec-lineage row.
+
+Floats stay trial-encoded: their candidates are compared after the
+block codec, and a post-zstd size has no provable bound. Rules such as
+"ALP wins when it is exact and at most 4 B/value" change winners on
+ordinary columns (a 0.01-step progression is 0.197 B/value as
+``float_split`` and 1.703 as ``alp``), so the float kernels are made
+cheap instead.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.compute as pc
 
 from . import dictionary, fsst, raw, rle_v1, rle_v2
 from .bitpack import encode_for_bitpack
@@ -59,14 +85,30 @@ def _encode_str(codec: str, data: np.ndarray, offsets: np.ndarray,
     raise ValueError(codec)
 
 
+def _can_win(c: str, bound: int, size: dict[str, int], order: tuple) -> bool:
+    """Whether a candidate of at least ``bound`` bytes could still be
+    the first minimum in ``order`` among the exact ``size``s so far."""
+    if not size:
+        return True
+    best = min(size.values())
+    first = next(x for x in order if size.get(x) == best)
+    return bound < best or (bound == best and order.index(c) < order.index(first))
+
+
 def select_and_encode_int(
-    v: np.ndarray, signed: bool = True, sample: int = SAMPLE_VALUES
+    v: np.ndarray, signed: bool = True, sample: int = SAMPLE_VALUES, *,
+    _bounds: dict | None = None,
 ) -> tuple[str, dict[str, float], bytes]:
     """Selection + final encode fused: returns (codec, estimates, wire
     bytes). When the sample covered the whole column (the common case
     for every column except long token lists), the winning candidate's
     bytes ARE the final bytes — one encode instead of two, bit-identical
-    (every int codec is deterministic)."""
+    (every int codec is deterministic).
+
+    ``for_bitpack`` (exact and cheap) is encoded first; ``rle_v2``,
+    ``rle_v1`` and, below a 0.5 distinct ratio, ``dict_int`` follow
+    only when their lower bound can still win. ``_bounds`` receives the
+    pruned ones' bounds in bytes per value."""
     n = v.size
     if n == 0:
         return "rle_v1", {}, _encode_int("rle_v1", v, signed)
@@ -74,17 +116,33 @@ def select_and_encode_int(
     # cheap stats to prune candidates
     uniq = np.unique(s[: 4096])
     card_ratio = uniq.size / min(len(s), 4096)
-    cands = ["rle_v1", "rle_v2", "for_bitpack"]
-    if card_ratio < 0.5:
-        cands.append("dict_int")
-    est: dict[str, float] = {}
+    size: dict[str, int] = {}
     enc: dict[str, bytes] = {}
-    for c in cands:
+
+    def trial(c: str) -> None:
         try:
             enc[c] = _encode_int(c, s, signed)
-            est[c] = len(enc[c]) / len(s)
         except Exception:
+            return
+        size[c] = len(enc[c])
+
+    trial("for_bitpack")
+    for c in ("rle_v2", "rle_v1", "dict_int"):
+        if c == "rle_v2":
+            bound = rle_v2.size_lower_bound(s, signed, above=size.get("for_bitpack"))
+        elif c == "rle_v1":
+            bound = rle_v1.size_lower_bound(s, signed)
+        elif card_ratio < 0.5:
+            # the index stream alone, at the width of the leading
+            # distinct count, plus >= 6 bytes of counts and dictionary
+            bound = -(-len(s) * dictionary._index_width(uniq.size) // 8) + 6
+        else:
             continue
+        if _can_win(c, bound, size, INT_CANDIDATES):
+            trial(c)
+        elif _bounds is not None:
+            _bounds[c] = bound / len(s)
+    est = {c: size[c] / len(s) for c in INT_CANDIDATES if c in size}
     best = min(est, key=est.get)
     if n <= sample:
         return best, est, enc[best]
@@ -92,20 +150,27 @@ def select_and_encode_int(
 
 
 def select_and_encode_str(
-    data: np.ndarray, offsets: np.ndarray, sample: int = 2048
+    data: np.ndarray, offsets: np.ndarray, sample: int = 2048, *,
+    _bounds: dict | None = None,
 ) -> tuple[str, dict[str, float], bytes]:
     """Selection + final encode fused: returns (codec, estimates, wire
-    bytes). Two measured savings over select-then-encode, both
+    bytes). Three measured savings over select-then-encode, all
     bit-identical to the unfused output:
 
     - a clearly low-cardinality sample (distinct ratio < 5% over the
       first 512 strings) never picks fsst over dict, so fsst's symbol
-      table training is skipped in selection entirely;
+      table training is skipped in selection entirely; ``dict_str`` is
+      encoded first, and ``raw_str`` only when its lower bound (the
+      payload, two bytes per 130-value length group, two count bytes)
+      does not exceed the dictionary's size;
     - when fsst IS tried and the sample holds >= the fsst training
       window (_SAMPLE_BYTES), the final encode trains on exactly the
       same leading bytes — the selection-trained table is reused
       instead of retrained; and when the sample covered the whole
       column, the winning candidate's bytes ARE the final bytes.
+
+    ``_bounds`` receives a pruned ``raw_str``'s bound in bytes per
+    sampled payload byte, the unit of the estimates.
     """
     n = offsets.size - 1
     if n == 0:
@@ -114,32 +179,40 @@ def select_and_encode_str(
     sdata = data[: int(offsets[k])]
     soff = offsets[: k + 1]
     k0 = min(n, 512)
-    distinct = len(
-        {bytes(data[offsets[i] : offsets[i + 1]]) for i in range(k0)}
-    )
-    cands = list(STR_CANDIDATES)
-    if distinct / k0 < 0.05:
-        cands.remove("fsst")
-    est: dict[str, float] = {}
+    head = dictionary._binary_array(data[: int(offsets[k0])], offsets[: k0 + 1])
+    distinct = pc.count_distinct(head).as_py()
+    size: dict[str, int] = {}
     enc: dict[str, bytes] = {}
     fsst_table = None
     nbytes = max(1, sdata.size)
-    for c in cands:
+
+    def trial(c: str, table=None) -> None:
         try:
-            if c == "fsst":
-                tbl = fsst.SymbolTable(
-                    fsst.train_symbol_table(
-                        sdata[: fsst._SAMPLE_BYTES].tobytes()
-                    )
-                )
-                if sdata.size >= fsst._SAMPLE_BYTES:
-                    fsst_table = tbl
-                enc[c] = _encode_str(c, sdata, soff, table=tbl)
-            else:
-                enc[c] = _encode_str(c, sdata, soff)
-            est[c] = len(enc[c]) / nbytes
+            enc[c] = _encode_str(c, sdata, soff, table=table)
         except Exception:
-            continue
+            return
+        size[c] = len(enc[c])
+
+    if distinct / k0 < 0.05:
+        trial("dict_str")
+        bound = sdata.size + 2 * -(-k // rle_v1._RUN_CAP) + 2
+        if _can_win("raw_str", bound, size, STR_CANDIDATES):
+            trial("raw_str")
+        elif _bounds is not None:
+            _bounds["raw_str"] = bound / nbytes
+    else:
+        trial("raw_str")
+        trial("dict_str")
+        try:
+            tbl = fsst.SymbolTable(
+                fsst.train_symbol_table(sdata[: fsst._SAMPLE_BYTES].tobytes())
+            )
+            if sdata.size >= fsst._SAMPLE_BYTES:
+                fsst_table = tbl
+            trial("fsst", tbl)
+        except Exception:
+            pass
+    est = {c: size[c] / nbytes for c in STR_CANDIDATES if c in size}
     best = min(est, key=est.get)
     if k == n:
         return best, est, enc[best]

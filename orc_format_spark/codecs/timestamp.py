@@ -25,6 +25,8 @@ _POW10 = np.array([10**k for k in range(10)], dtype=np.int64)
 def compact_nanos(nanos: np.ndarray) -> np.ndarray:
     """Vectorized trailing-zero compaction -> uint64 SECONDARY values."""
     nz = np.ascontiguousarray(nanos, dtype=np.int64)
+    if not nz.any():
+        return np.zeros(nz.size, np.uint64)  # whole-second timestamps
     z = np.zeros(nz.size, np.int64)
     pos = nz > 0
     for k in range(1, 9):

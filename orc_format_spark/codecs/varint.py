@@ -34,6 +34,18 @@ def zigzag_decode(z: np.ndarray) -> np.ndarray:
     return u.view(np.int64)
 
 
+def varint_lengths(u: np.ndarray) -> np.ndarray:
+    """Bytes of each value's varint (non-empty uint64 array): 1 + the
+    number of 7-bit thresholds it reaches."""
+    nb = np.ones(u.size, np.int64)
+    mx = int(u.max())
+    for k in range(1, 10):
+        if mx < (1 << (7 * k)):
+            break
+        nb += (u >= np.uint64(1 << (7 * k))).astype(np.int64)
+    return nb
+
+
 def encode_varints(u: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Encode a uint64 array as concatenated LEB128 varints.
 
@@ -44,13 +56,7 @@ def encode_varints(u: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     n = u.size
     if n == 0:
         return np.empty(0, np.uint8), np.zeros(1, np.int64)
-    # byte count per value: 1 + number of 7-bit thresholds exceeded
-    nb = np.ones(n, np.int64)
-    mx = int(u.max())
-    for k in range(1, 10):
-        if mx < (1 << (7 * k)):
-            break
-        nb += (u >= np.uint64(1 << (7 * k))).astype(np.int64)
+    nb = varint_lengths(u)
     offsets = np.zeros(n + 1, np.int64)
     np.cumsum(nb, out=offsets[1:])
     out = np.zeros(int(offsets[-1]), np.uint8)

@@ -50,7 +50,8 @@ class Stats(NamedTuple):
     ``lo``/``hi`` bound the non-null values, in the domain ``conv`` maps
     a literal into (raising TypeError outside it); ``n`` counts non-null
     values; ``bloom(lit)`` is False only when no value equals ``lit``;
-    ``elem`` stats describe list elements and answer only ``contains``."""
+    ``elem`` stats' bounds and ``n`` describe list elements and answer
+    only ``contains``; their ``has_null`` is still row-level."""
 
     lo: object = None
     hi: object = None
@@ -165,10 +166,12 @@ def _leaf_may_match(leaf: Leaf, s: Stats | None) -> bool:
         return True
     if op == "in" and not leaf.lit:
         return False  # IN () matches nothing
-    if s is None or s.elem != (op == "contains"):
+    if s is None:
         return True
-    if op == "isnull":
+    if op == "isnull":  # has_null is row-level, element stats included
         return s.has_null is not False
+    if s.elem != (op == "contains"):
+        return True  # element n counts elements, not non-null rows
     if op == "notnull":
         return s.n != 0
     if s.n == 0:

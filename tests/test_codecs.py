@@ -680,6 +680,31 @@ def test_float_codecs_roundtrip_bit_exact_through_container():
     )
 
 
+def test_float_winners_pinned_where_a_rule_would_err():
+    """Columns on which "ALP wins when it is exact and <= 4 B/value"
+    picks the wrong codec: ALP encodes each exactly, yet another
+    candidate compresses smaller under zstd. Any float rule that
+    replaces trial encoding must keep these winners."""
+    rng = np.random.default_rng(0)
+    cases = {
+        # 0.197 B/value as float_split, 1.703 as alp
+        "progression": (np.round(np.arange(10_000) * 0.01, 2), "float_split"),
+        "runs_of_100": (np.repeat(rng.integers(0, 10**6, 100).astype(np.float64), 100), "raw_double"),
+        "small_int_runs": (np.repeat(rng.integers(0, 100, 500), 20).astype(np.float64), "float_split"),
+        "period_7": (np.tile(np.round(rng.random(7) * 100, 2), 1429)[:10_000], "raw_double"),
+    }
+    from orc_format_spark.codecs.alp import encode_alp
+    from orc_format_spark.codecs.varint import decode_varint_one
+
+    for name, (v, want) in cases.items():
+        enc = encode_alp(v)
+        _, pos = decode_varint_one(enc, 2)
+        assert decode_varint_one(enc, pos)[0] == 0, name  # no exceptions
+        best, est, _ = select_and_encode_float(v, double=True)
+        assert best == want, (name, est)
+        assert est["alp"] <= 4.0, (name, est)
+
+
 def test_alp_roundtrip_and_selection():
     """ALP (public SIGMOD'24 paper) reproduces decimal-like doubles
     bit-exactly via round(v*10^e*10^-f) digits + FoR, patches true

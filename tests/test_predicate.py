@@ -656,6 +656,38 @@ def test_isnull_prunes_chunks_from_body_headers(monkeypatch):
         assert len(calls) == n_chunks, pred
 
 
+def test_isnull_prunes_list_chunks_with_element_stats(monkeypatch):
+    """Element stats (a Bloom-indexed ``list<int>``) describe elements,
+    but ``isnull`` asks about rows: the body header's has_null still
+    prunes, and the element count never answers ``notnull``."""
+    calls = []
+    orig = container._decode_body
+    monkeypatch.setattr(
+        container, "_decode_body",
+        lambda b, c=None: calls.append(1) or orig(b, c),
+    )
+    lists = [[i, i + 1] for i in range(1000)]
+    tbl = pa.table({"t": pa.array(lists, pa.list_(pa.int32()))})
+    blob = encode_table(tbl, stride=100, bloom_columns=["t"])[0]
+    out = decode_table(blob, predicate=("t", "isnull", None))
+    assert out.num_rows == 0 and out.schema == tbl.schema
+    assert len(calls) == 1  # the zero-row schema decode of chunk 0
+
+    # nulls in rows [300, 310); an empty list is a row, not a null
+    lists = [None if 300 <= i < 310 else ([] if i % 3 == 0 else [i]) for i in range(1000)]
+    tbl = pa.table({"t": pa.array(lists, pa.list_(pa.int32()))})
+    blob = encode_table(tbl, stride=100, bloom_columns=["t"])[0]
+    for pred, want, n_chunks in [
+        (("t", "isnull", None), [lists[i] for i in range(300, 310)], 1),
+        (("t", "notnull", None), [x for x in lists if x is not None], 10),
+        (("t", "contains", 905), [[905]], 1),
+    ]:
+        calls.clear()
+        got = decode_table(blob, predicate=pred)
+        assert got.column("t").to_pylist() == want, pred
+        assert len(calls) == n_chunks, pred
+
+
 def test_pruning_power_pinned(monkeypatch):
     """The lookup shapes of the lineitem benchmark (``==``, ``in``, a
     ``>=``/``<`` range, plus Bloom-served ``==``/``in`` on an unclustered
