@@ -431,8 +431,7 @@ def _segments(u: np.ndarray):
     return run_s, run_len, lit_s, lit_e
 
 
-def size_lower_bound(values: np.ndarray, signed: bool = True,
-                     above: int | None = None) -> int:
+def size_lower_bound(values: np.ndarray, signed: bool = True) -> int:
     """A size ``encode_int_rle_v2(values, signed)`` never undercuts.
 
     Long runs count 0. Each literal chunk (``_segments``) costs at least
@@ -440,11 +439,7 @@ def size_lower_bound(values: np.ndarray, signed: bool = True,
     the least of its exact DIRECT size and a PATCHED_BASE floor: a
     5-byte header and base, and every value packed at a spec width that
     holds all but 31 of the chunk's residuals (a patch list has at most
-    31 entries), i.e. at least the bit length of its 32nd-largest.
-
-    With ``above`` set, the partitions behind the patched-base floor are
-    skipped when the bound cannot exceed ``above`` anyway; the value
-    returned is then a weaker bound (every patched value at 1 bit)."""
+    31 entries), i.e. at least the bit length of its 32nd-largest."""
     u = _prep_u64(values, signed)
     if u.size == 0:
         return 0
@@ -469,16 +464,15 @@ def size_lower_bound(values: np.ndarray, signed: bool = True,
     mono = ((c == 1) | np.minimum.reduceat(up, steps)[::2]
             | np.minimum.reduceat(down, steps)[::2])
     patch_w = np.ones(c.size, np.int64)
-    if above is None or int(np.where(mono, 2, direct).sum()) > above:
-        lo = np.minimum.reduceat(np.append(val, val[:1]), spans)[::2].view(np.uint64)
-        rank = _MAX_CHUNK - 32
-        full = np.flatnonzero(~mono & (c == _MAX_CHUNK))
-        if full.size:
-            r = u[c_s[full, None] + np.arange(_MAX_CHUNK)] - lo[full, None]
-            patch_w[full] = _bit_lengths(np.partition(r, rank, axis=1)[:, rank])
-        for j in np.flatnonzero(~mono & (c >= 32) & (c < _MAX_CHUNK)).tolist():
-            rank = int(c[j]) - 32
-            patch_w[j] = int(np.partition(u[c_s[j] : c_e[j]] - lo[j], rank)[rank]).bit_length()
+    lo = np.minimum.reduceat(np.append(val, val[:1]), spans)[::2].view(np.uint64)
+    rank = _MAX_CHUNK - 32
+    full = np.flatnonzero(~mono & (c == _MAX_CHUNK))
+    if full.size:
+        r = u[c_s[full, None] + np.arange(_MAX_CHUNK)] - lo[full, None]
+        patch_w[full] = _bit_lengths(np.partition(r, rank, axis=1)[:, rank])
+    for j in np.flatnonzero(~mono & (c >= 32) & (c < _MAX_CHUNK)).tolist():
+        rank = int(c[j]) - 32
+        patch_w[j] = int(np.partition(u[c_s[j] : c_e[j]] - lo[j], rank)[rank]).bit_length()
     patched = 5 + (c * _ROUND_W[np.maximum(1, patch_w)] + 7) // 8
     return int(np.where(mono, 2, np.minimum(direct, patched)).sum())
 

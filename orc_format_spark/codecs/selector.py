@@ -129,7 +129,7 @@ def select_and_encode_int(
     trial("for_bitpack")
     for c in ("rle_v2", "rle_v1", "dict_int"):
         if c == "rle_v2":
-            bound = rle_v2.size_lower_bound(s, signed, above=size.get("for_bitpack"))
+            bound = rle_v2.size_lower_bound(s, signed)
         elif c == "rle_v1":
             bound = rle_v1.size_lower_bound(s, signed)
         elif card_ratio < 0.5:
