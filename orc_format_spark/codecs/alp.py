@@ -121,10 +121,11 @@ def _choose_exponents(v64: np.ndarray, sample: int = 1024) -> tuple[int, int]:
     and exact-digit span can only be fewer and narrower than on the
     whole sample, so its prefix ``_bits`` (with the full n) is a lower
     bound of its cost. At each of ``_STAGES`` the best-bounded
-    candidate with an exact prefix value is scored on the whole sample
-    and becomes the incumbent if it beats it; candidates bounded above
-    the incumbent's cost are dropped (on a tie, kept only if they come
-    before the incumbent, so the first minimum still wins). Each value
+    candidate with no prefix exception (else with at least one exact
+    prefix value) is scored on the whole sample and becomes the
+    incumbent if it beats it; candidates bounded above the incumbent's
+    cost are dropped (on a tie, kept only if they come before the
+    incumbent, so the first minimum still wins). Each value
     is scored at most once per surviving candidate: on lineitem's
     decimal columns the search scores a fifth of the full 153 x 1024
     matrix, and on real-valued columns, where nothing is pruned, all of
@@ -146,7 +147,12 @@ def _choose_exponents(v64: np.ndarray, sample: int = 1024) -> tuple[int, int]:
         if m == n:
             break
         bound = _bits(n, n_exc, hi, lo)
-        seedable = np.flatnonzero(n_exc < m)
+        # seed from the best-bounded candidate exact on the whole
+        # prefix; a few prefix exceptions can hide a cost far above the
+        # bound (l_extendedprice's (16, 15): 23,152 bound, 97,680 cost)
+        seedable = np.flatnonzero(n_exc == 0)
+        if not seedable.size:
+            seedable = np.flatnonzero(n_exc < m)
         if seedable.size:
             k = int(idx[seedable[np.argmin(bound[seedable])]])
             seed = (int(_bits(n, *_block_stats(s, np.array([k])))[0]), k)

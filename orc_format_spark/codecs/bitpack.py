@@ -187,6 +187,54 @@ def bitunpack(buf, width: int, count: int) -> np.ndarray:
     return np.ascontiguousarray(out.T).reshape(-1)[:count].astype(np.uint64)
 
 
+def bitunpack_runs(src: np.ndarray, offs, counts, width: int) -> np.ndarray:
+    """Several bit-packed payloads of one ``width`` in one call: payload
+    i holds ``counts[i]`` values MSB-first from byte ``offs[i]`` of the
+    uint8 array ``src``; payloads come in increasing offset order and do
+    not overlap. Returns their values concatenated, equal to
+    ``bitunpack`` of each payload in turn.
+
+    Payloads that all end on a byte boundary are copied into one packed
+    stream: read as big-endian words at 8/16/32/64 bits, else unpacked
+    by one ``bitunpack`` (up to 24 bits, where its block kernel is the
+    faster). Otherwise each value is cut from the two big-endian 64-bit
+    words that hold its bits, so a payload's padding bits need no
+    alignment with the next one's."""
+    counts = np.asarray(counts, np.int64)
+    total = int(counts.sum())
+    if total == 0 or width == 0:
+        return np.zeros(total, np.uint64)
+    offs = np.asarray(offs, np.int64)
+    nbytes = (counts * width + 7) // 8
+    if int(offs[-1] + nbytes[-1]) > src.size:
+        raise ValueError("bitunpack: payload runs past its buffer")
+    if not (counts * width % 8).any() and (width % 8 == 0 or width <= 24):
+        raw = np.concatenate([src[o : o + n] for o, n in
+                              zip(offs.tolist(), nbytes.tolist())])
+        if width in (8, 16, 32, 64):
+            return raw.view(f">u{width // 8}").astype(np.uint64)
+        return bitunpack(raw, width, total)
+    base = int(offs[0])
+    first = np.cumsum(counts) - counts
+    # bit position of every value, counted from byte ``base``
+    bit = np.arange(total, dtype=np.uint64) * np.uint64(width)
+    bit += np.repeat(((offs - base) * 8 - first * width).astype(np.uint64), counts)
+    need = (int(bit[-1]) + width + 7) // 8
+    words = np.zeros(need // 8 + 2, ">u8")
+    words.view(np.uint8)[:need] = src[base : base + need]
+    words = words.astype(np.uint64)
+    i = bit >> np.uint64(6)
+    s = bit & np.uint64(63)
+    # (w >> 1) >> (63 - s) is w >> (64 - s) without a 64-bit shift at s = 0
+    hi = (words[1:] >> np.uint64(1))[i]
+    hi >>= ~bit & np.uint64(63)
+    lo = words[i]
+    lo <<= s
+    lo |= hi
+    lo >>= np.uint64(64 - width)
+    return lo
+
+
 # ------------------------------------------------------- frame-of-reference
 
 

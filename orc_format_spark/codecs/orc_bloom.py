@@ -186,10 +186,9 @@ class OrcBloomFilter:
         return (combined.astype(np.int64) % self.num_bits).ravel()
 
     def _set(self, h64: np.ndarray) -> None:
-        pos = self._positions(h64)
-        np.bitwise_or.at(
-            self._words, pos // 64, np.uint64(1) << (pos % 64).astype(np.uint64)
-        )
+        bits = np.zeros(self.num_bits, bool)  # bit i is bit i % 64 of word i // 64
+        bits[self._positions(h64)] = True
+        self._words |= np.packbits(bits, bitorder="little").view("<u8").astype(np.uint64)
 
     def _test_one(self, h64: int) -> bool:
         pos = self._positions(np.array([h64], np.uint64))

@@ -383,8 +383,7 @@ def decode_int_rle_v1(buf, signed: bool = True,
     kinds: list[bool] = []
     cnts: list[int] = []
     deltas: list[int] = []
-    vr_start: list[int] = []  # varint byte-range per group
-    vr_len: list[int] = []
+    vr_start: list[int] = []  # first varint byte per group
     i = 0
     ti = 0
     total = 0
@@ -402,7 +401,6 @@ def decode_int_rle_v1(buf, signed: bool = True,
             cnts.append(h + 3)
             deltas.append(delta - 256 if delta >= 128 else delta)
             vr_start.append(vs)
-            vr_len.append(ve + 1 - vs)
             i = ve + 1
             total += h + 3
         else:  # literal group: header + cnt varints
@@ -416,17 +414,23 @@ def decode_int_rle_v1(buf, signed: bool = True,
             cnts.append(cnt)
             deltas.append(0)
             vr_start.append(vs)
-            vr_len.append(ve + 1 - vs)
             i = ve + 1
             total += cnt
     if not cnts:  # count=0 positioned read: nothing to materialize
         return np.empty(0, np.int64 if signed else np.uint64)
     is_run = np.array(kinds, bool)
     cnt_a = np.array(cnts, np.int64)
-    vbytes = b[_range_gather_indices(np.array(vr_start, np.int64), np.array(vr_len, np.int64))]
     vcnt = np.where(is_run, 1, cnt_a)
-    vals_u, _ = decode_varints(vbytes, count=int(vcnt.sum()))
+    # the varint bytes: every scanned byte but the group headers (and
+    # run groups' delta bytes)
+    keep = np.ones(i, bool)
+    vs_a = np.array(vr_start, np.int64)
+    keep[vs_a - 1] = False
+    keep[vs_a[is_run] - 2] = False
+    vals_u, _ = decode_varints(b[:i][keep], count=int(vcnt.sum()))
     vals = zigzag_decode(vals_u).view(np.uint64) if signed else vals_u
+    if not any(kinds):  # literal groups only: values are in output order
+        return vals.view(np.int64) if signed else vals
     vends = np.cumsum(vcnt)
     vstarts = vends - vcnt
     oends = np.cumsum(cnt_a)

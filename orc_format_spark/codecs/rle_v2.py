@@ -57,6 +57,7 @@ import numpy as np
 from .bitpack import (
     bitpack,
     bitunpack,
+    bitunpack_runs,
     code_width,
     round_width,
     width_code,
@@ -540,85 +541,54 @@ def _join_deferred(out: list) -> bytes:
 # ------------------------------------------------------------------ decode
 
 
-def _gather_ranges(src: np.ndarray, starts, lens) -> np.ndarray:
-    """Concatenate src[starts[i] : starts[i]+lens[i]].
-
-    Real RLEv2 streams are dominated by uniform 512-value runs, so the
-    ranges usually share one length and one stride — served by a
-    strided view + copy instead of a len-total fancy-index gather."""
-    starts = np.asarray(starts, np.int64)
-    lens = np.asarray(lens, np.int64)
-    if starts.size == 0:
-        return src[:0]
-    if starts.size == 1:
-        s = int(starts[0])
-        return src[s : s + int(lens[0])].copy()
-    L = int(lens[0])
-    if (lens == L).all():
-        step = np.diff(starts)
-        if (step == step[0]).all():
-            st = int(step[0])
-            s0 = int(starts[0])
-            if st == L:
-                return src[s0 : s0 + L * starts.size].copy()
-            it = src.itemsize
-            view = np.lib.stride_tricks.as_strided(
-                src[s0:], shape=(starts.size, L), strides=(st * it, it)
-            )
-            return view.reshape(-1)  # materializes a contiguous copy
-    return src[_range_gather_indices(starts, lens)]
-
-
 def _scatter_ranges(dst: np.ndarray, starts, lens, vals) -> None:
-    """dst[starts[i] : starts[i]+lens[i]] = next lens[i] of vals."""
+    """dst[starts[i] : starts[i]+lens[i]] = next lens[i] of vals: one
+    slice copy per range when ranges are long (RLEv2 runs hold up to
+    512 values), one index scatter when they are short."""
     starts = np.asarray(starts, np.int64)
     lens = np.asarray(lens, np.int64)
     if starts.size == 0:
         return
-    if starts.size == 1:
-        s = int(starts[0])
-        dst[s : s + int(lens[0])] = vals
-        return
-    if (starts[1:] == starts[:-1] + lens[:-1]).all():
+    total = int(lens.sum())
+    if starts.size == 1 or (starts[1:] == starts[:-1] + lens[:-1]).all():
         s0 = int(starts[0])
-        dst[s0 : s0 + int(lens.sum())] = vals
+        dst[s0 : s0 + total] = vals
         return
-    L = int(lens[0])
-    if (lens == L).all():
-        step = np.diff(starts)
-        if (step == step[0]).all():
-            st = int(step[0])
-            it = dst.itemsize
-            view = np.lib.stride_tricks.as_strided(
-                dst[int(starts[0]):], shape=(starts.size, L),
-                strides=(st * it, it),
-            )
-            view[:] = np.asarray(vals).reshape(starts.size, L)
-            return
-    dst[_range_gather_indices(starts, lens)] = vals
+    if total < 64 * starts.size:
+        dst[_range_gather_indices(starts, lens)] = vals
+        return
+    o = 0
+    for s, n in zip(starts.tolist(), lens.tolist()):
+        dst[s : s + n] = vals[o : o + n]
+        o += n
 
 
 def decode_int_rle_v2(buf, signed: bool = True,
                       count: int | None = None) -> np.ndarray:
-    """Two-pass decode: a cheap Python header scan builds a segment
-    table, then each sub-encoding materializes BATCHED across all its
-    segments straight into one preallocated output. Short-repeat is a
-    single np.repeat + scatter; same-width direct/delta payloads are
-    gathered via strided views and bitunpacked in ONE call (a full
-    512-value run is always byte-aligned: 512*w bits); ALL delta
-    segments share one global cumsum with per-segment resets. Writers
-    emit runs of <= 512 values, so per-segment numpy calls (the
-    previous shape) were overhead-bound: measured 2-5x faster across
-    token/sorted/repeat/arithmetic distributions while decoding the
-    identical wire (same golden vectors, same Apache fuzz gate)."""
+    """Two-pass decode: a cheap Python header scan files every segment
+    under its sub-encoding (and direct payloads under their width),
+    then each materializes BATCHED across all its segments straight
+    into one output. Short-repeat is a single np.repeat + scatter;
+    same-width direct/delta payloads, padded or not, are unpacked in
+    ONE ``bitunpack_runs`` call; ALL delta segments share one global
+    cumsum with per-segment resets. Writers emit runs of <= 512 values,
+    so per-segment numpy calls would be overhead-bound, and so are
+    per-kind masks over the segment table: a 10,000-value group of 20
+    runs costs a few dozen numpy calls whatever its mix."""
     b = bytes(buf)
     L = len(b)
-    if not L:
-        return np.empty(0, np.int64 if signed else np.uint64)
-    # ---- pass 1: header scan -> per-segment kind/count/metadata
-    seg_kind: list[int] = []
-    seg_count: list[int] = []
-    seg_meta: list = []
+    # ---- pass 1: header scan. Each kind's lists hold the segments'
+    # output positions and counts, in stream order.
+    sr_at: list[int] = []
+    sr_n: list[int] = []
+    sr_val: list[int] = []
+    direct: dict[int, tuple[list, list, list]] = {}  # w -> (offs, n, at)
+    patched: list[tuple] = []
+    d_at: list[int] = []
+    d_n: list[int] = []
+    d_base: list[int] = []
+    d_d0: list[int] = []
+    d_var: dict[int, tuple[list, list, list]] = {}  # w -> (offs, k, n-2)
     pos = 0
     total = 0
     # ``count`` bounds the scan at the first run boundary at or past
@@ -631,14 +601,18 @@ def decode_int_rle_v2(buf, signed: bool = True,
             nbytes = ((h0 >> 3) & 0x7) + 1
             raw = int.from_bytes(b[pos + 1 : pos + 1 + nbytes], "big")
             val = _unzigzag_one(raw) if signed else raw
-            seg_meta.append(val & _U64_MASK)
-            seg_count.append((h0 & 0x7) + 3)
+            n = (h0 & 0x7) + 3
+            sr_at.append(total)
+            sr_n.append(n)
+            sr_val.append(val & _U64_MASK)
             pos += 1 + nbytes
         elif kind == 1:  # direct
             w = code_width((h0 >> 1) & 0x1F)
             n = (((h0 & 1) << 8) | b[pos + 1]) + 1
-            seg_meta.append((pos + 2, w))
-            seg_count.append(n)
+            offs, ns, at = direct.setdefault(w, ([], [], []))
+            offs.append(pos + 2)
+            ns.append(n)
+            at.append(total)
             pos += 2 + (n * w + 7) // 8
         elif kind == 2:  # patched base
             w = code_width((h0 >> 1) & 0x1F)
@@ -652,8 +626,7 @@ def decode_int_rle_v2(buf, signed: bool = True,
             # entries are packed at the closest fixed width >= pgw+pw
             # (matches Apache readers; see _try_patched)
             ew = round_width(pgw + pw)
-            seg_meta.append((pos + 4, w, bw, pw, ew, pll))
-            seg_count.append(n)
+            patched.append((total, n, pos + 4, w, bw, pw, ew, pll))
             pos += 4 + bw + (n * w + 7) // 8 + (pll * ew + 7) // 8
         else:  # delta
             dfield = (h0 >> 1) & 0x1F
@@ -662,7 +635,6 @@ def decode_int_rle_v2(buf, signed: bool = True,
             base_raw, pos = decode_varint_one(b, pos)
             base = _unzigzag_one(base_raw) if signed else base_raw
             d0_raw, pos = decode_varint_one(b, pos)
-            d0 = _unzigzag_one(d0_raw)
             if dfield:
                 if n < 2:
                     # spec: delta runs hold >= 2 values; a foreign
@@ -673,68 +645,41 @@ def decode_int_rle_v2(buf, signed: bool = True,
                         "rle_v2: variable-width delta run with n < 2"
                     )
                 w = code_width(dfield)
-                seg_meta.append((base, d0, pos, w))
+                offs, ks, nds = d_var.setdefault(w, ([], [], []))
+                offs.append(pos)
+                ks.append(len(d_at))
+                nds.append(n - 2)
                 pos += ((n - 2) * w + 7) // 8
-            else:
-                # fixed delta: a pure arithmetic sequence (the encoder
-                # writes |d| for deltas[2:] with d0's sign, i.e. step
-                # is exactly d0 throughout)
-                seg_meta.append((base, d0, None, None))
-            seg_count.append(n)
-        seg_kind.append(kind)
-        total += seg_count[-1]
-
-    if not seg_count:  # count=0 positioned read: nothing to materialize
-        return np.empty(0, np.int64 if signed else np.uint64)
-    counts = np.array(seg_count, np.int64)
-    ends = np.cumsum(counts)
-    starts = ends - counts
-    out = np.empty(int(ends[-1]), np.uint64)
-    kinds_a = np.array(seg_kind, np.int8)
+            # else fixed delta: a pure arithmetic sequence (the encoder
+            # writes |d| for deltas[2:] with d0's sign, i.e. step is
+            # exactly d0 throughout)
+            d_at.append(total)
+            d_n.append(n)
+            d_base.append(base & _U64_MASK)
+            d_d0.append(_unzigzag_one(d0_raw))
+        total += n
+    if pos > L:
+        raise ValueError("rle_v2: run past the end of the stream")
+    out = np.empty(total, np.uint64)
+    if not total:  # count=0 positioned read: nothing to materialize
+        return out.view(np.int64) if signed else out
+    bview = np.frombuffer(b, np.uint8)
 
     # ---- short repeat: ALL segments via one repeat + one scatter
-    sr = kinds_a == 0
-    if sr.any():
-        sr_idx = np.flatnonzero(sr)
-        vals = np.array([seg_meta[i] for i in sr_idx], np.uint64)
-        _scatter_ranges(out, starts[sr], counts[sr],
-                        np.repeat(vals, counts[sr]))
+    if sr_at:
+        _scatter_ranges(out, sr_at, sr_n,
+                        np.repeat(np.array(sr_val, np.uint64), sr_n))
 
-    # ---- direct: batch same-width segments into ONE bitunpack.
-    # A full 512-value run at any width packs to exactly 64*w bytes
-    # (512*w bits is always byte-aligned), so for each width we gather
-    # the byte ranges of every padding-free segment, unpack the lot in
-    # one call, and scatter; only tail runs with padding bits fall back
-    # to the per-segment path.
-    direct_idx = np.flatnonzero(kinds_a == 1)
-    if direct_idx.size:
-        bview = np.frombuffer(b, np.uint8)
-        offs = np.array([seg_meta[i][0] for i in direct_idx], np.int64)
-        ws = np.array([seg_meta[i][1] for i in direct_idx], np.int64)
-        cs = counts[direct_idx]
-        aligned = (cs * ws) % 8 == 0
-        for w in np.unique(ws[aligned]).tolist():
-            grp = aligned & (ws == w)
-            gbytes = cs[grp] * w // 8
-            raw = _gather_ranges(bview, offs[grp], gbytes)
-            packed = bitunpack(raw.tobytes(), w, int(cs[grp].sum()))
-            _scatter_ranges(
-                out, starts[direct_idx[grp]], cs[grp],
-                zigzag_decode(packed).view(np.uint64) if signed else packed,
-            )
-        for j in np.flatnonzero(~aligned):
-            i = direct_idx[j]
-            n = int(cs[j])
-            w = int(ws[j])
-            packed = bitunpack(b[offs[j] : offs[j] + (n * w + 7) // 8], w, n)
-            out[starts[i] : ends[i]] = (
-                zigzag_decode(packed).view(np.uint64) if signed else packed
-            )
+    # ---- direct: every segment of one width in one unpack + scatter
+    for w, (offs, ns, at) in direct.items():
+        packed = bitunpack_runs(bview, offs, ns, w)
+        _scatter_ranges(
+            out, at, ns,
+            zigzag_decode(packed).view(np.uint64) if signed else packed,
+        )
 
     # ---- patched base (rare; unchanged semantics)
-    for i in np.flatnonzero(kinds_a == 2):
-        off, w, bw, pw, ew, pll = seg_meta[i]
-        n = int(counts[i])
+    for at, n, off, w, bw, pw, ew, pll in patched:
         base_raw = int.from_bytes(b[off : off + bw], "big")
         base = base_raw & ((1 << (bw * 8 - 1)) - 1)
         if base_raw >> (bw * 8 - 1):
@@ -751,67 +696,29 @@ def decode_int_rle_v2(buf, signed: bool = True,
             idx += gap
             if patch:
                 residual[idx] |= np.uint64(patch << w)
-        out[starts[i] : ends[i]] = residual + np.uint64(base & _U64_MASK)
+        out[at : at + n] = residual + np.uint64(base & _U64_MASK)
 
     # ---- delta: ONE global cumsum over every delta segment's
     # increment stream [base_i, d0_i, ±|d|...], with per-segment
     # resets via prefix subtraction (uint64 wraparound keeps negative
-    # steps exact). Variable-width |d| payloads are gathered per width
-    # and bitunpacked in one call when byte-aligned, like direct.
-    didx = np.flatnonzero(kinds_a == 3)
-    if didx.size:
-        c = counts[didx]
-        base_u = np.array(
-            [seg_meta[i][0] & _U64_MASK for i in didx], np.uint64
-        )
-        d0s = [seg_meta[i][1] for i in didx]
-        d0_u = np.array([d & _U64_MASK for d in d0s], np.uint64)
-        d0_neg = np.array([d < 0 for d in d0s], bool)
-        ends_l = np.cumsum(c)
-        first = ends_l - c
-        inc = np.zeros(int(ends_l[-1]), np.uint64)
-        nds = np.maximum(c - 2, 0)  # tail increments per segment
-        is_var = np.array([seg_meta[i][2] is not None for i in didx], bool)
-        # fixed delta: the tail step is exactly d0 throughout
-        fix = ~is_var & (nds > 0)
-        if fix.any():
-            _scatter_ranges(inc, first[fix] + 2, nds[fix],
-                            np.repeat(d0_u[fix], nds[fix]))
-        if is_var.any():
-            bview = np.frombuffer(b, np.uint8)
-            offs = np.array(
-                [seg_meta[i][2] if seg_meta[i][2] is not None else 0
-                 for i in didx], np.int64
-            )
-            ws = np.array(
-                [seg_meta[i][3] if seg_meta[i][3] is not None else 0
-                 for i in didx], np.int64
-            )
-            aligned = is_var & (nds > 0) & ((nds * ws) % 8 == 0)
-            for w in np.unique(ws[aligned]).tolist():
-                grp = aligned & (ws == w)
-                gb = nds[grp] * w // 8
-                raw = _gather_ranges(bview, offs[grp], gb)
-                dabs = bitunpack(raw.tobytes(), w, int(nds[grp].sum()))
-                neg = np.repeat(d0_neg[grp], nds[grp])
-                _scatter_ranges(inc, first[grp] + 2, nds[grp],
-                                np.where(neg, np.uint64(0) - dabs, dabs))
-            for j in np.flatnonzero(is_var & (nds > 0) & ~aligned):
-                n_d = int(nds[j])
-                w = int(ws[j])
-                dabs = bitunpack(
-                    b[offs[j] : offs[j] + (n_d * w + 7) // 8], w, n_d
-                )
-                if d0_neg[j]:
-                    dabs = np.uint64(0) - dabs
-                inc[first[j] + 2 : first[j] + 2 + n_d] = dabs
-        has2 = c > 1
-        inc[first[has2] + 1] = d0_u[has2]
+    # steps exact). Every increment starts as d0 (the whole tail of a
+    # fixed-delta run); variable-width runs' |d| payloads replace their
+    # tails, unpacked in one call per width like direct.
+    if d_at:
+        c = np.array(d_n, np.int64)
+        first = np.cumsum(c) - c
+        base_u = np.array(d_base, np.uint64)
+        inc = np.repeat(np.array([d & _U64_MASK for d in d_d0], np.uint64), c)
+        for w, (offs, ks, nds) in d_var.items():
+            dabs = bitunpack_runs(bview, offs, nds, w)
+            neg = [d_d0[k] < 0 for k in ks]
+            if any(neg):
+                dabs = np.where(np.repeat(neg, nds), np.uint64(0) - dabs, dabs)
+            _scatter_ranges(inc, first[ks] + 2, nds, dabs)
         inc[first] = base_u
         csum = np.cumsum(inc, dtype=np.uint64)
         prefix = csum[first] - base_u  # running total before each seg
-        vals = csum - np.repeat(prefix, c)
-        _scatter_ranges(out, starts[didx], c, vals)
+        _scatter_ranges(out, d_at, c, csum - np.repeat(prefix, c))
 
     return out.view(np.int64) if signed else out
 

@@ -83,7 +83,7 @@ def decode_varints(
     buf = np.ascontiguousarray(buf, dtype=np.uint8)
     if buf.size == 0 or count == 0:
         return np.empty(0, np.uint64), 0
-    term = np.flatnonzero((buf & 0x80) == 0)  # last byte of each varint
+    term = np.flatnonzero(buf < 0x80)  # last byte of each varint
     if count is not None:
         if len(term) < count:
             raise ValueError("varint stream truncated")
@@ -92,15 +92,24 @@ def decode_varints(
     if n == 0:
         return np.empty(0, np.uint64), 0
     consumed = int(term[-1]) + 1
+    payload = buf[:consumed] & np.uint8(0x7F)
+    width = consumed // n
+    if width * n == consumed and (term == np.arange(1, n + 1) * width - 1).all():
+        # every varint has the same length: one column per byte
+        rows = payload.reshape(n, width)
+        vals = rows[:, 0].astype(np.uint64)
+        for k in range(1, width):
+            vals |= rows[:, k].astype(np.uint64) << np.uint64(7 * k)
+        return vals, consumed
     starts = np.empty(n, np.int64)
     starts[0] = 0
     starts[1:] = term[:-1] + 1
-    lengths = term - starts + 1
-    payload = (buf & 0x7F).astype(np.uint64)
-    vals = np.zeros(n, np.uint64)
-    for k in range(int(lengths.max())):
-        sel = lengths > k
-        vals[sel] |= payload[starts[sel] + k] << np.uint64(7 * k)
+    # each byte's 7-bit group, shifted to its place in its varint and
+    # OR-reduced per varint
+    place = np.arange(consumed, dtype=np.int64) - np.repeat(starts, term - starts + 1)
+    vals = np.bitwise_or.reduceat(
+        payload.astype(np.uint64) << (place * 7).astype(np.uint64), starts
+    )
     return vals, consumed
 
 

@@ -1500,3 +1500,125 @@ def test_rle_v2_encoder_matches_segment_walk(signed):
     for i in range(250):
         v = _rle_v2_fuzz_vector(rng, signed)
         assert encode_int_rle_v2(v, signed) == _encode_int_rle_v2_segment_walk(v, signed), i
+
+
+def test_alp_bounded_chooser_matches_exhaustive_on_lineitem():
+    """The bounded chooser picks the exhaustive chooser's (e, f) on every
+    10,000-row chunk of every sf0.01 lineitem float column, in file order
+    and in the benchmark's (l_orderkey, l_linenumber) order."""
+    import pyarrow.parquet as pq
+
+    from orc_format_spark.codecs.alp import _choose_exponents
+    from tests.conftest import SF01_DIR
+
+    tbl = pq.read_table(f"{SF01_DIR}/lineitem.parquet")
+    floats = [f.name for f in tbl.schema if pa.types.is_floating(f.type)]
+    assert len(floats) >= 4
+    ordered = tbl.sort_by([("l_orderkey", "ascending"), ("l_linenumber", "ascending")])
+    for t in (tbl, ordered):
+        for name in floats:
+            v = t.column(name).to_numpy()
+            for a in range(0, v.size, 10_000):
+                chunk = np.ascontiguousarray(v[a : a + 10_000])
+                assert _choose_exponents(chunk) == _choose_exponents_exhaustive(chunk), (name, a)
+
+
+# ------------------------------------------- batched RLEv2 payload unpack
+
+
+def test_bitunpack_runs_matches_per_run_bitunpack():
+    """Payloads of one width at any byte offsets unpack in one call to
+    what one bitunpack per payload gives, for every width 1-64: payload
+    sets that all end on a byte boundary (n a multiple of 8) and sets
+    with padding bits (mostly n * w % 8 != 0)."""
+    from orc_format_spark.codecs.bitpack import bitunpack_runs
+
+    rng = np.random.default_rng(12)
+    for w in range(1, 65):
+        for lengths in (8 * rng.integers(1, 65, 9), rng.integers(1, 520, 9).tolist() + [1, 7]):
+            blobs, offs, counts, ref = [], [], [], []
+            off = 0
+            for n in np.asarray(lengths).tolist():
+                vals = rng.integers(0, 1 << 63, n, dtype=np.uint64) << np.uint64(1)
+                vals = (vals | rng.integers(0, 2, n, dtype=np.uint64)) >> np.uint64(64 - w)
+                payload = bitpack(vals, w)
+                gap = int(rng.integers(0, 4))
+                blobs.append(bytes(rng.integers(0, 256, gap, dtype=np.uint8)) + payload)
+                offs.append(off + gap)
+                counts.append(n)
+                off += gap + len(payload)
+                ref.append(bitunpack(payload, w, n))
+                assert (ref[-1] == vals).all()
+            src = np.frombuffer(b"".join(blobs), np.uint8)
+            got = bitunpack_runs(src, offs, counts, w)
+            assert got.dtype == np.uint64
+            assert (got == np.concatenate(ref)).all(), w
+            with pytest.raises(ValueError):
+                bitunpack_runs(src[:-1], offs, counts, w)
+
+
+def _rle_v2_runs(rng, signed):
+    """A stream of direct and variable-width delta runs of random widths
+    and lengths (so n * w % 8 is mostly non-zero), plus each run's
+    values from a per-run ``bitunpack`` of its own payload."""
+    from orc_format_spark.codecs.bitpack import WIDTH_TABLE, width_code
+    from orc_format_spark.codecs.varint import (
+        encode_varint_one,
+        zigzag_decode,
+    )
+
+    def zz(x):  # python int -> zigzag
+        return (x << 1) ^ (x >> 63) if x >= 0 else ((-x) << 1) - 1
+
+    mask = (1 << 64) - 1
+    stream, runs = [], []
+    for _ in range(int(rng.integers(1, 14))):
+        if rng.random() < 0.55:  # direct
+            w = int(rng.choice(WIDTH_TABLE))
+            n = int(rng.integers(1, 513))
+            u = rng.integers(0, 1 << 63, n, dtype=np.uint64) >> np.uint64(max(0, 63 - w))
+            payload = bitpack(u, w)
+            head = bytes(((1 << 6) | (width_code(w) << 1) | ((n - 1) >> 8), (n - 1) & 0xFF))
+            got = bitunpack(payload, w, n)
+            vals = zigzag_decode(got).view(np.uint64) if signed else got
+        else:  # variable-width delta: |d| packed at WIDTH_TABLE[code]
+            code = int(rng.integers(1, len(WIDTH_TABLE)))
+            w = WIDTH_TABLE[code]
+            n = int(rng.integers(3, 513))
+            base = int(rng.integers(-(1 << 40), 1 << 40)) if signed else int(rng.integers(0, 1 << 40))
+            d0 = int(rng.integers(-(1 << 20), 1 << 20)) or 1
+            dabs = rng.integers(0, 1 << 63, n - 2, dtype=np.uint64) >> np.uint64(max(0, 63 - w))
+            payload = bitpack(dabs, w)
+            head = (bytes(((3 << 6) | (code << 1) | ((n - 1) >> 8), (n - 1) & 0xFF))
+                    + encode_varint_one(zz(base) if signed else base)
+                    + encode_varint_one(zz(d0)))
+            steps = [int(x) for x in bitunpack(payload, w, n - 2)]
+            acc = [base & mask, (base + d0) & mask]
+            for d in steps:
+                acc.append((acc[-1] + (-d if d0 < 0 else d)) & mask)
+            vals = np.array(acc, np.uint64)
+        stream.append(head + payload)
+        runs.append(vals)
+    return b"".join(stream), runs
+
+
+@pytest.mark.parametrize("signed", [True, False])
+def test_rle_v2_batched_unpack_matches_per_run_reference(signed):
+    """decode_int_rle_v2 unpacks every same-width direct and delta
+    payload in one call; the values equal a per-run unpack, whole and
+    for count-bounded reads (which stop at the first run boundary at or
+    past the count)."""
+    rng = np.random.default_rng(31 + signed)
+    for trial in range(60):
+        buf, runs = _rle_v2_runs(rng, signed)
+        want = np.concatenate(runs)
+        got = decode_int_rle_v2(buf, signed=signed)
+        assert (got.view(np.uint64) == want).all(), trial
+        ends = np.cumsum([r.size for r in runs])
+        for count in rng.integers(0, want.size + 1, 4).tolist():
+            part = decode_int_rle_v2(buf, signed=signed, count=count)
+            stop = int(ends[np.searchsorted(ends, count)]) if count else 0
+            assert part.size == stop, (trial, count)
+            assert (part.view(np.uint64) == want[:stop]).all(), (trial, count)
+        with pytest.raises(ValueError):
+            decode_int_rle_v2(buf[:-1], signed=signed)
