@@ -1192,6 +1192,42 @@ def _with_nulls(view, nulls: dict[str, Stats]):
     return merged
 
 
+_BLOOM_PAIR = b'@bloom":"'
+
+
+def _load_chunk_stats(blob, start: int, end: int, cols: set) -> list:
+    """The chunk-stats JSON ``blob[start:end]``, parsed without the
+    ``"<col>@bloom"`` bitsets of columns outside ``cols``: those pairs
+    are cut out of the text before ``json.loads`` and their base64
+    (most of the JSON's bytes) is neither copied nor parsed. With no
+    backslash in the text every ``"`` delimits a string, so a key's
+    quotes are found with plain byte searches; a name or value that
+    needs JSON escaping (a backslash somewhere) takes the full parse."""
+    import json as _json
+
+    if not isinstance(blob, (bytes, bytearray)) or blob.find(b"\\", start, end) >= 0:
+        return _json.loads(bytes(blob[start:end]))
+    mv = memoryview(blob)
+    parts = []
+    pos = start
+    while (hit := blob.find(_BLOOM_PAIR, pos, end)) >= 0:
+        q = blob.rfind(b'"', pos, hit)  # the key's opening quote
+        v_end = blob.find(b'"', hit + len(_BLOOM_PAIR), end) + 1
+        if q < 0 or v_end == 0:  # malformed: let the full parse say so
+            return _json.loads(bytes(blob[start:end]))
+        name = blob[q + 1 : hit].decode("utf-8")
+        if name in cols or f"{name}@bloom" in cols:  # a column may end in @bloom
+            parts.append(mv[pos:v_end])
+        elif q > pos and blob[q - 1] == 0x2C:  # drop ',"k":"v"'
+            parts.append(mv[pos : q - 1])
+        else:  # first key left: drop '"k":"v",' or '"k":"v"'
+            parts.append(mv[pos:q])
+            v_end += v_end < end and blob[v_end] == 0x2C
+        pos = v_end
+    parts.append(mv[pos:end])
+    return _json.loads(b"".join(parts))
+
+
 def decode_table(
     blob: bytes,
     columns: list[str] | None = None,
@@ -1243,10 +1279,11 @@ def decode_table(
                 metas.append((nr, blen))
             stats: list[dict] | None = None
             if has_stats:
-                import json as _json
-
                 slen, pos = decode_varint_one(blob, pos)
-                stats = _json.loads(blob[pos : pos + slen])
+                stats = _load_chunk_stats(
+                    blob, pos, pos + slen,
+                    set() if tree is None else {l.col for l in leaves(tree)},
+                )
                 pos += slen
                 if len(stats) != n_chunks:
                     raise ValueError("chunk-stats count mismatch")

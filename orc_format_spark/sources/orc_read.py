@@ -48,11 +48,13 @@ Scope (matches + exceeds the writer):
   invisible to its hasNull). Temporal literals convert (date→epoch
   days, datetime→UTC ns); a cross-typed literal keeps the stripe;
 - row-group elimination inside surviving stripes: RowIndexEntry
-  statistics and per-group bloom filters narrow the decode to the
-  covering groups; every projected column's streams (all types, all
-  compressions, nested children included) seek to the first kept
-  group via the recorded positions, and count-bounded RLE scans stop
-  after the last — a point lookup in a 2M-row single-stripe file
+  statistics and per-group bloom filters keep maximal runs of groups,
+  each decoded on its own; every projected column's streams (all
+  types, all compressions, nested children included) seek to the
+  run's first group via the recorded positions and stop decompressing
+  at the block holding the next group's position where that bounds
+  the run exactly (``_stream_ends``), and count-bounded RLE scans stop
+  after the run — a point lookup in a 2M-row single-stripe file
   decodes one 10k group, ~20x faster than the full-stripe decode.
   Columns without an index (e.g. our own writer's one-group-per-
   stripe files) fall back to whole-stripe decode, always sound.
@@ -318,12 +320,42 @@ def _lz4_block(src, max_size: int) -> bytes:
     return bytes(out)
 
 
-def _decompress(buf, kind: str, block_size: int) -> bytes:
+def _block(payload, kind: str, block_size: int):
+    """One compressed ORC chunk -> its bytes."""
+    if kind == "zlib":  # raw DEFLATE
+        return zlib.decompressobj(-15).decompress(bytes(payload))
+    if kind == "zstd":
+        return pa.Codec("zstd").decompress(
+            payload, decompressed_size=_zstd_size(payload), asbytes=True)
+    if kind == "snappy":
+        return pa.Codec("snappy").decompress(
+            payload, decompressed_size=_snappy_size(payload), asbytes=True)
+    if kind == "lz4":
+        # raw LZ4 carries no size header; _lz4_block discovers the
+        # true size while decoding and enforces <= block_size
+        return _lz4_block(payload, block_size)
+    if kind == "lzo":
+        # raw LZO1X (own codec): the EOS marker bounds the chunk
+        from ..codecs.lzo import lzo1x_decompress
+
+        return lzo1x_decompress(bytes(payload), max_out=block_size)
+    raise NotImplementedError(f"orc_read: compression {kind!r}")
+
+
+def _decompress(buf, kind: str, block_size: int,
+                end: tuple[int, int] | None = None):
     """ORC chunk framing: 3-byte LE ``len*2 + is_original`` headers.
 
     Mirror of orc_file._orc_compress; unlike blocks.decompress_stream
     there is NO leading total-length varint (real ORC has no room for
     one), so sizes are sniffed per codec where the wire requires it.
+
+    ``end = (block_off, inblock_off)``, a recorded stream position
+    relative to ``buf``, stops the walk there: blocks before
+    ``block_off`` decompress whole, the block at it only when
+    ``inblock_off`` > 0 (cut to that many bytes), later ones never. A
+    position off the block chain raises. One block comes back as it
+    decompressed (bytes, or a memoryview when cut), without a join.
     """
     if kind == "none":
         return bytes(buf)
@@ -331,42 +363,31 @@ def _decompress(buf, kind: str, block_size: int) -> bytes:
     out = []
     pos = 0
     n = len(mv)
+    stop, cut = (n, 0) if end is None else end
+    at_end = False
     while pos < n:
+        at_end = pos == stop
+        if pos > stop or (at_end and not cut):
+            break
         header = int.from_bytes(bytes(mv[pos : pos + 3]), "little")
         pos += 3
         length = header >> 1
+        if pos + length > n:
+            raise ValueError("orc_read: compressed block runs past its stream")
         payload = mv[pos : pos + length]
         pos += length
-        if header & 1:  # stored original
-            out.append(bytes(payload))
-        elif kind == "zlib":  # raw DEFLATE
-            out.append(zlib.decompressobj(-15).decompress(bytes(payload)))
-        elif kind == "snappy":
-            out.append(
-                pa.Codec("snappy").decompress(
-                    payload, decompressed_size=_snappy_size(payload),
-                    asbytes=True,
-                )
-            )
-        elif kind == "zstd":
-            out.append(
-                pa.Codec("zstd").decompress(
-                    payload, decompressed_size=_zstd_size(payload),
-                    asbytes=True,
-                )
-            )
-        elif kind == "lz4":
-            # raw LZ4 carries no size header; _lz4_block discovers the
-            # true size while decoding and enforces <= block_size
-            out.append(_lz4_block(payload, block_size))
-        elif kind == "lzo":
-            # raw LZO1X (own codec): the EOS marker bounds the chunk
-            from ..codecs.lzo import lzo1x_decompress
-
-            out.append(lzo1x_decompress(bytes(payload), max_out=block_size))
-        else:
-            raise NotImplementedError(f"orc_read: compression {kind!r}")
-    return b"".join(out)
+        out.append(bytes(payload) if header & 1  # stored original
+                   else _block(payload, kind, block_size))
+        if at_end:
+            if len(out[-1]) < cut:
+                raise ValueError("orc_read: index position past its block")
+            out[-1] = memoryview(out[-1])[:cut]
+            break
+    if end is not None and not (at_end if cut else pos == stop):
+        raise ValueError(
+            "orc_read: index position off its stream's compression blocks"
+        )
+    return out[0] if len(out) == 1 else b"".join(out)
 
 
 # ------------------------------------------------------- message parsing
@@ -581,27 +602,34 @@ def _orc_view(cid_of: dict, types, stats: dict, ts_slack_ns: int,
     return view
 
 
-def _parse_row_index(raw) -> list[tuple[list[int], dict | None]]:
-    """ROW_INDEX stream -> per-row-group (positions, statistics). The
-    positions list is the column's stream-seek state at the first row
-    of the group (layout depends on kind/encoding/compression,
-    _position_layout); statistics share the stripe-stats wire format."""
-    out = []
-    for fno, _wt, v in _proto_fields(raw):
-        if fno != 1:  # RowIndexEntry
-            continue
-        positions: list[int] = []
-        stats = None
-        for f2, w2, v2 in _proto_fields(v):
-            if f2 == 1:
-                if w2 == 2:  # packed repeated uint64
-                    positions.extend(_packed_uints(v2))
-                else:
-                    positions.append(v2)
-            elif f2 == 2:
-                stats = _parse_stats(v2)
-        out.append((positions, stats))
-    return out
+def _parse_row_index(raw) -> list[memoryview]:
+    """ROW_INDEX stream -> per-row-group RowIndexEntry messages, left
+    unparsed: a lookup reads the positions of at most two groups per
+    column and the statistics of predicate columns only
+    (_entry_positions, _entry_stats)."""
+    return [v for fno, _wt, v in _proto_fields(raw) if fno == 1]
+
+
+def _entry_positions(entry) -> list[int]:
+    """A RowIndexEntry's positions: the column's stream-seek state at
+    the first row of the group (layout depends on kind/encoding/
+    compression, _position_layout)."""
+    positions: list[int] = []
+    for f2, w2, v2 in _proto_fields(entry):
+        if f2 == 1:
+            if w2 == 2:  # packed repeated uint64
+                positions.extend(_packed_uints(v2))
+            else:
+                positions.append(v2)
+    return positions
+
+
+def _entry_stats(entry) -> dict | None:
+    """A RowIndexEntry's statistics (the stripe-stats wire format)."""
+    for f2, _w2, v2 in _proto_fields(entry):
+        if f2 == 2:
+            return _parse_stats(v2)
+    return None
 
 
 def _position_layout(t: _OrcType, encoding: int,
@@ -714,10 +742,10 @@ def _build_seeks(st: "_Stripe", types: list[_OrcType],
                  cids: list[tuple[int, object]],
                  group: int, compressed: bool,
                  idx_cache: dict) -> dict | None:
-    """Seek state for decoding a stripe from row group ``group``: for
-    every column a ``(top_cid, proj)`` pair will decode, unpack that
-    column's RowIndexEntry positions. Projection-pruned children need
-    no positions (their streams are never read). None when any
+    """Seek state of every stream at the first row of group ``group``:
+    for every column a ``(top_cid, proj)`` pair will decode, unpack
+    that column's RowIndexEntry positions. Projection-pruned children
+    need no positions (their streams are never read). None when any
     required column lacks an index / has an unseekable kind /
     mismatched arity — the caller falls back to full-stripe decode
     (always sound)."""
@@ -735,8 +763,8 @@ def _build_seeks(st: "_Stripe", types: list[_OrcType],
             )
             if layout is None:
                 return None
-            col_seeks = _unpack_positions(entries[group][0], layout,
-                                          compressed)
+            col_seeks = _unpack_positions(_entry_positions(entries[group]),
+                                          layout, compressed)
             if col_seeks is None:
                 return None
             for skind, tup in col_seeks.items():
@@ -760,11 +788,35 @@ def _select_row_groups(st: "_Stripe", types, cid_of: dict, tree,
             bfs = _bloom_filters(st, cid, types[cid].kind)
             return [bfs[g]] if bfs is not None and len(bfs) == n_groups else None
 
-        stats = {c: e and e[g][1] for c, e in index.items()}
+        stats = {c: e and _entry_stats(e[g]) for c, e in index.items()}
         return _orc_view(cid_of, types, stats, ts_slack_ns, blooms_of)
 
     keep = [may_match(tree, group_view(g)) for g in range(n_groups)]
     return None if all(keep) else keep
+
+
+def _stream_ends(seeks: dict | None) -> dict[tuple[int, int], tuple[int, int]]:
+    """The positions of the first row group after a decoded run, kept
+    where they bound the run's bytes exactly: every ``raw`` stream, and
+    ``rle``/``bool`` streams with zero run and bit offsets there (the
+    encoder had flushed every earlier value; this repo's writer
+    restarts its encoders at each group). Other streams have values of
+    the run still buffered past the position and are read to the end."""
+    return {k: (blk, inb) for k, (blk, inb, run, bit) in (seeks or {}).items()
+            if not run and not bit}
+
+
+def _kept_runs(keep: list[bool]) -> list[tuple[int, int]]:
+    """Maximal runs ``[g_a, g_b)`` of kept row groups."""
+    runs: list[tuple[int, int]] = []
+    for g, k in enumerate(keep):
+        if not k:
+            continue
+        if runs and runs[-1][1] == g:
+            runs[-1] = (runs[-1][0], g + 1)
+        else:
+            runs.append((g, g + 1))
+    return runs
 
 
 # ---------------------------------------------------------- stripe decode
@@ -775,9 +827,7 @@ class _Stripe:
     decompressed only when a decoded column asks for them."""
 
     def __init__(self, raw: bytes | memoryview, footer: dict, compression: str,
-                 block_size: int, n_rows: int,
-                 seeks: dict[tuple[int, int], tuple] | None = None,
-                 writer: int | None = None):
+                 block_size: int, n_rows: int, writer: int | None = None):
         self.raw = raw
         self.writer = writer  # Footer.writer implementation id
         self.compression = compression
@@ -787,8 +837,12 @@ class _Stripe:
         self.tz = footer["tz"]
         # {(col, stream_kind): (block_off, inblock_off, run_off,
         # bit_off)} — positions a decode at a row-group boundary
-        # (_build_seeks); empty/None = decode from the stripe start
-        self.seeks = seeks or {}
+        # (_build_seeks); empty = decode from the stripe start
+        self.seeks: dict[tuple[int, int], tuple] = {}
+        # {(col, stream_kind): (block_off, inblock_off)} — where the
+        # decoded rows' bytes provably end (_stream_ends); absent = the
+        # stream's end
+        self.ends: dict[tuple[int, int], tuple[int, int]] = {}
         self.blooms: dict = {}  # cid -> _bloom_filters, parsed once
         self._ranges: dict[tuple[int, int], tuple[int, int]] = {}
         off = 0
@@ -796,17 +850,23 @@ class _Stripe:
             self._ranges[(col, kind)] = (off, ln)
             off += ln
 
-    def stream(self, col: int, kind: int) -> bytes | None:
+    def stream(self, col: int, kind: int) -> bytes | memoryview | None:
         rng = self._ranges.get((col, kind))
         if rng is None:
             return None
         off, ln = rng
         blk, inb, _run, _bit = self.seeks.get((col, kind), (0, 0, 0, 0))
+        end = self.ends.get((col, kind))
+        mv = memoryview(self.raw)[off : off + ln]
+        if self.compression == "none":  # positions are byte offsets
+            if end is not None and end[0] > ln:
+                raise ValueError("orc_read: index position past its stream")
+            return bytes(mv[blk : ln if end is None else end[0]])
         out = _decompress(
-            memoryview(self.raw)[off + blk : off + ln], self.compression,
-            self.block_size,
+            mv[blk:], self.compression, self.block_size,
+            None if end is None else (end[0] - blk, end[1]),
         )
-        return out[inb:] if inb else out
+        return memoryview(out)[inb:] if inb else out
 
     def _drops(self, col: int, kind: int) -> tuple[int, int]:
         _blk, _inb, run, bit = self.seeks.get((col, kind), (0, 0, 0, 0))
@@ -819,10 +879,9 @@ class _Stripe:
             return np.empty(0, np.int64 if signed else np.uint64)
         run, _ = self._drops(col, kind)
         want = None if count is None else count + run
-        if self.encodings[col][0] >= _DIRECT_V2_KIND:
-            vals = decode_int_rle_v2(buf, signed=signed, count=want)
-        else:
-            vals = decode_int_rle_v1(buf, signed=signed, count=want)
+        dec = (decode_int_rle_v2 if self.encodings[col][0] >= _DIRECT_V2_KIND
+               else decode_int_rle_v1)
+        vals = _counted(dec, buf, want, col, kind, signed=signed)
         return vals[run:] if run else vals
 
     def bytes_rle(self, col: int, kind: int,
@@ -832,7 +891,7 @@ class _Stripe:
             return None
         run, _ = self._drops(col, kind)
         want = None if count is None else count + run
-        vals = decode_byte_rle(buf, count=want)
+        vals = _counted(decode_byte_rle, buf, want, col, kind)
         return vals[run:] if run else vals
 
     def bools(self, col: int, kind: int, count: int) -> np.ndarray | None:
@@ -840,9 +899,28 @@ class _Stripe:
         if buf is None:
             return None
         run, bit = self._drops(col, kind)
-        packed = decode_byte_rle(buf, count=run + (bit + count + 7) // 8)
+        packed = _counted(decode_byte_rle, buf, run + (bit + count + 7) // 8,
+                          col, kind)
         bits = np.unpackbits(packed[run:])[bit : bit + count]
         return bits.astype(bool)
+
+
+def _counted(decode, buf, want: int | None, col: int, kind: int,
+             **kw) -> np.ndarray:
+    """``decode(buf, count=want)``, refusing a stream that ends before
+    ``want`` values: a short column would misalign every later row."""
+    try:
+        vals = decode(buf, count=want, **kw)
+    except IndexError as ex:
+        raise ValueError(
+            f"orc_read: column {col} stream {kind} is truncated"
+        ) from ex
+    if want is not None and len(vals) < want:
+        raise ValueError(
+            f"orc_read: column {col} stream {kind} holds {len(vals)}"
+            f" values, its rows need {want}"
+        )
+    return vals
 
 
 _DIRECT_V2_KIND = 2  # ColumnEncoding.DIRECT_V2 / DICTIONARY_V2 boundary
@@ -870,6 +948,11 @@ def _varlen_from_parts(
     full = np.zeros(n + 1, np.int64)
     full[1:][mask] = lengths.astype(np.int64)
     offsets = np.cumsum(full)
+    if offsets[-1] > len(data):
+        raise ValueError(
+            f"orc_read: string data holds {len(data)} bytes, its lengths"
+            f" sum to {offsets[-1]}"
+        )
     validity = None if mask.all() else _validity_buffer(mask)
     return pa.Array.from_buffers(
         arrow_type, n,
@@ -1263,7 +1346,7 @@ def read_orc(source, columns: list[str] | None = None,
         # stripe's index+data region (~2x file size peak); stream()
         # only ever re-slices, so a memoryview suffices
         st = _Stripe(memoryview(data)[start:end], sf, comp, bs,
-                     info["n_rows"], writer=footer.get("writer"))
+                     info["n_rows"], footer.get("writer"))
         if not may_match(pred, _orc_view(
             cid_of, types, stripe_stats, ts_slack,
             lambda cid: _bloom_filters(st, cid, types[cid].kind),
@@ -1271,55 +1354,46 @@ def read_orc(source, columns: list[str] | None = None,
             continue
         # row-group elimination (the SearchArgument row-index skip the
         # reference's reader never shipped): per-group RowIndexEntry
-        # stats + blooms narrow the decode to [rows_lo, rows_hi); every
-        # projected column seeks its streams to the rows_lo group via
-        # the recorded positions, so skipped leading groups are never
-        # decompressed and trailing ones never decoded (count-bounded
-        # RLE scans). Falls back to full-stripe decode when any column
-        # lacks an index — elimination stays a sound superset.
-        n_dec = info["n_rows"]
-        rows_lo = 0
-        gmask = None
+        # stats + blooms keep maximal runs of groups, and each run is
+        # decoded on its own: every projected column seeks its streams
+        # to the run's first group via the recorded positions and stops
+        # decompressing at the next group's (_stream_ends), so skipped
+        # groups are neither decompressed nor decoded. Falls back to a
+        # decode from the stripe start when a column lacks an index —
+        # elimination stays a sound superset.
+        n_rows = info["n_rows"]
         stride = footer["stride"]
-        if pred is not None and stride and info["n_rows"] > stride:
-            idx_cache: dict = {}
-            gkeep = _select_row_groups(st, types, cid_of, pred,
-                                       info["n_rows"], stride, ts_slack,
-                                       idx_cache)
+        runs, n_groups = [(0, 1)], 1  # the whole stripe
+        idx_cache: dict = {}
+        if pred is not None and stride and n_rows > stride:
+            gkeep = _select_row_groups(st, types, cid_of, pred, n_rows,
+                                       stride, ts_slack, idx_cache)
             if gkeep is not None:
-                kept = [g for g, k in enumerate(gkeep) if k]
-                if not kept:
-                    continue  # every row group provably empty
-                g_lo, g_hi = kept[0], kept[-1] + 1
-                rows_lo = g_lo * stride
-                rows_hi = min(info["n_rows"], g_hi * stride)
-                if rows_lo > 0:
-                    seeks = _build_seeks(
-                        st, types,
-                        [(root.subtypes[i], proj)
-                         for i, proj in zip(sel, projs)],
-                        g_lo, comp != "none", idx_cache,
-                    )
-                    if seeks is None:
-                        rows_lo = 0  # can't seek: decode from start
-                    else:
-                        st = _Stripe(memoryview(data)[start:end], sf,
-                                     comp, bs, info["n_rows"], seeks,
-                                     writer=footer.get("writer"))
-                n_dec = rows_hi - rows_lo
-                if not all(gkeep[rows_lo // stride : g_hi]):
-                    # interior gaps: drop rows of eliminated groups
-                    rel = np.arange(n_dec, dtype=np.int64) + rows_lo
-                    gm = np.array(gkeep, bool)[rel // stride]
-                    gmask = pa.array(gm)
-        arrays = [
-            _read_column(st, types, root.subtypes[i], n_dec, proj)
-            for i, proj in zip(sel, projs)
-        ]
-        tbl = pa.table(dict(zip(names, arrays)))
-        if gmask is not None:
-            tbl = tbl.filter(gmask)
-        tables.append(tbl)
+                runs, n_groups = _kept_runs(gkeep), len(gkeep)
+        top = [(root.subtypes[i], proj) for i, proj in zip(sel, projs)]
+
+        def rows_to(g):  # first row of group g; the stripe's end past the last
+            return n_rows if g == n_groups else g * stride
+
+        def decode(seeks, g_a, g_b):  # rows of groups [g_a, g_b)
+            st.seeks = seeks
+            st.ends = {} if g_b == n_groups else _stream_ends(_build_seeks(
+                st, types, top, g_b, comp != "none", idx_cache))
+            n = rows_to(g_b) - rows_to(g_a)
+            return pa.table({nm: _read_column(st, types, cid, n, proj)
+                             for nm, (cid, proj) in zip(names, top)})
+
+        for k, (g_a, g_b) in enumerate(runs):
+            seeks = {} if g_a == 0 else _build_seeks(
+                st, types, top, g_a, comp != "none", idx_cache)
+            if seeks is None:
+                # can't seek: one decode from the stripe start through
+                # the last run, every remaining run cut out of it
+                whole = decode({}, 0, runs[-1][1])
+                tables += [whole.slice(rows_to(a), rows_to(b) - rows_to(a))
+                           for a, b in runs[k:]]
+                break
+            tables.append(decode(seeks, g_a, g_b))
     if not tables:
         empty = [
             pa.nulls(0, _arrow_type(types, root.subtypes[i], proj))

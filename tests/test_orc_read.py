@@ -923,6 +923,243 @@ def test_row_group_skipping_fuzz():
             assert gs == [f"x{v:07d}" for v in gk], (stride, op)
 
 
+# ------------------------------------- bounded stream reads per group run
+
+
+_BOUNDED_PREDS = [
+    ("k", "==", 4_321),
+    ("k", "!=", 7),
+    ("k", "<", 2_500),
+    ("k", "<=", 1_999),
+    ("k", ">", 22_001),
+    ("k", ">=", 20_000),
+    ("k", "in", [100, 2_100, 9_000, 9_500, 15_999, 16_000, 24_999]),
+    ("k", "isnull", None),
+    ("k", "notnull", None),
+    [("k", ">=", 3_000), ("k", "<", 7_000)],
+    ("or", [("k", "<", 10), ("k", ">", 24_990)]),
+    ("not", ("k", ">=", 1)),
+    ("stc.a", "in", [5, 13_000]),
+]
+
+
+def _group_runs_want(full: pa.Table, pred, stride: int) -> pa.Table:
+    """The rows of every group the RowIndexEntry min/max of ``k`` (equal
+    to ``stc.a``) admit, from a full read: the row-group contract."""
+    from orc_format_spark.predicate import Stats, may_match, normalize
+
+    tree = normalize(pred)
+    ks = np.asarray(full.column("k"))
+    parts = []
+    for a in range(0, full.num_rows, stride):
+        g = ks[a : a + stride]
+        st = Stats(int(g.min()), int(g.max()), False, g.size)
+        if may_match(tree, lambda col: st):
+            parts.append(full.slice(a, g.size))
+    return pa.concat_tables(parts) if parts else full.slice(0, 0)
+
+
+@pytest.mark.parametrize("writer", ["apache-zlib", "apache-zstd",
+                                    "apache-none", "ours-zstd", "ours-none"])
+def test_bounded_reads_match_full_stripe(writer):
+    """Each run of kept groups decodes from its first group's recorded
+    positions and stops decompressing at the next group's. On files
+    whose compression blocks (1 KiB on the Apache side), RLE runs and
+    row groups straddle each other, every op (``in`` included, over
+    adjacent and disjoint groups) returns exactly the admitted groups'
+    rows of a full-stripe read."""
+    n, stride = 25_000, 2_000
+    t = _rg_table(n)
+    buf = io.BytesIO()
+    kind, comp = writer.split("-")
+    if kind == "apache":
+        po.write_table(t, buf, row_index_stride=stride,
+                       compression={"none": "uncompressed"}.get(comp, comp),
+                       compression_block_size=1024,
+                       stripe_size=64 * 1024 * 1024)
+    else:
+        write_orc(t, buf, compression=comp, rle="v2", stripe_rows=n,
+                  row_index_stride=stride)
+    data = buf.getvalue()
+    full = read_orc(data)
+    for pred in _BOUNDED_PREDS:
+        got = read_orc(data, predicate=pred)
+        want = _group_runs_want(full, pred, stride)
+        assert got.num_rows == want.num_rows, (writer, pred)
+        for c in t.column_names:
+            assert _col_eq(got[c], want[c]), (writer, pred, c)
+
+
+def test_unseekable_stripe_reads_runs_from_the_start(monkeypatch):
+    """When a column's positions can't be used (no index, a foreign
+    layout), every run of kept groups is cut out of one decode from the
+    stripe start: same rows as the positioned reads."""
+    from orc_format_spark.sources import orc_read
+
+    n, stride = 25_000, 2_000
+    t = _rg_table(n)
+    buf = io.BytesIO()
+    po.write_table(t, buf, row_index_stride=stride, compression="zstd",
+                   compression_block_size=1024, stripe_size=64 * 1024 * 1024)
+    data = buf.getvalue()
+    want = {str(p): read_orc(data, predicate=p) for p in _BOUNDED_PREDS}
+    monkeypatch.setattr(orc_read, "_build_seeks", lambda *a, **k: None)
+    for pred in _BOUNDED_PREDS:
+        got = read_orc(data, predicate=pred)
+        assert got.num_rows == want[str(pred)].num_rows, pred
+        for c in t.column_names:
+            assert _col_eq(got[c], want[str(pred)][c]), (pred, c)
+
+
+def _stream_at(data: bytes, col: int, kind: int) -> int:
+    """File offset of a stream of stripe 0 of an uncompressed file."""
+    from orc_format_spark.sources.orc_read import (
+        _decompress,
+        _file_tail,
+        _parse_stripe_footer,
+    )
+
+    _ps, comp, bs, footer, _meta = _file_tail(data)
+    assert comp == "none"
+    info = footer["stripes"][0]
+    end = info["offset"] + info["index_len"] + info["data_len"]
+    sf = _parse_stripe_footer(
+        _decompress(data[end : end + info["footer_len"]], comp, bs))
+    pos = info["offset"]
+    for k, c, ln in sf["streams"]:
+        if (k, c) == (kind, col):
+            return pos
+        pos += ln
+    raise AssertionError(f"no stream {kind} for column {col}")
+
+
+def _index_varint(data: bytes, col: int, group: int, which: int):
+    """(file offset, byte length, value) of position ``which`` of
+    RowIndexEntry ``group`` of column ``col`` in an uncompressed
+    single-stripe file whose writer emits unpacked positions."""
+    from orc_format_spark.sources.orc_file import _ROW_INDEX
+
+    def varint(pos):  # -> (value, first byte after it)
+        v = shift = 0
+        while True:
+            b = data[pos]
+            v |= (b & 0x7F) << shift
+            pos += 1
+            if b < 0x80:
+                return v, pos
+            shift += 7
+
+    pos = _stream_at(data, col, _ROW_INDEX)
+    for _ in range(group + 1):  # RowIndex.entry: field 1, length-prefixed
+        assert data[pos] == 0x0A
+        ln, entry = varint(pos + 1)
+        pos = entry + ln
+    for _ in range(which + 1):  # RowIndexEntry.positions: field 1, varint
+        assert data[entry] == 0x08
+        at = entry + 1
+        v, entry = varint(at)
+    return at, entry - at, v
+
+
+def test_forged_end_position_raises():
+    """A RowIndexEntry position that ends the kept group's bytes early
+    must raise, never return a short column: cut inside a run, and cut
+    at a run boundary of the only projected column."""
+    from orc_format_spark.codecs.rle_v2 import decode_int_rle_v2
+    from orc_format_spark.sources.orc_file import _DATA
+
+    n, stride = 6_000, 1_000
+    k = np.cumsum(np.random.default_rng(4).integers(1, 5_000, n))
+    t = pa.table({"k": pa.array(k, pa.int64()),
+                  "s": pa.array([f"v{x:05d}" for x in range(n)])})
+    buf = io.BytesIO()
+    write_orc(t, buf, compression="none", rle="v2", stripe_rows=n,
+              row_index_stride=stride, dict_strings=False)
+    data = buf.getvalue()
+    pred = ("k", "==", int(k[1_500]))  # group 1; group 2's positions end it
+    assert read_orc(data, predicate=pred).num_rows == stride
+
+    def short_run_prefix(raw: bytes) -> bool:
+        try:
+            return 0 < decode_int_rle_v2(raw).size < stride
+        except (ValueError, IndexError):  # cut inside a run
+            return False
+
+    for col in (1, 2):  # k's RLEv2 DATA stream, s's raw DATA bytes
+        _, _, start = _index_varint(data, col, 1, 0)
+        at, nb, end = _index_varint(data, col, 2, 0)
+        assert end > start + 2
+        cuts = [end - 1, (start + end) // 2]
+        if col == 1:
+            group = data[_stream_at(data, col, _DATA) + start :][: end - start]
+            cuts.append(start + next(c for c in range(len(group) - 1, 0, -1)
+                                     if short_run_prefix(group[:c])))
+        for cut in cuts:
+            forged = bytearray(data)
+            for i in range(nb):  # same byte length: a padded varint
+                forged[at + i] = ((cut >> (7 * i)) & 0x7F) | (0x80 if i < nb - 1 else 0)
+            for columns in (None, [t.column_names[col - 1]]):
+                with pytest.raises(ValueError):
+                    read_orc(bytes(forged), columns=columns, predicate=pred)
+            # an unpruned read never consults the positions
+            assert read_orc(bytes(forged)).equals(read_orc(data))
+
+
+def test_bytes_past_the_end_block_are_never_read():
+    """Flipping every compressed block after the one that holds the
+    kept group's end leaves a point lookup unchanged (those blocks are
+    never decompressed), while a full read now fails or differs."""
+    from orc_format_spark.sources.orc_read import (
+        _decompress,
+        _file_tail,
+        _parse_stripe_footer,
+    )
+
+    n, stride = 60_000, 10_000
+    rng = np.random.default_rng(3)
+    t = pa.table({
+        "k": pa.array(np.arange(n), pa.int64()),
+        "f": pa.array(rng.normal(size=n), pa.float64()),
+        "s": pa.array([f"row-{x:07d}-{x % 13}" for x in range(n)]),
+    })
+    buf = io.BytesIO()
+    write_orc(t, buf, compression="zstd", rle="v2", stripe_rows=n,
+              row_index_stride=stride, dict_strings=False)
+    data = buf.getvalue()
+    pred = ("k", "==", 1_234)
+    want = read_orc(data, predicate=pred)
+    assert want.num_rows == stride
+
+    _ps, comp, bs, footer, _meta = _file_tail(data)
+    info = footer["stripes"][0]
+    end = info["offset"] + info["index_len"] + info["data_len"]
+    sf = _parse_stripe_footer(
+        _decompress(data[end : end + info["footer_len"]], comp, bs))
+    bad = bytearray(data)
+    flipped = 0
+    pos = info["offset"]
+    for kind, _col, ln in sf["streams"]:
+        blk = pos
+        first = True
+        while kind in (1, 2) and blk < pos + ln:  # DATA, LENGTH streams
+            length = int.from_bytes(data[blk : blk + 3], "little") >> 1
+            # group 1 starts inside each stream's first 256 KiB block
+            if not first:
+                for j in range(blk + 3, blk + 3 + length, 97):
+                    bad[j] ^= 0xFF
+                flipped += 1
+            first = False
+            blk += 3 + length
+        pos += ln
+    assert flipped >= 2
+    assert read_orc(bytes(bad), predicate=pred).equals(want)
+    try:
+        differs = not read_orc(bytes(bad)).equals(read_orc(data))
+    except (ValueError, OSError, pa.ArrowException):
+        differs = True
+    assert differs
+
+
 def _nested_table(n=500):
     inner = pa.struct([("x", pa.int64()), ("y", pa.string())])
     outer = pa.struct([("a", pa.int64()), ("b", pa.string()),

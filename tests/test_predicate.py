@@ -691,9 +691,11 @@ def test_isnull_prunes_list_chunks_with_element_stats(monkeypatch):
 def test_pruning_power_pinned(monkeypatch):
     """The lookup shapes of the lineitem benchmark (``==``, ``in``, a
     ``>=``/``<`` range, plus Bloom-served ``==``/``in`` on an unclustered
-    key) on sf0.001 lineitem: blob chunks decompressed, ORC stripes and
-    rows decoded, and rows returned, per shape. Pinned so a change to
-    the evaluator cannot widen reads unnoticed."""
+    key) on sf0.001 lineitem: blob chunks decompressed, ORC runs of
+    kept row groups and rows decoded, and rows returned, per shape.
+    Pinned so a change to the evaluator cannot widen reads unnoticed;
+    an ORC read decodes only its kept groups, so its decoded rows equal
+    its returned rows."""
     import io
 
     import pyarrow.parquet as pq
@@ -741,7 +743,7 @@ def test_pruning_power_pinned(monkeypatch):
     orig_col = orc_read._read_column
 
     def spy(st, types, cid, n, proj=None):
-        if cid == 1:  # l_orderkey: once per decoded stripe
+        if cid == 1:  # l_orderkey: once per decoded run of row groups
             stripes.append(1)
             rows.append(n)
         return orig_col(st, types, cid, n, proj)
@@ -758,9 +760,9 @@ def test_pruning_power_pinned(monkeypatch):
     assert got == {
         0: (12, 12, 3000, 58, 3000),
         1: (14, 12, 3500, 735, 3500),
-        2: (45, 34, 14000, 227, 11250),
-        3: (216, 48, 62000, 380, 54750),
-        4: (262, 48, 69250, 694, 65500),
+        2: (45, 39, 11250, 227, 11250),
+        3: (216, 71, 54750, 380, 54750),
+        4: (262, 60, 65500, 694, 65500),
     }
 
 
@@ -1137,3 +1139,77 @@ def test_predicate_differential_fuzz(seed, tmp_path):
                 assert not missing, (seed, trial, writer, t, sorted(missing)[:5])
 
     _synthetic_stats_fuzz(rng, 15)
+
+
+# ------------------------------------------- chunk-stats parse on lookups
+
+
+_NAME_BITS = ["a", "k", "z9", " ", ",", ":", "{", "]", "@", "@bloom", "x@bloom",
+              '"', "\\", "é", "日本"]
+
+
+def _restricted(stats: dict, cols: set) -> dict:
+    return {k: v for k, v in stats.items()
+            if k in cols or (k.endswith("@bloom") and k[:-6] in cols)}
+
+
+def test_chunk_stats_parse_matches_json_loads():
+    """``_load_chunk_stats`` cuts the ``<col>@bloom`` bitsets of columns
+    outside the predicate out of the JSON before parsing. Over fuzzed
+    column names (quotes, backslashes, non-ASCII, a trailing
+    ``@bloom``, JSON punctuation) it agrees with ``json.loads`` on every
+    key it keeps and on every key the predicate's columns read, and on
+    text without escapes it really drops the other bitsets."""
+    import base64
+    import json
+
+    rng = np.random.default_rng(17)
+    for trial in range(400):
+        bits = _NAME_BITS if trial % 2 else _NAME_BITS[:11]  # odd: escapes
+        names = {"".join(rng.choice(bits, int(rng.integers(1, 4))))
+                 for _ in range(int(rng.integers(1, 7)))}
+        names = sorted(names | {f"{nm}@bloom" for nm in names if rng.random() < 0.3})
+        stats = []
+        for _ in range(int(rng.integers(1, 5))):
+            d = {}
+            for nm in names:
+                r = rng.random()
+                if r < 0.5:
+                    d[nm] = sorted(rng.integers(-50, 50, 2).tolist())
+                elif r < 0.7:
+                    d[nm] = [None, None]
+                elif r < 0.85:
+                    d[nm] = {"t": "elem", "lo": 1, "hi": 2}
+                if rng.random() < 0.6:
+                    raw = rng.integers(0, 256, int(rng.integers(0, 40)), dtype=np.uint8)
+                    d[f"{nm}@bloom"] = base64.b64encode(raw.tobytes()).decode()
+            stats.append(d)
+        text = json.dumps(stats, sort_keys=True, separators=(",", ":")).encode()
+        blob = b"\x01head" + text + b"body"
+        cols = {nm for nm in names if rng.random() < 0.4} | {"absent"}
+        got = container._load_chunk_stats(blob, 5, 5 + len(text), cols)
+        full = json.loads(text)
+        assert len(got) == len(full), trial
+        for g, f in zip(got, full):
+            assert all(k in f and f[k] == v for k, v in g.items()), trial
+            assert _restricted(g, cols) == _restricted(f, cols), trial
+            if b"\\" not in text:
+                assert not [k for k, v in g.items() if isinstance(v, str)
+                            and k.endswith("@bloom") and k[:-6] not in cols
+                            and k not in cols], trial
+
+
+def test_lookup_on_escaped_column_names():
+    """End to end: bloomed columns whose names need JSON escaping, and a
+    column whose name ends in @bloom, prune and filter exactly."""
+    rng = np.random.default_rng(8)
+    n = 1_000
+    names = ['q"uote', "back\\slash", "é日", "plain", "x@bloom"]
+    t = pa.table({nm: pa.array(rng.permutation(n).astype(np.int64)) for nm in names})
+    blob, _ = encode_table(t, stride=100, bloom_columns=names)
+    for nm in names:
+        v = int(t.column(nm)[int(rng.integers(0, n))].as_py())
+        want = t.filter(pa.compute.equal(t.column(nm), v))
+        for pred in [(nm, "==", v), (nm, "in", [v, n + 5]),
+                     ("or", [(nm, "==", v), ("plain", "==", -1)])]:
+            assert decode_table(blob, predicate=pred).equals(want), pred
