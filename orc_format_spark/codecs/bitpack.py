@@ -196,8 +196,8 @@ def bitunpack_runs(src: np.ndarray, offs, counts, width: int) -> np.ndarray:
 
     Payloads that all end on a byte boundary are copied into one packed
     stream: read as big-endian words at 8/16/32/64 bits, else unpacked
-    by one ``bitunpack`` (up to 24 bits, where its block kernel is the
-    faster). Otherwise each value is cut from the two big-endian 64-bit
+    by one ``bitunpack`` (up to 24 bits: its block kernel is the faster
+    below 9 bits, and at every such width on long payloads). Otherwise each value is cut from the two big-endian 64-bit
     words that hold its bits, so a payload's padding bits need no
     alignment with the next one's."""
     counts = np.asarray(counts, np.int64)

@@ -342,7 +342,7 @@ def _block(payload, kind: str, block_size: int):
     raise NotImplementedError(f"orc_read: compression {kind!r}")
 
 
-def _decompress(buf, kind: str, block_size: int,
+def _decompress(buf, kind: str, block_size: int, start: int = 0,
                 end: tuple[int, int] | None = None):
     """ORC chunk framing: 3-byte LE ``len*2 + is_original`` headers.
 
@@ -350,24 +350,26 @@ def _decompress(buf, kind: str, block_size: int,
     there is NO leading total-length varint (real ORC has no room for
     one), so sizes are sniffed per codec where the wire requires it.
 
-    ``end = (block_off, inblock_off)``, a recorded stream position
-    relative to ``buf``, stops the walk there: blocks before
-    ``block_off`` decompress whole, the block at it only when
-    ``inblock_off`` > 0 (cut to that many bytes), later ones never. A
-    position off the block chain raises. One block comes back as it
-    decompressed (bytes, or a memoryview when cut), without a join.
+    The walk begins at the block at offset ``start``. ``end =
+    (block_off, length)`` stops it once ``length`` bytes have come out
+    of the blocks from the one at ``block_off`` on (the last one cut;
+    ``length`` 0 stops before that block), or at the stream's end. A
+    ``block_off`` off the block chain raises. One block comes back as
+    it decompressed (bytes, or a memoryview when cut), without a join.
     """
     if kind == "none":
         return bytes(buf)
     mv = memoryview(buf)
     out = []
-    pos = 0
+    pos = start
     n = len(mv)
-    stop, cut = (n, 0) if end is None else end
-    at_end = False
+    stop, want = (n, 0) if end is None else end
+    reached = False
     while pos < n:
-        at_end = pos == stop
-        if pos > stop or (at_end and not cut):
+        reached = reached or pos == stop
+        if reached and want <= 0:
+            break
+        if pos > stop and not reached:
             break
         header = int.from_bytes(bytes(mv[pos : pos + 3]), "little")
         pos += 3
@@ -375,15 +377,16 @@ def _decompress(buf, kind: str, block_size: int,
         if pos + length > n:
             raise ValueError("orc_read: compressed block runs past its stream")
         payload = mv[pos : pos + length]
+        block = (bytes(payload) if header & 1  # stored original
+                 else _block(payload, kind, block_size))
         pos += length
-        out.append(bytes(payload) if header & 1  # stored original
-                   else _block(payload, kind, block_size))
-        if at_end:
-            if len(out[-1]) < cut:
-                raise ValueError("orc_read: index position past its block")
-            out[-1] = memoryview(out[-1])[:cut]
-            break
-    if end is not None and not (at_end if cut else pos == stop):
+        out.append(block)
+        if reached:
+            want -= len(block)
+            if want < 0:
+                out[-1] = memoryview(block)[: len(block) + want]
+                break
+    if end is not None and not (reached or pos == stop):
         raise ValueError(
             "orc_read: index position off its stream's compression blocks"
         )
@@ -795,15 +798,25 @@ def _select_row_groups(st: "_Stripe", types, cid_of: dict, tree,
     return None if all(keep) else keep
 
 
+# Longest encoding of one RLE run: an RLEv2 PATCHED_BASE run of 512
+# 64-bit values (4-byte header, 8-byte base, 31 64-bit patches); RLEv1
+# and byte-RLE runs are shorter
+_MAX_RUN_BYTES = 4 + 8 + 512 * 8 + 31 * 8
+
+
 def _stream_ends(seeks: dict | None) -> dict[tuple[int, int], tuple[int, int]]:
-    """The positions of the first row group after a decoded run, kept
-    where they bound the run's bytes exactly: every ``raw`` stream, and
-    ``rle``/``bool`` streams with zero run and bit offsets there (the
-    encoder had flushed every earlier value; this repo's writer
-    restarts its encoders at each group). Other streams have values of
-    the run still buffered past the position and are read to the end."""
-    return {k: (blk, inb) for k, (blk, inb, run, bit) in (seeks or {}).items()
-            if not run and not bit}
+    """Where a decoded run's bytes end, per stream, from the positions
+    ``(block_off, inblock_off, run_off, bit_off)`` of the first row
+    group after it: ``(block_off, bytes from that block on)``. Exact
+    for every ``raw`` stream, and for ``rle``/``bool`` streams with
+    zero run and bit offsets there (the encoder had flushed every
+    earlier value; this repo's writer restarts its encoders at each
+    group). Otherwise the run's last values were still buffered at the
+    position and went out in the run that starts there, or in it and
+    the repeat run a writer splits off its end: two runs' bytes past
+    the position hold them."""
+    return {k: (blk, inb + (2 * _MAX_RUN_BYTES if run or bit else 0))
+            for k, (blk, inb, run, bit) in (seeks or {}).items()}
 
 
 def _kept_runs(keep: list[bool]) -> list[tuple[int, int]]:
@@ -839,8 +852,8 @@ class _Stripe:
         # bit_off)} — positions a decode at a row-group boundary
         # (_build_seeks); empty = decode from the stripe start
         self.seeks: dict[tuple[int, int], tuple] = {}
-        # {(col, stream_kind): (block_off, inblock_off)} — where the
-        # decoded rows' bytes provably end (_stream_ends); absent = the
+        # {(col, stream_kind): (block_off, length)} — where the decoded
+        # rows' bytes provably end (_stream_ends); absent = the
         # stream's end
         self.ends: dict[tuple[int, int], tuple[int, int]] = {}
         self.blooms: dict = {}  # cid -> _bloom_filters, parsed once
@@ -861,11 +874,8 @@ class _Stripe:
         if self.compression == "none":  # positions are byte offsets
             if end is not None and end[0] > ln:
                 raise ValueError("orc_read: index position past its stream")
-            return bytes(mv[blk : ln if end is None else end[0]])
-        out = _decompress(
-            mv[blk:], self.compression, self.block_size,
-            None if end is None else (end[0] - blk, end[1]),
-        )
+            return bytes(mv[blk : ln if end is None else sum(end)])
+        out = _decompress(mv, self.compression, self.block_size, blk, end)
         return memoryview(out)[inb:] if inb else out
 
     def _drops(self, col: int, kind: int) -> tuple[int, int]:

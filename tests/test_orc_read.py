@@ -1160,6 +1160,64 @@ def test_bytes_past_the_end_block_are_never_read():
     assert differs
 
 
+def test_foreign_streams_stop_two_runs_past_the_next_group():
+    """On an Apache-written file the next group's positions carry run
+    offsets into RLE runs still buffered there, so they can't bound a
+    read exactly; a lookup reads at most two RLE runs past them. With
+    1 KiB compression blocks, flipping every block of the large
+    streams after their first quarter leaves a group-0 lookup (and an
+    ``in`` over groups 0 and 1) unchanged, while a full read fails or
+    differs."""
+    from orc_format_spark.sources.orc_read import (
+        _decompress,
+        _file_tail,
+        _parse_stripe_footer,
+    )
+
+    n, stride = 25_000, 2_000
+    rng = np.random.default_rng(11)
+    t = pa.table({
+        "k": pa.array(np.arange(n), pa.int64()),
+        "r": pa.array(rng.integers(-(1 << 40), 1 << 40, n), pa.int64()),
+        "f": pa.array(rng.normal(size=n), pa.float64()),
+        "s": pa.array([f"v{x:07d}-{x * 7919 % 1009}" for x in range(n)]),
+    })
+    buf = io.BytesIO()
+    po.write_table(t, buf, row_index_stride=stride, compression="zstd",
+                   compression_block_size=1024, stripe_size=64 * 1024 * 1024)
+    data = buf.getvalue()
+    preds = [("k", "==", 1_234), ("k", "in", [5, 2_100])]
+    want = [read_orc(data, predicate=p) for p in preds]
+    assert [w.num_rows for w in want] == [stride, 2 * stride]
+
+    _ps, comp, bs, footer, _meta = _file_tail(data)
+    info = footer["stripes"][0]
+    end = info["offset"] + info["index_len"] + info["data_len"]
+    sf = _parse_stripe_footer(
+        _decompress(data[end : end + info["footer_len"]], comp, bs))
+    bad = bytearray(data)
+    flipped = set()
+    pos = info["offset"]
+    for kind, col, ln in sf["streams"]:
+        blk = pos
+        while kind in (1, 2) and ln > 64 * 1024 and blk < pos + ln:
+            length = int.from_bytes(data[blk : blk + 3], "little") >> 1
+            if blk - pos > ln // 4:
+                bad[blk + 3 : blk + 3 + length] = bytes(
+                    b ^ 0xFF for b in data[blk + 3 : blk + 3 + length])
+                flipped.add(col)
+            blk += 3 + length
+        pos += ln
+    assert {2, 3} <= flipped  # r's RLEv2 runs, f's raw bytes
+    for p, w in zip(preds, want):
+        assert read_orc(bytes(bad), predicate=p).equals(w), p
+    try:
+        differs = not read_orc(bytes(bad)).equals(read_orc(data))
+    except (ValueError, OSError, pa.ArrowException):
+        differs = True
+    assert differs
+
+
 def _nested_table(n=500):
     inner = pa.struct([("x", pa.int64()), ("y", pa.string())])
     outer = pa.struct([("a", pa.int64()), ("b", pa.string()),
