@@ -442,44 +442,6 @@ def q_file_prune_scan(spark, sf_dir):
     )
 
 
-def q_zorder_prune_scan(spark, sf_dir):
-    """Z-order (Morton) clustered write -> MULTI-column planning-time
-    file pruning: quantile-rank buckets per column (one distributed
-    approxQuantile sketch), map-side searchsorted + bit interleave
-    (operators/zorder.py), one range shuffle on the z-key. Each blob
-    file then covers a tight hyper-rectangle, so the manifest's
-    per-file [min,max] prunes reads filtered on ANY participating
-    column — measured at sf0.01: a 1/4 x 1/4 box keeps 2-3/16 files
-    (vs 5/16 for single-column range clustering, which keeps 16/16
-    on the off-axis column). bits=8 (256 rank buckets/column) is
-    plenty for 16 files and keeps the quantile sketch cheap.
-    Reference N/A (single-file writer, no clustering); oracle =
-    plain SQL over the same box."""
-    import os
-    import tempfile
-
-    from orc_format_spark import register_datasource
-    from orc_format_spark.operators.zorder import zorder_write
-
-    register_datasource(spark)
-    d = os.path.join(
-        tempfile.gettempdir(), f"ofs_zo_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    zorder_write(li, d, ["l_orderkey", "l_partkey"], num_files=16, bits=8)
-    hi_ok, hi_pk = li.agg(F.max("l_orderkey"), F.max("l_partkey")).first()
-    return (
-        spark.read.format("orc_format")
-        .load(d)
-        .filter(
-            (F.col("l_orderkey") <= int(hi_ok) // 4)
-            & (F.col("l_partkey") <= int(hi_pk) // 4)
-        )
-    )
-
-
 def q_token_contains(spark, sf_dir):
     """Find sequences containing a given token WITHOUT decoding
     non-candidate row groups: tokenize -> encode with element stats +
@@ -1613,7 +1575,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "datasource_roundtrip": q_datasource_roundtrip,
         "bloom_filter_decode": q_bloom_filter_decode,
         "file_prune_scan": q_file_prune_scan,
-        "zorder_prune_scan": q_zorder_prune_scan,
         "codec_lineage": q_codec_lineage,
         # ---- driver window boundary (50) — below: r04 driver-green ----
         "struct_map_roundtrip": q_struct_map_roundtrip,
@@ -1823,11 +1784,6 @@ def oracle_sql() -> dict[str, str]:
         "file_prune_scan": (
             "SELECT l_orderkey, l_quantity FROM lineitem "
             "WHERE l_orderkey > (SELECT (max(l_orderkey) * 7) // 8 FROM lineitem)"
-        ),
-        "zorder_prune_scan": (
-            "SELECT l_orderkey, l_partkey, l_quantity FROM lineitem "
-            "WHERE l_orderkey <= (SELECT max(l_orderkey) // 4 FROM lineitem) "
-            "AND l_partkey <= (SELECT max(l_partkey) // 4 FROM lineitem)"
         ),
         "stats_longs": stats_longs,
         "stats_strings": stats_strings,

@@ -68,7 +68,6 @@ HEADLINE = [
     "sink_encode_roundtrip",
     "datasource_roundtrip",
     "file_prune_scan",
-    "zorder_prune_scan",
     "compact_roundtrip",
     "clustered_encode",
     "orc_file_roundtrip",

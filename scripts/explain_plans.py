@@ -167,23 +167,6 @@ def main() -> None:
         read_tokens_table(spark, tdir),
     )
     import __spark_entry__ as entrymod
-    from orc_format_spark.operators.zorder import with_zorder_key
-
-    li2 = spark.read.parquet(f"{sf}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    show(
-        "z-order clustered layout (expect: MapInArrow computes the "
-        "Morton key map-side — boundaries are driver metadata, no "
-        "Exchange before it — then ONE rangepartitioning Exchange on z "
-        "+ in-partition Sort: exactly the shuffle any clustered write "
-        "pays; the quantile sketch ran before planning and is not in "
-        "this plan)",
-        with_zorder_key(li2, ["l_orderkey", "l_partkey"], bits=8)
-        .repartitionByRange(8, "z")
-        .sortWithinPartitions("z")
-        .drop("z"),
-    )
     qs = entrymod.queries()
     show(
         "ORC bloom point lookup (expect: Scan orc with PushedFilters "
