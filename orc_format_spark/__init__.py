@@ -29,11 +29,7 @@ from .operators.encode import (
 )
 from .operators.compact import compact_blobs, plan_compaction
 from .operators.job import job_metrics, read_encoded, read_metrics, run_encode_job
-from .operators.partitioning import (
-    plan_num_groups,
-    suggest_cluster_by,
-    with_group_id,
-)
+from .operators.partitioning import plan_num_groups, with_group_id
 from .operators.stats import column_statistics
 from .sources.iceberg import (
     encode_iceberg_splits,
@@ -81,6 +77,5 @@ __all__ = [
     "tokenize_documents",
     "verify_blob_files",
     "verify_blobs",
-    "suggest_cluster_by",
     "with_group_id",
 ]

@@ -130,68 +130,3 @@ def with_group_id(
     ).otherwise(h % n_light)
     return df.withColumn("group_id", gid.cast("long"))
 
-
-def suggest_cluster_by(
-    df: DataFrame,
-    key_col: str,
-    candidates: list[str] | None = None,
-    sample_rows: int = 20_000,
-    codec: str | dict = "auto",
-    compression: str = "zstd",
-    min_gain: float = 0.02,
-) -> dict:
-    """Measure — don't guess — which column ordering compresses best:
-    the sampled-statistics philosophy behind codec auto-selection
-    (SURVEY.md section 4.2) extended to row ordering. A deterministic
-    hash sample is encoded once per candidate ordering (candidate
-    column, then ``key_col`` as tiebreak) plus the key-order baseline;
-    the winner, if it beats the baseline by at least ``min_gain``
-    (fraction of encoded bytes), is what ``encode_groups(cluster_by=)``
-    should use.
-
-    Returns ``{"cluster_by": [col] | None, "bytes": {ordering: n}}``.
-
-    Scale shape: ONE pruned sample scan (deterministic xxhash64 slice,
-    resume-stable like every sampling decision in this engine), then
-    driver-side encodes of a ~``sample_rows``-row Arrow table — the cost
-    is independent of corpus size, exactly like the per-partition codec
-    sampler. Advisory only: callers run it once per table layout, not
-    per job."""
-    from ..codecs.container import encode_table
-
-    n = df.count()
-    if n == 0:
-        raise ValueError("suggest_cluster_by: empty input")
-    mod = max(1, n // max(1, int(sample_rows)))
-    sampled = (
-        df.filter(F.pmod(F.xxhash64(F.col(key_col), F.lit(211)), F.lit(mod)) == 0)
-        if mod > 1
-        else df
-    )
-    tbl = sampled.toArrow()
-    if tbl.num_rows == 0:  # degenerate slice on tiny inputs
-        tbl = df.limit(int(sample_rows)).toArrow()
-    cols = candidates or [
-        c for c in tbl.column_names if c not in ("group_id", key_col)
-    ]
-    sizes: dict[str, int] = {}
-    base, _ = encode_table(
-        tbl.sort_by([(key_col, "ascending")]), codec=codec, compression=compression
-    )
-    sizes[key_col] = len(base)
-    best_col, best_len = None, len(base)
-    for c in cols:
-        blob, _ = encode_table(
-            tbl.sort_by([(c, "ascending"), (key_col, "ascending")]),
-            codec=codec,
-            compression=compression,
-        )
-        sizes[c] = len(blob)
-        if len(blob) < best_len:
-            best_col, best_len = c, len(blob)
-    gain = (sizes[key_col] - best_len) / sizes[key_col]
-    return {
-        "cluster_by": [best_col] if best_col is not None and gain >= min_gain else None,
-        "bytes": sizes,
-        "sample_rows": tbl.num_rows,
-    }

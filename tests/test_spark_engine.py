@@ -395,33 +395,6 @@ def test_ddl_names_nested_types():
     ) == ["a", "b", "c", "d", "e"]
 
 
-def test_suggest_cluster_by_picks_measured_winner(spark):
-    """The advisor encodes the sample under each candidate ordering and
-    returns the measured winner — l_shipdate beats key order on
-    lineitem, l_suppkey loses to it (verified offline at full scale)."""
-    from orc_format_spark.operators.partitioning import suggest_cluster_by
-
-    li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_shipdate"
-    )
-    out = suggest_cluster_by(
-        li,
-        key_col="l_orderkey",
-        candidates=["l_shipdate", "l_suppkey"],
-        sample_rows=60_000,  # full table: deterministic verdict
-    )
-    assert out["cluster_by"] == ["l_shipdate"]
-    assert out["bytes"]["l_shipdate"] < out["bytes"]["l_orderkey"]
-    assert out["bytes"]["l_suppkey"] > out["bytes"]["l_shipdate"]
-    # a genuine hash sample (not the full table) still runs end to end
-    sampled = suggest_cluster_by(
-        li, key_col="l_orderkey", candidates=["l_shipdate"], sample_rows=2_000
-    )
-    assert 0 < sampled["sample_rows"] < 60_000
-    with pytest.raises(ValueError, match="empty input"):
-        suggest_cluster_by(li.filter("l_orderkey < 0"), key_col="l_orderkey")
-
-
 def test_run_encode_job_cluster_by_resume_stable(spark, tmp_path):
     """cluster_by participates in the job's determinism contract: a
     resumed run reproduces the same blob bytes, and decode returns the
