@@ -1,21 +1,16 @@
 """Iceberg-backed tokens source.
 
 BASELINE.json's input_hint names an Iceberg table of pre-tokenized
-training sequences. Two routes:
+training sequences. Tables are path-addressed (``name`` is a directory
+holding an Iceberg ``metadata/`` dir) and need no jar: the pure-Python
+manifest reader (``iceberg_meta.py``) resolves the current (or pinned)
+snapshot's data files straight from the manifest-list and manifest Avro
+files, then explodes them to row-group splits. Any other name raises
+ValueError.
 
-1. **Path-addressed tables** (``name`` is a directory holding an Iceberg
-   ``metadata/`` dir): fully functional with no jar — the pure-Python
-   manifest reader (``iceberg_meta.py``) resolves the current (or
-   pinned) snapshot's data files straight from the manifest-list and
-   manifest Avro files, then explodes them to row-group splits.
-2. **Catalog-addressed tables** (``catalog.db.table``): require the
-   iceberg-spark runtime on the JVM classpath; gated on the class
-   actually being loadable, with a clear RuntimeError otherwise. The
-   split list comes from Iceberg's ``.files`` metadata table.
-
-Both produce the same deterministic (split_id, file, row_group) list for
-the zero-payload-movement encode path: snapshot-pinned manifests make
-split ids immutable => exact resume, the same determinism story as
+The deterministic (split_id, file, row_group) list feeds the
+zero-payload-movement encode path: snapshot-pinned manifests make split
+ids immutable => exact resume, the same determinism story as
 ``list_parquet_splits``.
 """
 
@@ -28,25 +23,17 @@ from pyspark.sql import DataFrame, SparkSession
 from .iceberg_meta import is_iceberg_table, list_iceberg_splits_meta, local_path
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg Spark runtime is on the JVM classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.iceberg.spark.SparkCatalog"
+def _table_dir(name: str) -> str:
+    """``name`` when it is a path-addressed Iceberg table, else a
+    ValueError: catalog names (``catalog.db.table``) need the
+    iceberg-spark runtime, which this engine does not use."""
+    if not is_iceberg_table(name):
+        raise ValueError(
+            f"iceberg: {name!r} is not a path-addressed Iceberg table (a "
+            "directory whose metadata/ holds a *.metadata.json); catalog "
+            "names are not supported"
         )
-        return True
-    except Exception:
-        return False
-
-
-def _require(spark: SparkSession) -> None:
-    if not iceberg_available(spark):
-        raise RuntimeError(
-            "Iceberg Spark runtime not on the classpath; add "
-            "org.apache.iceberg:iceberg-spark-runtime and a catalog config "
-            "(spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog), "
-            "or use the parquet-path source (sources/parquet_scan.py)."
-        )
+    return name
 
 
 def read_tokens_table(
@@ -56,104 +43,96 @@ def read_tokens_table(
     tables read the manifest's data files directly (snapshot-consistent:
     the file list comes from the pinned manifest, not a dir listing),
     with ``partition_filter`` pruned against manifest metadata before
-    any data file is opened; catalog names go through the Iceberg
-    runtime."""
-    if is_iceberg_table(name):
-        from .iceberg_meta import (
-            iceberg_to_spark_ddl,
-            list_data_file_seqs,
-            list_data_files,
-            list_delete_entries,
-            list_equality_delete_entries,
-            read_table_metadata,
-        )
+    any data file is opened."""
+    _table_dir(name)
+    from .iceberg_meta import (
+        iceberg_to_spark_ddl,
+        list_data_file_seqs,
+        list_data_files,
+        list_delete_entries,
+        list_equality_delete_entries,
+        read_table_metadata,
+    )
 
-        files = sorted(
-            p for p, _ in list_data_files(name, partition_filter=partition_filter)
+    files = sorted(
+        p for p, _ in list_data_files(name, partition_filter=partition_filter)
+    )
+    if not files:
+        raise ValueError(
+            f"iceberg table {name} has no data files"
+            + (f" matching {partition_filter}" if partition_filter else "")
         )
-        if not files:
-            raise ValueError(
-                f"iceberg table {name} has no data files"
-                + (f" matching {partition_filter}" if partition_filter else "")
-            )
-        # explicit current-schema read = Iceberg projection semantics:
-        # columns added since a file was written come back null, dropped
-        # columns are not requested (schema evolution without rewrites)
-        df = spark.read.schema(
-            iceberg_to_spark_ddl(read_table_metadata(name))
-        ).parquet(*files)
-        deletes = list_delete_entries(name)
-        eq_deletes = list_equality_delete_entries(name)
-        if deletes or eq_deletes:
-            # merge-on-read, Spark-first: the parquet source's hidden
-            # _metadata.file_path/row_index identify each physical row,
-            # and broadcast anti-joins apply ALL deletes in map-side
-            # passes — no per-file Python, no shuffle of the data side.
-            # Delete sets are metadata-scale (until compaction folds
-            # them in), so broadcast is the right plan at 10^12 rows too.
-            from pyspark.sql import functions as F
+    # explicit current-schema read = Iceberg projection semantics:
+    # columns added since a file was written come back null, dropped
+    # columns are not requested (schema evolution without rewrites)
+    df = spark.read.schema(
+        iceberg_to_spark_ddl(read_table_metadata(name))
+    ).parquet(*files)
+    deletes = list_delete_entries(name)
+    eq_deletes = list_equality_delete_entries(name)
+    if deletes or eq_deletes:
+        # merge-on-read, Spark-first: the parquet source's hidden
+        # _metadata.file_path/row_index identify each physical row,
+        # and broadcast anti-joins apply ALL deletes in map-side
+        # passes — no per-file Python, no shuffle of the data side.
+        # Delete sets are metadata-scale (until compaction folds
+        # them in), so broadcast is the right plan at 10^12 rows too.
+        from pyspark.sql import functions as F
 
-            cols = df.columns
-            df = df.withColumn(
-                "_fp",
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"),
+        cols = df.columns
+        df = df.withColumn(
+            "_fp",
+            F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"),
+        )
+        if deletes:
+            dels = spark.createDataFrame(
+                deletes, "_del_path string, _del_pos long"
             )
-            if deletes:
-                dels = spark.createDataFrame(
-                    deletes, "_del_path string, _del_pos long"
+            df = (
+                df.withColumn("_pos", F.col("_metadata.row_index"))
+                .join(
+                    F.broadcast(dels),
+                    (F.col("_fp") == F.col("_del_path"))
+                    & (F.col("_pos") == F.col("_del_pos")),
+                    "left_anti",
                 )
-                df = (
-                    df.withColumn("_pos", F.col("_metadata.row_index"))
-                    .join(
-                        F.broadcast(dels),
-                        (F.col("_fp") == F.col("_del_path"))
-                        & (F.col("_pos") == F.col("_del_pos")),
-                        "left_anti",
+                .drop("_pos")
+            )
+        if eq_deletes:
+            # the spec's sequence rule: an equality delete at seq S
+            # erases matching rows only from data files whose seq < S
+            # (rows re-appended after the delete survive — upserts).
+            # File seq rides in on a broadcast map keyed by file path;
+            # one null-safe anti-join per delete file's column set.
+            seq_rows = [
+                (os.path.abspath(local_path(p)), int(s))
+                for p, s in list_data_file_seqs(name).items()
+            ]
+            seq_df = spark.createDataFrame(
+                seq_rows, "_sq_path string, _data_seq long"
+            )
+            df = df.join(
+                F.broadcast(seq_df),
+                F.col("_fp") == F.col("_sq_path"),
+                "left",
+            ).drop("_sq_path")
+            by_cols: dict[tuple, list[dict]] = {}
+            for e in eq_deletes:
+                by_cols.setdefault(tuple(e["cols"]), []).append(e)
+            for cset, group in sorted(by_cols.items()):
+                dels = None
+                for e in group:
+                    part = spark.read.parquet(e["path"]).select(
+                        *[F.col(c).alias(f"_eq_{c}") for c in cset],
+                        F.lit(e["seq"]).alias("_del_seq"),
                     )
-                    .drop("_pos")
-                )
-            if eq_deletes:
-                # the spec's sequence rule: an equality delete at seq S
-                # erases matching rows only from data files whose seq < S
-                # (rows re-appended after the delete survive — upserts).
-                # File seq rides in on a broadcast map keyed by file path;
-                # one null-safe anti-join per delete file's column set.
-                seq_rows = [
-                    (os.path.abspath(local_path(p)), int(s))
-                    for p, s in list_data_file_seqs(name).items()
-                ]
-                seq_df = spark.createDataFrame(
-                    seq_rows, "_sq_path string, _data_seq long"
-                )
-                df = df.join(
-                    F.broadcast(seq_df),
-                    F.col("_fp") == F.col("_sq_path"),
-                    "left",
-                ).drop("_sq_path")
-                by_cols: dict[tuple, list[dict]] = {}
-                for e in eq_deletes:
-                    by_cols.setdefault(tuple(e["cols"]), []).append(e)
-                for cset, group in sorted(by_cols.items()):
-                    dels = None
-                    for e in group:
-                        part = spark.read.parquet(e["path"]).select(
-                            *[F.col(c).alias(f"_eq_{c}") for c in cset],
-                            F.lit(e["seq"]).alias("_del_seq"),
-                        )
-                        dels = part if dels is None else dels.unionAll(part)
-                    cond = F.col("_data_seq") < F.col("_del_seq")
-                    for c in cset:
-                        cond = cond & F.col(c).eqNullSafe(F.col(f"_eq_{c}"))
-                    df = df.join(F.broadcast(dels), cond, "left_anti")
-            df = df.select(*cols)
-        return df
-    if partition_filter:
-        raise NotImplementedError(
-            "partition_filter on the catalog route: use a WHERE clause — "
-            "the Iceberg runtime prunes partitions from SQL predicates"
-        )
-    _require(spark)
-    return spark.read.table(name)
+                    dels = part if dels is None else dels.unionAll(part)
+                cond = F.col("_data_seq") < F.col("_del_seq")
+                for c in cset:
+                    cond = cond & F.col(c).eqNullSafe(F.col(f"_eq_{c}"))
+                df = df.join(F.broadcast(dels), cond, "left_anti")
+        df = df.select(*cols)
+    return df
 
 
 def list_iceberg_splits(
@@ -168,51 +147,17 @@ def list_iceberg_splits(
     manifest, row-group-exploded. ``since_snapshot_id`` returns only the
     files appended after that snapshot (incremental encode).
 
-    Path-addressed tables go through the pure-Python manifest reader
-    (no jar, no JVM); catalog names use the `<table>.files` metadata
-    table and require the Iceberg runtime. The manifest enumerates data
-    files of the current snapshot; pin ``snapshot_id`` (catalog route:
-    `VERSION AS OF`) for immutable split ids across resumes.
+    The pure-Python manifest reader (no jar, no JVM) enumerates the data
+    files of the current snapshot; pin ``snapshot_id`` for immutable
+    split ids across resumes.
     """
-    import pyarrow.parquet as pq
-
-    if is_iceberg_table(name):
-        return list_iceberg_splits_meta(
-            name,
-            snapshot_id,
-            partition_filter=partition_filter,
-            column_predicates=column_predicates,
-            since_snapshot_id=since_snapshot_id,
-        )
-    if since_snapshot_id is not None:
-        raise NotImplementedError(
-            "incremental scan on the catalog route: diff the `.files` "
-            "metadata table between VERSION AS OF snapshots"
-        )
-    if partition_filter or column_predicates:
-        raise NotImplementedError(
-            "partition_filter on the catalog route: filter the "
-            f"`{name}.files` metadata table on its partition struct"
-        )
-    _require(spark)
-    if snapshot_id is not None:
-        raise NotImplementedError(
-            "snapshot pinning on the catalog route: read "
-            f"`{name}.files` with VERSION AS OF {snapshot_id}"
-        )
-    files = sorted(
-        r.file_path
-        for r in spark.read.table(f"{name}.files").select("file_path").collect()
+    return list_iceberg_splits_meta(
+        _table_dir(name),
+        snapshot_id,
+        partition_filter=partition_filter,
+        column_predicates=column_predicates,
+        since_snapshot_id=since_snapshot_id,
     )
-    out: list[tuple[int, str, int]] = []
-    sid = 0
-    for f in files:
-        local = local_path(f)
-        n_rg = pq.ParquetFile(local).metadata.num_row_groups
-        for rg in range(n_rg):
-            out.append((sid, local, rg))
-            sid += 1
-    return out
 
 
 def encode_iceberg_splits(

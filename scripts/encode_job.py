@@ -38,8 +38,7 @@ def main() -> None:
     ap.add_argument(
         "--input",
         required=True,
-        help="tokens table: parquet path, or iceberg:<catalog.db.table> "
-        "(requires the iceberg-spark runtime on the cluster classpath)",
+        help="tokens table: parquet path or path-addressed Iceberg table dir",
     )
     ap.add_argument("--output", required=True, help="output dir for blobs")
     ap.add_argument("--mode", choices=("splits", "grouped"), default="splits")
@@ -66,47 +65,36 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("orc-format-spark-encode").getOrCreate()
 
+    from orc_format_spark.sources.iceberg_meta import is_iceberg_table
+
+    iceberg_input = is_iceberg_table(args.input)
     if args.mode == "splits":
-        if args.input.startswith("iceberg:"):
+        if iceberg_input:
             from orc_format_spark.sources.iceberg import encode_iceberg_splits
 
             blobs = encode_iceberg_splits(
                 spark,
-                args.input[len("iceberg:") :],
+                args.input,
                 codec=args.codec,
                 compression=args.compression,
                 blob_sink=args.blob_sink,
                 since_snapshot_id=args.since_snapshot,
             )
         else:
-            from orc_format_spark.sources.iceberg_meta import is_iceberg_table
+            from orc_format_spark import encode_parquet_splits
 
-            if is_iceberg_table(args.input):
-                from orc_format_spark.sources.iceberg import encode_iceberg_splits
-
-                blobs = encode_iceberg_splits(
-                    spark,
-                    args.input,
-                    codec=args.codec,
-                    compression=args.compression,
-                    blob_sink=args.blob_sink,
-                    since_snapshot_id=args.since_snapshot,
+            if args.since_snapshot is not None:
+                raise SystemExit(
+                    "--since-snapshot requires an Iceberg input "
+                    "(snapshot watermarks come from its metadata)"
                 )
-            else:
-                from orc_format_spark import encode_parquet_splits
-
-                if args.since_snapshot is not None:
-                    raise SystemExit(
-                        "--since-snapshot requires an Iceberg input "
-                        "(snapshot watermarks come from its metadata)"
-                    )
-                blobs = encode_parquet_splits(
-                    spark,
-                    args.input,
-                    codec=args.codec,
-                    compression=args.compression,
-                    blob_sink=args.blob_sink,
-                )
+            blobs = encode_parquet_splits(
+                spark,
+                args.input,
+                codec=args.codec,
+                compression=args.compression,
+                blob_sink=args.blob_sink,
+            )
         blobs.write.mode("overwrite").parquet(f"{args.output}/blobs")
         blobs = spark.read.parquet(f"{args.output}/blobs")
         # codec-lineage metrics table, derived from the written blobs
@@ -121,19 +109,12 @@ def main() -> None:
                 "--since-snapshot is a splits-mode option (grouped mode "
                 "re-clusters the full merge-on-read view)"
             )
-        if args.input.startswith("iceberg:"):
+        if iceberg_input:
             from orc_format_spark.sources.iceberg import read_tokens_table
 
-            toks = read_tokens_table(spark, args.input[len("iceberg:") :])
+            toks = read_tokens_table(spark, args.input)
         else:
-            from orc_format_spark.sources.iceberg_meta import is_iceberg_table
-
-            if is_iceberg_table(args.input):
-                from orc_format_spark.sources.iceberg import read_tokens_table
-
-                toks = read_tokens_table(spark, args.input)
-            else:
-                toks = spark.read.parquet(args.input)
+            toks = spark.read.parquet(args.input)
         blobs = run_encode_job(
             spark,
             toks,

@@ -1,7 +1,7 @@
 """Iceberg source gating + the shared split-encode engine.
 
-The sandbox has no iceberg-spark runtime jar, so the catalog paths must
-fail with a clear, actionable error (not silently fall through), while
+The Iceberg source reads path-addressed tables only, so any other name
+must fail with a clear ValueError (not silently fall through), while
 the shared ``encode_splits`` engine — which the Iceberg manifest path
 feeds — is exercised directly with an explicit split list.
 """
@@ -14,13 +14,12 @@ from orc_format_spark.sources import iceberg
 from orc_format_spark.sources.parquet_scan import encode_splits, list_parquet_splits
 
 
-def test_iceberg_gating(spark):
-    if iceberg.iceberg_available(spark):  # pragma: no cover - jar present
-        pytest.skip("iceberg runtime present; gating not exercisable")
-    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-        iceberg.read_tokens_table(spark, "demo.tokens")
-    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-        iceberg.list_iceberg_splits(spark, "demo.tokens")
+def test_iceberg_gating(spark, tmp_path):
+    for name in ("demo.tokens", str(tmp_path)):
+        with pytest.raises(ValueError, match="not a path-addressed"):
+            iceberg.read_tokens_table(spark, name)
+        with pytest.raises(ValueError, match="not a path-addressed"):
+            iceberg.list_iceberg_splits(spark, name)
 
 
 def test_encode_splits_explicit_list(spark, tmp_path):
