@@ -164,7 +164,7 @@ def _data_file_schema(part_fields: list[dict]) -> dict:
             {
                 # "default" mirrors equality_ids: data_file records read
                 # from pre-stats manifests carry no value_counts key and
-                # must still re-serialize on rewrite/carry-forward
+                # must still re-serialize when carried forward
                 "name": "value_counts",
                 "type": ["null", _kv_array("k119_v120", 119, 120, "long")],
                 "field-id": 117,
@@ -173,7 +173,7 @@ def _data_file_schema(part_fields: list[dict]) -> dict:
             {
                 # "default" mirrors equality_ids: data_file records read
                 # from pre-stats manifests carry no null_value_counts key and
-                # must still re-serialize on rewrite/carry-forward
+                # must still re-serialize when carried forward
                 "name": "null_value_counts",
                 "type": ["null", _kv_array("k121_v122", 121, 122, "long")],
                 "field-id": 110,
@@ -182,7 +182,7 @@ def _data_file_schema(part_fields: list[dict]) -> dict:
             {
                 # "default" mirrors equality_ids: data_file records read
                 # from pre-stats manifests carry no lower_bounds key and
-                # must still re-serialize on rewrite/carry-forward
+                # must still re-serialize when carried forward
                 "name": "lower_bounds",
                 "type": ["null", _kv_array("k126_v127", 126, 127, "bytes")],
                 "field-id": 125,
@@ -191,7 +191,7 @@ def _data_file_schema(part_fields: list[dict]) -> dict:
             {
                 # "default" mirrors equality_ids: data_file records read
                 # from pre-stats manifests carry no upper_bounds key and
-                # must still re-serialize on rewrite/carry-forward
+                # must still re-serialize when carried forward
                 "name": "upper_bounds",
                 "type": ["null", _kv_array("k129_v130", 129, 130, "bytes")],
                 "field-id": 128,
@@ -815,60 +815,6 @@ def iceberg_to_spark_ddl(md: dict) -> str:
     return ", ".join(parts)
 
 
-def evolve_schema(
-    table_dir: str,
-    add: list[tuple[str, str]] | None = None,
-    drop: list[str] | None = None,
-    ts_ms: int | None = None,
-) -> dict:
-    """Schema evolution (metadata-only, no data rewrite): ``add`` new
-    columns as ``[(name, iceberg_type)]`` with freshly assigned field
-    ids, ``drop`` existing ones by name. The new schema is appended to
-    the metadata's schema list with a bumped schema-id; existing data
-    files are untouched — added columns read as null from pre-evolution
-    files, dropped columns stop being projected (see
-    ``iceberg_to_spark_ddl`` / ``read_tokens_table``). Field ids are
-    never reused (``last-column-id`` only grows), per the spec, so a
-    re-added name is a NEW column and old stats maps never misbind.
-    Partition source columns cannot be dropped."""
-    md = read_table_metadata(table_dir)
-    cur = md["schemas"][md["current-schema-id"]]
-    fields = [dict(f) for f in cur["fields"]]
-    by_name = {f["name"]: f for f in fields}
-    part_srcs = {
-        pf["source-name"]
-        for pf in _spec_part_fields(md, md.get("default-spec-id", 0))
-    }
-    for name in drop or []:
-        if name not in by_name:
-            raise ValueError(f"iceberg_meta: cannot drop unknown column {name!r}")
-        if name in part_srcs:
-            raise ValueError(
-                f"iceberg_meta: cannot drop partition source column {name!r}"
-            )
-        fields.remove(by_name.pop(name))
-    next_id = md["last-column-id"]
-    for name, itype in add or []:
-        if name in by_name:
-            raise ValueError(f"iceberg_meta: column {name!r} already exists")
-        if itype not in _ICEBERG_TO_SPARK:
-            raise ValueError(f"iceberg_meta: unsupported added type {itype!r}")
-        next_id += 1
-        f = {"id": next_id, "name": name, "required": False, "type": itype}
-        fields.append(f)
-        by_name[name] = f
-    if not fields:
-        raise ValueError("iceberg_meta: evolution would drop every column")
-    new_id = max(s["schema-id"] for s in md["schemas"]) + 1
-    schema = {"type": "struct", "schema-id": new_id, "fields": fields}
-    md["schemas"].append(schema)
-    md["current-schema-id"] = new_id
-    md["last-column-id"] = next_id
-    md["last-updated-ms"] = ts_ms if ts_ms is not None else int(time.time() * 1000)
-    _write_metadata_json(table_dir, md, _current_version(table_dir) + 1)
-    return schema
-
-
 def append_delete_snapshot(
     table_dir: str,
     deletes: list[tuple[str, int]],
@@ -882,7 +828,7 @@ def append_delete_snapshot(
     through a ``content=1`` delete manifest; data manifests are carried
     forward untouched. Readers apply the deletes at scan time
     (``list_delete_entries`` → anti-join in ``iceberg.read_tokens_table``);
-    compaction (``rewrite_snapshot``) is what physically drops the rows.
+    a compaction commit by another Iceberg writer physically drops them.
     Idempotent per ``commit_key``."""
     import pyarrow.parquet as pq
 
@@ -990,8 +936,8 @@ def list_delete_entries(
 ) -> list[tuple[str, int]]:
     """Live positional-delete entries ``(data_file_path, pos)`` of the
     current (or pinned) snapshot, resolved through ``content=1``
-    manifests. Deletes whose target file is no longer live (rewritten
-    away) are dropped — a rewrite both applies and retires them."""
+    manifests. Deletes whose target file is no longer live (compacted
+    away) are dropped — the compaction both applied and retired them."""
     import pyarrow.parquet as pq
 
     md = read_table_metadata(table_dir)
@@ -1258,253 +1204,6 @@ def list_equality_delete_entries(
     return out
 
 
-def rewrite_snapshot(
-    table_dir: str,
-    removed_files: list[str],
-    added_files: list,
-    commit_key: str | None = None,
-    ts_ms: int | None = None,
-) -> int:
-    """Commit a rewrite (the metadata half of compaction): ``added_files``
-    replace ``removed_files`` in one atomic snapshot.
-
-    Manifests are immutable, so prior manifests that reference no removed
-    file are carried forward untouched; each affected manifest is
-    rewritten once with its surviving entries as EXISTING (original
-    snapshot/sequence numbers kept) and removed entries as DELETED. Time
-    travel to pre-rewrite snapshots still resolves the old files — their
-    manifests are never mutated. Idempotent per ``commit_key`` like
-    ``append_snapshot``. Scale shape: metadata I/O is O(affected
-    manifests), not O(table); the data movement itself is the caller's
-    distributed job (operators/compact.py), never the driver's."""
-    md = read_table_metadata(table_dir)
-    if commit_key is not None:
-        for s in md["snapshots"]:
-            if s.get("summary", {}).get("commit-key") == commit_key:
-                return s["snapshot-id"]
-    removed = {os.path.abspath(p) for p in removed_files}
-    prior = _current_snapshot(md)
-    if prior is None:
-        raise ValueError("iceberg_meta: rewrite on a table with no snapshot")
-    spec_id = md.get("default-spec-id", 0)
-    part_fields = _spec_part_fields(md, spec_id)
-    specs = {s["spec-id"]: s for s in md.get("partition-specs", [])}
-    schema_json = md["schemas"][md["current-schema-id"]]
-    meta_dir = os.path.join(table_dir, "metadata")
-    seq = md["last-sequence-number"] + 1
-    snapshot_id = max([s["snapshot-id"] for s in md["snapshots"]], default=0) + 1
-    ts = ts_ms if ts_ms is not None else int(time.time() * 1000)
-
-    manifests: list[dict] = []
-    seen_removed: set[str] = set()
-    n_deleted = rows_deleted = 0
-    for i, mf in enumerate(_read_manifest_list(prior)):
-        with open(mf["manifest_path"], "rb") as f:
-            entries, _, _ = read_ocf(f.read())
-        live = [e for e in entries if e["status"] != _STATUS_DELETED]
-        hit = [e for e in live if e["data_file"]["file_path"] in removed]
-        if not hit:
-            manifests.append(mf)
-            continue
-        seen_removed.update(e["data_file"]["file_path"] for e in hit)
-        n_deleted += len(hit)
-        rows_deleted += sum(e["data_file"]["record_count"] for e in hit)
-        rewritten = []
-        for e in live:
-            if e["data_file"]["file_path"] in removed:
-                rewritten.append(
-                    {**e, "status": _STATUS_DELETED, "snapshot_id": snapshot_id}
-                )
-            else:
-                rewritten.append({**e, "status": _STATUS_EXISTING})
-        manifests.append(
-            _write_manifest(
-                meta_dir,
-                rewritten,
-                snapshot_id,
-                seq,
-                schema_json,
-                f"manifest-{snapshot_id}-rw{i}-"
-                f"{uuid.uuid5(uuid.NAMESPACE_URL, mf['manifest_path']).hex[:8]}.avro",
-                part_fields,
-                specs[spec_id]["fields"],
-            )
-        )
-    missing = removed - seen_removed
-    if missing:
-        raise ValueError(
-            f"iceberg_meta: rewrite removes files not live in the current "
-            f"snapshot: {sorted(missing)[:3]}"
-        )
-    norm: list[tuple[str, dict]] = []
-    for df in added_files:
-        path, raw = (df, {}) if isinstance(df, str) else (df[0], dict(df[1]))
-        missing_cols = {pf["source-name"] for pf in part_fields} - set(raw)
-        if missing_cols:
-            raise ValueError(
-                "iceberg_meta: partitioned rewrite needs (path, values) "
-                f"covering {sorted(pf['source-name'] for pf in part_fields)}; "
-                f"missing {sorted(missing_cols)} for {path}"
-            )
-        part = {
-            pf["name"]: _apply_transform(pf["transform"], raw[pf["source-name"]])
-            for pf in part_fields
-        }
-        norm.append((path, part))
-    norm.sort(key=lambda x: x[0])
-    if norm:
-        entries = [
-            {
-                "status": _STATUS_ADDED,
-                "snapshot_id": snapshot_id,
-                "sequence_number": seq,
-                "file_sequence_number": seq,
-                "data_file": _data_file_record(
-                    p, partition=part, schema_json=schema_json
-                ),
-            }
-            for p, part in norm
-        ]
-        manifests.append(
-            _write_manifest(
-                meta_dir,
-                entries,
-                snapshot_id,
-                seq,
-                schema_json,
-                f"manifest-{snapshot_id}-"
-                f"{uuid.uuid5(uuid.NAMESPACE_URL, str([p for p, _ in norm])).hex[:8]}.avro",
-                part_fields,
-                specs[spec_id]["fields"],
-            )
-        )
-    ml_path = os.path.join(meta_dir, f"snap-{snapshot_id}-manifest-list.avro")
-    with open(ml_path, "wb") as f:
-        f.write(
-            write_ocf(
-                _MANIFEST_FILE_SCHEMA,
-                manifests,
-                metadata={"format-version": str(FORMAT_VERSION)},
-            )
-        )
-    snap = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": ts,
-        "manifest-list": ml_path,
-        "summary": {
-            "operation": "replace",
-            "added-data-files": str(len(norm)),
-            "deleted-data-files": str(n_deleted),
-            "deleted-records": str(rows_deleted),
-            **({"commit-key": commit_key} if commit_key is not None else {}),
-        },
-        "schema-id": md["current-schema-id"],
-    }
-    md["snapshots"].append(snap)
-    md["current-snapshot-id"] = snapshot_id
-    md["last-sequence-number"] = seq
-    md["last-updated-ms"] = ts
-    md["snapshot-log"].append({"timestamp-ms": ts, "snapshot-id": snapshot_id})
-    _write_metadata_json(table_dir, md, _current_version(table_dir) + 1)
-    return snapshot_id
-
-
-def expire_snapshots(
-    table_dir: str,
-    keep_last: int | None = None,
-    older_than_ms: int | None = None,
-    delete_orphan_data: bool = False,
-    ts_ms: int | None = None,
-) -> dict:
-    """Metadata maintenance: drop expired snapshots and delete the
-    manifest-list / manifest files only they referenced (and, with
-    ``delete_orphan_data``, data files referenced by no surviving
-    snapshot). The current snapshot always survives. Returns counts.
-
-    At 10^5 snapshots this is what keeps the metadata dir (and every
-    future manifest-list read) bounded; file deletion is reference-
-    counted against the SURVIVING snapshots, so time travel to any kept
-    snapshot stays intact."""
-    md = read_table_metadata(table_dir)
-    snaps = md["snapshots"]
-    if not snaps:
-        return {"expired": 0, "manifests_deleted": 0, "data_files_deleted": 0}
-    if keep_last is not None and keep_last < 1:
-        # snaps[-0:] is the WHOLE list, so 0 would silently keep everything
-        raise ValueError("iceberg_meta: keep_last must be >= 1")
-    current = md.get("current-snapshot-id")
-    keep: set[int] = {current}
-    if keep_last is not None:
-        for s in sorted(snaps, key=lambda s: s["sequence-number"])[-keep_last:]:
-            keep.add(s["snapshot-id"])
-    if older_than_ms is not None:
-        for s in snaps:
-            if s["timestamp-ms"] >= older_than_ms:
-                keep.add(s["snapshot-id"])
-    elif keep_last is None:
-        raise ValueError(
-            "iceberg_meta: expire_snapshots needs keep_last or older_than_ms"
-        )
-    kept = [s for s in snaps if s["snapshot-id"] in keep]
-    expired = [s for s in snaps if s["snapshot-id"] not in keep]
-    if not expired:
-        return {"expired": 0, "manifests_deleted": 0, "data_files_deleted": 0}
-
-    def _refs(snapshot):
-        mfs = _read_manifest_list(snapshot)
-        files = set()
-        for mf in mfs:
-            with open(mf["manifest_path"], "rb") as f:
-                entries, _, _ = read_ocf(f.read())
-            files.update(
-                e["data_file"]["file_path"]
-                for e in entries
-                if e["status"] != _STATUS_DELETED
-            )
-        return {mf["manifest_path"] for mf in mfs}, files
-    kept_manifests: set[str] = set()
-    kept_data: set[str] = set()
-    for s in kept:
-        m, d = _refs(s)
-        kept_manifests |= m
-        kept_data |= d
-    # resolve every expired snapshot's references BEFORE deleting
-    # anything: expired snapshots routinely share manifests (appends
-    # carry manifests forward), and deleting mid-scan would break the
-    # next snapshot's read
-    expired_manifests: set[str] = set()
-    expired_data: set[str] = set()
-    for s in expired:
-        mfs, files = _refs(s)
-        expired_manifests |= mfs
-        expired_data |= files
-    manifests_deleted = data_deleted = 0
-    for path in expired_manifests - kept_manifests:
-        if os.path.exists(path):
-            os.remove(path)
-            manifests_deleted += 1
-    if delete_orphan_data:
-        for path in expired_data - kept_data:
-            if os.path.exists(path):
-                os.remove(path)
-                data_deleted += 1
-    for s in expired:
-        if os.path.exists(s["manifest-list"]):
-            os.remove(s["manifest-list"])
-    md["snapshots"] = kept
-    md["snapshot-log"] = [
-        e for e in md.get("snapshot-log", []) if e["snapshot-id"] in keep
-    ]
-    md["last-updated-ms"] = ts_ms if ts_ms is not None else int(time.time() * 1000)
-    _write_metadata_json(table_dir, md, _current_version(table_dir) + 1)
-    return {
-        "expired": len(expired),
-        "manifests_deleted": manifests_deleted,
-        "data_files_deleted": data_deleted,
-    }
-
-
 # ------------------------------------------------------------------ read
 
 
@@ -1563,21 +1262,6 @@ def _read_manifest_list(snapshot: dict) -> list[dict]:
     with open(snapshot["manifest-list"], "rb") as f:
         records, _, _ = read_ocf(f.read())
     return records
-
-
-def snapshot_as_of(table_dir: str, ts_ms: int) -> int | None:
-    """Time travel: the snapshot current at ``ts_ms`` (latest snapshot-log
-    entry with timestamp-ms <= ts_ms), or None if the table had no
-    snapshot yet. Pass the result as ``snapshot_id=`` to
-    ``list_data_files`` / ``list_iceberg_splits_meta``."""
-    md = read_table_metadata(table_dir)
-    best = None
-    for e in md.get("snapshot-log", []):
-        if e["timestamp-ms"] <= ts_ms and (
-            best is None or e["timestamp-ms"] > best["timestamp-ms"]
-        ):
-            best = e
-    return best["snapshot-id"] if best else None
 
 
 def _kv_dict(maybe_list) -> dict:
@@ -1778,9 +1462,8 @@ def list_iceberg_splits_meta(
         raise ValueError(
             f"iceberg_meta: {len(dirty)} selected data file(s) carry live "
             "positional deletes; split-encode reads raw row groups and "
-            "would resurrect deleted rows. Compact first "
-            "(rewrite_snapshot) or read via read_tokens_table "
-            "(merge-on-read)."
+            "would resurrect deleted rows. Read the table "
+            "via read_tokens_table (merge-on-read) instead."
         )
     eqs = list_equality_delete_entries(table_dir, snapshot_id)
     if eqs:
@@ -1791,9 +1474,8 @@ def list_iceberg_splits_meta(
             raise ValueError(
                 f"iceberg_meta: {len(hit)} selected data file(s) predate a "
                 "live equality delete; split-encode reads raw row groups "
-                "and would resurrect deleted rows. Compact first "
-                "(rewrite_snapshot) or read via read_tokens_table "
-                "(merge-on-read)."
+                "and would resurrect deleted rows. Read the table "
+                "via read_tokens_table (merge-on-read) instead."
             )
     out: list[tuple[int, str, int]] = []
     sid = 0

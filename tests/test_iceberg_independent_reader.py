@@ -24,6 +24,7 @@ import pyarrow as pa
 import pytest
 
 from orc_format_spark.sources import iceberg_meta as im
+from tests.iceberg_fixtures import replace_files
 
 
 # --------------------------------------------------- independent decoder
@@ -200,8 +201,9 @@ TOKENS_PA = pa.schema(
 
 
 def test_independent_reader_agrees_with_engine(tmp_path):
-    """Append + rewrite lifecycle: the independent spec-derived walk must
-    see exactly the live files (and record counts) the engine reports."""
+    """Appends + a compaction commit (a DELETED entry): the independent
+    spec-derived walk must see exactly the live files (and record
+    counts) the engine reports."""
     f1 = _tokens_file(str(tmp_path / "a.parquet"), 0, 100)
     f2 = _tokens_file(str(tmp_path / "b.parquet"), 100, 60)
     f3 = _tokens_file(str(tmp_path / "c.parquet"), 160, 40)
@@ -209,7 +211,7 @@ def test_independent_reader_agrees_with_engine(tmp_path):
     im.create_table(tdir, TOKENS_PA, ts_ms=1_000)
     im.append_snapshot(tdir, [f1], commit_key="w0", ts_ms=2_000)
     im.append_snapshot(tdir, [f2], commit_key="w1", ts_ms=3_000)
-    im.rewrite_snapshot(tdir, [f1], [f3], commit_key="rw", ts_ms=4_000)
+    replace_files(tdir, [f1], [f3], ts_ms=4_000)
 
     live = _walk_table(tdir)
     data = {p: v for p, v in live.items() if v["content"] == 0}

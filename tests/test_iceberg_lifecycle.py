@@ -1,19 +1,19 @@
-"""Iceberg table lifecycle: rewrite (compaction) snapshots and snapshot
-expiration — the metadata-maintenance half of running the encode engine
-against a long-lived table.
+"""Iceberg tables after their lifecycle: positional and equality deletes
+(merge-on-read), compaction commits that retire them, evolved schemas
+and incremental scans.
 
-Contracts under test: a rewrite atomically swaps files while keeping
-every pre-rewrite snapshot time-travelable (manifests are immutable);
-expiration deletes exactly the metadata (and optionally data) that no
-surviving snapshot references."""
-
-import os
+Contracts under test: the reader applies live deletes and drops the
+ones a compaction retired; old files read under an evolved schema;
+the split-encode path refuses files whose deletes it cannot apply.
+Compaction commits and schema changes come from other Iceberg writers
+and are built here by ``tests/iceberg_fixtures.py``."""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from orc_format_spark.sources import iceberg_meta as im
+from tests.iceberg_fixtures import evolve_schema, replace_files
 
 SCHEMA = pa.schema(
     [
@@ -35,178 +35,6 @@ def _pfile(path, start, n, source="web"):
     )
     pq.write_table(t, path)
     return str(path)
-
-
-def test_rewrite_swaps_files_keeps_history(tmp_path):
-    tdir = str(tmp_path / "tbl")
-    im.create_table(tdir, SCHEMA, ts_ms=1_000)
-    small = [
-        _pfile(tmp_path / f"s{i}.parquet", 10 * i, 10) for i in range(4)
-    ]
-    s1 = im.append_snapshot(tdir, small[:2], ts_ms=2_000)
-    s2 = im.append_snapshot(tdir, small[2:], ts_ms=3_000)
-    big = _pfile(tmp_path / "big.parquet", 0, 40)
-    s3 = im.rewrite_snapshot(tdir, small, [big], commit_key="compact-1", ts_ms=4_000)
-    # current view: only the compacted file
-    assert [p for p, n in im.list_data_files(tdir)] == [big]
-    assert im.list_data_files(tdir)[0][1] == 40
-    # time travel: both pre-rewrite snapshots intact
-    assert sorted(p for p, _ in im.list_data_files(tdir, snapshot_id=s1)) == sorted(small[:2])
-    assert sorted(p for p, _ in im.list_data_files(tdir, snapshot_id=s2)) == sorted(small)
-    # idempotent per commit_key
-    assert im.rewrite_snapshot(tdir, small, [big], commit_key="compact-1") == s3
-    md = im.read_table_metadata(tdir)
-    snap = im._current_snapshot(md)
-    assert snap["summary"]["operation"] == "replace"
-    assert snap["summary"]["deleted-data-files"] == "4"
-
-
-def test_rewrite_partial_and_untouched_manifests(tmp_path):
-    """A rewrite touching one manifest carries the other forward
-    unchanged (same manifest file path — no rewrite amplification)."""
-    tdir = str(tmp_path / "tbl")
-    im.create_table(tdir, SCHEMA, ts_ms=1_000)
-    a = _pfile(tmp_path / "a.parquet", 0, 10)
-    b = _pfile(tmp_path / "b.parquet", 10, 10)
-    im.append_snapshot(tdir, [a], ts_ms=2_000)
-    im.append_snapshot(tdir, [b], ts_ms=3_000)
-    before = {
-        mf["manifest_path"]
-        for mf in im._read_manifest_list(
-            im._current_snapshot(im.read_table_metadata(tdir))
-        )
-    }
-    c = _pfile(tmp_path / "c.parquet", 0, 10)
-    im.rewrite_snapshot(tdir, [a], [c], ts_ms=4_000)
-    after = im._read_manifest_list(
-        im._current_snapshot(im.read_table_metadata(tdir))
-    )
-    assert sorted(p for p, _ in im.list_data_files(tdir)) == sorted([b, c])
-    # b's manifest is carried forward byte-identically (same path)
-    carried = {mf["manifest_path"] for mf in after} & before
-    assert len(carried) == 1
-
-
-def test_rewrite_missing_file_raises(tmp_path):
-    tdir = str(tmp_path / "tbl")
-    im.create_table(tdir, SCHEMA, ts_ms=1_000)
-    a = _pfile(tmp_path / "a.parquet", 0, 10)
-    im.append_snapshot(tdir, [a], ts_ms=2_000)
-    with pytest.raises(ValueError, match="not live"):
-        im.rewrite_snapshot(tdir, [str(tmp_path / "nope.parquet")], [], ts_ms=3_000)
-
-
-def test_rewrite_partitioned(tmp_path):
-    tdir = str(tmp_path / "tbl")
-    im.create_table(
-        tdir, SCHEMA, partition_spec=[("source", "identity")], ts_ms=1_000
-    )
-    a = _pfile(tmp_path / "a.parquet", 0, 10, "web")
-    b = _pfile(tmp_path / "b.parquet", 10, 10, "web")
-    im.append_snapshot(tdir, [(a, {"source": "web"}), (b, {"source": "web"})], ts_ms=2_000)
-    big = _pfile(tmp_path / "big.parquet", 0, 20, "web")
-    with pytest.raises(ValueError, match="partitioned rewrite"):
-        im.rewrite_snapshot(tdir, [a, b], [big], ts_ms=3_000)
-    im.rewrite_snapshot(tdir, [a, b], [(big, {"source": "web"})], ts_ms=3_000)
-    stats: dict = {}
-    got = im.list_data_files(tdir, partition_filter={"source": "web"}, scan_stats=stats)
-    assert [p for p, _ in got] == [big]
-
-
-def test_expire_snapshots(tmp_path):
-    tdir = str(tmp_path / "tbl")
-    im.create_table(tdir, SCHEMA, ts_ms=1_000)
-    files = [_pfile(tmp_path / f"f{i}.parquet", 10 * i, 10) for i in range(3)]
-    s1 = im.append_snapshot(tdir, [files[0]], ts_ms=2_000)
-    s2 = im.append_snapshot(tdir, [files[1]], ts_ms=3_000)
-    s3 = im.append_snapshot(tdir, [files[2]], ts_ms=4_000)
-    with pytest.raises(ValueError, match="keep_last or older_than_ms"):
-        im.expire_snapshots(tdir)
-    res = im.expire_snapshots(tdir, keep_last=2, ts_ms=5_000)
-    assert res["expired"] == 1
-    md = im.read_table_metadata(tdir)
-    assert [s["snapshot-id"] for s in md["snapshots"]] == [s2, s3]
-    assert md["current-snapshot-id"] == s3
-    # s1's manifest survives (s2/s3 reference it: append carries forward)
-    assert sorted(p for p, _ in im.list_data_files(tdir)) == sorted(files)
-    assert sorted(p for p, _ in im.list_data_files(tdir, snapshot_id=s2)) == sorted(files[:2])
-    with pytest.raises(ValueError, match="snapshot .* not found"):
-        im.list_data_files(tdir, snapshot_id=s1)
-    # nothing further to expire
-    assert im.expire_snapshots(tdir, keep_last=2, ts_ms=6_000)["expired"] == 0
-
-
-def test_expire_after_rewrite_deletes_orphans(tmp_path):
-    """After compaction + expiration of the pre-rewrite history, the
-    small files' manifests AND (opt-in) the small data files themselves
-    are physically removed; the compacted current snapshot is intact."""
-    tdir = str(tmp_path / "tbl")
-    im.create_table(tdir, SCHEMA, ts_ms=1_000)
-    small = [_pfile(tmp_path / f"s{i}.parquet", 10 * i, 10) for i in range(3)]
-    im.append_snapshot(tdir, small, ts_ms=2_000)
-    big = _pfile(tmp_path / "big.parquet", 0, 30)
-    im.rewrite_snapshot(tdir, small, [big], ts_ms=3_000)
-    res = im.expire_snapshots(
-        tdir, keep_last=1, delete_orphan_data=True, ts_ms=4_000
-    )
-    assert res["expired"] == 1
-    assert res["data_files_deleted"] == 3
-    assert all(not os.path.exists(p) for p in small)
-    assert os.path.exists(big)
-    assert [p for p, _ in im.list_data_files(tdir)] == [big]
-    md = im.read_table_metadata(tdir)
-    assert len(md["snapshots"]) == 1
-    # older_than_ms variant keeps everything newer
-    assert (
-        im.expire_snapshots(tdir, older_than_ms=3_500, ts_ms=5_000)["expired"] == 0
-    )
-
-
-def test_compact_then_rewrite_end_to_end(spark, tmp_path):
-    """Full maintenance cycle on a live table: encode-splits output
-    equality before/after a rewrite driven by real parquet rewrites."""
-    from orc_format_spark.sources import iceberg
-
-    tdir = str(tmp_path / "tbl")
-    im.create_table(tdir, SCHEMA, ts_ms=1_000)
-    small = [_pfile(tmp_path / f"s{i}.parquet", 10 * i, 10) for i in range(4)]
-    im.append_snapshot(tdir, small, ts_ms=2_000)
-    rows_before = sorted(
-        r.doc_id for r in iceberg.read_tokens_table(spark, tdir).collect()
-    )
-    # "compaction job": concatenate the files (here driver-side; at scale
-    # a distributed rewrite), then swap via rewrite_snapshot
-    merged = pa.concat_tables([pq.read_table(p) for p in sorted(small)])
-    big = str(tmp_path / "big.parquet")
-    pq.write_table(merged, big)
-    im.rewrite_snapshot(tdir, small, [big], commit_key="c0", ts_ms=3_000)
-    rows_after = sorted(
-        r.doc_id for r in iceberg.read_tokens_table(spark, tdir).collect()
-    )
-    assert rows_before == rows_after
-    splits = iceberg.list_iceberg_splits(spark, tdir)
-    assert [s[1] for s in splits] == [big]
-
-
-def test_expire_many_snapshots_sharing_manifests(tmp_path):
-    """Expired snapshots share manifests (appends carry them forward);
-    expiration must resolve all references before deleting anything."""
-    tdir = str(tmp_path / "tbl")
-    im.create_table(tdir, SCHEMA, ts_ms=1_000)
-    files = [_pfile(tmp_path / f"f{i}.parquet", 10 * i, 10) for i in range(4)]
-    for i, f in enumerate(files):
-        im.append_snapshot(tdir, [f], ts_ms=2_000 + i)
-    big = _pfile(tmp_path / "big.parquet", 0, 40)
-    im.rewrite_snapshot(tdir, files, [big], ts_ms=6_000)
-    # expire the 4 appends at once (keep only the rewrite)
-    res = im.expire_snapshots(tdir, keep_last=1, delete_orphan_data=True, ts_ms=7_000)
-    assert res["expired"] == 4
-    assert res["data_files_deleted"] == 4
-    assert [p for p, _ in im.list_data_files(tdir)] == [big]
-    # every surviving manifest-list entry still resolves
-    md = im.read_table_metadata(tdir)
-    for mf in im._read_manifest_list(im._current_snapshot(md)):
-        assert os.path.exists(mf["manifest_path"])
 
 
 # --------------------------------------------- positional deletes (MoR)
@@ -266,9 +94,9 @@ def test_split_encode_refuses_dirty_files(spark, tmp_path):
         iceberg.list_iceberg_splits(spark, tdir)
 
 
-def test_rewrite_applies_and_retires_deletes(spark, tmp_path):
-    """Compaction materializes the merge-on-read view and retires the
-    delete entries; the split-encode path unblocks."""
+def test_replaced_file_retires_position_deletes(spark, tmp_path):
+    """A compaction commit that replaces the deleted-from file retires
+    its delete entries; the split-encode path unblocks."""
     from orc_format_spark.sources import iceberg
 
     tdir = str(tmp_path / "tbl")
@@ -283,7 +111,7 @@ def test_rewrite_applies_and_retires_deletes(spark, tmp_path):
     t = pq.read_table(a)
     mask = [i not in (2, 7) for i in range(t.num_rows)]
     pq.write_table(t.filter(pa.array(mask)), compacted)
-    im.rewrite_snapshot(tdir, [a], [compacted], ts_ms=4_000)
+    replace_files(tdir, [a], [compacted], ts_ms=4_000)
     assert im.list_delete_entries(tdir) == []  # retired: target not live
     splits = iceberg.list_iceberg_splits(spark, tdir)
     assert [s[1] for s in splits] == [compacted]
@@ -407,7 +235,7 @@ def test_split_encode_refuses_equality_dirty_files(spark, tmp_path):
         iceberg.list_iceberg_splits(spark, tdir)
 
 
-def test_rewrite_retires_equality_deletes(spark, tmp_path):
+def test_replaced_file_retires_equality_deletes(spark, tmp_path):
     """Re-sequencing every pre-delete data file (compaction of the MoR
     view) leaves the equality delete applicable to nothing; the listing
     retires it and split-encode unblocks."""
@@ -426,7 +254,7 @@ def test_rewrite_retires_equality_deletes(spark, tmp_path):
     t = pq.read_table(a)
     mask = [i not in (2, 7) for i in range(t.num_rows)]
     pq.write_table(t.filter(pa.array(mask)), compacted)
-    im.rewrite_snapshot(tdir, [a], [compacted], ts_ms=4_000)
+    replace_files(tdir, [a], [compacted], ts_ms=4_000)
     assert im.list_equality_delete_entries(tdir) == []  # applies to nothing
     splits = iceberg.list_iceberg_splits(spark, tdir)
     assert [s[1] for s in splits] == [compacted]
@@ -442,41 +270,12 @@ def test_equality_delete_dropped_column_raises(tmp_path):
     im.append_equality_delete_snapshot(
         tdir, [{"source": "web"}], ["source"], ts_ms=3_000
     )
-    im.evolve_schema(tdir, drop=["source"], ts_ms=4_000)
+    evolve_schema(tdir, drop=["source"])
     with pytest.raises(ValueError, match="dropped field id"):
         im.list_equality_delete_entries(tdir)
 
 
 # ------------------------------------------------------ schema evolution
-
-
-def test_evolve_schema_metadata(tmp_path):
-    tdir = str(tmp_path / "tbl")
-    im.create_table(
-        tdir, SCHEMA, partition_spec=[("source", "identity")], ts_ms=1_000
-    )
-    last0 = im.read_table_metadata(tdir)["last-column-id"]
-    sch = im.evolve_schema(tdir, add=[("lang", "string"), ("score", "double")], ts_ms=2_000)
-    md = im.read_table_metadata(tdir)
-    assert md["current-schema-id"] == 1 and len(md["schemas"]) == 2
-    names = [f["name"] for f in sch["fields"]]
-    assert names == ["doc_id", "n_tok", "source", "lang", "score"]
-    assert md["last-column-id"] == last0 + 2
-    # ids are fresh, never reused
-    ids = [f["id"] for f in sch["fields"]]
-    assert ids[-2:] == [last0 + 1, last0 + 2]
-    im.evolve_schema(tdir, drop=["lang"], ts_ms=3_000)
-    sch3 = im.evolve_schema(tdir, add=[("lang", "string")], ts_ms=4_000)
-    # re-added name gets a NEW id (old stats maps can never misbind)
-    assert next(f["id"] for f in sch3["fields"] if f["name"] == "lang") == last0 + 3
-    with pytest.raises(ValueError, match="partition source"):
-        im.evolve_schema(tdir, drop=["source"])
-    with pytest.raises(ValueError, match="unknown column"):
-        im.evolve_schema(tdir, drop=["nope"])
-    with pytest.raises(ValueError, match="already exists"):
-        im.evolve_schema(tdir, add=[("doc_id", "string")])
-    with pytest.raises(ValueError, match="unsupported added type"):
-        im.evolve_schema(tdir, add=[("m", "map<int,int>")])
 
 
 def test_evolution_read_semantics(spark, tmp_path):
@@ -488,7 +287,7 @@ def test_evolution_read_semantics(spark, tmp_path):
     im.create_table(tdir, SCHEMA, ts_ms=1_000)
     a = _pfile(tmp_path / "a.parquet", 0, 5)
     im.append_snapshot(tdir, [a], ts_ms=2_000)
-    im.evolve_schema(tdir, add=[("score", "double")], drop=["n_tok"], ts_ms=3_000)
+    evolve_schema(tdir, add=[("score", "double")], drop=["n_tok"])
     df = iceberg.read_tokens_table(spark, tdir)
     assert df.columns == ["doc_id", "source", "score"]
     rows = df.collect()
@@ -515,8 +314,8 @@ def test_evolution_read_semantics(spark, tmp_path):
 
 def test_incremental_splits_since_snapshot(spark, tmp_path):
     """since_snapshot_id plans only files appended after the watermark;
-    a rewrite re-sequences its output so compacted data is re-encoded;
-    an unknown watermark raises."""
+    a compaction commit re-sequences its output so compacted data is
+    re-encoded; an unknown watermark raises."""
     from orc_format_spark.sources import iceberg
 
     tdir = str(tmp_path / "tbl")
@@ -531,10 +330,10 @@ def test_incremental_splits_since_snapshot(spark, tmp_path):
     # full scan unchanged
     full = iceberg.list_iceberg_splits(spark, tdir)
     assert sorted({f for _, f, _ in full}) == sorted([a, b])
-    # rewrite a -> c: c gets a fresh sequence number, so it IS the delta
+    # compact a -> c: c gets a fresh sequence number, so it IS the delta
     c = str(tmp_path / "c.parquet")
     pq.write_table(pq.read_table(a), c)
-    im.rewrite_snapshot(tdir, [a], [c], ts_ms=4_000)
+    replace_files(tdir, [a], [c], ts_ms=4_000)
     inc2 = iceberg.list_iceberg_splits(spark, tdir, since_snapshot_id=s2)
     assert sorted({f for _, f, _ in inc2}) == [c]
     with pytest.raises(ValueError, match="unknown snapshot id"):

@@ -237,34 +237,18 @@ def test_job_metrics_iceberg_commits(spark, tmp_path):
     assert len(im.read_table_metadata(mdir)["snapshots"]) == 3
 
 
-def test_snapshot_as_of_time_travel(tmp_path):
-    f1 = _tokens_file(str(tmp_path / "a.parquet"), 0, 10)
-    f2 = _tokens_file(str(tmp_path / "b.parquet"), 10, 10)
-    tdir = str(tmp_path / "tbl")
-    im.create_table(tdir, TOKENS_PA, ts_ms=1_000)
-    s1 = im.append_snapshot(tdir, [f1], ts_ms=2_000)
-    s2 = im.append_snapshot(tdir, [f2], ts_ms=5_000)
-    assert im.snapshot_as_of(tdir, 999) is None  # before first commit
-    assert im.snapshot_as_of(tdir, 2_000) == s1
-    assert im.snapshot_as_of(tdir, 4_999) == s1
-    assert im.snapshot_as_of(tdir, 5_000) == s2
-    assert im.snapshot_as_of(tdir, 10**12) == s2
-    sid = im.snapshot_as_of(tdir, 3_000)
-    assert [p for p, _ in im.list_data_files(tdir, snapshot_id=sid)] == [f1]
-
-
 def test_pre_upgrade_metadata_carries_forward(tmp_path):
     """Cross-version compatibility: a table whose manifest list /
     manifest were written before the 'partitions' summary and the
     per-column stats maps existed must accept its first post-upgrade
-    commit — carried-forward records lacking those keys re-serialize
-    through the schema defaults instead of raising 'avro: missing
-    field'."""
+    commit — carried-forward manifest-list records lacking those keys
+    re-serialize through the schema defaults instead of raising 'avro:
+    missing field' — and its data_file records without stats maps must
+    still list."""
     import copy
 
     f1 = _tokens_file(str(tmp_path / "a.parquet"), 0, 100)
     f2 = _tokens_file(str(tmp_path / "b.parquet"), 100, 60)
-    f3 = _tokens_file(str(tmp_path / "c.parquet"), 160, 40)
     tdir = str(tmp_path / "tbl")
     im.create_table(tdir, TOKENS_PA, ts_ms=1_000)
     im.append_snapshot(tdir, [f1], commit_key="w0", ts_ms=2_000)
@@ -309,10 +293,9 @@ def test_pre_upgrade_metadata_carries_forward(tmp_path):
     with open(mf_path, "wb") as f:
         f.write(avro_ocf.write_ocf(aged_mf, ments, metadata=mfmeta))
 
-    # first post-upgrade commits: append carries the aged manifest-list
-    # records; rewrite re-serializes the aged data_file records
+    # first post-upgrade commit: append carries the aged manifest-list
+    # records; the reader resolves the aged data_file records
     im.append_snapshot(tdir, [f2], commit_key="w1", ts_ms=3_000)
-    im.rewrite_snapshot(tdir, [f1], [f3], commit_key="rw", ts_ms=4_000)
     files = dict(im.list_data_files(tdir))
-    assert sorted(files) == sorted([f2, f3])
-    assert files[f2] == 60 and files[f3] == 40
+    assert sorted(files) == sorted([f1, f2])
+    assert files[f1] == 100 and files[f2] == 60
