@@ -171,73 +171,6 @@ def q_fsst_roundtrip(spark, sf_dir):
     return _roundtrip(d, "doc_id", codec="fsst")
 
 
-def q_float_raw_roundtrip(spark, sf_dir):
-    """Float list column through the container; output exploded to scalar
-    (vec_id, dim, value) rows so the driver's canonicalizer can sort/hash
-    (pandas cannot sort list cells)."""
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    rt = _roundtrip(e, "vec_id")
-    return rt.select("vec_id", F.posexplode("embedding").alias("dim", "value"))
-
-
-def q_double_roundtrip(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
-    )
-    return _roundtrip(li, "l_orderkey")
-
-
-def q_bool_rle_roundtrip(spark, sf_dir):
-    li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            (F.col("l_quantity") > F.lit(25.0)).alias("flag"),
-        )
-    )
-    return _roundtrip(li, "l_orderkey")
-
-
-def q_timestamp_roundtrip(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "ts")
-    return _roundtrip(ev, "event_id")
-
-
-def q_decimal_roundtrip(spark, sf_dir):
-    """Decimal through the container; final cast to string on BOTH sides
-    (Spark Decimal vs DuckDB->pandas float64 hash differently otherwise)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey",
-        "l_linenumber",
-        F.col("l_orderkey").cast("decimal(18,2)").alias("dval"),
-    )
-    rt = _roundtrip(li, "l_orderkey")
-    return rt.withColumn("dval", F.col("dval").cast("string"))
-
-
-def q_nulls_roundtrip(spark, sf_dir):
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey",
-        F.when(F.col("o_orderkey") % 7 == 0, F.lit(None))
-        .otherwise(F.col("o_custkey"))
-        .alias("val"),
-        F.when(F.col("o_orderkey") % 5 == 0, F.lit(None))
-        .otherwise(F.col("o_orderpriority"))
-        .alias("sval"),
-    )
-    return _roundtrip(o, "o_orderkey")
-
-
-def q_string_raw_roundtrip(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "event_type", "props"
-    )
-    return _roundtrip(ev, "event_id")
-
-
 def q_compression_variants(spark, sf_dir):
     """Every block-compression kind through one parameterized
     encode->decode: zstd (C4, default), snappy (C3, 262144-byte blocks +
@@ -559,26 +492,6 @@ def q_pruned_decode(spark, sf_dir):
     )
 
 
-def q_binary_roundtrip(spark, sf_dir):
-    """Binary column (W8, data/binary.rs:23-27) through the container;
-    output hex-encoded so it is canon-hashable on both engines."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", F.col("props").cast("binary").alias("bval")
-    )
-    rt = _roundtrip(ev, "event_id")
-    return rt.select("event_id", F.lower(F.hex("bval")).alias("bval_hex"))
-
-
-def q_date_roundtrip(spark, sf_dir):
-    """date32 column (W2 date path, data.rs:57-58) through the container;
-    final cast to string (pandas date vs timestamp repr differ)."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", F.to_date("o_orderdate").alias("odate")
-    )
-    rt = _roundtrip(o, "o_orderkey")
-    return rt.withColumn("odate", F.col("odate").cast("string"))
-
-
 def q_union_roundtrip(spark, sf_dir):
     """Dense union column (W12, union.rs:59-89) end-to-end: rows are
     tagged event_id%2, variant 0 holds the double value, variant 1 the
@@ -637,13 +550,17 @@ def q_union_roundtrip(spark, sf_dir):
 
 
 def q_composite_roundtrip(spark, sf_dir):
-    """Composite 13-type schema through ONE container encode — the Spark
-    re-expression of the reference's full-schema writer demo
-    (src/bin/test_writer.rs:9-23, FIXTURES.md §4): bool, tinyint,
-    smallint, int, bigint, float, double, decimal(20,2) (the i128 varint
-    path), string, binary, date, timestamp, list, struct, map. Output
-    flattened/stringified per column so the driver canon + SQL oracle
-    can hash it."""
+    """Composite schema (every container column writer) through ONE
+    container encode — the Spark re-expression of the reference's
+    full-schema writer demo (src/bin/test_writer.rs:9-23, FIXTURES.md
+    §4): bool, tinyint,
+    smallint, int, bigint, float, double, decimal(18,2) (the int64
+    path) and decimal(20,2) (the i128 varint path), string, binary,
+    date, timestamp, list<int>, list<float> (empty lists included),
+    struct, map, plus nullable tinyint, bigint and string columns. It
+    carries every single-type roundtrip's column shape, so those
+    queries were folded into it. Output flattened/stringified per column
+    so the driver canon + SQL oracle can hash it."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.col("event_id").alias("row_id"),
         (F.col("event_id") % 3 == 0).alias("b"),
@@ -655,12 +572,26 @@ def q_composite_roundtrip(spark, sf_dir):
         (F.col("event_id") * 1000003).alias("bi"),
         F.col("value").cast("float").alias("f"),
         F.col("value").alias("d"),
+        F.col("event_id").cast("decimal(18,2)").alias("dcm18"),
         F.col("event_id").cast("decimal(20,2)").alias("dcm"),
+        F.when(F.col("event_id") % 7 == 0, F.lit(None))
+        .otherwise(F.col("user_id"))
+        .alias("nbi"),
         F.col("event_type").alias("s"),
+        F.when(F.col("event_id") % 5 == 0, F.lit(None))
+        .otherwise(F.col("props"))
+        .alias("ns"),
         F.col("props").cast("binary").alias("bin"),
         F.to_date("ts").alias("dt"),
         F.col("ts").alias("tsv"),
         F.sequence(F.lit(0), (F.col("event_id") % 5).cast("int")).alias("lst"),
+        F.slice(
+            F.array(
+                F.col("value").cast("float"), (F.col("value") / 3).cast("float")
+            ),
+            1,
+            (F.col("event_id") % 3).cast("int"),
+        ).alias("lf"),
         F.struct(
             F.col("event_type").alias("et"), F.col("user_id").alias("uid")
         ).alias("st"),
@@ -676,14 +607,20 @@ def q_composite_roundtrip(spark, sf_dir):
         "bi",
         "f",
         "d",
+        F.col("dcm18").cast("string").alias("dcm18"),
         F.col("dcm").cast("string").alias("dcm"),
+        "nbi",
         "s",
+        "ns",
         F.lower(F.hex("bin")).alias("bin_hex"),
         F.col("dt").cast("string").alias("dt"),
         "tsv",
         F.concat_ws(",", F.transform("lst", lambda x: x.cast("string"))).alias(
             "lst_csv"
         ),
+        F.size("lf").alias("lf_n"),
+        F.try_element_at("lf", F.lit(1)).alias("lf_0"),
+        F.try_element_at("lf", F.lit(2)).alias("lf_1"),
         F.col("st.et").alias("st_et"),
         F.col("st.uid").alias("st_uid"),
         F.col("mp")[F.lit("k")].alias("mp_v"),
@@ -1528,16 +1465,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rle_v1_roundtrip": q_rle_v1_roundtrip,
         "float_codecs_roundtrip": q_float_codecs_roundtrip,
         "for_bitpack_roundtrip": q_for_bitpack_roundtrip,
-        "float_raw_roundtrip": q_float_raw_roundtrip,
-        "double_roundtrip": q_double_roundtrip,
-        "bool_rle_roundtrip": q_bool_rle_roundtrip,
-        "timestamp_roundtrip": q_timestamp_roundtrip,
-        "decimal_roundtrip": q_decimal_roundtrip,
-        "nulls_roundtrip": q_nulls_roundtrip,
-        "string_raw_roundtrip": q_string_raw_roundtrip,
         "pruned_decode": q_pruned_decode,
-        "binary_roundtrip": q_binary_roundtrip,
-        "date_roundtrip": q_date_roundtrip,
         "projection_decode": q_projection_decode,
         "cshuffle_encode_roundtrip": q_cshuffle_encode_roundtrip,
         "stats_longs": q_stats_longs,
@@ -1680,24 +1608,6 @@ def oracle_sql() -> dict[str, str]:
         "for_bitpack_roundtrip": "SELECT c_custkey, c_nationkey FROM customer",
         "dict_roundtrip": "SELECT l_orderkey, l_linenumber, l_returnflag, l_linestatus FROM lineitem",
         "fsst_roundtrip": "SELECT doc_id, text FROM documents",
-        "float_raw_roundtrip": (
-            "SELECT vec_id, CAST(generate_subscripts(embedding, 1) - 1 AS INT) "
-            "AS dim, unnest(embedding) AS value FROM embeddings"
-        ),
-        "double_roundtrip": "SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem",
-        "bool_rle_roundtrip": "SELECT l_orderkey, l_linenumber, l_quantity > 25.0 AS flag FROM lineitem",
-        "timestamp_roundtrip": "SELECT event_id, ts FROM events",
-        "decimal_roundtrip": (
-            "SELECT l_orderkey, l_linenumber, "
-            "CAST(CAST(l_orderkey AS DECIMAL(18,2)) AS VARCHAR) AS dval FROM lineitem"
-        ),
-        "nulls_roundtrip": (
-            "SELECT o_orderkey, "
-            "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_custkey END AS val, "
-            "CASE WHEN o_orderkey % 5 = 0 THEN NULL ELSE o_orderpriority END AS sval "
-            "FROM orders"
-        ),
-        "string_raw_roundtrip": "SELECT event_id, event_type, props FROM events",
         "rowslice_decode": (
             "SELECT rid, l_orderkey, l_linenumber, l_quantity FROM ("
             "SELECT rid, l_orderkey, l_linenumber, l_quantity, "
@@ -1712,13 +1622,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT l_orderkey, l_quantity, l_shipdate FROM lineitem "
             "WHERE l_orderkey >= 9000 AND l_shipdate < TIMESTAMP '1999-01-01'"
         ),
-        "binary_roundtrip": (
-            "SELECT event_id, lower(hex(CAST(props AS BLOB))) AS bval_hex FROM events"
-        ),
-        "date_roundtrip": (
-            "SELECT o_orderkey, CAST(CAST(o_orderdate AS DATE) AS VARCHAR) "
-            "AS odate FROM orders"
-        ),
         "union_roundtrip": (
             "SELECT event_id, CAST(event_id % 2 AS INT) AS tag, "
             "CASE WHEN event_id % 2 = 0 THEN value END AS dval, "
@@ -1731,11 +1634,19 @@ def oracle_sql() -> dict[str, str]:
             "CAST(event_id % 1000 - 500 AS SMALLINT) AS si, "
             "CAST(user_id AS INT) AS i, event_id * 1000003 AS bi, "
             "CAST(value AS FLOAT) AS f, value AS d, "
+            "CAST(CAST(event_id AS DECIMAL(18,2)) AS VARCHAR) AS dcm18, "
             "CAST(CAST(event_id AS DECIMAL(20,2)) AS VARCHAR) AS dcm, "
-            "event_type AS s, lower(hex(CAST(props AS BLOB))) AS bin_hex, "
+            "CASE WHEN event_id % 7 = 0 THEN NULL ELSE user_id END AS nbi, "
+            "event_type AS s, "
+            "CASE WHEN event_id % 5 = 0 THEN NULL ELSE props END AS ns, "
+            "lower(hex(CAST(props AS BLOB))) AS bin_hex, "
             "CAST(CAST(ts AS DATE) AS VARCHAR) AS dt, ts AS tsv, "
             "array_to_string(list_transform(range(0, event_id % 5 + 1), "
             "x -> CAST(x AS VARCHAR)), ',') AS lst_csv, "
+            "CAST(event_id % 3 AS INT) AS lf_n, "
+            "CASE WHEN event_id % 3 >= 1 THEN CAST(value AS FLOAT) END AS lf_0, "
+            "CASE WHEN event_id % 3 >= 2 THEN CAST(value / 3 AS FLOAT) END "
+            "AS lf_1, "
             "event_type AS st_et, user_id AS st_uid, value AS mp_v FROM events"
         ),
         "schema_evolution": (

@@ -46,11 +46,8 @@ HEADLINE = [
     "for_bitpack_roundtrip",
     "dict_roundtrip",
     "fsst_roundtrip",
-    "double_roundtrip",
     "float_codecs_roundtrip",
     "alp_roundtrip",
-    "timestamp_roundtrip",
-    "nulls_roundtrip",
     "stats_longs",
     "codec_lineage",
     "struct_map_roundtrip",
