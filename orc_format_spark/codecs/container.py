@@ -956,9 +956,17 @@ def _chunk_stats(chunk: pa.Table, bloom_columns: list[str] | None = None) -> dic
     columns outside the statable domain are omitted (= unknown).
     Integer columns named in ``bloom_columns`` additionally get a
     ``<col>@bloom`` base64 bitset for ``==`` pruning when the column is
-    not clustered (min/max too wide to help)."""
+    not clustered (min/max too wide to help). A column named
+    ``<col>@bloom`` next to ``<col>`` would share that key: ValueError."""
     from .bloom import bloom_build, bloom_to_b64
 
+    names = set(chunk.column_names)
+    for name in chunk.column_names:
+        if f"{name}@bloom" in names:
+            raise ValueError(
+                f"column {name + '@bloom'!r} collides with the Bloom stats "
+                f"key of column {name!r}; rename one of them"
+            )
     out = {}
     for name, col in zip(chunk.column_names, chunk.columns):
         if (

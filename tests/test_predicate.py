@@ -1213,3 +1213,15 @@ def test_lookup_on_escaped_column_names():
         for pred in [(nm, "==", v), (nm, "in", [v, n + 5]),
                      ("or", [(nm, "==", v), ("plain", "==", -1)])]:
             assert decode_table(blob, predicate=pred).equals(want), pred
+
+
+def test_bloom_key_collision_raises():
+    """A column named ``<x>@bloom`` next to a column ``x`` would share
+    the chunk-stats key of ``x``'s Bloom bitset, and a predicated decode
+    on ``x`` would then read the other column's bounds as a bitset. The
+    encode refuses such a table by name, bloomed or not."""
+    t = pa.table({"plain": pa.array(range(1_000)),
+                  "plain@bloom": pa.array(range(1_000))})
+    for bloom in (["plain"], ["plain", "plain@bloom"], None):
+        with pytest.raises(ValueError, match="'plain@bloom' collides"):
+            encode_table(t, stride=100, bloom_columns=bloom)
