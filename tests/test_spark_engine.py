@@ -81,20 +81,55 @@ def test_with_group_id_deterministic_and_skew_aware(spark, docs):
     assert sizes.max() / sizes.mean() < 3.0  # no pathological group
 
 
-def test_run_encode_job_resume(spark, docs, tmp_path):
+def test_run_encode_job_resume(spark, docs, tmp_path, monkeypatch):
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from orc_format_spark.operators import job as job_mod
+
     toks = tokenize_documents(docs)
     out = str(tmp_path / "job1")
     blobs1 = run_encode_job(
         spark, toks, out, num_groups=6, waves=3, tokens_per_group=50_000
     )
-    n1 = blobs1.count()
-    assert n1 <= 6
-    assert set(r.wave for r in blobs1.select("wave").distinct().collect()) == {0, 1, 2}
+    first = {r.group_id: (r.wave, bytes(r.blob)) for r in blobs1.collect()}
+    assert len(first) <= 6
+    assert {w for w, _ in first.values()} == {0, 1, 2}
     # resume: nothing left to do, blobs unchanged
     blobs2 = run_encode_job(spark, toks, out, num_groups=6, waves=3)
-    assert blobs2.count() == n1
-    # simulate partial failure: drop state for wave 2, rerun appends nothing new
-    decoded = decode_blobs(blobs1, TOKENS_SCHEMA)
+    assert blobs2.count() == len(first)
+    # simulate a crash before wave 2 committed: drop its _state row and
+    # its output
+    state = f"{out}/_state"
+    kept = ds.dataset(state, format="parquet").to_table(filter=ds.field("wave") != 2)
+    shutil.rmtree(state)
+    os.makedirs(state)
+    pq.write_table(kept, f"{state}/part-0.parquet")
+    shutil.rmtree(f"{out}/blobs/wave=2")
+    done = {p: os.stat(p).st_mtime_ns for p in glob.glob(f"{out}/blobs/wave=*/*")}
+    encoded = []
+    real = job_mod.encode_groups
+
+    def spy(*a, **k):
+        encoded.append(a[0])
+        return real(*a, **k)
+
+    monkeypatch.setattr(job_mod, "encode_groups", spy)
+    blobs3 = run_encode_job(spark, toks, out, num_groups=6, waves=3)
+    # only wave 2 was re-encoded; waves 0 and 1 were not rewritten
+    assert len(encoded) == 1
+    assert {r.group_id % 3 for r in encoded[0].select("group_id").collect()} == {2}
+    assert {
+        p: os.stat(p).st_mtime_ns for p in glob.glob(f"{out}/blobs/wave=[01]/*")
+    } == done
+    # the resumed blobs are the first run's, byte for byte
+    assert {r.group_id: (r.wave, bytes(r.blob)) for r in blobs3.collect()} == first
+    assert sorted(r.wave for r in spark.read.parquet(state).collect()) == [0, 1, 2]
+    decoded = decode_blobs(blobs3, TOKENS_SCHEMA)
     orig = toks.select("doc_id", "tokens", "n_tok", "source")
     assert decoded.exceptAll(orig).count() == 0
 
