@@ -196,32 +196,6 @@ def q_compression_variants(spark, sf_dir):
     return out
 
 
-def q_cshuffle_encode_roundtrip(spark, sf_dir):
-    """Compressed-shuffle grouped encode (encode_groups(shuffle=
-    "compressed")): map-side chunklet encode, exchange carries only
-    compressed bytes (~1/30th of the raw-row wire cost — the cluster
-    default for re-clustering jobs at 100 TB), per-group merge +
-    re-encode. Blobs are byte-identical to the row-shuffle path
-    (tests/test_spark_engine.py), so the pipeline roundtrips to the
-    original documents."""
-    from orc_format_spark import (
-        TOKENS_SCHEMA,
-        decode_blobs,
-        detokenize,
-        encode_groups,
-        tokenize_documents,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    toks = tokenize_documents(docs)
-    blobs = encode_groups(
-        toks, num_groups=8, key_col="doc_id", size_col="n_tok",
-        shuffle="compressed",
-    )
-    decoded = decode_blobs(blobs, TOKENS_SCHEMA)
-    return detokenize(decoded).select("doc_id", "text")
-
-
 def q_schema_evolution(spark, sf_dir):
     """Mixed-era decode (schema evolution by name, the Parquet/ORC/
     Iceberg reader rule): blobs written before l_discount existed and
@@ -1456,7 +1430,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     (still covered every round by pytest + scripts/check_oracles.py).
     When entries leave the registry, the first entries below the
     boundary move up into the freed window rows, in order. The registry
-    holds 58 entries, so the 50-row window covers 86% of it."""
+    holds 47 entries, so the 50-row window covers all of it."""
     return {
         # -- last driver row r03 (below round 4's window) --
         "stream_encode_roundtrip": q_stream_encode_roundtrip,
@@ -1467,7 +1441,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "for_bitpack_roundtrip": q_for_bitpack_roundtrip,
         "pruned_decode": q_pruned_decode,
         "projection_decode": q_projection_decode,
-        "cshuffle_encode_roundtrip": q_cshuffle_encode_roundtrip,
         "stats_longs": q_stats_longs,
         "stats_strings": q_stats_strings,
         "stats_doubles": q_stats_doubles,
@@ -1661,9 +1634,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT s_suppkey, s_nationkey, s_acctbal, compression "
             "FROM supplier CROSS JOIN (SELECT unnest("
             "['zstd', 'snappy', 'zlib', 'lz4', 'lzo', 'none']) AS compression)"
-        ),
-        "cshuffle_encode_roundtrip": (
-            "SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents"
         ),
         "projection_decode": (
             "SELECT CAST(doc_id AS VARCHAR) AS doc_id, "

@@ -75,7 +75,6 @@ HEADLINE = [
     "orc_native_read",
     "orc_bloom_prune",
     "compression_variants",
-    "cshuffle_encode_roundtrip",
 ]
 
 
@@ -311,27 +310,6 @@ def run_encode(spark, sf_dir: str, split_only: bool | None = None):
     dt_gs = time.monotonic() - t2
     shutil.rmtree(gsink, ignore_errors=True)
 
-    # compressed-shuffle grouped path: the exchange carries encoded
-    # chunklets (~0.28 B/token) instead of raw UnsafeRow arrays
-    # (~8 B/token) — on one box (shuffle = memory/disk) the extra
-    # encode+decode CPU makes it slower than the row shuffle; on a
-    # cluster the ~30x wire reduction is the whole game. Reported so
-    # both sides of that tradeoff are measured, not asserted.
-    dt_gc = float("inf")
-    for _ in range(2):
-        t3 = time.monotonic()
-        agg_gc = _agg_blobs(
-            encode_groups(
-                toks,
-                num_groups=NUM_GROUPS,
-                codec="auto",
-                key_col="doc_id",
-                size_col="n_tok",
-                shuffle="compressed",
-            )
-        )
-        dt_gc = min(dt_gc, time.monotonic() - t3)
-
     # reference mode: the reference writer's fixed encodings (RLEv1 ints,
     # raw strings, zstd-3) — the compressed-size baseline auto must beat
     agg_r = sink_pass(codec="reference")
@@ -340,10 +318,6 @@ def run_encode(spark, sf_dir: str, split_only: bool | None = None):
         {
             "grouped_encode_sec": round(dt_g, 3),
             "grouped_sink_encode_sec": round(dt_gs, 3),
-            "grouped_cshuffle_encode_sec": round(dt_gc, 3),
-            "grouped_cshuffle_tokens_per_sec": round(
-                int(agg_gc["n_values"]) / dt_gc
-            ),
             "grouped_tokens_per_sec": round(int(agg_g["n_values"]) / dt_g),
             "reference_output_bytes": int(agg_r["output_bytes"]),
             "reference_bytes_per_token": round(int(agg_r["output_bytes"]) / n_tok, 4),

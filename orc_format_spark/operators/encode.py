@@ -22,7 +22,6 @@ import os
 from collections.abc import Iterator
 
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 
@@ -86,7 +85,7 @@ def _finish_group(
 ) -> pa.Table:
     """Encode one group's (already ordered) rows into its blob + lineage
     row. This is the only builder of the blob-row format: the grouped
-    shuffles, ``encode_splits`` and ``compact_blobs`` all end here, so
+    encode, ``encode_splits`` and ``compact_blobs`` all end here, so
     every producer emits byte-identical blobs and rows. ``dest`` is the
     sink file the blob is written to (the row then carries
     ``blob_path``), or None to carry the payload inline as ``blob``.
@@ -139,7 +138,6 @@ def encode_groups(
     row_index_stride: int | None = DEFAULT_ROW_INDEX_STRIDE,
     blob_sink: str | None = None,
     bloom_columns: list[str] | None = None,
-    shuffle: str = "rows",
     cluster_by: list[str] | None = None,
     stats: bool = False,
 ) -> DataFrame:
@@ -172,27 +170,7 @@ def encode_groups(
     the returned row carries ``blob_path`` instead of ``blob`` — the
     encoded payload then never crosses the Python->JVM Arrow socket
     (measured to dominate wall time at high core counts).
-
-    ``shuffle`` picks how the re-clustering exchange moves the payload:
-
-    - ``"rows"`` (the default, and what ``run_encode_job`` and
-      ``encode_stream`` use): the groupBy shuffles raw rows (UnsafeRow)
-      — one exchange, encode after. Simple, but token arrays cost
-      ~8 B/token on the wire.
-    - ``"compressed"``: two-phase. Each input partition first encodes
-      its rows per group into transient chunklet blobs map-side (no
-      exchange yet), the exchange then moves only COMPRESSED bytes
-      (~0.28 B/token here, a ~30x wire reduction), and each group's
-      task decodes its chunklets, re-sorts, and re-encodes the final
-      blob with full codec auto-selection. Output blobs, checksums,
-      and lineage are byte-identical to ``"rows"`` (asserted in
-      tests/test_spark_engine.py). CPU pays one extra cheap
-      encode+decode; the network pays ~1/30th, which pays off when the
-      shuffle's wire and spill cost dominate a re-clustering job. No
-      library caller selects it; a caller opts in.
     """
-    if shuffle not in ("rows", "compressed"):
-        raise ValueError(f"unknown shuffle strategy: {shuffle!r}")
     if "group_id" not in df.columns:
         if num_groups is None:
             num_groups = max(1, df.rdd.getNumPartitions())
@@ -204,18 +182,6 @@ def encode_groups(
     if blob_sink is not None:
         os.makedirs(blob_sink, exist_ok=True)
 
-    if shuffle == "compressed":
-        return _encode_groups_compressed(
-            df,
-            codec=codec,
-            compression=compression,
-            sort_spec=sort_spec,
-            row_index_stride=row_index_stride,
-            blob_sink=blob_sink,
-            bloom_columns=bloom_columns,
-            stats=stats,
-        )
-
     def fn(tbl: pa.Table) -> pa.Table:
         limit_worker_threads()
         gid = tbl.column("group_id")[0].as_py() if tbl.num_rows else -1
@@ -226,101 +192,6 @@ def encode_groups(
         )
 
     return df.groupBy("group_id").applyInArrow(fn, _blob_schema(blob_sink, stats))
-
-
-# flush threshold for map-side chunklet accumulation: big enough that
-# per-chunklet codec/compression overhead amortizes, small enough that a
-# task never holds more than ~one parquet row group of raw rows
-_CHUNKLET_FLUSH_BYTES = 128 * 1024 * 1024
-
-
-def _encode_groups_compressed(
-    df: DataFrame,
-    codec,
-    compression: str,
-    sort_spec: list[tuple[str, str]],
-    row_index_stride,
-    blob_sink,
-    bloom_columns,
-    stats: bool = False,
-) -> DataFrame:
-    """Two-phase grouped encode: map-side per-(partition, group)
-    chunklet encode -> compressed-byte exchange -> per-group merge +
-    final encode. See ``encode_groups(shuffle="compressed")``.
-
-    The chunklet is a plain container blob (stride=None, no bloom) —
-    transient wire format only; the final blob is re-encoded from the
-    merged, re-sorted rows so every strategy emits identical bytes.
-    The same move powers ``compact_blobs`` (operators/compact.py): at
-    scale, bytes on the exchange wire are the budget, so ship them
-    encoded.
-    """
-
-    def enc_parts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        limit_worker_threads()
-        pend: list[pa.RecordBatch] = []
-        pend_bytes = 0
-
-        def flush():
-            nonlocal pend, pend_bytes
-            if not pend:
-                return
-            tbl = pa.Table.from_batches(pend)
-            pend, pend_bytes = [], 0
-            gids = tbl.column("group_id")
-            # ship Spark's exact Arrow schema with each chunklet: the
-            # container's decode reconstructs types from type STRINGS,
-            # which loses nested field-name conventions (Spark names a
-            # list child "element", pyarrow defaults to "item"); the
-            # merge side casts back so final blobs match the row path
-            # byte-for-byte
-            aschema = (
-                tbl.drop_columns(["group_id"]).schema.serialize().to_pybytes()
-            )
-            for gid in pc.unique(gids).to_pylist():
-                sub = tbl.filter(pc.equal(gids, gid)).drop_columns(
-                    ["group_id"]
-                )
-                # cheap transient encode: auto codec, no stride/bloom
-                blob, _ = encode_table(sub, codec=codec, compression=compression)
-                yield pa.record_batch(
-                    [
-                        pa.array([gid], pa.int64()),
-                        pa.array([blob], pa.binary()),
-                        pa.array([aschema], pa.binary()),
-                    ],
-                    names=["group_id", "part", "aschema"],
-                )
-
-        for batch in batches:
-            pend.append(batch)
-            pend_bytes += batch.nbytes
-            if pend_bytes >= _CHUNKLET_FLUSH_BYTES:
-                yield from flush()
-        yield from flush()
-
-    parts = df.mapInArrow(
-        enc_parts, "group_id long, part binary, aschema binary"
-    )
-
-    def merge_fn(tbl: pa.Table) -> pa.Table:
-        limit_worker_threads()
-        gid = tbl.column("group_id")[0].as_py() if tbl.num_rows else -1
-        target = pa.ipc.read_schema(
-            pa.BufferReader(tbl.column("aschema")[0].as_py())
-        )
-        chunks = [
-            decode_table(v.as_py()).cast(target) for v in tbl.column("part")
-        ]
-        data = pa.concat_tables(chunks).combine_chunks().sort_by(sort_spec)
-        return _finish_group(
-            gid, data, codec, compression, row_index_stride, bloom_columns,
-            _sink_path(blob_sink, f"group-{gid:08d}.ofs"), stats=stats,
-        )
-
-    return parts.groupBy("group_id").applyInArrow(
-        merge_fn, _blob_schema(blob_sink, stats)
-    )
 
 
 def _normalize_schema(schema: str) -> str:

@@ -321,64 +321,10 @@ def test_run_encode_job_blob_sink(spark, docs, tmp_path):
             assert f.read() == by_gid[r.group_id]
 
 
-def test_encode_groups_compressed_shuffle_matches_rows(spark, docs, monkeypatch):
-    """shuffle="compressed" (map-side chunklet encode -> compressed-byte
-    exchange -> merge/re-sort/re-encode) must emit byte-identical blobs
-    and lineage to the row-shuffle path. The flush threshold is forced
-    tiny so every group really merges multiple chunklets."""
-    from orc_format_spark.operators import encode as enc_mod
-
-    monkeypatch.setattr(enc_mod, "_CHUNKLET_FLUSH_BYTES", 64 * 1024)
-    toks = tokenize_documents(docs).repartition(8)
-    by_rows = {
-        r.group_id: (bytes(r.blob), r.checksum, r.lineage)
-        for r in encode_groups(
-            toks, num_groups=6, key_col="doc_id", size_col="n_tok"
-        ).collect()
-    }
-    by_comp = {
-        r.group_id: (bytes(r.blob), r.checksum, r.lineage)
-        for r in encode_groups(
-            toks, num_groups=6, key_col="doc_id", size_col="n_tok",
-            shuffle="compressed",
-        ).collect()
-    }
-    assert by_comp == by_rows
-
-
-def test_encode_groups_compressed_shuffle_mixed_types(spark):
-    """Compressed-shuffle parity on a mixed-type table (ints, doubles,
-    strings, dates) — the chunklet roundtrip must be lossless for every
-    column writer, not just token arrays."""
-    li = (
-        spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        .select(
-            "l_orderkey", "l_partkey", "l_quantity", "l_returnflag",
-            "l_shipdate",
-        )
-        .withColumn(
-            "rid", F.monotonically_increasing_id()
-        )
-        .repartition(5)
-    )
-    a = {
-        r.group_id: (bytes(r.blob), r.lineage)
-        for r in encode_groups(li, num_groups=3, key_col="rid").collect()
-    }
-    b = {
-        r.group_id: (bytes(r.blob), r.lineage)
-        for r in encode_groups(
-            li, num_groups=3, key_col="rid", shuffle="compressed"
-        ).collect()
-    }
-    assert a == b
-
-
 def test_cluster_by_shrinks_blobs_and_roundtrips(spark):
     """cluster_by orders each group's rows before encoding: decoded
     multiset unchanged, compressed size strictly smaller on run-friendly
-    data, and the rows/compressed shuffle strategies stay byte-identical
-    under clustering."""
+    data."""
     from orc_format_spark import decode_blobs
 
     # sf0.01: at ~600 rows/group the orderkey delta structure still wins;
@@ -399,14 +345,6 @@ def test_cluster_by_shrinks_blobs_and_roundtrips(spark):
     a = sorted(map(tuple, li.collect()))
     b = sorted(map(tuple, back.collect()))
     assert a == b
-    comp = {
-        r.group_id: (bytes(r.blob), r.checksum)
-        for r in encode_groups(
-            li, num_groups=2, key_col="l_orderkey",
-            cluster_by=["l_shipdate"], shuffle="compressed",
-        ).collect()
-    }
-    assert comp == {r.group_id: (bytes(r.blob), r.checksum) for r in clus}
 
 
 def test_decode_schema_mismatch_is_loud(spark, docs):
