@@ -20,7 +20,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .iceberg_meta import is_iceberg_table, list_iceberg_splits_meta, local_path
+from .iceberg_meta import (
+    iceberg_to_spark_ddl,
+    is_iceberg_table,
+    list_data_file_seqs,
+    list_data_files,
+    list_delete_entries,
+    list_equality_delete_entries,
+    list_iceberg_splits_meta,
+    local_path,
+    read_table_metadata,
+)
 
 
 def _table_dir(name: str) -> str:
@@ -45,15 +55,6 @@ def read_tokens_table(
     with ``partition_filter`` pruned against manifest metadata before
     any data file is opened."""
     _table_dir(name)
-    from .iceberg_meta import (
-        iceberg_to_spark_ddl,
-        list_data_file_seqs,
-        list_data_files,
-        list_delete_entries,
-        list_equality_delete_entries,
-        read_table_metadata,
-    )
-
     files = sorted(
         p for p, _ in list_data_files(name, partition_filter=partition_filter)
     )
