@@ -534,7 +534,7 @@ def q_composite_roundtrip(spark, sf_dir):
     struct, map, plus nullable tinyint, bigint and string columns. It
     carries every single-type roundtrip's column shape, so those
     queries were folded into it. Output flattened/stringified per column
-    so the driver canon + SQL oracle can hash it."""
+    so the row canonicalizer and the SQL oracle can hash it."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.col("event_id").alias("row_id"),
         (F.col("event_id") % 3 == 0).alias("b"),
