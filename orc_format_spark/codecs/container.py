@@ -212,12 +212,15 @@ def encode_column(
     compression: str = "zstd",
     entries: list | None = None,
     lineage: list | None = None,
+    priors: dict | None = None,
 ) -> list[ColumnEntry]:
     """Encode one arrow array into container entries (recursive for lists).
 
     ``codec`` may be a per-column mapping, e.g. ``{"tokens.item":
     "for_bitpack", "doc_id": "raw_str"}`` — unlisted columns (keyed by
     their full dotted path, children included) fall back to ``"auto"``.
+    ``priors`` maps those paths to the selector's per-partition state
+    (``encode_table``); without it every auto column is selected afresh.
     """
     if entries is None:
         entries = []
@@ -238,6 +241,7 @@ def encode_column(
         streams.append((PRESENT, present_stream))
     est: dict[str, float] = {}
     bounds: dict[str, float] = {}  # pruned candidates' lower bounds
+    prior = None if priors is None else priors.setdefault(name, {})
     # "reference" mode pins every column to the reference writer's fixed
     # encodings (SignedIntRLEv1 DATA for ints — long.rs:24-27; raw DATA +
     # LENGTH for strings — string.rs:24-28); used as the compressed-size
@@ -259,7 +263,7 @@ def encode_column(
             v = v.astype(np.int64)  # date32 -> days
         use = _pick(("rle_v1", "rle_v2", "for_bitpack", "dict_int"), "rle_v1")
         if not use:
-            use, est, wire = select_and_encode_int(v, signed=True, _bounds=bounds)
+            use, est, wire = select_and_encode_int(v, signed=True, _bounds=bounds, _prior=prior)
             streams.append((DATA, wire))
         else:
             streams.append((DATA, _encode_int_values(use, v, True)))
@@ -278,7 +282,7 @@ def encode_column(
         v = vals.to_numpy(zero_copy_only=False)
         use = _pick((raw_name, "float_split", "dict_float", "alp"), raw_name)
         if not use:
-            use, est, wire = select_and_encode_float(v, dbl, compression)
+            use, est, wire = select_and_encode_float(v, dbl, compression, _prior=prior)
             streams.append((DATA, wire))
         else:
             streams.append((DATA, _encode_float(use, v, dbl)))
@@ -302,7 +306,7 @@ def encode_column(
             v = _decimal_unscaled_i64(vals.combine_chunks() if isinstance(vals, pa.ChunkedArray) else vals)
             use = _pick(("rle_v1", "rle_v2", "for_bitpack", "dict_int"), "rle_v1")
             if not use:
-                use, est, wire = select_and_encode_int(v, signed=True, _bounds=bounds)
+                use, est, wire = select_and_encode_int(v, signed=True, _bounds=bounds, _prior=prior)
                 streams.append((DATA, wire))
             else:
                 streams.append((DATA, _encode_int_values(use, v, True)))
@@ -313,7 +317,7 @@ def encode_column(
             # fused select+encode: skips fsst training on clearly-dict
             # samples, reuses the selection-trained symbol table (and,
             # for sample-covered columns, the candidate bytes outright)
-            use, est, wire = select_and_encode_str(data, off, _bounds=bounds)
+            use, est, wire = select_and_encode_str(data, off, _bounds=bounds, _prior=prior)
             streams.append((DATA, wire))
         else:
             streams.append((DATA, _encode_str_values(use, data, off)))
@@ -327,7 +331,7 @@ def encode_column(
         entry = _finish_entry(name, str(t), use, compression, has_null, n_rows, n_present, streams)
         entries.append(entry)
         lineage.append(_lineage_row(name, entry, arr, est, bounds))
-        encode_column(name + ".item", child, child_codec, compression, entries, lineage)
+        encode_column(name + ".item", child, child_codec, compression, entries, lineage, priors)
         return entries
     elif pa.types.is_struct(t):
         # struct column: PRESENT only; one child entry per field, exactly
@@ -342,7 +346,7 @@ def encode_column(
         for i in range(t.num_fields):
             encode_column(
                 f"{name}.{t.field(i).name}", sv.field(i), child_codec, compression,
-                entries, lineage,
+                entries, lineage, priors,
             )
         return entries
     elif pa.types.is_union(t):
@@ -384,7 +388,7 @@ def encode_column(
             )
             encode_column(
                 f"{name}.{t.field(i).name}", child_vals, child_codec, compression,
-                entries, lineage,
+                entries, lineage, priors,
             )
         return entries
     elif pa.types.is_map(t):
@@ -401,8 +405,8 @@ def encode_column(
         entry = _finish_entry(name, str(t), use, compression, has_null, n_rows, n_present, streams)
         entries.append(entry)
         lineage.append(_lineage_row(name, entry, arr, est, bounds))
-        encode_column(f"{name}.key", keys, child_codec, compression, entries, lineage)
-        encode_column(f"{name}.value", items, child_codec, compression, entries, lineage)
+        encode_column(f"{name}.key", keys, child_codec, compression, entries, lineage, priors)
+        encode_column(f"{name}.value", items, child_codec, compression, entries, lineage, priors)
         return entries
     else:
         raise NotImplementedError(f"type {t} not supported yet")
@@ -921,11 +925,12 @@ def decode_entries(entries: list[ColumnEntry], start: int = 0,
     return e.name, _rebuild_with_nulls(values, e.has_null, e.n_rows, present), nxt
 
 
-def _encode_body(tbl: pa.Table, codec: str | dict, compression: str) -> tuple[bytes, list[dict]]:
+def _encode_body(tbl: pa.Table, codec: str | dict, compression: str,
+                 priors: dict | None = None) -> tuple[bytes, list[dict]]:
     entries: list[ColumnEntry] = []
     lineage: list[dict] = []
     for name, col in zip(tbl.column_names, tbl.columns):
-        encode_column(name, col.combine_chunks(), codec, compression, entries, lineage)
+        encode_column(name, col.combine_chunks(), codec, compression, entries, lineage, priors)
     return serialize_blob(entries), lineage
 
 
@@ -1039,6 +1044,15 @@ def encode_table(
     ``bloom_columns`` adds per-chunk Bloom bitsets for those integer
     columns so ``predicate=(col, "==", v)`` prunes even when the column
     is unclustered (see codecs/bloom.py).
+
+    Codecs are selected per partition: each auto column's first chunk
+    runs the full selection, and later chunks keep that winner while
+    their sampled profile and its size pass the selector's checks
+    (codecs/selector.py); a chunk that fails them is selected afresh
+    and decides for the chunks after it. The merged lineage row keeps
+    the first chunk's ``candidates`` and counts the fallbacks by reason
+    in ``chunks_reselected`` (``{"profile": n, "size": m}``, zero
+    counts left out).
     """
     if stride is None or tbl.num_rows <= stride:
         return _encode_body(tbl, codec, compression)
@@ -1047,9 +1061,10 @@ def encode_table(
     chunk_stats: list[dict] = []
     merged: dict[str, dict] = {}
     order: list[str] = []
+    priors: dict[str, dict] = {}
     for start in range(0, tbl.num_rows, stride):
         chunk = tbl.slice(start, stride)
-        body, lineage = _encode_body(chunk, codec, compression)
+        body, lineage = _encode_body(chunk, codec, compression, priors)
         bodies.append(body)
         chunk_rows.append(chunk.num_rows)
         chunk_stats.append(_chunk_stats(chunk, bloom_columns))
@@ -1070,6 +1085,7 @@ def encode_table(
     for c in order:
         m = merged[c]
         m["codec"] = "+".join(sorted(m["codec"]))
+        m["chunks_reselected"] = dict(priors.get(c, {}).get("reselected", {}))
         out_lineage.append(m)
     import json as _json
 

@@ -32,8 +32,20 @@ Floats stay trial-encoded: their candidates are compared after the
 block codec, and a post-zstd size has no provable bound. Rules such as
 "ALP wins when it is exact and at most 4 B/value" change winners on
 ordinary columns (a 0.01-step progression is 0.197 B/value as
-``float_split`` and 1.703 as ``alp``), so the float kernels are made
-cheap instead.
+``float_split`` and 1.703 as ``alp``), so a chunked encode decides
+floats, like ints and strings, once per partition instead.
+
+Per partition: ``container.encode_table`` passes each auto-selected
+column a ``_prior`` dict that lives for one call. The first chunk runs
+the full selection above, so the exactness holds per deciding chunk,
+and leaves in the dict its winner, its profile (``_int_profile``,
+``_str_profile``, ``_float_profile``) and a size limit: the smallest
+``est`` or pruned bound among the other candidates. A later chunk
+encodes only the winner and keeps it when its own profile equals the
+deciding chunk's and the winner's ``est`` does not exceed the limit.
+Otherwise it runs the full selection and becomes the deciding chunk;
+``prior["reselected"]`` counts these fallbacks by reason (``profile``
+or ``size``) for the lineage row.
 """
 
 from __future__ import annotations
@@ -95,9 +107,57 @@ def _can_win(c: str, bound: int, size: dict[str, int], order: tuple) -> bool:
     return bound < best or (bound == best and order.index(c) < order.index(first))
 
 
+def _reuse(prior: dict | None, profile, measure) -> tuple | None:
+    """(codec, est, sample bytes) of the column's prior winner when this
+    chunk keeps it; None when the chunk must run the full selection,
+    with the reason counted in ``prior["reselected"]``. ``measure(c)``
+    encodes candidate ``c`` on the sample: (bytes, est)."""
+    if not prior or "codec" not in prior:
+        return None
+    why = None
+    if profile != prior["profile"]:
+        why = "profile"
+    else:
+        c = prior["codec"]
+        try:
+            b, e = measure(c)
+        except Exception:
+            b, e = None, float("inf")
+        if e <= prior["limit"]:
+            return c, {c: e}, b
+        why = "size"
+    prior["reselected"][why] = prior["reselected"].get(why, 0) + 1
+    return None
+
+
+def _decide(prior: dict | None, best: str, est: dict, bounds: dict, profile) -> None:
+    """Make this chunk the column's deciding chunk."""
+    if prior is None:
+        return
+    prior.setdefault("reselected", {})
+    prior["codec"] = best
+    prior["profile"] = profile
+    other = [x for c, x in (*est.items(), *bounds.items()) if c != best]
+    prior["limit"] = min(other, default=float("inf"))
+
+
+def _int_profile(s: np.ndarray) -> tuple:
+    """Bit length of the sample's value range; whether it is sorted;
+    whether most values repeat their predecessor (runs); whether the
+    first 512 are under half distinct (``dict_int``'s gate)."""
+    span = (int(s.max()) - int(s.min())).bit_length()
+    k0 = min(s.size, 512)
+    return (
+        span,
+        bool((s[1:] >= s[:-1]).all()),
+        2 * np.count_nonzero(s[1:] == s[:-1]) > s.size,
+        2 * np.unique(s[:k0]).size < k0,
+    )
+
+
 def select_and_encode_int(
     v: np.ndarray, signed: bool = True, sample: int = SAMPLE_VALUES, *,
-    _bounds: dict | None = None,
+    _bounds: dict | None = None, _prior: dict | None = None,
 ) -> tuple[str, dict[str, float], bytes]:
     """Selection + final encode fused: returns (codec, estimates, wire
     bytes). When the sample covered the whole column (the common case
@@ -108,16 +168,28 @@ def select_and_encode_int(
     ``for_bitpack`` (exact and cheap) is encoded first; ``rle_v2``,
     ``rle_v1`` and, below a 0.5 distinct ratio, ``dict_int`` follow
     only when their lower bound can still win. ``_bounds`` receives the
-    pruned ones' bounds in bytes per value."""
+    pruned ones' bounds in bytes per value. ``_prior``: see the module
+    docstring."""
     n = v.size
     if n == 0:
         return "rle_v1", {}, _encode_int("rle_v1", v, signed)
     s = v[: min(n, sample)]
+    profile = _int_profile(s) if _prior is not None else None
+
+    def measure(c: str) -> tuple[bytes, float]:
+        b = _encode_int(c, s, signed)
+        return b, len(b) / len(s)
+
+    kept = _reuse(_prior, profile, measure)
+    if kept is not None:
+        best, est, b = kept
+        return best, est, b if n <= sample else _encode_int(best, v, signed)
     # cheap stats to prune candidates
     uniq = np.unique(s[: 4096])
     card_ratio = uniq.size / min(len(s), 4096)
     size: dict[str, int] = {}
     enc: dict[str, bytes] = {}
+    pruned: dict[str, float] = {}
 
     def trial(c: str) -> None:
         try:
@@ -140,18 +212,33 @@ def select_and_encode_int(
             continue
         if _can_win(c, bound, size, INT_CANDIDATES):
             trial(c)
-        elif _bounds is not None:
-            _bounds[c] = bound / len(s)
+        else:
+            pruned[c] = bound / len(s)
+    if _bounds is not None:
+        _bounds.update(pruned)
     est = {c: size[c] / len(s) for c in INT_CANDIDATES if c in size}
     best = min(est, key=est.get)
+    _decide(_prior, best, est, pruned, profile)
     if n <= sample:
         return best, est, enc[best]
     return best, est, _encode_int(best, v, signed)
 
 
+def _fsst_table(sdata: np.ndarray) -> fsst.SymbolTable:
+    return fsst.SymbolTable(fsst.train_symbol_table(sdata[: fsst._SAMPLE_BYTES].tobytes()))
+
+
+def _str_profile(data: np.ndarray, offsets: np.ndarray) -> bool:
+    """Whether the first 512 strings are clearly low-cardinality (< 5%
+    distinct)."""
+    k0 = min(offsets.size - 1, 512)
+    head = dictionary._binary_array(data[: int(offsets[k0])], offsets[: k0 + 1])
+    return pc.count_distinct(head).as_py() / k0 < 0.05
+
+
 def select_and_encode_str(
     data: np.ndarray, offsets: np.ndarray, sample: int = 2048, *,
-    _bounds: dict | None = None,
+    _bounds: dict | None = None, _prior: dict | None = None,
 ) -> tuple[str, dict[str, float], bytes]:
     """Selection + final encode fused: returns (codec, estimates, wire
     bytes). Three measured savings over select-then-encode, all
@@ -170,7 +257,8 @@ def select_and_encode_str(
       column, the winning candidate's bytes ARE the final bytes.
 
     ``_bounds`` receives a pruned ``raw_str``'s bound in bytes per
-    sampled payload byte, the unit of the estimates.
+    sampled payload byte, the unit of the estimates. ``_prior``: see
+    the module docstring.
     """
     n = offsets.size - 1
     if n == 0:
@@ -178,42 +266,53 @@ def select_and_encode_str(
     k = min(n, sample)
     sdata = data[: int(offsets[k])]
     soff = offsets[: k + 1]
-    k0 = min(n, 512)
-    head = dictionary._binary_array(data[: int(offsets[k0])], offsets[: k0 + 1])
-    distinct = pc.count_distinct(head).as_py()
+    low_card = _str_profile(data, offsets)
     size: dict[str, int] = {}
     enc: dict[str, bytes] = {}
+    pruned: dict[str, float] = {}
     fsst_table = None
     nbytes = max(1, sdata.size)
 
-    def trial(c: str, table=None) -> None:
-        try:
-            enc[c] = _encode_str(c, sdata, soff, table=table)
-        except Exception:
-            return
-        size[c] = len(enc[c])
-
-    if distinct / k0 < 0.05:
-        trial("dict_str")
-        bound = sdata.size + 2 * -(-k // rle_v1._RUN_CAP) + 2
-        if _can_win("raw_str", bound, size, STR_CANDIDATES):
-            trial("raw_str")
-        elif _bounds is not None:
-            _bounds["raw_str"] = bound / nbytes
-    else:
-        trial("raw_str")
-        trial("dict_str")
-        try:
-            tbl = fsst.SymbolTable(
-                fsst.train_symbol_table(sdata[: fsst._SAMPLE_BYTES].tobytes())
-            )
+    def trial(c: str) -> tuple[bytes, float]:
+        nonlocal fsst_table
+        table = None
+        if c == "fsst":
+            table = _fsst_table(sdata)
             if sdata.size >= fsst._SAMPLE_BYTES:
-                fsst_table = tbl
-            trial("fsst", tbl)
+                fsst_table = table
+        enc[c] = _encode_str(c, sdata, soff, table=table)
+        size[c] = len(enc[c])
+        return enc[c], size[c] / nbytes
+
+    def attempt(c: str) -> None:
+        try:
+            trial(c)
         except Exception:
             pass
-    est = {c: size[c] / nbytes for c in STR_CANDIDATES if c in size}
-    best = min(est, key=est.get)
+
+    kept = _reuse(_prior, low_card, trial)
+    if kept is not None:
+        best, est, _ = kept
+    else:
+        size.clear()
+        enc.clear()
+        fsst_table = None
+        if low_card:
+            attempt("dict_str")
+            bound = sdata.size + 2 * -(-k // rle_v1._RUN_CAP) + 2
+            if _can_win("raw_str", bound, size, STR_CANDIDATES):
+                attempt("raw_str")
+            else:
+                pruned["raw_str"] = bound / nbytes
+        else:
+            attempt("raw_str")
+            attempt("dict_str")
+            attempt("fsst")
+        if _bounds is not None:
+            _bounds.update(pruned)
+        est = {c: size[c] / nbytes for c in STR_CANDIDATES if c in size}
+        best = min(est, key=est.get)
+        _decide(_prior, best, est, pruned, low_card)
     if k == n:
         return best, est, enc[best]
     return best, est, _encode_str(
@@ -245,11 +344,23 @@ def _encode_float(codec: str, v: np.ndarray, double: bool) -> bytes:
     raise ValueError(codec)
 
 
+def _float_profile(s: np.ndarray, double: bool) -> tuple[bool, bool]:
+    """Whether some ALP (e, f) is exact on the first 64 values; whether
+    the first 512 are clearly low-cardinality (< 5% distinct)."""
+    from .alp import _CAND, _block_stats
+
+    n_exc = _block_stats(np.asarray(s[:64], np.float64), np.arange(len(_CAND)))[0]
+    k0 = min(s.size, 512)
+    return bool((n_exc == 0).any()), np.unique(_float_bits(s[:k0], double)).size / k0 < 0.05
+
+
 def select_and_encode_float(
     v: np.ndarray,
     double: bool = True,
     compression: str = "zstd",
     sample: int = SAMPLE_VALUES,
+    *,
+    _prior: dict | None = None,
 ) -> tuple[str, dict[str, float], bytes]:
     """Selection + final encode fused: returns (codec, estimates, wire
     bytes). When the sample covered the whole column, the winning
@@ -265,7 +376,8 @@ def select_and_encode_float(
     Measured on lineitem sf0.01 under zstd: l_discount raw 69.7 KB /
     split 177.0 KB / dict 26.1 KB; l_extendedprice 250 KB / 333 KB /
     382 KB — no single choice is ever right, so each candidate's sample
-    is actually compressed (bounded: <= sample values per candidate)."""
+    is actually compressed (bounded: <= sample values per candidate).
+    ``_prior``: see the module docstring."""
     from .blocks import compress_stream
 
     raw_name = "raw_double" if double else "raw_float"
@@ -273,15 +385,25 @@ def select_and_encode_float(
     if n == 0:
         return raw_name, {}, _encode_float(raw_name, v, double)
     s = v[: min(n, sample)]
-    est: dict[str, float] = {}
-    enc: dict[str, bytes] = {}
-    for c in FLOAT_CANDIDATES:
-        try:
-            enc[c] = _encode_float(c, s, double)
-            est[c] = len(compress_stream(enc[c], compression)) / len(s)
-        except Exception:
-            continue
-    best = min(est, key=est.get)
+    profile = _float_profile(s, double) if _prior is not None else None
+
+    def measure(c: str) -> tuple[bytes, float]:
+        b = _encode_float(c, s, double)
+        return b, len(compress_stream(b, compression)) / len(s)
+
+    kept = _reuse(_prior, profile, measure)
+    if kept is not None:
+        best, est, b = kept
+        enc = {best: b}
+    else:
+        est, enc = {}, {}
+        for c in FLOAT_CANDIDATES:
+            try:
+                enc[c], est[c] = measure(c)
+            except Exception:
+                continue
+        best = min(est, key=est.get)
+        _decide(_prior, best, est, {}, profile)
     wire = enc[best] if n <= sample else _encode_float(best, v, double)
     if best == "raw":
         best = raw_name

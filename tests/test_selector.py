@@ -321,6 +321,106 @@ def test_pruned_candidates_reach_the_lineage_row():
     assert rows["f"]["candidate_bounds"] == {"raw_str": (2048 + 2 * 16 + 2) / 2048}
 
 
+# ------------------------------------------------ selection per partition
+
+_REGIMES = {
+    "prices": lambda rng, n: np.round(rng.uniform(1, 1000, n), 2),
+    "gaussians": lambda rng, n: rng.normal(size=n),
+    "low-card floats": lambda rng, n: rng.choice(np.round(rng.uniform(0, 100, 8), 2), n),
+    "zeros": lambda rng, n: np.zeros(n),
+    "constant": lambda rng, n: np.full(n, 7, np.int64),
+    "low-card ints": lambda rng, n: rng.integers(0, 10, n),
+    "sorted": lambda rng, n: np.sort(rng.integers(0, 1 << 20, n)),
+    "random": lambda rng, n: rng.integers(0, 1 << 31, n),
+    "runs": lambda rng, n: np.repeat(rng.integers(0, 1 << 31, n // 50 + 1), 50)[:n],
+    "few-distinct": lambda rng, n: rng.choice(rng.integers(0, 1 << 31, 100), n),
+    "low-card strings": lambda rng, n: rng.choice(["alpha", "beta", "gamma", "delta"], n).tolist(),
+    "unique": lambda rng, n: [f"u{x}-{i}" for i, x in enumerate(rng.integers(0, 1 << 40, n).tolist())],
+}
+
+# first regime for one chunk, then five chunks of the second
+_REGIME_CHANGES = [
+    ("prices", "gaussians"), ("low-card floats", "gaussians"), ("zeros", "gaussians"),
+    ("gaussians", "prices"), ("gaussians", "low-card floats"),
+    ("constant", "random"), ("low-card ints", "random"), ("sorted", "random"),
+    ("random", "sorted"), ("random", "constant"), ("random", "runs"),
+    ("random", "few-distinct"),
+    ("low-card strings", "unique"), ("unique", "low-card strings"),
+]
+
+
+def _chunk_bodies(blob: bytes) -> list[bytes]:
+    """The chunk bodies of a chunked (v2) blob, in row order."""
+    from orc_format_spark.codecs.varint import decode_varint_one
+
+    _, pos = decode_varint_one(blob, 5)  # after magic + version: stride
+    n, pos = decode_varint_one(blob, pos)
+    lens = []
+    for _ in range(n):
+        _, pos = decode_varint_one(blob, pos)
+        ln, pos = decode_varint_one(blob, pos)
+        lens.append(ln)
+    slen, pos = decode_varint_one(blob, pos)
+    pos += slen
+    out = []
+    for ln in lens:
+        out.append(blob[pos : pos + ln])
+        pos += ln
+    return out
+
+
+def _two_regimes(first: str, second: str) -> pa.Table:
+    rng = np.random.default_rng(_REGIME_CHANGES.index((first, second)))
+    col = pa.concat_arrays([pa.array(_REGIMES[first](rng, 10_000)),
+                            pa.array(_REGIMES[second](rng, 50_000))])
+    return pa.table({"c": col})
+
+
+def _per_partition_vs_per_chunk(tbl: pa.Table) -> tuple[list[bytes], list[bytes], dict]:
+    blob, lineage = encode_table(tbl, stride=10_000)
+    alone = [encode_table(tbl.slice(a, 10_000))[0] for a in range(0, tbl.num_rows, 10_000)]
+    return _chunk_bodies(blob), alone, lineage[0]
+
+
+@pytest.mark.parametrize("first,second", _REGIME_CHANGES)
+def test_per_partition_selection_matches_per_chunk_selection(first, second):
+    """Each chunk's body equals that chunk encoded alone, which selects
+    afresh; where the column's prior winner is kept instead, the body
+    may differ only by being no larger. The regime change is seen by
+    the profile check and counted in the lineage row."""
+    got, alone, row = _per_partition_vs_per_chunk(_two_regimes(first, second))
+    for i, (g, a) in enumerate(zip(got, alone)):
+        assert g == a or len(g) <= len(a), (i, len(g), len(a))
+    assert row["chunks_reselected"] == {"profile": 1}
+    assert row["candidates"] == encode_table(_two_regimes(first, second).slice(0, 10_000))[1][0]["candidates"]
+
+
+@pytest.mark.parametrize("first,second,grown", [
+    ("gaussians", "prices", 1.9), ("gaussians", "low-card floats", 2.5),
+    ("random", "sorted", 1.9), ("random", "runs", 1.5), ("random", "few-distinct", 2.5),
+])
+def test_size_check_alone_misses_regime_changes(monkeypatch, first, second, grown):
+    """Why the profile check exists: with only the size check, the
+    first chunk's winner stays under the limit its rivals set there and
+    is kept on data another codec encodes far smaller."""
+    tbl = _two_regimes(first, second)
+    monkeypatch.setattr(selector, "_int_profile", lambda s: None)
+    monkeypatch.setattr(selector, "_float_profile", lambda s, double: None)
+    got, alone, row = _per_partition_vs_per_chunk(tbl)
+    assert row["chunks_reselected"] == {}
+    assert sum(map(len, got)) > grown * sum(map(len, alone))
+
+
+def test_uniform_columns_are_selected_once():
+    """lineitem sf0.01: no chunk of any column falls back to full
+    selection, and the blob is the per-chunk selection's (see the pin
+    below)."""
+    tbl = _lineitem_chunks()
+    blob, lineage = encode_table(pa.concat_tables(tbl), stride=10_000)
+    assert lineage and all(r["chunks_reselected"] == {} for r in lineage)
+    assert _chunk_bodies(blob) == [encode_table(c)[0] for c in tbl]
+
+
 # ------------------------------------------------- kernels made cheaper
 
 
