@@ -24,7 +24,7 @@ aggregation; expressing it as ``agg`` lets Catalyst run it map-side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 STATS_SCHEMA = T.StructType(

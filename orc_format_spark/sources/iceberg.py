@@ -137,7 +137,6 @@ def read_tokens_table(
 
 
 def list_iceberg_splits(
-    spark: SparkSession,
     name: str,
     snapshot_id: int | None = None,
     partition_filter: dict | None = None,
@@ -185,7 +184,6 @@ def encode_iceberg_splits(
     from .parquet_scan import encode_splits
 
     splits = list_iceberg_splits(
-        spark,
         name,
         snapshot_id=snapshot_id,
         partition_filter=partition_filter,

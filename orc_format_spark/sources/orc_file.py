@@ -1292,8 +1292,6 @@ def write_orc_groups(
     Apache lib is present."""
     import os
 
-    from pyspark.sql import functions as F  # noqa: N812
-
     from ..operators.partitioning import with_group_id
     from ..worker_env import limit_worker_threads
 
@@ -1355,7 +1353,7 @@ def read_orc_files(files, schema: str):
 
     from ..worker_env import limit_worker_threads
 
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.orc as po
 
         limit_worker_threads()

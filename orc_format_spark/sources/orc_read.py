@@ -68,7 +68,6 @@ from __future__ import annotations
 
 import functools
 import zlib
-from typing import BinaryIO
 
 import numpy as np
 import pyarrow as pa
@@ -1610,7 +1609,7 @@ def read_orc_files_native(files, schema: str,
 
     from ..worker_env import limit_worker_threads
 
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         limit_worker_threads()
         for batch in batches:
             col = batch.column(batch.schema.get_field_index("orc_path"))

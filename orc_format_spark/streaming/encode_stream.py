@@ -19,7 +19,7 @@ same code path hermetically.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..operators.encode import encode_groups
 

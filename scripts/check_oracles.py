@@ -28,8 +28,6 @@ TABLES = [
 
 
 def _canon(pdf):
-    import pandas as pd
-
     pdf = pdf[sorted(pdf.columns)].copy()
     if len(pdf):
         pdf = pdf.sort_values(by=list(pdf.columns), kind="mergesort")

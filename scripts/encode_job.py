@@ -61,7 +61,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("orc-format-spark-encode").getOrCreate()
 

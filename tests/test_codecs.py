@@ -356,7 +356,6 @@ def test_decode_table_column_projection():
     """Reader-side projection: decode only requested columns, skipping
     (not decompressing) the rest — including nested children."""
     import glob
-    import time
 
     import pyarrow.parquet as pq
 

@@ -2,7 +2,6 @@
 
 import json
 
-import pyarrow as pa
 import pytest
 
 from orc_format_spark.operators.compact import plan_compaction

@@ -151,7 +151,6 @@ def test_stream_read_and_write_pipeline(ds_spark, tmp_path):
     blob dir B a streaming SINK (per-batch encoded part files + a
     jsonl commit ledger). Restarting from the checkpoint after new
     files arrive processes exactly the delta."""
-    import time as _t
 
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")

@@ -82,7 +82,7 @@ def test_merge_on_read(spark, tmp_path):
     assert got == expect
 
 
-def test_split_encode_refuses_dirty_files(spark, tmp_path):
+def test_split_encode_refuses_dirty_files(tmp_path):
     from orc_format_spark.sources import iceberg
 
     tdir = str(tmp_path / "tbl")
@@ -91,7 +91,7 @@ def test_split_encode_refuses_dirty_files(spark, tmp_path):
     im.append_snapshot(tdir, [a], ts_ms=2_000)
     im.append_delete_snapshot(tdir, [(a, 2)], ts_ms=3_000)
     with pytest.raises(ValueError, match="positional deletes"):
-        iceberg.list_iceberg_splits(spark, tdir)
+        iceberg.list_iceberg_splits(tdir)
 
 
 def test_replaced_file_retires_position_deletes(spark, tmp_path):
@@ -113,7 +113,7 @@ def test_replaced_file_retires_position_deletes(spark, tmp_path):
     pq.write_table(t.filter(pa.array(mask)), compacted)
     replace_files(tdir, [a], [compacted], ts_ms=4_000)
     assert im.list_delete_entries(tdir) == []  # retired: target not live
-    splits = iceberg.list_iceberg_splits(spark, tdir)
+    splits = iceberg.list_iceberg_splits(tdir)
     assert [s[1] for s in splits] == [compacted]
     got = sorted(r.doc_id for r in iceberg.read_tokens_table(spark, tdir).collect())
     assert got == keep
@@ -215,7 +215,7 @@ def test_equality_delete_null_matching(spark, tmp_path):
     assert got == ["d0"]
 
 
-def test_split_encode_refuses_equality_dirty_files(spark, tmp_path):
+def test_split_encode_refuses_equality_dirty_files(tmp_path):
     from orc_format_spark.sources import iceberg
 
     tdir = str(tmp_path / "tbl")
@@ -226,13 +226,13 @@ def test_split_encode_refuses_equality_dirty_files(spark, tmp_path):
         tdir, [{"doc_id": "d00001"}], ["doc_id"], ts_ms=3_000
     )
     with pytest.raises(ValueError, match="equality delete"):
-        iceberg.list_iceberg_splits(spark, tdir)
+        iceberg.list_iceberg_splits(tdir)
     # a file appended AFTER the delete is clean — but the pre-delete file
     # still blocks the scan until compaction
     b = _pfile(tmp_path / "b.parquet", 10, 5)
     im.append_snapshot(tdir, [b], ts_ms=4_000)
     with pytest.raises(ValueError, match="equality delete"):
-        iceberg.list_iceberg_splits(spark, tdir)
+        iceberg.list_iceberg_splits(tdir)
 
 
 def test_replaced_file_retires_equality_deletes(spark, tmp_path):
@@ -256,7 +256,7 @@ def test_replaced_file_retires_equality_deletes(spark, tmp_path):
     pq.write_table(t.filter(pa.array(mask)), compacted)
     replace_files(tdir, [a], [compacted], ts_ms=4_000)
     assert im.list_equality_delete_entries(tdir) == []  # applies to nothing
-    splits = iceberg.list_iceberg_splits(spark, tdir)
+    splits = iceberg.list_iceberg_splits(tdir)
     assert [s[1] for s in splits] == [compacted]
     got = sorted(r.doc_id for r in iceberg.read_tokens_table(spark, tdir).collect())
     assert got == keep
@@ -312,7 +312,7 @@ def test_evolution_read_semantics(spark, tmp_path):
 # --------------------------------------------------- incremental scans
 
 
-def test_incremental_splits_since_snapshot(spark, tmp_path):
+def test_incremental_splits_since_snapshot(tmp_path):
     """since_snapshot_id plans only files appended after the watermark;
     a compaction commit re-sequences its output so compacted data is
     re-encoded; an unknown watermark raises."""
@@ -324,17 +324,17 @@ def test_incremental_splits_since_snapshot(spark, tmp_path):
     s1 = im.append_snapshot(tdir, [a], ts_ms=2_000)
     b = _pfile(tmp_path / "b.parquet", 10, 10)
     s2 = im.append_snapshot(tdir, [b], ts_ms=3_000)
-    inc = iceberg.list_iceberg_splits(spark, tdir, since_snapshot_id=s1)
+    inc = iceberg.list_iceberg_splits(tdir, since_snapshot_id=s1)
     assert sorted({f for _, f, _ in inc}) == [b]
-    assert iceberg.list_iceberg_splits(spark, tdir, since_snapshot_id=s2) == []
+    assert iceberg.list_iceberg_splits(tdir, since_snapshot_id=s2) == []
     # full scan unchanged
-    full = iceberg.list_iceberg_splits(spark, tdir)
+    full = iceberg.list_iceberg_splits(tdir)
     assert sorted({f for _, f, _ in full}) == sorted([a, b])
     # compact a -> c: c gets a fresh sequence number, so it IS the delta
     c = str(tmp_path / "c.parquet")
     pq.write_table(pq.read_table(a), c)
     replace_files(tdir, [a], [c], ts_ms=4_000)
-    inc2 = iceberg.list_iceberg_splits(spark, tdir, since_snapshot_id=s2)
+    inc2 = iceberg.list_iceberg_splits(tdir, since_snapshot_id=s2)
     assert sorted({f for _, f, _ in inc2}) == [c]
     with pytest.raises(ValueError, match="unknown snapshot id"):
-        iceberg.list_iceberg_splits(spark, tdir, since_snapshot_id=999)
+        iceberg.list_iceberg_splits(tdir, since_snapshot_id=999)

@@ -5,10 +5,6 @@ These tests exercise the REAL manifest path end-to-end (round-2 verdict
 item: the catalog jar is absent, so the path-addressed pure-Python route
 is the one that must carry the Iceberg contract)."""
 
-import glob
-import json
-import os
-
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -198,7 +194,7 @@ def test_iceberg_source_path_route(spark, tmp_path):
     tdir = str(tmp_path / "tbl")
     im.create_table(tdir, TOKENS_PA)
     im.append_snapshot(tdir, [f1])
-    splits = iceberg.list_iceberg_splits(spark, tdir)
+    splits = iceberg.list_iceberg_splits(tdir)
     assert len(splits) == 3
     df = iceberg.read_tokens_table(spark, tdir)
     assert df.count() == 100

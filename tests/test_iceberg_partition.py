@@ -195,7 +195,7 @@ def test_partitioned_splits_and_encode(spark, tmp_path):
     fc = _pfile(tmp_path / "c.parquet", 40, 30, "cc", 1, rg=15)
     im.append_snapshot(tdir, [(fw, {"source": "web", "day": 1})], ts_ms=2_000)
     im.append_snapshot(tdir, [(fc, {"source": "cc", "day": 1})], ts_ms=3_000)
-    splits = iceberg.list_iceberg_splits(spark, tdir, partition_filter={"source": "cc"})
+    splits = iceberg.list_iceberg_splits(tdir, partition_filter={"source": "cc"})
     assert [(s[1], s[2]) for s in splits] == [(fc, 0), (fc, 1)]
     assert [s[0] for s in splits] == [0, 1]  # ids deterministic per filter
     df = iceberg.read_tokens_table(spark, tdir, partition_filter={"source": "cc"})
@@ -278,7 +278,7 @@ def test_predicate_file_skipping(tmp_path):
         files([("day", "!=", 1)])
 
 
-def test_predicate_splits_and_partition_combo(spark, tmp_path):
+def test_predicate_splits_and_partition_combo(tmp_path):
     """column_predicates compose with partition_filter down the split
     listing; all-null files are skipped for comparison predicates."""
     tdir = str(tmp_path / "tbl")
@@ -294,7 +294,6 @@ def test_predicate_splits_and_partition_combo(spark, tmp_path):
     from orc_format_spark.sources import iceberg
 
     splits = iceberg.list_iceberg_splits(
-        spark,
         tdir,
         partition_filter={"source": "web"},
         column_predicates=[("day", ">=", 5)],

@@ -19,7 +19,7 @@ def test_iceberg_gating(spark, tmp_path):
         with pytest.raises(ValueError, match="not a path-addressed"):
             iceberg.read_tokens_table(spark, name)
         with pytest.raises(ValueError, match="not a path-addressed"):
-            iceberg.list_iceberg_splits(spark, name)
+            iceberg.list_iceberg_splits(name)
 
 
 def test_encode_splits_explicit_list(spark, tmp_path):

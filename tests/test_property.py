@@ -267,7 +267,7 @@ def test_float_split_roundtrip(xs):
 @settings(max_examples=60, deadline=None)
 @given(st.lists(FLOATS, max_size=400))
 def test_dict_float_roundtrip(xs):
-    from orc_format_spark.codecs.selector import _encode_float, _float_bits
+    from orc_format_spark.codecs.selector import _encode_float
 
     v = np.array(xs, "<f8")
     blob = _encode_float("dict_float", v, True)

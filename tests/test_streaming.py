@@ -83,7 +83,6 @@ def test_stream_metrics_iceberg_commits(spark, tokens_dir, tmp_path):
     the metrics Iceberg table, keyed batch=N; a replayed commit for the
     same batch id is a no-op (exactly-once), and a checkpointed restart
     adds no snapshots."""
-    from orc_format_spark import read_metrics
     from orc_format_spark.operators.job import commit_lineage_metrics
     from orc_format_spark.sources import iceberg_meta as im
 
