@@ -99,6 +99,11 @@ def _block_stats(s: np.ndarray, idx: np.ndarray):
     )
 
 
+def has_exact_pair(v64: np.ndarray) -> bool:
+    """Whether some (e, f) candidate reproduces every value of ``v64``."""
+    return bool((_block_stats(v64, np.arange(len(_CAND)))[0] == 0).any())
+
+
 def _bits(n: int, n_exc, hi, lo):
     """Estimated bits: bitwidth(digit span) * n + 80 * exceptions. The
     span is < 2^52, exact as f8, so frexp's exponent is its bit length."""

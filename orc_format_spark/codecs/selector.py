@@ -5,10 +5,11 @@ encoding (string.rs:173-177; SURVEY.md section 4.2). This module is the
 Spark-era replacement mandated by BASELINE.json's north rule: sampled
 cardinality / run-length / value-range statistics drive the choice.
 
-Every choice is made on a bounded contiguous sample (16Ki values for
-numbers, 2,048 strings) and is exactly the codec that trial-encoding
-every candidate would pick (the first minimum in candidate order), so
-no output byte depends on how the choice was reached:
+Every full selection is made on a bounded contiguous sample (16Ki
+values for numbers, 2,048 strings) and picks exactly the codec that
+trial-encoding every candidate would pick (the first minimum in
+candidate order), so no output byte depends on how the choice was
+reached:
 
 1. Exact sizes first: the candidate with the cheap kernel is encoded
    outright (``for_bitpack`` for ints, ``dict_str`` for clearly
@@ -141,18 +142,24 @@ def _decide(prior: dict | None, best: str, est: dict, bounds: dict, profile) -> 
     prior["limit"] = min(other, default=float("inf"))
 
 
-def _int_profile(s: np.ndarray) -> tuple:
-    """Bit length of the sample's value range; whether it is sorted;
-    whether most values repeat their predecessor (runs); whether the
-    first 512 are under half distinct (``dict_int``'s gate)."""
-    span = (int(s.max()) - int(s.min())).bit_length()
-    k0 = min(s.size, 512)
+def _shape(s: np.ndarray, keys: np.ndarray) -> tuple[bool, bool, float]:
+    """Whether the sample ``s`` is sorted; whether most of its values
+    repeat their predecessor (runs); the distinct share of the first
+    512 ``keys`` (``s`` itself, or the floats' bit patterns)."""
+    k0 = min(keys.size, 512)
     return (
-        span,
         bool((s[1:] >= s[:-1]).all()),
-        2 * np.count_nonzero(s[1:] == s[:-1]) > s.size,
-        2 * np.unique(s[:k0]).size < k0,
+        2 * np.count_nonzero(keys[1:] == keys[:-1]) > keys.size,
+        np.unique(keys[:k0]).size / k0,
     )
+
+
+def _int_profile(s: np.ndarray) -> tuple:
+    """Bit length of the sample's value range, sortedness, runs, and
+    whether the first 512 values are under half distinct (the
+    ``dict_int`` gate)."""
+    is_sorted, runs, distinct = _shape(s, s)
+    return (int(s.max()) - int(s.min())).bit_length(), is_sorted, runs, distinct < 0.5
 
 
 def select_and_encode_int(
@@ -228,12 +235,13 @@ def _fsst_table(sdata: np.ndarray) -> fsst.SymbolTable:
     return fsst.SymbolTable(fsst.train_symbol_table(sdata[: fsst._SAMPLE_BYTES].tobytes()))
 
 
-def _str_profile(data: np.ndarray, offsets: np.ndarray) -> bool:
+def _str_profile(data: np.ndarray, offsets: np.ndarray) -> tuple[bool, bool]:
     """Whether the first 512 strings are clearly low-cardinality (< 5%
-    distinct)."""
+    distinct), and whether they are under half distinct."""
     k0 = min(offsets.size - 1, 512)
     head = dictionary._binary_array(data[: int(offsets[k0])], offsets[: k0 + 1])
-    return pc.count_distinct(head).as_py() / k0 < 0.05
+    distinct = pc.count_distinct(head).as_py() / k0
+    return distinct < 0.05, distinct < 0.5
 
 
 def select_and_encode_str(
@@ -266,7 +274,8 @@ def select_and_encode_str(
     k = min(n, sample)
     sdata = data[: int(offsets[k])]
     soff = offsets[: k + 1]
-    low_card = _str_profile(data, offsets)
+    profile = _str_profile(data, offsets)
+    low_card = profile[0]
     size: dict[str, int] = {}
     enc: dict[str, bytes] = {}
     pruned: dict[str, float] = {}
@@ -290,7 +299,7 @@ def select_and_encode_str(
         except Exception:
             pass
 
-    kept = _reuse(_prior, low_card, trial)
+    kept = _reuse(_prior, profile, trial)
     if kept is not None:
         best, est, _ = kept
     else:
@@ -312,7 +321,7 @@ def select_and_encode_str(
             _bounds.update(pruned)
         est = {c: size[c] / nbytes for c in STR_CANDIDATES if c in size}
         best = min(est, key=est.get)
-        _decide(_prior, best, est, pruned, low_card)
+        _decide(_prior, best, est, pruned, profile)
     if k == n:
         return best, est, enc[best]
     return best, est, _encode_str(
@@ -344,14 +353,15 @@ def _encode_float(codec: str, v: np.ndarray, double: bool) -> bytes:
     raise ValueError(codec)
 
 
-def _float_profile(s: np.ndarray, double: bool) -> tuple[bool, bool]:
+def _float_profile(s: np.ndarray, double: bool) -> tuple:
     """Whether some ALP (e, f) is exact on the first 64 values; whether
-    the first 512 are clearly low-cardinality (< 5% distinct)."""
-    from .alp import _CAND, _block_stats
+    the first 512 are clearly low-cardinality (< 5% distinct), and
+    whether under half distinct; sortedness and runs."""
+    from .alp import has_exact_pair
 
-    n_exc = _block_stats(np.asarray(s[:64], np.float64), np.arange(len(_CAND)))[0]
-    k0 = min(s.size, 512)
-    return bool((n_exc == 0).any()), np.unique(_float_bits(s[:k0], double)).size / k0 < 0.05
+    is_sorted, runs, distinct = _shape(s, _float_bits(s, double))
+    return (has_exact_pair(np.asarray(s[:64], np.float64)),
+            distinct < 0.05, distinct < 0.5, is_sorted, runs)
 
 
 def select_and_encode_float(

@@ -336,6 +336,8 @@ _REGIMES = {
     "few-distinct": lambda rng, n: rng.choice(rng.integers(0, 1 << 31, 100), n),
     "low-card strings": lambda rng, n: rng.choice(["alpha", "beta", "gamma", "delta"], n).tolist(),
     "unique": lambda rng, n: [f"u{x}-{i}" for i, x in enumerate(rng.integers(0, 1 << 40, n).tolist())],
+    "0.01 steps": lambda rng, n: np.round(np.arange(n) * 0.01, 2),
+    "mid-card strings": lambda rng, n: rng.choice([f"name-{i}" for i in range(300)], n).tolist(),
 }
 
 # first regime for one chunk, then five chunks of the second
@@ -346,6 +348,7 @@ _REGIME_CHANGES = [
     ("random", "sorted"), ("random", "constant"), ("random", "runs"),
     ("random", "few-distinct"),
     ("low-card strings", "unique"), ("unique", "low-card strings"),
+    ("prices", "0.01 steps"), ("unique", "mid-card strings"),
 ]
 
 
@@ -398,6 +401,7 @@ def test_per_partition_selection_matches_per_chunk_selection(first, second):
 @pytest.mark.parametrize("first,second,grown", [
     ("gaussians", "prices", 1.9), ("gaussians", "low-card floats", 2.5),
     ("random", "sorted", 1.9), ("random", "runs", 1.5), ("random", "few-distinct", 2.5),
+    ("prices", "0.01 steps", 3.0),
 ])
 def test_size_check_alone_misses_regime_changes(monkeypatch, first, second, grown):
     """Why the profile check exists: with only the size check, the
