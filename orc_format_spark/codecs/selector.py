@@ -115,7 +115,6 @@ def _reuse(prior: dict | None, profile, measure) -> tuple | None:
     encodes candidate ``c`` on the sample: (bytes, est)."""
     if not prior or "codec" not in prior:
         return None
-    why = None
     if profile != prior["profile"]:
         why = "profile"
     else:

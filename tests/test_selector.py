@@ -391,11 +391,12 @@ def test_per_partition_selection_matches_per_chunk_selection(first, second):
     afresh; where the column's prior winner is kept instead, the body
     may differ only by being no larger. The regime change is seen by
     the profile check and counted in the lineage row."""
-    got, alone, row = _per_partition_vs_per_chunk(_two_regimes(first, second))
+    tbl = _two_regimes(first, second)
+    got, alone, row = _per_partition_vs_per_chunk(tbl)
     for i, (g, a) in enumerate(zip(got, alone)):
         assert g == a or len(g) <= len(a), (i, len(g), len(a))
     assert row["chunks_reselected"] == {"profile": 1}
-    assert row["candidates"] == encode_table(_two_regimes(first, second).slice(0, 10_000))[1][0]["candidates"]
+    assert row["candidates"] == encode_table(tbl.slice(0, 10_000))[1][0]["candidates"]
 
 
 @pytest.mark.parametrize("first,second,grown", [
