@@ -1414,33 +1414,41 @@ def table_checksum(tbl: pa.Table) -> str:
     return h.hexdigest()
 
 
-def _canonical_buffers(arr):
-    """Canonical byte view of an array (type-normalized)."""
+_ONES = memoryview(b"\x01" * (1 << 16))
+
+
+def _canonical_buffers(arr) -> list:
+    """Canonical byte view of an array (type-normalized): a list of
+    buffers (bytes, memoryviews, contiguous numpy arrays) to hash in
+    order; views are not copied."""
     # NOTE: the type itself is NOT hashed — equivalent logical types
     # print differently across producers (Spark names list items
     # "element", our decoder "item"); the per-column byte width plus the
     # validity length already pin the physical shape
     t = arr.type
-    out = [arr.is_valid().to_numpy(zero_copy_only=False).tobytes()]
-    va = arr.drop_null()
-    if pa.types.is_integer(t) or pa.types.is_date32(t):
+    n = len(arr)
+    if arr.null_count == 0:
+        # one 0x01 per value, as views of one shared block
+        out = [_ONES] * (n // len(_ONES)) + [_ONES[: n % len(_ONES)]]
+        va = arr
+    else:
+        out = [arr.is_valid().to_numpy(zero_copy_only=False)]
+        va = arr.drop_null()
+    if (pa.types.is_integer(t) or pa.types.is_date32(t) or pa.types.is_floating(t)
+            or pa.types.is_boolean(t)):
         # native width (both checksum sides always see the same declared
         # type, so widening to int64 would only add memory traffic)
-        out.append(va.to_numpy(zero_copy_only=False).tobytes())
-    elif pa.types.is_floating(t):
-        out.append(va.to_numpy(zero_copy_only=False).tobytes())
-    elif pa.types.is_boolean(t):
-        out.append(va.to_numpy(zero_copy_only=False).tobytes())
+        out.append(va.to_numpy(zero_copy_only=False))
     elif pa.types.is_timestamp(t):
-        out.append(va.cast(pa.timestamp("us")).to_numpy(zero_copy_only=False).astype("datetime64[us]").view(np.int64).tobytes())
+        out.append(va.cast(pa.timestamp("us")).to_numpy(zero_copy_only=False).astype("datetime64[us]").view(np.int64))
     elif pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_binary(t) or pa.types.is_large_binary(t):
         data, off = _flat_binary(va)
-        out.append(off.tobytes())
-        out.append(data.tobytes())
+        out.append(off)
+        out.append(data)
     elif pa.types.is_list(t) or pa.types.is_large_list(t):
         lv = _combine(va.cast(pa.large_list(t.value_type)))
         loff = np.frombuffer(lv.buffers()[1], np.int64, len(lv) + 1, lv.offset * 8)
-        out.append((loff - loff[0]).tobytes())
+        out.append(loff - loff[0])
         out.extend(_canonical_buffers(lv.flatten()))
     elif pa.types.is_struct(t):
         for i in range(t.num_fields):
@@ -1449,7 +1457,7 @@ def _canonical_buffers(arr):
     elif pa.types.is_map(t):
         mv = _combine(va)
         moff = np.asarray(mv.offsets, np.int64)
-        out.append((moff - moff[0]).tobytes())
+        out.append(moff - moff[0])
         start, end = int(moff[0]), int(moff[-1])
         out.extend(_canonical_buffers(mv.keys.slice(start, end - start)))
         out.extend(_canonical_buffers(mv.items.slice(start, end - start)))
@@ -1466,7 +1474,7 @@ def _canonical_buffers(arr):
                 uv.offset : uv.offset + len(uv)
             ]
             vo = None
-        out.append(tc.tobytes())
+        out.append(tc)
         for i in range(t.num_fields):
             pos = np.flatnonzero(tc == t.type_codes[i])
             idx = pos if vo is None else vo[pos]

@@ -46,7 +46,10 @@ encodes only the winner and keeps it when its own profile equals the
 deciding chunk's and the winner's ``est`` does not exceed the limit.
 Otherwise it runs the full selection and becomes the deciding chunk;
 ``prior["reselected"]`` counts these fallbacks by reason (``profile``
-or ``size``) for the lineage row.
+or ``size``) for the lineage row. The size check and that selection
+share one memo of sample encodes (``_once``), so a winner the check
+already encoded is not encoded again; it still enters ``est`` only
+where the selection itself tries it, never where its bound prunes it.
 """
 
 from __future__ import annotations
@@ -106,6 +109,27 @@ def _can_win(c: str, bound: int, size: dict[str, int], order: tuple) -> bool:
     best = min(size.values())
     first = next(x for x in order if size.get(x) == best)
     return bound < best or (bound == best and order.index(c) < order.index(first))
+
+
+def _once(measure):
+    """``measure`` run at most once per candidate: a later call returns
+    (or raises) what the first did. The size check and the full
+    selection that follows it share one, so the fallback never encodes
+    the prior winner a second time."""
+    memo: dict = {}
+
+    def call(c: str):
+        if c not in memo:
+            try:
+                memo[c] = (measure(c), None)
+            except Exception as e:
+                memo[c] = (None, e)
+        out, err = memo[c]
+        if err is not None:
+            raise err
+        return out
+
+    return call
 
 
 def _reuse(prior: dict | None, profile, measure) -> tuple | None:
@@ -182,6 +206,7 @@ def select_and_encode_int(
     s = v[: min(n, sample)]
     profile = _int_profile(s) if _prior is not None else None
 
+    @_once
     def measure(c: str) -> tuple[bytes, float]:
         b = _encode_int(c, s, signed)
         return b, len(b) / len(s)
@@ -199,7 +224,7 @@ def select_and_encode_int(
 
     def trial(c: str) -> None:
         try:
-            enc[c] = _encode_int(c, s, signed)
+            enc[c] = measure(c)[0]
         except Exception:
             return
         size[c] = len(enc[c])
@@ -281,30 +306,29 @@ def select_and_encode_str(
     fsst_table = None
     nbytes = max(1, sdata.size)
 
-    def trial(c: str) -> tuple[bytes, float]:
+    @_once
+    def measure(c: str) -> tuple[bytes, float]:
         nonlocal fsst_table
         table = None
         if c == "fsst":
             table = _fsst_table(sdata)
             if sdata.size >= fsst._SAMPLE_BYTES:
                 fsst_table = table
-        enc[c] = _encode_str(c, sdata, soff, table=table)
-        size[c] = len(enc[c])
-        return enc[c], size[c] / nbytes
+        b = _encode_str(c, sdata, soff, table=table)
+        return b, len(b) / nbytes
 
     def attempt(c: str) -> None:
         try:
-            trial(c)
+            enc[c] = measure(c)[0]
         except Exception:
-            pass
+            return
+        size[c] = len(enc[c])
 
-    kept = _reuse(_prior, profile, trial)
+    kept = _reuse(_prior, profile, measure)
     if kept is not None:
-        best, est, _ = kept
+        best, est, b = kept
+        enc[best] = b
     else:
-        size.clear()
-        enc.clear()
-        fsst_table = None
         if low_card:
             attempt("dict_str")
             bound = sdata.size + 2 * -(-k // rle_v1._RUN_CAP) + 2
@@ -396,6 +420,7 @@ def select_and_encode_float(
     s = v[: min(n, sample)]
     profile = _float_profile(s, double) if _prior is not None else None
 
+    @_once
     def measure(c: str) -> tuple[bytes, float]:
         b = _encode_float(c, s, double)
         return b, len(compress_stream(b, compression)) / len(s)

@@ -4,7 +4,7 @@ Every UDF body in this package (``mapInArrow``, ``applyInArrow``, the
 pandas UDF of ``prune_blobs`` and the ``read``/``write`` methods of the
 Python data sources in ``sources/datasource.py``) calls
 ``limit_worker_threads()`` first.
-The first call in a Python worker sets up two things for the rest of
+The first call in a Python worker sets up three things for the rest of
 that worker's life:
 
 - **One Arrow lane per worker.** Spark runs one Python worker per core;
@@ -25,10 +25,24 @@ that worker's life:
   process last read it; otherwise the importer adopts the directory
   already in ``zipimport._zip_directory_cache``. CPython 3.13 invalidates
   lazily, so there the guard is not installed.
+- **A frozen heap.** After every task a reused worker runs a full
+  ``gc.collect()`` (Spark 4.1's ``pyspark/daemon.py``), which walks
+  every container object alive in the process: the ~75,000 objects of
+  numpy, pyarrow, pandas, pyspark and this library, ~20 ms of CPU per
+  task (BENCH.md §20). The hook imports what a task would load on first
+  use, collects once, and moves everything still alive to the permanent
+  generation (``gc.freeze()``), so each later collection walks only
+  what the tasks since the last one created. Freezing cannot change a
+  value: it only shortens the cyclic collector's work list, and
+  reference counting still frees every object whose count drops to
+  zero. The one cost is that a reference cycle among objects alive at
+  the freeze is never reclaimed.
 """
 
 from __future__ import annotations
 
+import gc
+import importlib
 import os
 import sys
 import zipimport
@@ -68,6 +82,24 @@ def _install_zip_guard() -> None:
             imp.invalidate_caches()
 
 
+# what a task would import on first use, imported before the freeze so
+# that its objects are frozen too: the codecs the hot paths import
+# lazily, and pandas, which pyarrow imports at a task's first record
+# batch (about a third of a warm worker's heap)
+_PRELOAD = (f"{__package__}.codecs.alp", f"{__package__}.codecs.orc_bloom",
+            "pandas", "pyarrow.pandas_compat")
+
+
+def _freeze_heap() -> None:
+    for name in _PRELOAD:
+        try:
+            importlib.import_module(name)
+        except ImportError:  # pragma: no cover - pyarrow runs without pandas
+            pass
+    gc.collect()
+    gc.freeze()
+
+
 def limit_worker_threads() -> None:
     global _done
     if _done:
@@ -82,4 +114,5 @@ def limit_worker_threads() -> None:
             pa.set_io_thread_count(2)
     except Exception:  # pragma: no cover - best effort on older pyarrow
         pass
+    _freeze_heap()
     _done = True

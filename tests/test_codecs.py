@@ -251,6 +251,76 @@ def test_container_roundtrip_with_nulls():
         ).equals(back.column(name).combine_chunks()), name
 
 
+def _checksum_table(n=64):
+    """One column per ``_canonical_buffers`` branch, each with and
+    without nulls (unions have no validity)."""
+    import decimal
+
+    rng = np.random.default_rng(16)
+    ints = rng.integers(-1000, 1000, n)
+    nulls = [i % 5 == 1 for i in range(n)]
+
+    def arr(values, typ, with_nulls):
+        return pa.array([None if with_nulls and m else v for v, m in zip(values, nulls)], typ)
+
+    words = [f"w{i % 7}é" * (i % 4) for i in range(n)]
+    cols = {}
+    for tag, nz in (("", False), ("_n", True)):
+        cols["i8" + tag] = arr([int(x) % 100 for x in ints], pa.int8(), nz)
+        cols["i64" + tag] = arr([int(x) * 10**9 for x in ints], pa.int64(), nz)
+        cols["u32" + tag] = arr([int(x) + 1000 for x in ints], pa.uint32(), nz)
+        cols["date" + tag] = arr([int(x) for x in ints], pa.date32(), nz)
+        cols["f32" + tag] = arr([float(x) / 8 for x in ints], pa.float32(), nz)
+        cols["f64" + tag] = arr([float(x) / 3 for x in ints], pa.float64(), nz)
+        cols["bool" + tag] = arr([bool(x % 3) for x in ints], pa.bool_(), nz)
+        cols["ts_ms" + tag] = arr([int(x) * 86_400_123 for x in ints], pa.timestamp("ms"), nz)
+        cols["ts_ns_tz" + tag] = arr([int(x) * 1_000_001_000 for x in ints], pa.timestamp("ns", "UTC"), nz)
+        cols["str" + tag] = arr(words, pa.string(), nz)
+        cols["lstr" + tag] = arr(words, pa.large_string(), nz)
+        cols["bin" + tag] = arr([w.encode() + b"\xff" for w in words], pa.binary(), nz)
+        cols["lbin" + tag] = arr([w.encode() for w in words], pa.large_binary(), nz)
+        cols["list" + tag] = arr([list(range(int(x) % 4)) for x in ints], pa.list_(pa.int32()), nz)
+        cols["llist" + tag] = arr([[w] * (int(x) % 3) for w, x in zip(words, ints)], pa.large_list(pa.string()), nz)
+        cols["struct" + tag] = arr(
+            [{"a": int(x), "b": w, "c": [float(x)]} for x, w in zip(ints, words)],
+            pa.struct([("a", pa.int64()), ("b", pa.string()), ("c", pa.list_(pa.float64()))]), nz)
+        cols["map" + tag] = arr([[(w, int(x)), ("k", None)][: int(x) % 3] for w, x in zip(words, ints)],
+                                pa.map_(pa.string(), pa.int64()), nz)
+        cols["dec" + tag] = arr([decimal.Decimal(int(x)) / 100 for x in ints], pa.decimal128(12, 2), nz)
+    tc = pa.array([i % 3 for i in range(n)], pa.int8())
+    kids = [arr(ints.tolist(), pa.int64(), True), arr(words, pa.string(), True),
+            pa.array(ints / 7, pa.float64())]
+    cols["dense_union"] = pa.UnionArray.from_dense(
+        tc, pa.array([i // 3 for i in range(n)], pa.int32()), kids)
+    cols["sparse_union"] = pa.UnionArray.from_sparse(tc, kids)
+    return pa.table(cols)
+
+
+def test_table_checksum_digests_pinned():
+    """``table_checksum`` hashes buffer views, not copies, and feeds a
+    null-free column's validity from a shared block of 0x01 bytes. The
+    digests must stay those of the copying version: every
+    ``_canonical_buffers`` branch with and without nulls, unions with
+    null children, a sliced and a re-chunked table, an empty one, and
+    columns longer than the shared validity block."""
+    t = _checksum_table()
+    assert t.num_columns == 38
+    full = "ff6a91ab9a2dadc245d31739c2749a2705e2c6c2fc5d93ec78c0dfad7e184ea9"
+    assert table_checksum(t) == full
+    assert table_checksum(pa.concat_tables([t.slice(0, 20), t.slice(20)])) == full
+    assert table_checksum(t.slice(5, 41)) == (
+        "f5bb4d1afb1eefaf156c895cc018e4cdf52ff7061338b5e5b5f804890c498768")
+    assert table_checksum(t.slice(0, 0)) == (
+        "79809c7e4e94dba7fb8d8c0b47ff823d418a751694db9974819e45bb09d87f9d")
+    n = 150_000
+    long = pa.table({"v": pa.array(np.arange(n, dtype=np.int32) % 977),
+                     "s": pa.array([str(i % 311) for i in range(n)])})
+    assert table_checksum(long) == (
+        "ceadd95fdcf74b87319e70444b46950184e7c7249aa1e10dfb1df79f32318819")
+    assert table_checksum(long.slice(65_536, 65_536)) == (
+        "dd84e0d2e0c87a0d4ebc54e2c5c65ce7205c6cedbbb285cbf4dc6c371ada1dd1")
+
+
 def test_container_compression_beats_raw_on_compressible():
     n = 50000
     tbl = pa.table({"v": pa.array(np.arange(n, dtype=np.int64) // 13)})

@@ -9,13 +9,14 @@ larger than the true size for each candidate it pruned."""
 
 import hashlib
 import io
+import sys
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from orc_format_spark.codecs import bitpack, fsst, raw, rle_v1, rle_v2, selector
+from orc_format_spark.codecs import alp, bitpack, dictionary, fsst, raw, rle_v1, rle_v2, selector
 from orc_format_spark.codecs.container import _flat_binary, encode_table
 from orc_format_spark.codecs.selector import (
     select_and_encode_float,
@@ -424,6 +425,98 @@ def test_uniform_columns_are_selected_once():
     blob, lineage = encode_table(pa.concat_tables(tbl), stride=10_000)
     assert lineage and all(r["chunks_reselected"] == {} for r in lineage)
     assert _chunk_bodies(blob) == [encode_table(c)[0] for c in tbl]
+
+
+def _size_fallback(kind: str, rng) -> tuple[list, int]:
+    """(two regimes, stride) of a column with a size fallback: its
+    chunks keep one profile, but the first chunk's winner outgrows the
+    limit on the second regime, so that chunk is selected afresh."""
+    if kind == "float":  # a random walk, then gaussians
+        return [np.cumsum(rng.normal(size=10_000)), rng.normal(size=50_000)], 10_000
+    if kind == "int":  # an int walk, then uniform ints over its range
+        walk = np.cumsum(rng.integers(-3, 4, 10_000))
+        return [walk, rng.integers(walk.min(), walk.max() + 1, 50_000)], 10_000
+    # ids of one shape, then random bytes
+    ids = [f"user-{i:06d}-account".encode() for i in rng.integers(0, 10**6, 2048)]
+    noise = [rng.integers(0, 256, 18).astype(np.uint8).tobytes() for _ in range(5 * 2048)]
+    return [ids, noise], 2048
+
+
+# the kernel each candidate's trial encode calls
+_KERNELS = {
+    "float": {raw.encode_float_raw: "raw", raw.encode_float_split: "float_split",
+              dictionary.encode_dict_int: "dict_float", alp.encode_alp: "alp"},
+    "int": {rle_v1.encode_int_rle_v1: "rle_v1", rle_v2.encode_int_rle_v2: "rle_v2",
+            bitpack.encode_for_bitpack: "for_bitpack", dictionary.encode_dict_int: "dict_int"},
+    "str": {raw.encode_bytes_raw: "raw_str", dictionary.encode_dict_bytes: "dict_str",
+            fsst.fsst_encode: "fsst"},
+}
+
+
+def _encodes_per_chunk(tbl: pa.Table, kind: str, stride: int) -> tuple[list[list[str]], dict, bytes]:
+    """The candidates the selector encodes for each chunk, in order, read
+    with a profile hook (nothing is patched): a chunk starts at a call of
+    ``select_and_encode_<kind>``, and a candidate is a call of its kernel
+    made from the selector module."""
+    entry = getattr(selector, f"select_and_encode_{kind}").__code__
+    kernels = {f.__code__: c for f, c in _KERNELS[kind].items()}
+    chunks: list[list[str]] = []
+
+    def hook(frame, event, arg):
+        if event != "call":
+            return
+        if frame.f_code is entry:
+            chunks.append([])
+        elif frame.f_code in kernels and frame.f_back.f_code.co_filename == selector.__file__:
+            chunks[-1].append(kernels[frame.f_code])
+
+    outer = sys.getprofile()
+    sys.setprofile(hook)
+    try:
+        blob, lineage = encode_table(tbl, stride=stride)
+    finally:
+        sys.setprofile(outer)
+    return chunks, lineage[0], blob
+
+
+# int seed 4 falls back from rle_v2 to for_bitpack; seed 1 too, but
+# there rle_v2's bound prunes it in the fallback
+@pytest.mark.parametrize("kind,seed,digest", [
+    ("float", 5, "8922be6a1c9d754069a6e7dc3e696b9cb85ed939a9120eda90e41b282d48e3cb"),
+    ("int", 4, "e60d868fbd570f0fe239b47766b0cdf8937da3426c43401a20a95783d242ecf1"),
+    ("int", 1, "dba7debb05d2c2c84c379f5e21301c7c11dab79c3bdc145200eec2e3766d58ac"),
+    ("str", 0, "81422346016ada4d4cfc99768c70a230a99855f4fa6a4062d744c8258249a899"),
+])
+def test_size_fallback_encodes_each_candidate_once(kind, seed, digest):
+    """A chunk that fails the size check is selected afresh with the
+    check's encode of the prior winner reused: no candidate is encoded
+    twice on a chunk's sample. The blob keeps the bytes pinned before the
+    reuse, and the column's prior after the fallback (winner, profile,
+    size limit) is the one a fresh selection of that chunk leaves."""
+    parts, stride = _size_fallback(kind, np.random.default_rng(seed))
+    col = pa.concat_arrays([pa.array(p) for p in parts])
+    tbl = pa.table({"c": col})
+    chunks, row, blob = _encodes_per_chunk(tbl, kind, stride)
+    assert row["chunks_reselected"] == {"size": 1}
+    assert len(chunks) == tbl.num_rows // stride
+    for i, tried in enumerate(chunks):
+        assert len(tried) == len(set(tried)), (i, tried)
+    assert hashlib.sha256(blob).hexdigest() == digest
+
+    def priors(arrays):
+        prior = {}
+        for a in arrays:
+            if kind == "str":
+                select_and_encode_str(*_flat_binary(a), _prior=prior)
+            elif kind == "int":
+                select_and_encode_int(a.to_numpy(), _prior=prior)
+            else:
+                select_and_encode_float(a.to_numpy(), _prior=prior)
+        return {k: prior[k] for k in ("codec", "profile", "limit")}
+
+    fell_back = next(i for i, tried in enumerate(chunks) if i and len(tried) > 1)
+    sliced = [col.slice(a, stride) for a in range(0, len(col), stride)]
+    assert priors(sliced[: fell_back + 1]) == priors(sliced[fell_back : fell_back + 1])
 
 
 # ------------------------------------------------- kernels made cheaper

@@ -703,3 +703,69 @@ def test_worker_keeps_zip_directories_across_tasks(tmp_path):
     assert out["pid"], "the two tasks ran in different Python workers"
     assert set(out["same"]) == set(out["archives"])
     assert all(out["same"].values()), out["same"]
+
+
+_FROZEN_HEAP_JOB = r"""
+import json, os
+from pyspark.sql import SparkSession
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.ui.showConsoleProgress", "false").getOrCreate())
+
+
+def task(batches):
+    import gc
+    import pyarrow as pa
+    from orc_format_spark.worker_env import limit_worker_threads
+
+    limit_worker_threads()
+    frozen = gc.get_freeze_count()
+    limit_worker_threads()
+    r = {
+        "pid": os.getpid(),
+        "frozen": frozen,
+        "refrozen": gc.get_freeze_count(),
+        "walked": len(gc.get_objects()),
+        "fds": len(os.listdir("/proc/self/fd")),
+    }
+    for _ in batches:
+        pass
+    yield pa.record_batch([pa.array([json.dumps(r)])], names=["r"])
+
+
+runs = [json.loads(spark.range(0, 1, 1, 1).mapInArrow(task, "r string").collect()[0].r)
+        for _ in range(3)]
+print(json.dumps(runs))
+spark.stop()
+"""
+
+
+def test_worker_heap_frozen_once_across_tasks():
+    """PySpark's daemon runs a full gc.collect() in a reused worker after
+    every task. The hook's first call freezes the preloaded heap, so what
+    a collection walks (gc.get_objects(), which leaves out the frozen
+    generation) is a small share of it and does not grow from task to
+    task; a second call freezes nothing more, and no file descriptor is
+    left open. Fresh local[1] process: the three single-task jobs run in
+    one Python worker."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, PYSPARK_PYTHON=sys.executable)
+    proc = subprocess.run(
+        [sys.executable, "-c", _FROZEN_HEAP_JOB],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    runs = json.loads([l for l in proc.stdout.splitlines() if l.startswith("[")][-1])
+    assert len({r["pid"] for r in runs}) == 1, "the tasks ran in different Python workers"
+    for r in runs:
+        assert r["frozen"] > 0, r
+        assert r["refrozen"] == r["frozen"], "a second hook call froze again"
+        assert r["walked"] < 0.05 * r["frozen"], r
+    assert runs[2]["walked"] <= runs[1]["walked"] + 100, runs
+    assert runs[2]["fds"] <= runs[0]["fds"], runs
