@@ -36,6 +36,8 @@ digit value so they never widen the FoR range.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 from .bitpack import decode_for_bitpack, encode_for_bitpack
@@ -99,9 +101,20 @@ def _block_stats(s: np.ndarray, idx: np.ndarray):
     )
 
 
+@functools.lru_cache(maxsize=1)
+def _head_stats(head: bytes):
+    """``_block_stats`` of all candidates on the float64 values ``head``:
+    the chooser's first stage. The selector's float profile scores the
+    same block on the same values just before, so the last one is kept."""
+    out = _block_stats(np.frombuffer(head, np.float64), np.arange(len(_CAND)))
+    for a in out:
+        a.flags.writeable = False
+    return out
+
+
 def has_exact_pair(v64: np.ndarray) -> bool:
     """Whether some (e, f) candidate reproduces every value of ``v64``."""
-    return bool((_block_stats(v64, np.arange(len(_CAND)))[0] == 0).any())
+    return bool((_head_stats(np.ascontiguousarray(v64, np.float64).tobytes())[0] == 0).any())
 
 
 def _bits(n: int, n_exc, hi, lo):
@@ -144,7 +157,7 @@ def _choose_exponents(v64: np.ndarray, sample: int = 1024) -> tuple[int, int]:
     best = None  # (cost, index) of the incumbent, scored on all of s
     done = 0
     for m in (*(m for m in _STAGES if m < n), n):
-        x, h, l = _block_stats(s[done:m], idx)
+        x, h, l = _block_stats(s[done:m], idx) if done else _head_stats(s[:m].tobytes())
         n_exc += x
         np.maximum(hi, h, out=hi)
         np.minimum(lo, l, out=lo)

@@ -10,9 +10,16 @@ BASELINE.json for string columns.
   counting gain = frequency x length for current symbols and for
   concatenations of adjacent matches (the paper's iterative scheme,
   simplified). Sample is capped, so training cost is O(1) per partition.
+  Generation 0's table is empty, so its parse is every byte.
 - Encoding: per-position longest-match tables are precomputed with
-  vectorized numpy window hashing + searchsorted; the only sequential part
-  is an O(#output symbols) jump loop over plain Python ints.
+  vectorized numpy window keys (1- and 2-byte symbols through direct
+  lookup tables, longer ones through searchsorted); the only sequential
+  part is one O(#output symbols) step loop over plain Python ints, which
+  training shares, and the escape/code bytes are then scattered from
+  the symbol starts with numpy.
+- One encode per column: the codec selector encodes a long column once
+  with the table trained on its sample and reads the sample's encoded
+  size off that parse (``prefix_size``) instead of encoding the sample.
 - Decoding: fully vectorized — escape/literal classification by 0xFF-run
   parity, then a repeat/ramp gather to expand symbols.
 
@@ -21,6 +28,8 @@ payload.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 
@@ -48,26 +57,82 @@ def _sym_key(s: bytes) -> int:
     return int.from_bytes(s, "big")
 
 
+def _matcher(lens: np.ndarray, keys: np.ndarray) -> tuple:
+    """Lookup structures for the symbols (lens[c], keys[c]), c = code:
+    1- and 2-byte symbols in direct 256- and 65,536-entry tables
+    (code + 1, 0 = none), longer ones as sorted keys per length."""
+    lut1 = np.zeros(256, np.uint16)
+    lut2 = np.zeros(1 << 16, np.uint16)
+    codes = np.arange(1, lens.size + 1, dtype=np.uint16)
+    lut1[keys[lens == 1]] = codes[lens == 1]
+    lut2[keys[lens == 2]] = codes[lens == 2]
+    by_len = {}
+    for L in range(3, _MAX_LEN + 1):
+        m = lens == L
+        if m.any():
+            order = np.argsort(keys[m])
+            by_len[L] = (keys[m][order], codes[m][order] - 1)
+    return lut1, lut2, by_len
+
+
 def _longest_match(
-    d: np.ndarray, keys: list[np.ndarray], table: "SymbolTable"
+    d: np.ndarray, keys: list[np.ndarray], matcher: tuple
 ) -> tuple[np.ndarray, np.ndarray]:
     """Per-position longest symbol match: (match_len, code) arrays."""
+    lut1, lut2, by_len = matcher
     n = d.size
-    mlen = np.zeros(n, np.int8)
-    mcode = np.zeros(n, np.uint16)
-    for L in range(1, min(_MAX_LEN, n) + 1):
-        ent = table.by_len.get(L)
+    c1 = lut1[d]
+    mlen = (c1 > 0).astype(np.int8)
+    mcode = c1 - 1
+    if n >= 2:
+        c2 = lut2[keys[1]]
+        hp = np.flatnonzero(c2)
+        mlen[hp] = 2  # longer L overwrites (lengths ascend)
+        mcode[hp] = c2[hp] - 1
+    for L in range(3, min(_MAX_LEN, n) + 1):
+        ent = by_len.get(L)
         if ent is None:
             continue
         skeys, scodes = ent
         kL = keys[L - 1]
         pos_idx = np.searchsorted(skeys, kL)
         pos_idx[pos_idx == len(skeys)] = 0
-        hit = skeys[pos_idx] == kL
-        hp = np.flatnonzero(hit)
-        mlen[hp] = L  # longer L overwrites (loop ascends)
+        hp = np.flatnonzero(skeys[pos_idx] == kL)
+        mlen[hp] = L
         mcode[hp] = scodes[pos_idx[hp]]
     return mlen, mcode
+
+
+def _parse(d: np.ndarray, keys: list[np.ndarray], matcher: tuple) -> tuple:
+    """The greedy longest-match parse of ``d``: (start positions, match
+    length at each start, 0 = escaped literal, code at each start)."""
+    mlen, mcode = _longest_match(d, keys, matcher)
+    n = d.size
+    if n == 0 or mlen.max() <= 1:
+        starts = np.arange(n)  # every byte starts a symbol
+    else:
+        step = np.maximum(mlen, 1).tolist()
+        out: list[int] = []
+        append = out.append
+        i = 0
+        while i < n:
+            append(i)
+            i += step[i]
+        starts = np.array(out, np.int64)
+    return starts, mlen[starts], mcode[starts]
+
+
+def _payload(d: np.ndarray, matcher: tuple) -> np.ndarray:
+    """The encoded payload of ``d``: one code byte per matched symbol,
+    an escape byte and the literal per unmatched byte."""
+    n = d.size
+    starts, ml, mc = _parse(d, _window_keys(d, min(_MAX_LEN, n)), matcher)
+    esc = ml == 0
+    pos = np.arange(starts.size) + np.cumsum(esc) - esc
+    out = np.empty(starts.size + int(np.count_nonzero(esc)), np.uint8)
+    out[pos] = np.where(esc, _ESCAPE, mc)
+    out[pos[esc] + 1] = d[starts[esc]]
+    return out
 
 
 def train_symbol_table(sample: bytes) -> list[bytes]:
@@ -77,8 +142,8 @@ def train_symbol_table(sample: bytes) -> list[bytes]:
     (vectorized longest-match + an O(#matches) jump loop), then
     accumulates gain = frequency x length for every matched symbol and
     every adjacent-pair concatenation <= 8 bytes, keeping the top 255.
-    Symbols are handled as (length, big-endian-key) integer pairs so the
-    gain accumulation is a lexsort + reduceat, not a dict loop.
+    Symbols are handled as (length, big-endian-key) integer pairs; the
+    table of generation 0 is empty, so its parse is every single byte.
     """
     sample = sample[:_SAMPLE_BYTES]
     if not sample:
@@ -86,23 +151,16 @@ def train_symbol_table(sample: bytes) -> list[bytes]:
     d = np.frombuffer(sample, np.uint8)
     n = d.size
     keys = _window_keys(d, min(_MAX_LEN, n))
-    table: list[bytes] = []
-    for _ in range(_GENERATIONS):
-        mlen, _ = _longest_match(d, keys, SymbolTable(table))
-        ml = mlen.tolist()
-        starts: list[int] = []
-        i = 0
-        while i < n:
-            starts.append(i)
-            l = ml[i]
-            i += l if l else 1
-        s_arr = np.array(starts, np.int64)
-        l_arr = np.maximum(mlen[s_arr].astype(np.int64), 1)
-        k_arr = np.empty(s_arr.size, np.uint64)
-        for L in range(1, min(_MAX_LEN, n) + 1):
-            m = l_arr == L
-            if m.any():
-                k_arr[m] = keys[L - 1][s_arr[m]]
+    l_arr, k_arr = np.ones(n, np.int64), keys[0]
+    for gen in range(_GENERATIONS):
+        if gen:
+            s_arr, ml, _ = _parse(d, keys, _matcher(g_l, g_k))
+            l_arr = np.maximum(ml.astype(np.int64), 1)
+            k_arr = np.empty(s_arr.size, np.uint64)
+            for L in range(1, min(_MAX_LEN, n) + 1):
+                m = l_arr == L
+                if m.any():
+                    k_arr[m] = keys[L - 1][s_arr[m]]
         # adjacent-pair concatenations (<= 8 bytes)
         la, lb = l_arr[:-1], l_arr[1:]
         lc = la + lb
@@ -112,33 +170,39 @@ def train_symbol_table(sample: bytes) -> list[bytes]:
         ]
         all_k = np.concatenate((k_arr, kc))
         all_l = np.concatenate((l_arr, lc[pm]))
-        order = np.lexsort((all_k, all_l))
-        sk, sl = all_k[order], all_l[order]
-        new_grp = np.ones(sk.size, bool)
-        new_grp[1:] = (sk[1:] != sk[:-1]) | (sl[1:] != sl[:-1])
-        gstart = np.flatnonzero(new_grp)
-        counts = np.diff(np.append(gstart, sk.size))
-        g_l = sl[gstart]
-        g_k = sk[gstart]
-        gain = g_l * counts
+        # group by (length, key) in that order: a symbol under 8 bytes
+        # is keyed with a marker bit above its bytes, so one sort orders
+        # it by length, then key; 8-byte symbols follow, by key
+        short = all_l < _MAX_LEN
+        tags, c_short = np.unique(
+            all_k[short] | (np.uint64(1) << (np.uint64(8) * all_l[short].astype(np.uint64))),
+            return_counts=True,
+        )
+        k8, c8 = np.unique(all_k[~short], return_counts=True)
+        t_len = np.searchsorted(_TAG_FLOORS, tags, side="right")
+        g_l = np.concatenate((t_len, np.full(k8.size, _MAX_LEN)))
+        g_k = np.concatenate((tags ^ _TAG_FLOORS[t_len - 1], k8))
+        gain = g_l * np.concatenate((c_short, c8))
         # deterministic top-255: by (-gain, len, key)
-        top = np.lexsort((g_k, g_l, -gain))[:_MAX_SYMBOLS]
-        table = [
-            int(g_k[t]).to_bytes(int(g_l[t]), "big") for t in top
-        ]
-    return sorted(table)
+        top = np.argsort(-gain, kind="stable")[:_MAX_SYMBOLS]
+        g_l, g_k = g_l[top], g_k[top]
+    return sorted(int(k).to_bytes(int(L), "big") for L, k in zip(g_l, g_k))
+
+
+# the marker bit of each length under 8 (see train_symbol_table)
+_TAG_FLOORS = np.array([1 << (8 * L) for L in range(1, _MAX_LEN)], np.uint64)
 
 
 class SymbolTable:
     def __init__(self, symbols: list[bytes]):
         self.symbols = symbols
-        self.by_len: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for L in range(1, _MAX_LEN + 1):
-            idx = [i for i, s in enumerate(symbols) if len(s) == L]
-            if idx:
-                keys = np.array([_sym_key(symbols[i]) for i in idx], np.uint64)
-                order = np.argsort(keys)
-                self.by_len[L] = (keys[order], np.array(idx, np.uint16)[order])
+
+    @functools.cached_property
+    def matcher(self) -> tuple:
+        return _matcher(
+            np.array([len(s) for s in self.symbols], np.int64),
+            np.array([_sym_key(s) for s in self.symbols], np.uint64),
+        )
 
     def serialize(self) -> bytes:
         parts = [bytes((len(self.symbols),))]
@@ -163,35 +227,50 @@ class SymbolTable:
 def fsst_encode(data: np.ndarray, table: SymbolTable | None = None) -> bytes:
     """Encode a uint8 array. Trains a table on a sample if none given."""
     d = np.ascontiguousarray(data, np.uint8)
-    n = d.size
     if table is None:
         table = SymbolTable(train_symbol_table(d[: _SAMPLE_BYTES].tobytes()))
-    header = table.serialize()
-    if n == 0:
-        return header + encode_varint_one(0)
-    # longest-match precompute
-    if table.symbols:
-        keys = _window_keys(d, min(_MAX_LEN, n))
-        mlen, mcode = _longest_match(d, keys, table)
-    else:
-        mlen = np.zeros(n, np.int8)
-        mcode = np.zeros(n, np.uint16)
-    # jump loop over output symbols (plain ints for speed)
-    ml = mlen.tolist()
-    mc = mcode.tolist()
-    dv = d.tolist()
-    out = bytearray()
-    i = 0
-    while i < n:
-        l = ml[i]
-        if l:
-            out.append(mc[i])
-            i += l
-        else:
-            out.append(_ESCAPE)
-            out.append(dv[i])
-            i += 1
-    return header + encode_varint_one(len(out)) + bytes(out)
+    payload = _payload(d, table.matcher)
+    return table.serialize() + encode_varint_one(payload.size) + payload.tobytes()
+
+
+def _unit_kinds(enc: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(escape, literal) masks of a payload: a run of 0xFF bytes starts
+    a unit, so within it escapes and literal 0xFFs alternate, and a
+    byte after an escape is its literal."""
+    is_ff = enc == _ESCAPE
+    n = enc.size
+    run_start = np.zeros(n, np.int64)
+    first = is_ff.copy()
+    first[1:] &= ~is_ff[:-1]
+    idx = np.flatnonzero(first)
+    run_start[idx] = idx
+    np.maximum.accumulate(run_start, out=run_start)
+    odd = (np.arange(n) - run_start) & 1 == 1
+    escape = is_ff & ~odd
+    literal = is_ff & odd
+    literal[1:] |= escape[:-1]
+    return escape, literal
+
+
+def prefix_size(blob, table: SymbolTable, data: np.ndarray, size: int) -> int:
+    """``len(fsst_encode(data[:size], table))``, read off ``blob`` =
+    ``fsst_encode(data, table)``. A greedy match looks at most
+    _MAX_LEN bytes ahead, so both parses agree on every symbol that
+    starts at or before ``size - _MAX_LEN``; only the sample's bytes
+    after those (at most 8) are parsed again."""
+    head = table.serialize()
+    plen, pos = decode_varint_one(blob, len(head))
+    enc = np.frombuffer(blob, np.uint8, plen, pos)
+    escape, literal = _unit_kinds(enc)
+    units = np.flatnonzero(~literal)  # payload offset of each symbol
+    sym_lens = np.ones(256, np.int64)
+    sym_lens[: len(table.symbols)] = [len(s) for s in table.symbols]
+    ulen = np.where(escape[units], 1, sym_lens[enc[units]])
+    start = np.cumsum(ulen) - ulen  # input offset of each symbol
+    u = int(np.searchsorted(start, size - _MAX_LEN, side="right"))
+    j, out = (int(start[u]), int(units[u])) if u < units.size else (data.size, plen)
+    out += _payload(np.ascontiguousarray(data[j:size], np.uint8), table.matcher).size
+    return len(head) + len(encode_varint_one(out)) + out
 
 
 def fsst_decode(buf) -> np.ndarray:
@@ -201,21 +280,7 @@ def fsst_decode(buf) -> np.ndarray:
     n = enc.size
     if n == 0:
         return np.empty(0, np.uint8)
-    # classify escape / literal / code positions by 0xFF-run parity
-    is_ff = enc == _ESCAPE
-    literal = np.zeros(n, bool)
-    escape = np.zeros(n, bool)
-    if is_ff.any():
-        prev_ff = np.concatenate(([False], is_ff[:-1]))
-        starts = np.flatnonzero(is_ff & ~prev_ff)
-        nxt = np.concatenate((is_ff[1:], [False]))
-        ends = np.flatnonzero(is_ff & ~nxt)  # inclusive block ends
-        for s, e in zip(starts.tolist(), ends.tolist()):
-            k = e - s + 1
-            escape[s : e + 1 : 2] = True
-            literal[s + 1 : e + 1 : 2] = True
-            if k % 2 == 1 and e + 1 < n:
-                literal[e + 1] = True
+    escape, literal = _unit_kinds(enc)
     code_pos = ~escape & ~literal
     # per-position output lengths
     sym_lens = np.array([len(s) for s in table.symbols] + [0], np.int64)

@@ -59,6 +59,7 @@ import pyarrow.compute as pc
 
 from . import dictionary, fsst, raw, rle_v1, rle_v2
 from .bitpack import encode_for_bitpack
+from .varint import decode_varint_one, encode_varint_one
 
 SAMPLE_VALUES = 1 << 14
 
@@ -78,26 +79,28 @@ def _encode_int(codec: str, v: np.ndarray, signed: bool) -> bytes:
     raise ValueError(codec)
 
 
+def _length_head(offsets: np.ndarray) -> bytes:
+    """What ``raw_str`` and ``fsst`` both start with: the value count,
+    the length stream's size and the lengths as unsigned RLEv1."""
+    lens = (offsets[1:] - offsets[:-1]).astype(np.uint64)
+    lstream = rle_v1.encode_int_rle_v1(lens, signed=False)
+    return encode_varint_one(len(lens)) + encode_varint_one(len(lstream)) + lstream
+
+
 def _encode_str(codec: str, data: np.ndarray, offsets: np.ndarray,
-                table=None) -> bytes:
+                table=None, head: bytes | None = None) -> bytes:
     if codec == "raw_str":
         return raw.encode_bytes_raw(data, offsets)
     if codec == "dict_str":
         return dictionary.encode_dict_bytes(data, offsets)
     if codec == "fsst":
-        # fsst payload plus a length stream so values can be re-split;
+        # fsst payload after a length stream so values can be re-split;
         # ``table`` reuses an already-trained symbol table (bit-identical
-        # when it was trained on the same first _SAMPLE_BYTES)
-        lens = (offsets[1:] - offsets[:-1]).astype(np.uint64)
-        lstream = rle_v1.encode_int_rle_v1(lens, signed=False)
-        from .varint import encode_varint_one
-
-        return (
-            encode_varint_one(len(lens))
-            + encode_varint_one(len(lstream))
-            + lstream
-            + fsst.fsst_encode(data, table)
-        )
+        # when it was trained on the same first _SAMPLE_BYTES), ``head``
+        # an already-encoded ``_length_head(offsets)``
+        if head is None:
+            head = _length_head(offsets)
+        return head + fsst.fsst_encode(data, table)
     raise ValueError(codec)
 
 
@@ -259,6 +262,10 @@ def _fsst_table(sdata: np.ndarray) -> fsst.SymbolTable:
     return fsst.SymbolTable(fsst.train_symbol_table(sdata[: fsst._SAMPLE_BYTES].tobytes()))
 
 
+def _all_distinct(data: np.ndarray, offsets: np.ndarray) -> bool:
+    return pc.count_distinct(dictionary._binary_array(data, offsets)).as_py() == offsets.size - 1
+
+
 def _str_profile(data: np.ndarray, offsets: np.ndarray) -> tuple[bool, bool]:
     """Whether the first 512 strings are clearly low-cardinality (< 5%
     distinct), and whether they are under half distinct."""
@@ -273,8 +280,8 @@ def select_and_encode_str(
     _bounds: dict | None = None, _prior: dict | None = None,
 ) -> tuple[str, dict[str, float], bytes]:
     """Selection + final encode fused: returns (codec, estimates, wire
-    bytes). Three measured savings over select-then-encode, all
-    bit-identical to the unfused output:
+    bytes), bit-identical to trial-encoding every candidate on the
+    sample and encoding the winner afresh:
 
     - a clearly low-cardinality sample (distinct ratio < 5% over the
       first 512 strings) never picks fsst over dict, so fsst's symbol
@@ -282,13 +289,20 @@ def select_and_encode_str(
       encoded first, and ``raw_str`` only when its lower bound (the
       payload, two bytes per 130-value length group, two count bytes)
       does not exceed the dictionary's size;
-    - when fsst IS tried and the sample holds >= the fsst training
-      window (_SAMPLE_BYTES), the final encode trains on exactly the
-      same leading bytes — the selection-trained table is reused
-      instead of retrained; and when the sample covered the whole
-      column, the winning candidate's bytes ARE the final bytes.
+    - otherwise, when every sampled string is distinct, the dictionary
+      is the sample in order, so ``dict_str`` is ``raw_str`` plus two
+      varints and the packed indices: that bound is recorded and
+      ``dict_str`` is never encoded;
+    - fsst is trained once per column. When the sample is shorter than
+      the column and holds >= the training window (_SAMPLE_BYTES), the
+      final encode would train on exactly the same leading bytes, so
+      the column is fsst-encoded once with the sample's table and the
+      sample's size is read off that parse (``fsst.prefix_size``);
+    - ``raw_str`` and fsst share the sample's length stream; when the
+      sample covered the whole column, the winning candidate's bytes
+      ARE the final bytes.
 
-    ``_bounds`` receives a pruned ``raw_str``'s bound in bytes per
+    ``_bounds`` receives the pruned candidates' bounds in bytes per
     sampled payload byte, the unit of the estimates. ``_prior``: see
     the module docstring.
     """
@@ -301,28 +315,36 @@ def select_and_encode_str(
     profile = _str_profile(data, offsets)
     low_card = profile[0]
     size: dict[str, int] = {}
+    measured: dict[str, int] = {}  # exact sample sizes, as encoded or read off a parse
     enc: dict[str, bytes] = {}
     pruned: dict[str, float] = {}
-    fsst_table = None
+    column: dict[str, bytes] = {}  # candidates already encoded on the whole column
     nbytes = max(1, sdata.size)
+
+    def head() -> bytes:
+        b = enc.get("raw_str")
+        return b[: len(b) - sdata.size] if b is not None else _length_head(soff)
 
     @_once
     def measure(c: str) -> tuple[bytes, float]:
-        nonlocal fsst_table
-        table = None
-        if c == "fsst":
-            table = _fsst_table(sdata)
-            if sdata.size >= fsst._SAMPLE_BYTES:
-                fsst_table = table
-        b = _encode_str(c, sdata, soff, table=table)
-        return b, len(b) / nbytes
+        table = _fsst_table(sdata) if c == "fsst" else None
+        if c == "fsst" and k < n and sdata.size >= fsst._SAMPLE_BYTES:
+            column[c] = b = _encode_str(c, data, offsets, table=table)
+            _, pos = decode_varint_one(b, 0)
+            lsize, pos = decode_varint_one(b, pos)
+            blob = memoryview(b)[pos + lsize :]
+            measured[c] = len(head()) + fsst.prefix_size(blob, table, data, sdata.size)
+        else:
+            b = _encode_str(c, sdata, soff, table=table, head=head() if c == "fsst" else None)
+            measured[c] = len(b)
+        return b, measured[c] / nbytes
 
     def attempt(c: str) -> None:
         try:
             enc[c] = measure(c)[0]
         except Exception:
             return
-        size[c] = len(enc[c])
+        size[c] = measured[c]
 
     kept = _reuse(_prior, profile, measure)
     if kept is not None:
@@ -338,7 +360,12 @@ def select_and_encode_str(
                 pruned["raw_str"] = bound / nbytes
         else:
             attempt("raw_str")
-            attempt("dict_str")
+            if "raw_str" in size and _all_distinct(sdata, soff):
+                # above raw_str's exact size, so never the first minimum
+                w = dictionary._index_width(k)
+                pruned["dict_str"] = (size["raw_str"] + 2 + -(-k * w // 8)) / nbytes
+            else:
+                attempt("dict_str")
             attempt("fsst")
         if _bounds is not None:
             _bounds.update(pruned)
@@ -347,9 +374,9 @@ def select_and_encode_str(
         _decide(_prior, best, est, pruned, profile)
     if k == n:
         return best, est, enc[best]
-    return best, est, _encode_str(
-        best, data, offsets, table=fsst_table if best == "fsst" else None
-    )
+    if best in column:
+        return best, est, column[best]
+    return best, est, _encode_str(best, data, offsets)
 
 
 FLOAT_CANDIDATES = ("raw", "float_split", "dict_float", "alp")

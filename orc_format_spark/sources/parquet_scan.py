@@ -113,15 +113,15 @@ def encode_splits(
         row_index_stride = DEFAULT_ROW_INDEX_STRIDE
 
     if parallelism is None:
-        # several splits per task: each wave of core-count tasks pays a
-        # fixed cost in the Python workers, ~0.07 s for an empty job on
-        # a 4-core VM once worker_env's zip guard stops PySpark's
-        # per-task importlib.invalidate_caches() from re-reading
-        # pyspark.zip and the Spark jar (0.2-0.35 s per wave without
-        # it, BENCH.md §15). 2 waves of core-count-sized tasks still
-        # load-balance uneven splits; Spark's own parquet scan packs
-        # row-groups into maxPartitionBytes-sized tasks likewise.
-        parallelism = 2 * spark.sparkContext.defaultParallelism
+        # one wave: one task per core, each a contiguous range of split
+        # ids (so rows still come back in split-id order). Every task
+        # costs ~14 ms of JVM CPU (scheduling, the Arrow ferry's set-up)
+        # while the Python workers' CPU is the same at any task count:
+        # on 16 splits at local[4], 4 tasks took 1.09 s of CPU per job
+        # against 1.18 s at 8 and 1.42 s at 16 (BENCH.md §21). Splits
+        # of uneven size lose less to a straggler than the extra wave
+        # costs (the skew check there).
+        parallelism = spark.sparkContext.defaultParallelism
     # ONE stage, no shuffle: a native range source partitioned over split
     # ids + a broadcast split table looked up in the worker. (The earlier
     # createDataFrame(...).repartition(n) cost a 2-stage shuffle whose

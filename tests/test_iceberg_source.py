@@ -37,6 +37,25 @@ def test_encode_splits_explicit_list(spark, tmp_path):
     assert out.count() == docs.count()
 
 
+@pytest.mark.parametrize("n_groups", [2, 9])
+def test_encode_splits_runs_one_wave_in_split_order(spark, tmp_path, n_groups):
+    """By default one task per core, never more tasks than splits, each
+    task a contiguous range of split ids: rows come back in split-id
+    order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.table({"k": pa.array(range(n_groups * 50), pa.int64()),
+                    "s": pa.array([f"v{i % 7}" for i in range(n_groups * 50)])})
+    pq.write_table(tbl, str(tmp_path / "t.parquet"), row_group_size=50)
+    splits = list_parquet_splits(str(tmp_path))
+    assert len(splits) == n_groups
+    df = encode_splits(spark, splits)
+    cores = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() == min(cores, n_groups)
+    assert [r.group_id for r in df.collect()] == [sid for sid, _, _ in splits]
+
+
 def test_blob_sink_roundtrip(spark, tmp_path):
     """encode_splits(blob_sink=...): workers persist blobs themselves
     (atomic deterministic names), only lineage reaches the JVM, and

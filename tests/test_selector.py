@@ -519,6 +519,44 @@ def test_size_fallback_encodes_each_candidate_once(kind, seed, digest):
     assert priors(sliced[: fell_back + 1]) == priors(sliced[fell_back : fell_back + 1])
 
 
+def _calls(fn, codes) -> dict:
+    """How often each of ``codes`` (function code objects) is entered
+    while ``fn()`` runs, read with a profile hook; and ``fn()``."""
+    counts = dict.fromkeys(codes, 0)
+
+    def hook(frame, event, arg):
+        if event == "call" and frame.f_code in counts:
+            counts[frame.f_code] += 1
+
+    outer = sys.getprofile()
+    sys.setprofile(hook)
+    try:
+        out = fn()
+    finally:
+        sys.setprofile(outer)
+    return counts, out
+
+
+def test_distinct_column_longer_than_the_sample_takes_one_fsst_pass():
+    """2,500 distinct doc ids, as the tokens splits hold them: FSST is
+    trained once and encodes once (the whole column), and ``dict_str``
+    is bounded, not encoded. The result is the trial-everything one."""
+    rng = np.random.default_rng(11)
+    ids = [f"{i}_{r}" for i in range(500) for r in range(5)]
+    data, off = _flat_binary(pa.array([ids[j] for j in rng.permutation(2500)], pa.binary()))
+    assert int(off[2048]) >= fsst._SAMPLE_BYTES
+    kernels = (fsst.train_symbol_table.__code__, fsst.fsst_encode.__code__,
+               dictionary.encode_dict_bytes.__code__)
+    pruned = {}
+    counts, got = _calls(lambda: select_and_encode_str(data, off, _bounds=pruned), kernels)
+    assert list(counts.values()) == [1, 1, 0]
+    best, est, wire = got
+    want_best, want_est, want_wire = _trial_all_str(data, off)
+    assert (best, wire) == ("fsst", want_wire) and want_best == "fsst"
+    assert est == {c: want_est[c] for c in ("raw_str", "fsst")}
+    assert set(pruned) == {"dict_str"} and pruned["dict_str"] <= want_est["dict_str"]
+
+
 # ------------------------------------------------- kernels made cheaper
 
 
