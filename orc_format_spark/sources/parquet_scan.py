@@ -115,12 +115,12 @@ def encode_splits(
     if parallelism is None:
         # one wave: one task per core, each a contiguous range of split
         # ids (so rows still come back in split-id order). Every task
-        # costs ~14 ms of JVM CPU (scheduling, the Arrow ferry's set-up)
-        # while the Python workers' CPU is the same at any task count:
-        # on 16 splits at local[4], 4 tasks took 1.09 s of CPU per job
-        # against 1.18 s at 8 and 1.42 s at 16 (BENCH.md §21). Splits
-        # of uneven size lose less to a straggler than the extra wave
-        # costs (the skew check there).
+        # costs ~20 ms of JVM CPU while the Python workers' CPU is the
+        # same at any task count: on 16 splits at local[4], 4 tasks
+        # took 0.91 s of CPU per job against 0.99 s at 8 and 1.21 s at
+        # 16 (BENCH.md §21). With one split 4x the others, one wave's
+        # straggler costs less than the spread of the job's wall time
+        # (the skew check there).
         parallelism = spark.sparkContext.defaultParallelism
     # ONE stage, no shuffle: a native range source partitioned over split
     # ids + a broadcast split table looked up in the worker. (The earlier
