@@ -268,8 +268,10 @@ def encode_for_bitpack(values: np.ndarray, signed: bool = True) -> bytes:
         residual = (u - np.uint64(mn & 0xFFFFFFFFFFFFFFFF))  # wraps correctly
     else:
         u = np.ascontiguousarray(v, dtype=np.uint64)
-        mn = int(u.min())
-        residual = u - np.uint64(mn)
+        # the header holds the min's 64-bit pattern, so a min >= 2^63
+        # goes in as its int64 view (the decoder masks it back)
+        mn = int(u.min().view(np.int64))
+        residual = u - np.uint64(mn & 0xFFFFFFFFFFFFFFFF)
     width = bits_required(residual)
     header = (
         encode_varint_one(int(zigzag_encode(np.array([mn], np.int64))[0]))

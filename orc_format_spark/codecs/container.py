@@ -62,15 +62,16 @@ MAGIC = b"OFS1"
 # 3 = varint field-string lengths + engine tag (current writer)
 VERSION = 3
 _READ_VERSIONS = (1, 3)
-# Encoder behavior version, stamped into every v3 blob header and every
-# job _state row. Bump the minor whenever emitted BYTES may legally
-# change while decode stays lossless (codec-selection thresholds, FSST
-# training); bump the MAJOR when the wire format itself changes (old
-# blobs stop being decodable by this version) — wave-resumed jobs must
-# finish on the version they started with (operators/job.py), and
-# deserialize_blob refuses cross-major rle_v2 decodes (narrowed to
-# streams that actually contain a patched-base run — the only wire
-# that changed; see the 4.0 gate below).
+# Encoder behavior version, stamped into every v3 blob header and into
+# the metrics table of every wave-resumed job (``engine-version``). Bump
+# the minor whenever emitted BYTES may legally change while decode stays
+# lossless (codec-selection thresholds, FSST training); bump the MAJOR
+# when the wire format itself changes (old blobs stop being decodable by
+# this version) — wave-resumed jobs must finish on the version they
+# started with (operators/job.py), and deserialize_blob refuses
+# cross-major rle_v2 decodes (narrowed to streams that actually contain
+# a patched-base run — the only wire that changed; see the 4.0 gate
+# below).
 # 4.0: RLEv2 patched-base wire corrected to spec (patch entries at the
 #      closest fixed width, sign-bit-safe base bytes) — validated by
 #      Apache ORC C++ via write_orc(rle="v2").

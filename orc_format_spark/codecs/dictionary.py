@@ -49,6 +49,8 @@ def encode_dict_int(values: np.ndarray, signed: bool = True) -> bytes:
             # safe in-dtype subtract: 0 <= result < 2^16 fits any >=32-bit
             # int, so no wrap is possible
             off = v - v.dtype.type(mn)
+            if off.dtype == np.uint64:
+                off = off.view(np.int64)  # bincount refuses uint64
         else:
             off = v.astype(np.int32) - mn  # int8/16 diff could wrap
         counts = np.bincount(off, minlength=mx - mn + 1)
@@ -56,7 +58,9 @@ def encode_dict_int(values: np.ndarray, signed: bool = True) -> bytes:
         lut = np.zeros(mx - mn + 1, np.uint32)
         lut[uniq_off] = np.arange(uniq_off.size, dtype=np.uint32)
         inv = lut[off]
-        uniq = (uniq_off + mn).astype(v.dtype)
+        # in the column's dtype: through int64 a uint64 min >= 2^63
+        # would go to float; narrow dtypes wrap back to the exact value
+        uniq = uniq_off.astype(v.dtype) + v.dtype.type(mn)
     else:
         uniq, inv = np.unique(v, return_inverse=True)
     card = uniq.size

@@ -47,12 +47,20 @@ deciding chunk's and the winner's ``est`` does not exceed the limit.
 Otherwise it runs the full selection and becomes the deciding chunk;
 ``prior["reselected"]`` counts these fallbacks by reason (``profile``
 or ``size``) for the lineage row. The size check and that selection
-share one memo of sample encodes (``_once``), so a winner the check
-already encoded is not encoded again; it still enters ``est`` only
-where the selection itself tries it, never where its bound prunes it.
+share one memo of sample encodes (``functools.cache``), so a winner the
+check already encoded is not encoded again; it still enters ``est``
+only where the selection itself tries it, never where its bound prunes
+it.
+
+No candidate encode is wrapped in an error gate: every kernel encodes
+any column of its type (``tests/test_selector.py`` fuzzes them), so a
+kernel that raises is a bug that surfaces instead of silently moving
+the choice to another codec and changing the bytes.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pyarrow.compute as pc
@@ -114,27 +122,6 @@ def _can_win(c: str, bound: int, size: dict[str, int], order: tuple) -> bool:
     return bound < best or (bound == best and order.index(c) < order.index(first))
 
 
-def _once(measure):
-    """``measure`` run at most once per candidate: a later call returns
-    (or raises) what the first did. The size check and the full
-    selection that follows it share one, so the fallback never encodes
-    the prior winner a second time."""
-    memo: dict = {}
-
-    def call(c: str):
-        if c not in memo:
-            try:
-                memo[c] = (measure(c), None)
-            except Exception as e:
-                memo[c] = (None, e)
-        out, err = memo[c]
-        if err is not None:
-            raise err
-        return out
-
-    return call
-
-
 def _reuse(prior: dict | None, profile, measure) -> tuple | None:
     """(codec, est, sample bytes) of the column's prior winner when this
     chunk keeps it; None when the chunk must run the full selection,
@@ -146,10 +133,7 @@ def _reuse(prior: dict | None, profile, measure) -> tuple | None:
         why = "profile"
     else:
         c = prior["codec"]
-        try:
-            b, e = measure(c)
-        except Exception:
-            b, e = None, float("inf")
+        b, e = measure(c)
         if e <= prior["limit"]:
             return c, {c: e}, b
         why = "size"
@@ -209,7 +193,7 @@ def select_and_encode_int(
     s = v[: min(n, sample)]
     profile = _int_profile(s) if _prior is not None else None
 
-    @_once
+    @functools.cache
     def measure(c: str) -> tuple[bytes, float]:
         b = _encode_int(c, s, signed)
         return b, len(b) / len(s)
@@ -226,10 +210,7 @@ def select_and_encode_int(
     pruned: dict[str, float] = {}
 
     def trial(c: str) -> None:
-        try:
-            enc[c] = measure(c)[0]
-        except Exception:
-            return
+        enc[c] = measure(c)[0]
         size[c] = len(enc[c])
 
     trial("for_bitpack")
@@ -325,7 +306,7 @@ def select_and_encode_str(
         b = enc.get("raw_str")
         return b[: len(b) - sdata.size] if b is not None else _length_head(soff)
 
-    @_once
+    @functools.cache
     def measure(c: str) -> tuple[bytes, float]:
         table = _fsst_table(sdata) if c == "fsst" else None
         if c == "fsst" and k < n and sdata.size >= fsst._SAMPLE_BYTES:
@@ -340,10 +321,7 @@ def select_and_encode_str(
         return b, measured[c] / nbytes
 
     def attempt(c: str) -> None:
-        try:
-            enc[c] = measure(c)[0]
-        except Exception:
-            return
+        enc[c] = measure(c)[0]
         size[c] = measured[c]
 
     kept = _reuse(_prior, profile, measure)
@@ -360,7 +338,7 @@ def select_and_encode_str(
                 pruned["raw_str"] = bound / nbytes
         else:
             attempt("raw_str")
-            if "raw_str" in size and _all_distinct(sdata, soff):
+            if _all_distinct(sdata, soff):
                 # above raw_str's exact size, so never the first minimum
                 w = dictionary._index_width(k)
                 pruned["dict_str"] = (size["raw_str"] + 2 + -(-k * w // 8)) / nbytes
@@ -447,7 +425,7 @@ def select_and_encode_float(
     s = v[: min(n, sample)]
     profile = _float_profile(s, double) if _prior is not None else None
 
-    @_once
+    @functools.cache
     def measure(c: str) -> tuple[bytes, float]:
         b = _encode_float(c, s, double)
         return b, len(compress_stream(b, compression)) / len(s)
@@ -459,10 +437,7 @@ def select_and_encode_float(
     else:
         est, enc = {}, {}
         for c in FLOAT_CANDIDATES:
-            try:
-                enc[c], est[c] = measure(c)
-            except Exception:
-                continue
+            enc[c], est[c] = measure(c)
         best = min(est, key=est.get)
         _decide(_prior, best, est, {}, profile)
     wire = enc[best] if n <= sample else _encode_float(best, v, double)

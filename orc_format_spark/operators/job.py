@@ -2,21 +2,29 @@
 
 North-rule requirement: "resumable from checkpoint with per-partition
 lineage + metrics". Spark's output commit is per-job, so restartability is
-achieved by splitting the deterministic group space into ``waves``: each
-wave is one Spark job appending its blobs under ``out_dir/blobs`` and then
-recording a state row under ``out_dir/_state``. A re-run reads the state,
-skips completed waves, and (because group membership, in-group ordering,
-and codec choices are all deterministic functions of the data) produces
-byte-identical blobs for the remaining waves.
+achieved by splitting the deterministic group space into ``waves``. A wave
+commits in three steps: its group tasks write (the sink blobs, with
+``blob_sink``), its parquet under ``out_dir/blobs/wave=<w>`` is
+overwritten, and its lineage rows are appended to the Iceberg table at
+``out_dir/metrics`` as a snapshot keyed ``commit-key: wave=<w>``. That
+snapshot is the done marker and the only wave record: a re-run reads the
+snapshot log (driver-side, no Spark job), skips the waves it names, and
+(because group membership, in-group ordering, and codec choices are all
+deterministic functions of the data) produces byte-identical blobs for
+the remaining waves.
 
-Byte-identity holds *within one engine version*: codec internals may
-legally change their emitted bytes across upgrades (e.g. the RLEv2
-patched-width percentile moved from interpolated to exact-count in
-round 1) while decode stays lossless. This is ENFORCED: every _state row
-carries the ``ENCODER_VERSION`` that wrote its wave (the same tag every
-v3 blob header carries), and a resume under a different version raises
-RuntimeError up front — finish on the version the job started with, or
-delete ``out_dir`` and re-encode from wave 0.
+Byte-identity holds *within one engine version and one set of job
+parameters*: codec internals may legally change their emitted bytes
+across upgrades (e.g. the RLEv2 patched-width percentile moved from
+interpolated to exact-count in round 1) while decode stays lossless, and
+the parameters decide group membership. This is ENFORCED: the metrics
+table is created with two properties, ``engine-version`` (the
+``ENCODER_VERSION`` every v3 blob header carries) and ``job-params`` (the
+resume fingerprint), and a resume that differs in either raises
+RuntimeError before any grouping. A table with wave snapshots but without
+these properties predates them and is refused the same way. Either way:
+finish the job on the version and parameters that started it, or delete
+``out_dir`` and re-encode from wave 0.
 
 At cluster scale each wave is bounded work (total_groups/waves stripes),
 so a preempted 100 TB run loses at most one wave.
@@ -26,58 +34,56 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..codecs.container import ENCODER_VERSION, _LEGACY_ENGINE
-from ..sources.iceberg_meta import local_path
-from .encode import encode_groups
+from ..codecs.container import ENCODER_VERSION
+from ..sources.iceberg_meta import (
+    append_snapshot,
+    create_table,
+    is_iceberg_table,
+    list_data_files,
+    local_path,
+    read_table_metadata,
+)
+from .encode import _write_atomic, encode_groups
 from .partitioning import plan_num_groups, with_group_id
 
 
-def _read_state(
-    spark: SparkSession, state_path: str
-) -> tuple[set[int], set[str], set[str]]:
-    """(done waves, engine versions that wrote them, job-param
-    fingerprints that wrote them). Pre-stamp state files report the
-    legacy sentinel for engine and nothing for params (no check
-    possible — the row predates the column)."""
-    try:
-        # mergeSchema: a state dir may mix column eras (wave / +engine /
-        # +params) across resumes; the union schema nulls absent columns
-        sdf = spark.read.option("mergeSchema", "true").parquet(state_path)
-    except Exception:
-        return set(), set(), set()
-    rows = sdf.collect()
-    waves = {r.wave for r in rows}
-    if "engine" in sdf.columns:
-        engines = {r.engine for r in rows if r.engine is not None}
-        engines |= {_LEGACY_ENGINE} if any(r.engine is None for r in rows) else set()
-    else:
-        engines = {_LEGACY_ENGINE} if rows else set()
-    params = (
-        {r.params for r in rows if r.params is not None}
-        if "params" in sdf.columns
-        else set()
-    )
-    return waves, engines, params
+def _metadata(table_dir: str) -> dict:
+    """The Iceberg table's current metadata, read driver-side with no
+    Spark job; {} when the table does not exist yet."""
+    return read_table_metadata(table_dir) if is_iceberg_table(table_dir) else {}
+
+
+def _commit_keys(md: dict) -> list[str]:
+    return [s.get("summary", {}).get("commit-key", "") for s in md.get("snapshots", [])]
 
 
 def commit_lineage_metrics(
-    metrics_dir: str, part_dir: str, name: str, commit_key: str
+    metrics_dir: str,
+    part_dir: str,
+    name: str,
+    commit_key: str,
+    properties: dict[str, str] | None = None,
 ) -> None:
     """Commit one unit-of-work's lineage rows (blob column dropped) as a
-    snapshot of the metrics Iceberg table at ``metrics_dir`` (created on
-    first commit). Idempotent per ``commit_key`` — the shared
-    exactly-once commit used by batch waves (``run_encode_job``) and
-    streaming micro-batches (``streaming/encode_stream.py``)."""
+    snapshot of the metrics Iceberg table at ``metrics_dir``. Idempotent
+    per ``commit_key`` — the shared exactly-once commit used by batch
+    waves (``run_encode_job``) and streaming micro-batches
+    (``streaming/encode_stream.py``): a key already in the snapshot log
+    returns before anything is written, so a replay never rewrites a
+    file that a committed snapshot lists. Otherwise ``<name>.parquet``
+    is published by rename and appended. While the table has no
+    snapshot it is (re)created with ``properties``."""
     import os
 
+    import pyarrow as pa
     import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
-    from ..sources.iceberg_meta import append_snapshot, create_table, is_iceberg_table
-
-    local = local_path(part_dir)
     mlocal = local_path(metrics_dir)
-    tbl = ds.dataset(local, format="parquet").to_table()
+    md = _metadata(mlocal)
+    if commit_key in _commit_keys(md):
+        return
+    tbl = ds.dataset(local_path(part_dir), format="parquet").to_table()
     # drop the payload (absent in sink-mode waves, which carry only
     # blob_path) AND the Spark row-metadata KV pair the wave files
     # carry: Spark trusts org.apache.spark.sql.parquet.row.metadata over
@@ -87,16 +93,16 @@ def commit_lineage_metrics(
     tbl = tbl.replace_schema_metadata(None)
     os.makedirs(mlocal, exist_ok=True)
     path = os.path.join(mlocal, f"{name}.parquet")
-    pq.write_table(tbl, path)
-    if not is_iceberg_table(mlocal):
-        create_table(mlocal, tbl.schema, properties={"table-kind": "codec-metrics"})
+    buf = pa.BufferOutputStream()
+    pq.write_table(tbl, buf)
+    _write_atomic(path, buf.getvalue())
+    if not md.get("snapshots"):
+        create_table(
+            mlocal,
+            tbl.schema,
+            properties={"table-kind": "codec-metrics", **(properties or {})},
+        )
     append_snapshot(mlocal, [path], commit_key=commit_key)
-
-
-def _commit_wave_metrics(metrics_dir: str, blobs_path: str, wave: int) -> None:
-    commit_lineage_metrics(
-        metrics_dir, f"{blobs_path}/wave={wave}", f"wave-{wave}", f"wave={wave}"
-    )
 
 
 def run_encode_job(
@@ -166,25 +172,34 @@ def run_encode_job(
         },
         sort_keys=True,
     )
-    # read state + run both refusal guards BEFORE any grouping/persist:
+    # the wave record and the refusal guards, BEFORE any grouping/persist:
     # a refused resume must not leak a cached DataFrame or do work
     blobs_path = f"{out_dir}/blobs"
-    state_path = f"{out_dir}/_state"
-    done, engines, prior_params = _read_state(spark, state_path)
-    stale = engines - {ENCODER_VERSION}
-    if stale:
+    metrics_dir = f"{out_dir}/metrics"
+    stamps = {"engine-version": ENCODER_VERSION, "job-params": fingerprint}
+    md = _metadata(local_path(metrics_dir))
+    done = {int(k.removeprefix("wave=")) for k in _commit_keys(md) if k.startswith("wave=")}
+    props = md.get("properties", {})
+    if done and not stamps.keys() <= props.keys():
         raise RuntimeError(
-            f"run_encode_job: {out_dir} has waves written by engine version(s) "
-            f"{sorted(stale)} but this engine is {ENCODER_VERSION}; blob "
-            "byte-identity across versions is not guaranteed. Finish the job "
-            "on the original version, or delete the output directory to "
+            f"run_encode_job: {out_dir} has committed waves but its metrics "
+            "table carries no engine-version/job-params stamps: it was written "
+            "before they existed. Finish the job on the engine version that "
+            "started it, or delete the output directory to re-encode from "
+            "wave 0."
+        )
+    if done and props["engine-version"] != ENCODER_VERSION:
+        raise RuntimeError(
+            f"run_encode_job: {out_dir} has waves written by engine version "
+            f"{props['engine-version']} but this engine is {ENCODER_VERSION}; "
+            "blob byte-identity across versions is not guaranteed. Finish the "
+            "job on the original version, or delete the output directory to "
             "re-encode from wave 0."
         )
-    mismatched = prior_params - {fingerprint}
-    if mismatched:
+    if done and props["job-params"] != fingerprint:
         raise RuntimeError(
             f"run_encode_job: {out_dir} has waves written with different job "
-            f"parameters {sorted(mismatched)} than this run's {fingerprint}; "
+            f"parameters {props['job-params']} than this run's {fingerprint}; "
             "resuming would skip waves whose group membership no longer "
             "matches. Re-run with the original parameters, or delete the "
             "output directory to re-encode from wave 0."
@@ -208,7 +223,7 @@ def run_encode_job(
             )
             # idempotent wave commit: each wave owns its own directory and
             # is OVERWRITTEN on re-run, so a crash after the blob write but
-            # before the state write cannot duplicate blobs on resume
+            # before the snapshot cannot duplicate blobs on resume
             enc.write.mode("overwrite").parquet(f"{blobs_path}/wave={w}")
             # codec-lineage/metrics table (north_star: "emits ... a
             # codec-lineage row ... to a metrics Iceberg table"): derived
@@ -217,14 +232,11 @@ def run_encode_job(
             # whole Python-side encode a second time per wave. Written
             # driver-side to ONE deterministically named file per wave
             # (metrics are O(groups) rows, no payload), then committed as
-            # an idempotent Iceberg append snapshot keyed on the wave: a
-            # crashed-and-resumed wave overwrites the same file path and
-            # the commit-key dedupe keeps the snapshot log exactly-once.
-            _commit_wave_metrics(f"{out_dir}/metrics", blobs_path, w)
-            spark.createDataFrame(
-                [(w, ENCODER_VERSION, fingerprint)],
-                "wave long, engine string, params string",
-            ).write.mode("append").parquet(state_path)
+            # an Iceberg append snapshot keyed on the wave: the done
+            # marker that a resume reads.
+            commit_lineage_metrics(
+                metrics_dir, f"{blobs_path}/wave={w}", f"wave-{w}", f"wave={w}", stamps
+            )
     finally:
         grouped.unpersist()
     return spark.read.parquet(blobs_path)
@@ -255,8 +267,6 @@ def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     """The job's codec-lineage/metrics table (one row per stripe),
     resolved through its Iceberg manifest (snapshot-consistent file
     list); pre-Iceberg layouts fall back to a plain parquet dir read."""
-    from ..sources.iceberg_meta import is_iceberg_table, list_data_files
-
     mdir = f"{local_path(out_dir)}/metrics"
     if is_iceberg_table(mdir):
         files = sorted(p for p, _ in list_data_files(mdir))

@@ -35,6 +35,10 @@ with per-file rows/bytes/checksums — the lineage record — and
 ``overwrite`` mode clears previous part files only on successful
 commit (write-audit-publish, same discipline as the Iceberg layer).
 
+Batch only: the engine's stream stage is ``streaming/encode_stream.py``,
+whose commit records are Spark's checkpoint and the metrics table's
+snapshot log.
+
 Options: ``codec`` (auto|reference|rle_v1|...), ``compression``
 (zstd|snappy|zlib|lz4|none), ``stride`` (row-index stride, default
 10000), ``bloom`` (comma-separated bloom_columns for the writer).
@@ -68,8 +72,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
     EqualNullSafe,
     EqualTo,
     Filter,
@@ -163,28 +165,6 @@ def _manifest_file_names(path: str) -> list[str] | None:
     except (OSError, ValueError):
         return None
     return sorted(e["file"] for e in manifest.get("files", []) if e.get("file"))
-
-
-def _stream_manifest_file_names(path: str) -> list[str] | None:
-    """Blob file names committed via ``_stream_manifest.jsonl`` (the
-    streaming sink's per-batch ledger), or None when absent. A torn
-    final line (reader racing the appender mid-write) is skipped — it
-    re-appears complete at the next offset poll."""
-    names: set[str] = set()
-    try:
-        with open(os.path.join(path, "_stream_manifest.jsonl")) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                names.update(rec.get("files", []))
-    except OSError:
-        return None
-    return sorted(names)
 
 
 def _list_blob_files(path: str) -> list[str]:
@@ -554,12 +534,6 @@ class OrcFormatDataSource(DataSource):
     def writer(self, schema: StructType, overwrite: bool) -> OrcFormatWriter:
         return OrcFormatWriter(dict(self.options), overwrite)
 
-    def streamReader(self, schema: StructType) -> "OrcFormatStreamReader":
-        return OrcFormatStreamReader(dict(self.options))
-
-    def streamWriter(self, schema: StructType, overwrite: bool) -> "OrcFormatStreamWriter":
-        return OrcFormatStreamWriter(dict(self.options))
-
 
 def register_datasource(spark) -> None:
     """Register the format and enable Python-source filter pushdown
@@ -569,121 +543,3 @@ def register_datasource(spark) -> None:
     helper still fails loudly, never silently unpushed)."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(OrcFormatDataSource)
-
-
-# ---------------------------------------------------------------- streaming
-
-
-class OrcFormatStreamReader(DataSourceStreamReader):
-    """Structured Streaming source over a growing blob directory: each
-    micro-batch is the set of ``.ofs`` files that appeared since the
-    last offset — one input partition per new file, decoded exactly like
-    the batch reader. Blob files are immutable once renamed into place
-    (every writer in this repo publishes tmp+rename), so a file is
-    either absent or complete; there is no torn-read window.
-
-    Offsets are the sorted list of processed file names — explicit and
-    replayable (restart from a checkpoint re-reads exactly the files
-    not yet committed). At 100 TB-scale file counts a production source
-    would page this through a ledger table (the Iceberg layer here
-    already maintains one); the offset-as-list keeps the contract
-    transparent and the semantics exact."""
-
-    def __init__(self, options: dict):
-        self.path = local_path(options.get("path") or "")
-        if not self.path:
-            raise ValueError("orc_format: .load(path) is required")
-        self.columns = _columns_option(options)
-
-    def initialOffset(self) -> dict:
-        return {"files": []}
-
-    def latestOffset(self) -> dict:
-        """Committed membership only: the streaming sink's
-        ``_stream_manifest.jsonl`` ledger when present, else the batch
-        writer's ``_manifest.json``, else glob (directories like a raw
-        ``blob_sink`` where every file is a committed write). A renamed
-        but never-committed orphan from a failed task attempt is thus
-        never offered as an offset."""
-        files = _stream_manifest_file_names(self.path)
-        if files is None:
-            files = _manifest_file_names(self.path)
-        if files is None:
-            files = [os.path.basename(p) for p in sorted(_listdir_ofs(self.path))]
-        return {"files": files}
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        new = sorted(set(end["files"]) - set(start["files"]))
-        return [BlobPartition(os.path.join(self.path, f)) for f in new]
-
-    def read(self, partition: BlobPartition) -> Iterator["pa.RecordBatch"]:
-        from ..codecs.container import decode_table
-        from ..worker_env import limit_worker_threads
-
-        limit_worker_threads()
-        with open(partition.path, "rb") as f:
-            blob = f.read()
-        yield from decode_table(blob, columns=self.columns).to_batches()
-
-    def commit(self, end: dict) -> None:
-        pass  # files are immutable; nothing to release
-
-
-class OrcFormatStreamWriter(DataSourceStreamArrowWriter):
-    """Structured Streaming sink: every micro-batch partition encodes
-    through the normal auto-selection pipeline into an immutable
-    ``batch-<id>-part-<n>-<uuid>.ofs`` (tmp+rename), and the driver
-    appends one line per commit to ``_stream_manifest.jsonl`` — the
-    per-batch lineage ledger. Replayed batches (failure between task
-    success and commit) overwrite-by-name is impossible with uuid names,
-    so the manifest line is the authoritative membership record, exactly
-    like the wave ledger in operators/job.py."""
-
-    def __init__(self, options: dict):
-        self.path = local_path(options.get("path") or "")
-        if not self.path:
-            raise ValueError("orc_format: .save path option is required")
-        self.codec = options.get("codec", "auto")
-        self.compression = options.get("compression", "zstd")
-        self.stride = int(options.get("stride", 10_000))
-        os.makedirs(self.path, exist_ok=True)
-
-    def write(self, iterator: Iterator["pa.RecordBatch"]) -> BlobWriteMessage:
-        import pyarrow as pa
-
-        from ..codecs.container import encode_table, table_checksum
-        from ..operators.encode import _write_atomic
-        from ..worker_env import limit_worker_threads
-        from pyspark import TaskContext
-
-        limit_worker_threads()
-        batches = list(iterator)
-        if not batches or sum(b.num_rows for b in batches) == 0:
-            return BlobWriteMessage(None, 0, 0, None)
-        tbl = pa.Table.from_batches(batches).combine_chunks()
-        blob, _ = encode_table(
-            tbl, codec=self.codec, compression=self.compression, stride=self.stride
-        )
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
-        name = f"part-{pid:05d}-{uuid.uuid4().hex}.ofs"
-        _write_atomic(os.path.join(self.path, name), blob)
-        return BlobWriteMessage(name, tbl.num_rows, len(blob), table_checksum(tbl))
-
-    def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        line = {
-            "batch_id": batchId,
-            "files": [m.file for m in messages if m and m.file],
-            "rows": sum(m.rows for m in messages if m),
-            "bytes": sum(m.bytes for m in messages if m),
-        }
-        with open(os.path.join(self.path, "_stream_manifest.jsonl"), "a") as f:
-            f.write(json.dumps(line, sort_keys=True) + "\n")
-
-    def abort(self, messages, batchId: int) -> None:  # noqa: N803
-        for m in messages:
-            if m is not None and m.file:
-                try:
-                    os.remove(os.path.join(self.path, m.file))
-                except OSError:
-                    pass

@@ -607,12 +607,15 @@ def _data_file_record(
 
 
 def _write_metadata_json(table_dir: str, md: dict, version: int) -> str:
+    """Publish ``v<version>.metadata.json``, then point the hint at it,
+    each by rename: a commit cut short leaves the table at its prior
+    version, never with a torn hint."""
+    from ..operators.encode import _write_atomic
+
     meta_dir = os.path.join(table_dir, "metadata")
     path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    with open(path, "w") as f:
-        json.dump(md, f, indent=1)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
-        f.write(str(version))
+    _write_atomic(path, json.dumps(md, indent=1).encode())
+    _write_atomic(os.path.join(meta_dir, "version-hint.text"), str(version).encode())
     return path
 
 

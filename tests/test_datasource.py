@@ -142,53 +142,6 @@ def test_pushdown_relation_cache_quirk(ds_spark, tmpdir_path):
     assert ds_spark.read.format("orc_format").load(tmpdir_path).count() == total
 
 
-# ---------------------------------------------------------- streaming
-
-
-def test_stream_read_and_write_pipeline(ds_spark, tmp_path):
-    """Full streaming pipeline through the format: blob dir A is a
-    streaming SOURCE (new .ofs files become micro-batch partitions) and
-    blob dir B a streaming SINK (per-batch encoded part files + a
-    jsonl commit ledger). Restarting from the checkpoint after new
-    files arrive processes exactly the delta."""
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    ckpt = str(tmp_path / "ckpt")
-    li = _li(ds_spark).limit(200)
-    li.coalesce(1).write.format("orc_format").mode("append").save(src)
-
-    def run_once():
-        q = (
-            ds_spark.readStream.format("orc_format")
-            .load(src)
-            .writeStream.format("orc_format")
-            .option("path", dst)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert not q.isActive
-
-    run_once()
-    out1 = ds_spark.read.format("orc_format").load(dst)
-    assert out1.count() == 200
-    # new file arrives -> only the delta is processed on restart
-    more = _li(ds_spark).limit(350).subtract(li)
-    more.coalesce(1).write.format("orc_format").mode("append").save(src)
-    run_once()
-    out2 = ds_spark.read.format("orc_format").load(dst)
-    assert out2.count() == 200 + more.count()
-    man = open(os.path.join(dst, "_stream_manifest.jsonl")).read().splitlines()
-    assert len(man) >= 2  # one committed line per non-empty batch
-    rows = sum(json.loads(l)["rows"] for l in man)
-    assert rows == out2.count()
-    # content equality with the union of inputs
-    want = sorted(map(tuple, li.collect())) + sorted(map(tuple, more.collect()))
-    assert sorted(map(tuple, out2.collect())) == sorted(want)
-
-
 # ------------------------------------------------- file-level pruning
 
 
@@ -347,18 +300,6 @@ def test_orphan_file_excluded_by_manifest(ds_spark, tmpdir_path):
     shutil.copyfile(os.path.join(tmpdir_path, committed[0]), orphan)
     back = ds_spark.read.format("orc_format").load(tmpdir_path)
     assert back.count() == li.count()  # orphan rows NOT double-counted
-    # same discipline on the streaming read path
-    stream = (
-        ds_spark.readStream.format("orc_format")
-        .load(tmpdir_path)
-        .writeStream.format("memory")
-        .queryName("orphan_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination(60)
-    got = ds_spark.sql("SELECT count(*) c FROM orphan_stream").first().c
-    assert got == li.count()
     # a manifest-less directory still reads (glob fallback)
     os.remove(os.path.join(tmpdir_path, "_manifest.json"))
     assert (

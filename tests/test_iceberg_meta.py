@@ -159,6 +159,50 @@ def test_create_append_read(tmp_path):
     assert sj["fields"][1]["type"]["element-id"] == 5
 
 
+def test_failed_hint_write_keeps_prior_version(tmp_path, monkeypatch):
+    """A commit whose version-hint write fails (disk full, kill) leaves
+    the table readable at its prior version, and the next commit goes
+    through: the hint is published by rename, never truncated first."""
+    import builtins
+    import os
+
+    f1 = _tokens_file(str(tmp_path / "a.parquet"), 0, 100)
+    f2 = _tokens_file(str(tmp_path / "b.parquet"), 100, 60)
+    tdir = str(tmp_path / "tbl")
+    im.create_table(tdir, TOKENS_PA, ts_ms=1_000)
+    s1 = im.append_snapshot(tdir, [f1], commit_key="w0", ts_ms=2_000)
+    real_open = builtins.open
+
+    class _FailingWrites:
+        def __init__(self, f):
+            self.f = f
+
+        def write(self, data):
+            raise OSError("no space left on device")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+    def hint_write_fails(path, mode="r", *a, **k):
+        f = real_open(path, mode, *a, **k)
+        if "w" in mode and os.path.basename(str(path)).startswith("version-hint.text"):
+            return _FailingWrites(f)
+        return f
+
+    monkeypatch.setattr(builtins, "open", hint_write_fails)
+    with pytest.raises(OSError, match="no space"):
+        im.append_snapshot(tdir, [f2], commit_key="w1", ts_ms=3_000)
+    monkeypatch.setattr(builtins, "open", real_open)
+    md = im.read_table_metadata(tdir)
+    assert md["current-snapshot-id"] == s1 and len(md["snapshots"]) == 1
+    s2 = im.append_snapshot(tdir, [f2], commit_key="w1", ts_ms=3_000)
+    assert s2 != s1
+    assert sorted(p for p, _ in im.list_data_files(tdir)) == sorted([f1, f2])
+
+
 def test_splits_match_parquet_listing(tmp_path):
     """Manifest-derived splits == direct parquet listing of same files
     (row-group explosion, ordering, ids)."""
@@ -223,6 +267,11 @@ def test_job_metrics_iceberg_commits(spark, tmp_path):
     assert len(md["snapshots"]) == 3
     keys = [s["summary"]["commit-key"] for s in md["snapshots"]]
     assert keys == ["wave=0", "wave=1", "wave=2"]
+    # the resume guards' stamps ride as table properties
+    from orc_format_spark.codecs.container import ENCODER_VERSION
+
+    assert md["properties"]["engine-version"] == ENCODER_VERSION
+    assert "num_groups" in md["properties"]["job-params"]
     m = read_metrics(spark, out)
     assert m.count() == 6  # one lineage row per group
     assert "blob" not in m.columns

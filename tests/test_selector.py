@@ -17,7 +17,12 @@ import pyarrow.parquet as pq
 import pytest
 
 from orc_format_spark.codecs import alp, bitpack, dictionary, fsst, raw, rle_v1, rle_v2, selector
-from orc_format_spark.codecs.container import _flat_binary, encode_table
+from orc_format_spark.codecs.container import (
+    _decode_int_values,
+    _decode_str_values,
+    _flat_binary,
+    encode_table,
+)
 from orc_format_spark.codecs.selector import (
     select_and_encode_float,
     select_and_encode_int,
@@ -42,11 +47,8 @@ def _trial_all_int(v, signed=True, sample=selector.SAMPLE_VALUES):
         cands.append("dict_int")
     est, enc = {}, {}
     for c in cands:
-        try:
-            enc[c] = selector._encode_int(c, s, signed)
-            est[c] = len(enc[c]) / len(s)
-        except Exception:
-            continue
+        enc[c] = selector._encode_int(c, s, signed)
+        est[c] = len(enc[c]) / len(s)
     best = min(est, key=est.get)
     if n <= sample:
         return best, est, enc[best]
@@ -69,19 +71,16 @@ def _trial_all_str(data, offsets, sample=2048):
     fsst_table = None
     nbytes = max(1, sdata.size)
     for c in cands:
-        try:
-            if c == "fsst":
-                tbl = fsst.SymbolTable(
-                    fsst.train_symbol_table(sdata[: fsst._SAMPLE_BYTES].tobytes())
-                )
-                if sdata.size >= fsst._SAMPLE_BYTES:
-                    fsst_table = tbl
-                enc[c] = selector._encode_str(c, sdata, soff, table=tbl)
-            else:
-                enc[c] = selector._encode_str(c, sdata, soff)
-            est[c] = len(enc[c]) / nbytes
-        except Exception:
-            continue
+        if c == "fsst":
+            tbl = fsst.SymbolTable(
+                fsst.train_symbol_table(sdata[: fsst._SAMPLE_BYTES].tobytes())
+            )
+            if sdata.size >= fsst._SAMPLE_BYTES:
+                fsst_table = tbl
+            enc[c] = selector._encode_str(c, sdata, soff, table=tbl)
+        else:
+            enc[c] = selector._encode_str(c, sdata, soff)
+        est[c] = len(enc[c]) / nbytes
     best = min(est, key=est.get)
     if k == n:
         return best, est, enc[best]
@@ -555,6 +554,101 @@ def test_distinct_column_longer_than_the_sample_takes_one_fsst_pass():
     assert (best, wire) == ("fsst", want_wire) and want_best == "fsst"
     assert est == {c: want_est[c] for c in ("raw_str", "fsst")}
     assert set(pruned) == {"dict_str"} and pruned["dict_str"] <= want_est["dict_str"]
+
+
+# ------------------------------------------ every candidate, any column
+#
+# The selector encodes its candidates without an error gate, so a
+# kernel that raised would fail the write instead of silently moving
+# the choice to another codec. These corpora hold each type's edges.
+
+
+def _fuzz_ints(rng):
+    for dt in (np.int8, np.int16, np.int32, np.int64,
+               np.uint8, np.uint16, np.uint32, np.uint64):
+        ii = np.iinfo(dt)
+        yield rng.integers(ii.min, ii.max, 3_000, dtype=dt, endpoint=True)
+        yield np.sort(rng.integers(ii.min, ii.max, 20_000, dtype=dt, endpoint=True))
+        yield np.array([ii.min, ii.max] * 700, dt)
+        yield np.array([ii.max, ii.max - 60, ii.max - 7] * 400, dt)
+        yield np.array([ii.min, ii.min + 60, ii.min + 7] * 400, dt)
+        yield np.full(2_000, ii.max, dt)
+        yield np.full(2_000, ii.min, dt)
+        yield np.array([ii.max], dt)
+
+
+def _fuzz_floats(rng):
+    specials = [np.nan, np.inf, -np.inf, -0.0, 0.0, 5e-324, -5e-324,
+                2.2250738585072014e-308, 1e308, -1e308, 1.7976931348623157e308]
+    yield np.array(specials * 100)
+    yield rng.integers(0, 2**64 - 1, 3_000, dtype=np.uint64, endpoint=True).view(np.float64)
+    yield np.round(rng.normal(size=20_000) * 1e4, 2)
+    yield np.arange(5_000) * 0.01
+    yield np.full(2_000, np.nan)
+    yield np.full(2_000, -0.0)
+    yield np.array([1e308])
+    yield np.array(rng.normal(size=3_000), np.float32).astype(np.float64)
+
+
+def _fuzz_strs(rng):
+    yield [b""] * 1_000
+    yield [b"", b"a", b""] * 400
+    yield [b"\xff" * rng.integers(0, 300) for _ in range(500)]
+    yield [rng.bytes(int(rng.integers(0, 40))) for _ in range(3_000)]
+    yield [rng.bytes(int(rng.integers(0, 4))) for _ in range(5_000)]
+    yield [b"\x00" * 20_000]
+    yield [bytes(range(256)) * 40] * 3
+    yield [b"doc-%08d" % i for i in range(3_000)]
+
+
+def _decode_float(c, b, double):
+    if c == "float_split":
+        return raw.decode_float_split(b, double=double)
+    if c == "alp":
+        return alp.decode_alp(b, double=double)
+    if c == "dict_float":
+        bits = dictionary.decode_dict_int(b, True)
+        return bits.view(np.float64) if double else bits.astype(np.int32).view(np.float32)
+    return raw.decode_float_raw(b, double=double)
+
+
+def test_every_int_candidate_encodes_any_column():
+    rng = np.random.default_rng(18)
+    for v in _fuzz_ints(rng):
+        for signed in (True, False) if v.dtype.kind == "u" else (True,):
+            for c in selector.INT_CANDIDATES:
+                got = _decode_int_values(c, selector._encode_int(c, v, signed), signed)
+                assert np.array_equal(np.asarray(got).astype(v.dtype), v), (c, v.dtype, signed)
+            prior = {}
+            for chunk in (v, v[::-1]):  # full selection, then the reuse check
+                select_and_encode_int(chunk, signed, _prior=prior)
+
+
+def test_every_str_candidate_encodes_any_column():
+    rng = np.random.default_rng(18)
+    for strings in _fuzz_strs(rng):
+        data, off = _flat_binary(pa.array(strings, pa.binary()))
+        for c in selector.STR_CANDIDATES:
+            d, o = _decode_str_values(c, selector._encode_str(c, data, off))
+            assert bytes(d) == bytes(data) and np.array_equal(o, off), c
+        prior = {}
+        for chunk in (strings, strings[::-1]):
+            d, o = _flat_binary(pa.array(chunk, pa.binary()))
+            select_and_encode_str(d, o, _prior=prior)
+
+
+def test_every_float_candidate_encodes_any_column():
+    rng = np.random.default_rng(18)
+    for v64 in _fuzz_floats(rng):
+        for double in (True, False):
+            with np.errstate(over="ignore"):  # +-1e308 become +-inf
+                v = v64 if double else v64.astype(np.float32)
+            for c in selector.FLOAT_CANDIDATES:
+                got = _decode_float(c, selector._encode_float(c, v, double), double)
+                assert got.tobytes() == v.tobytes(), (c, double)
+            prior = {}
+            for chunk in (v, v[::-1]):
+                select_and_encode_float(chunk, double, _prior=prior)
 
 
 # ------------------------------------------------- kernels made cheaper

@@ -81,13 +81,30 @@ def test_with_group_id_deterministic_and_skew_aware(spark, docs):
     assert sizes.max() / sizes.mean() < 3.0  # no pathological group
 
 
+def _roll_back_one_version(table_dir):
+    """The metrics table as a crash before its newest commit left it:
+    the newest metadata version deleted, the hint one version back."""
+    import os
+
+    from orc_format_spark.sources import iceberg_meta as im
+
+    v = im._current_version(table_dir)
+    os.remove(f"{table_dir}/metadata/v{v}.metadata.json")
+    with open(f"{table_dir}/metadata/version-hint.text", "w") as f:
+        f.write(str(v - 1))
+
+
+def _wave_keys(out):
+    from orc_format_spark.sources import iceberg_meta as im
+
+    md = im.read_table_metadata(f"{out}/metrics")
+    return sorted(s["summary"]["commit-key"] for s in md["snapshots"])
+
+
 def test_run_encode_job_resume(spark, docs, tmp_path, monkeypatch):
     import glob
     import os
     import shutil
-
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
 
     from orc_format_spark.operators import job as job_mod
 
@@ -102,13 +119,10 @@ def test_run_encode_job_resume(spark, docs, tmp_path, monkeypatch):
     # resume: nothing left to do, blobs unchanged
     blobs2 = run_encode_job(spark, toks, out, num_groups=6, waves=3)
     assert blobs2.count() == len(first)
-    # simulate a crash before wave 2 committed: drop its _state row and
-    # its output
-    state = f"{out}/_state"
-    kept = ds.dataset(state, format="parquet").to_table(filter=ds.field("wave") != 2)
-    shutil.rmtree(state)
-    os.makedirs(state)
-    pq.write_table(kept, f"{state}/part-0.parquet")
+    # simulate a crash before wave 2 committed: its snapshot (the last
+    # metadata version) and its output are gone
+    _roll_back_one_version(f"{out}/metrics")
+    assert _wave_keys(out) == ["wave=0", "wave=1"]
     shutil.rmtree(f"{out}/blobs/wave=2")
     done = {p: os.stat(p).st_mtime_ns for p in glob.glob(f"{out}/blobs/wave=*/*")}
     encoded = []
@@ -128,10 +142,56 @@ def test_run_encode_job_resume(spark, docs, tmp_path, monkeypatch):
     } == done
     # the resumed blobs are the first run's, byte for byte
     assert {r.group_id: (r.wave, bytes(r.blob)) for r in blobs3.collect()} == first
-    assert sorted(r.wave for r in spark.read.parquet(state).collect()) == [0, 1, 2]
+    assert _wave_keys(out) == ["wave=0", "wave=1", "wave=2"]
     decoded = decode_blobs(blobs3, TOKENS_SCHEMA)
     orig = toks.select("doc_id", "tokens", "n_tok", "source")
     assert decoded.exceptAll(orig).count() == 0
+
+
+def test_run_encode_job_noop_resume_runs_one_spark_job(spark, docs, tmp_path):
+    """A resume of a finished job reads the wave record from the
+    metrics table's metadata, driver-side: its only Spark job is the
+    final read of the blobs."""
+    toks = tokenize_documents(docs)
+    out = str(tmp_path / "jobn")
+    run_encode_job(spark, toks, out, num_groups=6, waves=3)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    sc.setJobGroup("noop-resume", "no-op resume of a finished job")
+    try:
+        run_encode_job(spark, toks, out, num_groups=6, waves=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    bus.waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("noop-resume")) == 1
+
+
+def test_run_encode_job_unstamped_table_raises(spark, docs, tmp_path, monkeypatch):
+    """A metrics table with wave snapshots but no engine/parameter
+    stamps was written before the stamps existed: its waves cannot be
+    checked, so the resume refuses before any grouping."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from orc_format_spark.operators import job as job_mod
+    from orc_format_spark.sources import iceberg_meta as im
+
+    mdir = str(tmp_path / "jobu" / "metrics")
+    rows = pa.table({"group_id": pa.array([0], pa.int64())})
+    im.create_table(mdir, rows.schema, properties={"table-kind": "codec-metrics"})
+    pq.write_table(rows, f"{mdir}/wave-0.parquet")
+    im.append_snapshot(mdir, [f"{mdir}/wave-0.parquet"], commit_key="wave=0")
+
+    def no_grouping(*a, **k):
+        raise AssertionError("grouped before refusing")
+
+    monkeypatch.setattr(job_mod, "with_group_id", no_grouping)
+    with pytest.raises(RuntimeError, match="no engine-version/job-params stamps"):
+        run_encode_job(spark, tokenize_documents(docs), str(tmp_path / "jobu"),
+                       num_groups=6, waves=3)
 
 
 def test_column_statistics_matches_sql(spark):

@@ -2,6 +2,8 @@
 rows the batch path produces (stream/batch parity), with exactly-once via
 the streaming checkpoint."""
 
+import os
+
 import pytest
 
 from orc_format_spark import (
@@ -81,8 +83,8 @@ def test_stream_encode_blob_sink(spark, tokens_dir, tmp_path):
 def test_stream_metrics_iceberg_commits(spark, tokens_dir, tmp_path):
     """metrics_dir: each micro-batch's lineage lands as one snapshot of
     the metrics Iceberg table, keyed batch=N; a replayed commit for the
-    same batch id is a no-op (exactly-once), and a checkpointed restart
-    adds no snapshots."""
+    same batch id is a no-op (exactly-once) that leaves the committed
+    file untouched, and a checkpointed restart adds no snapshots."""
     from orc_format_spark.operators.job import commit_lineage_metrics
     from orc_format_spark.sources import iceberg_meta as im
 
@@ -98,9 +100,13 @@ def test_stream_metrics_iceberg_commits(spark, tokens_dir, tmp_path):
     assert keys == ["batch=0"]  # availableNow file source -> one batch
     m = spark.read.parquet(*[p for p, _ in im.list_data_files(mdir)])
     assert m.count() == 4 and "blob" not in m.columns
-    # replay of the same batch: deterministic overwrite + key'd commit
+    # replay of the same batch: the committed key returns before any
+    # write, so the file the snapshot lists is not rewritten
+    committed = f"{mdir}/batch-0.parquet"
+    before = (open(committed, "rb").read(), os.stat(committed).st_mtime_ns)
     commit_lineage_metrics(mdir, f"{out}/batch_id=0", "batch-0", "batch=0")
     assert len(im.read_table_metadata(mdir)["snapshots"]) == 1
+    assert (open(committed, "rb").read(), os.stat(committed).st_mtime_ns) == before
     # restart with the same checkpoint: no new batches, no new snapshots
     stream2 = spark.readStream.schema(schema).parquet(tokens_dir)
     encode_stream(stream2, out, ckpt, num_groups=4, metrics_dir=mdir).awaitTermination(120)
